@@ -550,22 +550,13 @@ _ATTR_RE = re.compile(
 _END_RE = re.compile(r"</\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>")
 _END_TOLERANT_RE = re.compile(r"</([a-zA-Z][^\t\n\r\f />\x00]*)[^>]*>")
 # stdlib CDATA_CONTENT_ELEMENTS: script/style only. The end pattern is
-# the stdlib's set_cdata_mode `interesting` regex, derived from THIS
-# interpreter's html.parser at import time: the property tests compare
-# against the stdlib builder, so a CPython change to the rawtext regex
-# (3.11 uses r'</\s*%s\s*>'; later versions may not) must flow through
-# here rather than silently diverge (ADVICE r7).
-
-
-def _stdlib_rawtext_end(tag: str) -> "re.Pattern[str]":
-    from html.parser import HTMLParser
-
-    p = HTMLParser()
-    p.set_cdata_mode(tag)
-    return p.interesting
-
-
-_RAWTEXT_END = {t: _stdlib_rawtext_end(t) for t in ("script", "style")}
+# CPython 3.11's set_cdata_mode `interesting` regex, written out instead
+# of read from the parser's private API; tests/test_dom.py asserts it
+# still equals the running interpreter's, so a CPython change to the
+# rawtext regex fails that test rather than diverging silently.
+_RAWTEXT_END = {
+    t: re.compile(r"</\s*%s\s*>" % t, re.I) for t in ("script", "style")
+}
 _CDATA_ELEMS = frozenset(_RAWTEXT_END)
 
 from html import unescape as _unescape

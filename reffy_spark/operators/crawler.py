@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from dataclasses import dataclass, field
 
@@ -143,6 +144,16 @@ def fetch_with_fallback(
 
 
 class CrawlEngine:
+    """Round-based crawl over a pages table (see the module docstring).
+
+    An engine holds cached round state (the canonical pages table,
+    within-round working sets) and, on a multi-executor master, a
+    temporary round-state directory. Crawl results are lazy and read
+    that state, so it outlives ``crawl()`` / ``resume()``. Use the
+    engine as a context manager, or call ``release()`` once the results
+    are consumed. The engine can crawl again after ``release()``.
+    """
+
     def __init__(
         self,
         spark: SparkSession,
@@ -151,16 +162,20 @@ class CrawlEngine:
         checkpoint_dir: str | None = None,
         round_ms: int = 2000,
         modules: list[str] | None = None,
-        use_bloom: "bool | str" = True,  # True=bloom, "cuckoo", False=exact
+        use_bloom: bool = True,  # True=bloom-pruned, False=exact anti-join
         collect_metrics: bool = True,
         discover: bool = True,
         assume_canonical_unique: bool = False,
         assume_seeds_unique: bool = False,
         broadcast_batch: bool = True,
-        reliable_state: bool | str = "auto",
         fallback: DataFrame | None = None,
-        seen_capacity_hint: int | None = None,
     ):
+        if not isinstance(use_bloom, bool):
+            raise ValueError(
+                f"use_bloom must be True or False, got {use_bloom!r}; for a "
+                "static cuckoo-filter URL-seen set use "
+                "operators.cuckoo.filter_unseen_cuckoo"
+            )
         # discover=False is pure seed-list replay — the reference's own
         # semantics (crawlList maps over the fixed list exactly once and
         # never enqueues, specs-crawler.js:473-479). discover=True is the
@@ -192,13 +207,6 @@ class CrawlEngine:
         # frontier; the replay corpus derives seeds 1:1 from a pages
         # table already unique on url_canon)
         self.assume_seeds_unique = assume_seeds_unique
-        # Expected total seen-set size for the whole crawl (the crawl
-        # budget). Sizes the URL-seen membership structures' epoch
-        # builds so a discovery crawl is absorbed by ONE epoch; without
-        # it, epochs are sized 2x the current count and explosive
-        # discovery growth triggers doubling rebuilds. The cuckoo table
-        # stores only occupied slots, so over-sizing m is free.
-        self.seen_capacity_hint = seen_capacity_hint
         # Canonicalize the pages table once. Canonical keys must be unique
         # for the fetch join: distinct raw URLs can collapse to one
         # canonical URL (e.g. whatwg multipage → root); keep the freshest
@@ -244,16 +252,13 @@ class CrawlEngine:
         # destroys its blocks and the round state cannot be recomputed
         # (lineage was truncated), failing or wildly re-running the job
         # (the round-1 variance band of 66-193 s had exactly this cause).
-        # "auto" = reliable parquet round commits whenever the master runs
-        # more than one executor JVM; single-JVM local[...] keeps the
-        # cheaper in-memory checkpoint.
-        if reliable_state == "auto":
-            master = spark.sparkContext.master or ""
-            self.reliable_state = not (
-                master.startswith("local[") or master == "local"
-            )
-        else:
-            self.reliable_state = bool(reliable_state)
+        # Reliable parquet round commits whenever the master runs more
+        # than one executor JVM; single-JVM local[...] keeps the cheaper
+        # in-memory checkpoint.
+        master = spark.sparkContext.master or ""
+        self.reliable_state = not (
+            master.startswith("local[") or master == "local"
+        )
         self._state_dir: str | None = None
         # persisted within-round working sets awaiting release (ephemeral
         # multi-executor mode; see _materialize durable=False)
@@ -471,7 +476,7 @@ class CrawlEngine:
         join would abandon the futures with their exceptions unobserved,
         and leak the pool threads). Idempotent; crawl()/resume() recreate
         the pool lazily, so an engine stays reusable after close().
-        CrawlEngine is also a context manager delegating here."""
+        ``release()`` (and so the context-manager exit) calls this too."""
         pool, self._commit_pool = self._commit_pool, None
         for _name, fut in self._deferred:
             try:
@@ -489,19 +494,27 @@ class CrawlEngine:
         return self
 
     def __exit__(self, *exc) -> None:
+        self.release()
+
+    def release(self) -> None:
+        """Free the engine's cached state and its temporary round-state
+        directory. Call once the crawl's (lazy) results are consumed.
+
+        NOT in close(): close() runs inside _run_rounds' finally, and a
+        pure-replay caller consumes the (lazy) results after that —
+        unpersisting there would forfeit the cache for the final
+        action."""
         self.close()
         self._release_working_sets()
-        # NOT in close(): close() runs inside _run_rounds' finally, and a
-        # pure-replay caller consumes the (lazy) results after that —
-        # unpersisting there would forfeit the cache for the final
-        # action. Outside a with-block the ContextCleaner periodic GC
-        # reclaims the blocks once the engine is unreferenced.
         if getattr(self, "_pages_cached", None) is not None:
             try:
                 self._pages_cached.unpersist(blocking=False)
             except Exception:
                 pass
             self._pages_cached = None
+        state_dir, self._state_dir = self._state_dir, None
+        if state_dir is not None:
+            shutil.rmtree(state_dir, ignore_errors=True)
 
     def _run_rounds_impl(
         self,
@@ -517,11 +530,9 @@ class CrawlEngine:
         # sizing never fires a per-round count() job: one count at loop
         # start, then += the new_urls count already computed for metrics
         seen_count: int | None = None
-        # URL-seen membership structures are ROUND STATE (alongside
-        # frontier/seen), not per-round rebuilds: the bloom bitmap and
-        # the cuckoo table each absorb only new_urls per round and are
+        # the bloom bitmap is ROUND STATE (alongside frontier/seen), not
+        # a per-round rebuild: it absorbs only new_urls per round and is
         # rebuilt from seen only at explicit epoch boundaries
-        cuckoo_state = None
         bloom = None
         bloom_retired = False
         self._deferred = []
@@ -834,68 +845,34 @@ class CrawlEngine:
                 # lineage (3× per round in the bench replay).
                 cand = self._materialize(cand, "candidates", rnd, durable=False)
 
-                if self.use_bloom == "cuckoo":
-                    # cuckoo-filter membership (operators/cuckoo.py):
-                    # same definite-new short-circuit contract as the
-                    # bloom path. INCREMENTAL lifecycle: the state is
-                    # carried across rounds; only this round's new_urls
-                    # are inserted (below, after they're known); the
-                    # full seen set is re-scanned only at epoch
-                    # (re)builds — first use, or an explicit doubling
-                    # rebuild when load exceeds 0.7.
-                    from reffy_spark.operators.cuckoo import (
-                        CuckooState,
-                        filter_unseen_with_state,
-                    )
-
+                if self.use_bloom and not bloom_retired:
                     if seen_count is None:
                         seen_count = seen.count()
-                    if cuckoo_state is None or cuckoo_state.needs_rebuild():
-                        target = max(
-                            seen_count * 2, self.seen_capacity_hint or 0
-                        )
-                        cuckoo_state = CuckooState.build(
-                            seen,
-                            n_items=seen_count,
-                            m=CuckooState.size_m(target),
-                        ).materialized(
-                            lambda df, nm: self._materialize(df, nm, rnd)
-                        )
-                    unseen = filter_unseen_with_state(cand, seen, cuckoo_state)
-                else:
-                    if self.use_bloom and not bloom_retired:
-                        if seen_count is None:
-                            seen_count = seen.count()
-                        if seen_count > FR.BLOOM_MAX_ITEMS:
-                            # the ACTUAL seen set outgrew the largest
-                            # bitmap this driver holds: retire the bloom
-                            # for good (plain scan-shaped anti-join from
-                            # here on; no per-round rebuild retries)
-                            bloom = None
-                            bloom_retired = True
-                        elif bloom is None or seen_count > bloom.n_capacity:
-                            # epoch (re)build with 2x headroom so steady
-                            # growth is absorbed by incremental folds.
-                            # BOTH the hint and the growth term clamp to
-                            # the bloom's own ceiling: a crawl budget OR
-                            # a seen_count*2 above BLOOM_MAX_ITEMS must
-                            # not disable the filter while the actual
-                            # seen set still fits a max-size bitmap
-                            cap_t = min(
-                                max(
-                                    seen_count * 2,
-                                    self.seen_capacity_hint or 0,
-                                ),
-                                FR.BLOOM_MAX_ITEMS,
-                            )
-                            bloom = FR.build_bloom(seen, n_items=cap_t)
-                    else:
+                    if seen_count > FR.BLOOM_MAX_ITEMS:
+                        # the ACTUAL seen set outgrew the largest bitmap
+                        # this driver holds: retire the bloom for good
+                        # (plain scan-shaped anti-join from here on; no
+                        # per-round rebuild retries)
                         bloom = None
-                    # cand is unique per url_canon (to_frontier dedup) —
-                    # the scan-shape broadcast key set skips its distinct
-                    unseen = FR.filter_unseen(
-                        cand, seen, bloom=bloom, candidates_unique=True
-                    )
+                        bloom_retired = True
+                    elif bloom is None or seen_count > bloom.n_capacity:
+                        # epoch (re)build with 2x headroom so steady
+                        # growth is absorbed by incremental folds; the
+                        # headroom clamps to the bloom's own ceiling so a
+                        # seen_count*2 above BLOOM_MAX_ITEMS does not
+                        # disable the filter while the actual seen set
+                        # still fits a max-size bitmap
+                        bloom = FR.build_bloom(
+                            seen,
+                            n_items=min(seen_count * 2, FR.BLOOM_MAX_ITEMS),
+                        )
+                else:
+                    bloom = None
+                # cand is unique per url_canon (to_frontier dedup) — the
+                # scan-shape broadcast key set skips its distinct
+                unseen = FR.filter_unseen(
+                    cand, seen, bloom=bloom, candidates_unique=True
+                )
                 # new_urls feeds BOTH the frontier merge and the seen-set
                 # update
                 new_urls = self._materialize(
@@ -907,19 +884,12 @@ class CrawlEngine:
                         seen_count += n_new
                 else:
                     n_new = None
-                # grow the membership state by THIS round's new urls only
-                # (the unseen filter guarantees disjointness) — the
-                # filter then covers the post-union seen set exactly, so
-                # next round's probe has no false negatives
-                if n_new:
-                    if self.use_bloom == "cuckoo":
-                        cuckoo_state = cuckoo_state.insert(
-                            new_urls.select("url_canon"), n_new
-                        ).materialized(
-                            lambda df, nm: self._materialize(df, nm, rnd)
-                        )
-                    elif bloom is not None:
-                        FR.fold_bloom(bloom, new_urls, key="url_canon")
+                # grow the bloom by THIS round's new urls only (the unseen
+                # filter guarantees disjointness) — it then covers the
+                # post-union seen set exactly, so next round's probe has
+                # no false negatives
+                if n_new and bloom is not None:
+                    FR.fold_bloom(bloom, new_urls, key="url_canon")
             else:
                 cand = None
                 new_urls = None

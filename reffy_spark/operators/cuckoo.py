@@ -42,16 +42,14 @@ only) so DuckDB replays placement bit-for-bit — the oracle for
 ``filter_unseen_cuckoo`` is the PLAIN exact anti-join SQL, proving the
 filter changes the plan, not the answer.
 
-Positioning after the r7 measurements (BENCH/BASELINE.md r7 seen-filter
-table): for IN-LOOP round filtering the scan-shaped exact anti-join
-(``frontier.anti_join_scan``) is already the floor — one map-side scan
-of seen per round — and the bloom split beats it slightly because its
-bitmap persists in executor memory. This cuckoo table cannot beat that
-floor in a scan engine (its probe scans the filter table AND maybe-hits
-still confirm against seen); its value is what a bloom cannot do:
-fingerprint DELETION, and serving membership probes off bucketed
-STORAGE with no driver-held state. Prefer ``use_bloom=True`` for
-crawls; use this for deletable/externally-served seen sets.
+Scope: this is the STATIC table behind the ``cuckoo_table`` and
+``urlseen_cuckoo`` driver queries — a seen set that must support
+fingerprint deletion or be served from bucketed storage with no
+driver-held state. The crawl loop does not use it: in a scan engine
+its probe scans the filter table and maybe-hits still confirm against
+seen, so it cannot beat the crawl's bloom split or the scan-shaped
+exact anti-join (``frontier.filter_unseen`` / ``anti_join_scan``;
+BENCH/BASELINE.md r7 seen-filter table).
 """
 
 from __future__ import annotations
@@ -163,252 +161,6 @@ def cuckoo_maybe_seen(
             F.broadcast(stash), on="url_canon", how="left_semi"
         )
     ).distinct()
-
-
-class CuckooState:
-    """Incremental cuckoo filter carried as CRAWL ROUND STATE.
-
-    The static ``cuckoo_table`` build is a two-window ranked shuffle over
-    every seen URL string — fine as a one-time epoch build, a
-    scale-killer if repeated per round (at 10^10 URLs the rebuild dwarfs
-    the round it serves). This class keeps the filter alive across
-    rounds: ``insert`` places ONLY the round's new URLs against
-    per-bucket remaining capacity, never touching the seen set at all
-    (structurally — it has no reference to it). ``m`` is FIXED for the
-    epoch; when load exceeds ``REBUILD_LOAD`` the caller performs an
-    explicit doubling rebuild (``build`` again), which re-scans seen
-    once — amortized O(log n) times over a whole crawl, not O(rounds).
-
-    The table is stored as DELTA PARTS: the epoch build plus one small
-    (bucket int, fp int) frame per insert — committing a round's state
-    copies only that round's placements, never the accumulated table
-    (``materialized`` touches the newest part only). Parts are compacted
-    into one frame every ``COMPACT_EVERY`` inserts to bound plan depth.
-    Because only occupied slots are stored, an oversized ``m`` costs no
-    memory — size epochs for the CRAWL BUDGET (``capacity_hint``), not
-    the current count, and the doubling rebuild becomes a safety valve
-    instead of a steady-state event. Per-bucket occupancy during insert
-    comes from a broadcast semi-join of the ≤2·|new| touched buckets
-    against the int-only table (partition-pruned when the table is
-    written bucketed by ``bucket`` at cluster scale).
-
-    Placement of an incremental insert differs from a from-scratch
-    rebuild (insertion order matters, as in any cuckoo filter) — the
-    MEMBERSHIP contract is what's invariant: no false negatives, answer
-    identical to the plain anti-join (``filter_unseen_with_state``'s
-    oracle). Reference contract anchor: fetch-each-URL-at-most-once,
-    /root/reference/src/lib/fetch.js:41-48.
-    """
-
-    REBUILD_LOAD = 0.7
-    # epoch builds size m for ~0.35 load so modest growth never trips
-    # the doubling rebuild; discovery crawls should pass a crawl-budget
-    # capacity hint instead of relying on this 2x headroom
-    BUILD_LOAD = 0.35
-    COMPACT_EVERY = 16
-
-    def __init__(
-        self,
-        parts: list[DataFrame],
-        stash_parts: list[DataFrame],
-        m: int,
-        capacity: int,
-        n_items: int,
-        gen: int = 0,
-    ):
-        # monotonically increasing commit generation: every materialized()
-        # call writes under a DISTINCT name, so a durable (parquet)
-        # materializer never overwrites a path the commit's own plan is
-        # reading (epoch build + first insert land in the SAME round)
-        self.gen = gen
-        self.parts = parts
-        self.stash_parts = stash_parts
-        self.m = m
-        self.capacity = capacity
-        self.n_items = n_items
-
-    @property
-    def table(self) -> DataFrame:
-        t = self.parts[0]
-        for p in self.parts[1:]:
-            t = t.unionByName(p)
-        return t
-
-    @property
-    def stash(self) -> DataFrame:
-        s = self.stash_parts[0]
-        for p in self.stash_parts[1:]:
-            s = s.unionByName(p)
-        return s
-
-    @classmethod
-    def size_m(cls, n_items: int, capacity: int = 4) -> int:
-        """Power-of-two m giving ~BUILD_LOAD load for n_items keys."""
-        import math
-
-        need = max(1.0, n_items / (cls.BUILD_LOAD * capacity))
-        return 1 << max(4, math.ceil(math.log2(need)))
-
-    @classmethod
-    def build(
-        cls,
-        seen: DataFrame,
-        n_items: int,
-        capacity: int = 4,
-        url_col: str = "url_canon",
-        m: int | None = None,
-    ) -> "CuckooState":
-        """Epoch build from the full seen set (the ONLY full-scan path;
-        runs once per epoch, not per round). Size via ``m`` or the
-        implicit BUILD_LOAD sizing; pass ``m=size_m(crawl_budget)`` to
-        absorb a whole discovery crawl in one epoch."""
-        m = cls.size_m(n_items, capacity) if m is None else m
-        table, stash = cuckoo_table(seen, m, capacity, url_col=url_col)
-        return cls([table], [stash], m, capacity, n_items)
-
-    @property
-    def load(self) -> float:
-        return self.n_items / float(self.m * self.capacity)
-
-    def needs_rebuild(self) -> bool:
-        return self.load > self.REBUILD_LOAD
-
-    def insert(
-        self, new_keys: DataFrame, n_new: int, url_col: str = "url_canon"
-    ) -> "CuckooState":
-        """Place ONLY ``new_keys`` (must be disjoint from the already-
-        inserted set, which the crawl's unseen filter guarantees) and
-        return the grown state. Touches: the new keys, the occupancy of
-        the ≤2·|new| buckets they hash to, and appends — never the seen
-        set (no parameter for it). Windows partition by BUCKET (≤
-        per-round keys per bucket, never data-sized)."""
-        cap = self.capacity
-        k = _keyed(new_keys, self.m, url_col)
-        table = self.table
-        touched = (
-            k.select(F.col("_b1").alias("bucket"))
-            .unionByName(k.select(F.col("_b2").alias("bucket")))
-            .distinct()
-        )
-        occ = (
-            table.join(F.broadcast(touched), on="bucket", how="left_semi")
-            .groupBy("bucket")
-            .agg(F.count("*").alias("_n"))
-        )
-        occ1 = occ.select(F.col("bucket").alias("_b1"), F.col("_n").alias("_n1"))
-        w1 = Window.partitionBy("_b1").orderBy("fp", "url_canon")
-        r1 = (
-            k.withColumn("_r", F.row_number().over(w1))
-            .join(occ1, on="_b1", how="left")
-            .withColumn(
-                "_free1", F.lit(cap) - F.coalesce(F.col("_n1"), F.lit(0))
-            )
-        )
-        stay1 = r1.filter(F.col("_r") <= F.col("_free1")).select(
-            F.col("_b1").alias("bucket"), "fp"
-        )
-        movers = r1.filter(F.col("_r") > F.col("_free1"))
-        inc1 = stay1.groupBy("bucket").agg(F.count("*").alias("_p2"))
-        occ2 = occ.select(F.col("bucket").alias("_b2"), F.col("_n").alias("_n2"))
-        w2 = Window.partitionBy("_b2").orderBy("fp", "url_canon")
-        m2 = (
-            movers.withColumn("_r2", F.row_number().over(w2))
-            .join(occ2, on="_b2", how="left")
-            .join(inc1.withColumnRenamed("bucket", "_b2"), on="_b2", how="left")
-            .withColumn(
-                "_free2",
-                F.lit(cap)
-                - F.coalesce(F.col("_n2"), F.lit(0))
-                - F.coalesce(F.col("_p2"), F.lit(0)),
-            )
-        )
-        placed2 = m2.filter(F.col("_r2") <= F.col("_free2")).select(
-            F.col("_b2").alias("bucket"), "fp"
-        )
-        new_stash = m2.filter(F.col("_r2") > F.col("_free2")).select("url_canon")
-        placed = stay1.unionByName(placed2)
-        return CuckooState(
-            self.parts + [placed],
-            self.stash_parts + [new_stash],
-            self.m,
-            cap,
-            self.n_items + n_new,
-            gen=self.gen,
-        )
-
-    def maybe_seen(self, candidates: DataFrame, url_col: str = "url_canon") -> DataFrame:
-        return cuckoo_maybe_seen(candidates, self.table, self.stash, self.m, url_col)
-
-    def materialized(self, fn) -> "CuckooState":
-        """Commit through the engine's round-state materializer (lineage
-        truncation / durability — the same boundary frontier and seen
-        cross), touching ONLY the newest delta part: the per-round
-        commit copies this round's placements, not the accumulated
-        table. Every COMPACT_EVERY parts the union is compacted into one
-        frame (one amortized table-sized int copy). The placed delta and
-        the stash delta share the two-window insert lineage, so they are
-        committed as ONE combined frame and sliced after — two separate
-        commits would run the whole insert plan twice per round.
-        ``fn(df, name)``."""
-
-        def combine(table_part: DataFrame, stash_part: DataFrame) -> DataFrame:
-            return table_part.select(
-                "bucket", "fp", F.lit(None).cast("string").alias("url_canon")
-            ).unionByName(
-                stash_part.select(
-                    F.lit(None).cast("int").alias("bucket"),
-                    F.lit(None).cast("int").alias("fp"),
-                    "url_canon",
-                )
-            )
-
-        def split(combined: DataFrame) -> tuple[DataFrame, DataFrame]:
-            return (
-                combined.filter(F.col("bucket").isNotNull()).select("bucket", "fp"),
-                combined.filter(F.col("url_canon").isNotNull()).select("url_canon"),
-            )
-
-        parts = list(self.parts)
-        stash_parts = list(self.stash_parts)
-        gen = self.gen + 1
-        if len(parts) >= self.COMPACT_EVERY:
-            t, s = split(
-                fn(combine(self.table, self.stash), f"cuckoo_state_g{gen}")
-            )
-            parts, stash_parts = [t], [s]
-        else:
-            t, s = split(
-                fn(
-                    combine(parts[-1], stash_parts[-1]),
-                    f"cuckoo_state_delta_g{gen}",
-                )
-            )
-            parts[-1], stash_parts[-1] = t, s
-        return CuckooState(
-            parts, stash_parts, self.m, self.capacity, self.n_items, gen=gen
-        )
-
-
-def filter_unseen_with_state(
-    candidates: DataFrame,
-    seen: DataFrame,
-    state: CuckooState,
-    key: str = "url_canon",
-) -> DataFrame:
-    """EXACT unseen filter pruned by a live ``CuckooState`` — same
-    answer contract as ``filter_unseen_cuckoo`` but the filter is NOT
-    rebuilt: the state must already cover exactly ``seen``. ``seen`` is
-    consulted only to confirm the maybe-hit sliver."""
-    keys = candidates.select(F.col(key).alias("url_canon")).distinct()
-    # maybe-hits are a candidate-bounded sliver — broadcast them so the
-    # candidate side never shuffles for the split
-    maybe = F.broadcast(state.maybe_seen(keys).withColumnRenamed("url_canon", key))
-    definite_new = candidates.join(maybe, on=key, how="left_anti")
-    needs_check = candidates.join(maybe, on=key, how="left_semi")
-    from reffy_spark.operators.frontier import anti_join_scan
-
-    confirmed_new = anti_join_scan(needs_check, seen, key)
-    return definite_new.unionByName(confirmed_new)
 
 
 def filter_unseen_cuckoo(

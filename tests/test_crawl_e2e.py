@@ -102,9 +102,9 @@ def test_links_table_matches_generator(engine_result, spark):
     assert checked > 5
 
 
-def test_bloom_cuckoo_and_exact_paths_agree(spark, corpus):
-    # all three URL-seen membership structures (exact anti-join, bloom
-    # split, cuckoo-filter split) must produce identical crawls
+def test_bloom_and_exact_paths_agree(spark, corpus):
+    # both URL-seen membership paths (exact anti-join, bloom split) must
+    # produce identical crawls
     pages, seeds, robots = corpus
     res_b = CrawlEngine(
         spark, pages, robots, modules=["links"], use_bloom=True, collect_metrics=False
@@ -112,15 +112,15 @@ def test_bloom_cuckoo_and_exact_paths_agree(spark, corpus):
     res_e = CrawlEngine(
         spark, pages, robots, modules=["links"], use_bloom=False, collect_metrics=False
     ).crawl(seeds, max_rounds=2)
-    res_c = CrawlEngine(
-        spark, pages, robots, modules=["links"], use_bloom="cuckoo",
-        collect_metrics=False,
-    ).crawl(seeds, max_rounds=2)
     assert _engine_fetches(res_b) == _engine_fetches(res_e)
-    assert _engine_fetches(res_c) == _engine_fetches(res_e)
     seen_e = sorted(r["url_canon"] for r in res_e.url_seen.collect())
     assert sorted(r["url_canon"] for r in res_b.url_seen.collect()) == seen_e
-    assert sorted(r["url_canon"] for r in res_c.url_seen.collect()) == seen_e
+
+
+def test_use_bloom_rejects_non_bool(spark, corpus):
+    pages, _seeds, robots = corpus
+    with pytest.raises(ValueError, match="filter_unseen_cuckoo"):
+        CrawlEngine(spark, pages, robots, use_bloom="cuckoo")
 
 
 def test_resume_equals_uninterrupted(spark, corpus, tmp_path_factory, engine_result):
@@ -494,6 +494,27 @@ def test_async_commit_failure_surfaces_and_engine_recovers(spark, corpus):
     assert _engine_fetches(rerun) == want
 
 
+def test_release_removes_round_state_dir(spark, corpus):
+    # multi-executor ephemeral crawls commit round state to a temporary
+    # directory; release() must remove it and leave the engine reusable
+    import os
+
+    pages, seeds, robots = corpus
+    eng = CrawlEngine(
+        spark, pages, robots, modules=["links"], use_bloom=False,
+        collect_metrics=False,
+    )
+    eng.reliable_state = True  # the multi-executor commit path
+    first = _engine_fetches(eng.crawl(seeds, max_rounds=2))
+    state_dir = eng._state_dir
+    assert state_dir is not None and os.path.isdir(state_dir)
+    eng.release()
+    assert not os.path.exists(state_dir)
+    assert eng._state_dir is None
+    assert _engine_fetches(eng.crawl(seeds, max_rounds=2)) == first
+    eng.release()
+
+
 def test_resume_after_torn_round_commit(
     spark, corpus, tmp_path_factory, engine_result
 ):
@@ -532,23 +553,16 @@ def test_resume_after_torn_round_commit(
 def test_seen_filter_built_once_not_per_round(spark, corpus, monkeypatch):
     """Incremental URL-seen lifecycle: across a multi-round discovery
     crawl whose seen set stays under the epoch-rebuild threshold, the
-    full-scan builds (static cuckoo table / bloom fold over seen) run
-    exactly ONCE — round N+1 inserts only new_urls, never re-scanning
-    the seen set. (Growth past 2x triggers an explicit doubling rebuild,
-    covered in test_cuckoo.test_epoch_rebuild_doubles_m.)"""
+    full-scan bloom build over seen runs exactly ONCE — round N+1 folds
+    only new_urls, never re-scanning the seen set."""
     pages, _seeds, robots = corpus
     # seed most of the graph so seen grows < 2x (no doubling epoch)
     big_seeds = syn.gen_seeds(spark, N_PAGES, 40)
 
-    from reffy_spark.operators import cuckoo as CK
     from reffy_spark.operators import frontier as FR
 
-    calls = {"cuckoo_table": 0, "build_bloom": 0, "fold_bloom": 0}
-    real_ct, real_bb, real_fb = CK.cuckoo_table, FR.build_bloom, FR.fold_bloom
-
-    def ct(*a, **k):
-        calls["cuckoo_table"] += 1
-        return real_ct(*a, **k)
+    calls = {"build_bloom": 0, "fold_bloom": 0}
+    real_bb, real_fb = FR.build_bloom, FR.fold_bloom
 
     def bb(*a, **k):
         calls["build_bloom"] += 1
@@ -558,16 +572,8 @@ def test_seen_filter_built_once_not_per_round(spark, corpus, monkeypatch):
         calls["fold_bloom"] += 1
         return real_fb(*a, **k)
 
-    monkeypatch.setattr(CK, "cuckoo_table", ct)
     monkeypatch.setattr(FR, "build_bloom", bb)
     monkeypatch.setattr(FR, "fold_bloom", fb)
-
-    res_c = CrawlEngine(
-        spark, pages, robots, modules=["links"], use_bloom="cuckoo",
-        collect_metrics=False,
-    ).crawl(big_seeds, max_rounds=3)
-    n_c = res_c.url_seen.count()
-    assert calls["cuckoo_table"] == 1, calls
 
     res_b = CrawlEngine(
         spark, pages, robots, modules=["links"], use_bloom=True,
@@ -577,12 +583,10 @@ def test_seen_filter_built_once_not_per_round(spark, corpus, monkeypatch):
     # incremental new_urls fold, never a rebuild
     assert calls["build_bloom"] == 1, calls
     assert calls["fold_bloom"] >= 1
-    assert res_b.url_seen.count() == n_c
 
     res_e = CrawlEngine(
         spark, pages, robots, modules=["links"], use_bloom=False,
         collect_metrics=False,
     ).crawl(big_seeds, max_rounds=3)
-    assert res_e.url_seen.count() == n_c
-    assert _engine_fetches(res_c) == _engine_fetches(res_e)
+    assert res_b.url_seen.count() == res_e.url_seen.count()
     assert _engine_fetches(res_b) == _engine_fetches(res_e)

@@ -74,135 +74,3 @@ def test_plan_windows_bucket_partitioned(spark):
     for s in specs:
         assert "_b1" in s or "_b2" in s, s
 
-
-# ---------------------------------------------------------------------------
-# Incremental lifecycle (CuckooState): round N+1 never re-scans seen
-# ---------------------------------------------------------------------------
-
-
-def test_incremental_insert_membership_and_capacity(spark):
-    seen0 = _urls(spark, 120)
-    st = C.CuckooState.build(seen0, n_items=120, capacity=4)
-    new1 = _urls(spark, 90, tag="n1")
-    st = st.insert(new1, 90)
-    new2 = _urls(spark, 60, tag="n2")
-    st = st.insert(new2, 60)
-    # no false negatives across all three insert generations
-    every = seen0.unionByName(new1).unionByName(new2)
-    assert st.maybe_seen(every).count() == 270
-    # per-bucket capacity still respected after incremental placement
-    per_bucket = {
-        r["bucket"]: r["n"]
-        for r in st.table.groupBy("bucket").agg(
-            F.count("*").alias("n")
-        ).collect()
-    }
-    assert max(per_bucket.values()) <= 4
-    # everything placed or stashed, nothing lost
-    assert st.table.count() + st.stash.count() == 270
-    assert st.n_items == 270
-
-
-def test_incremental_filter_exactness(spark):
-    seen = _urls(spark, 150)
-    st = C.CuckooState.build(seen, n_items=150)
-    grown = _urls(spark, 80, tag="g")
-    st = st.insert(grown, 80)
-    all_seen = seen.unionByName(grown)
-    fresh = _urls(spark, 70, tag="f")
-    cand = all_seen.unionByName(fresh)
-    got = sorted(
-        r["url_canon"]
-        for r in C.filter_unseen_with_state(cand, all_seen, st).collect()
-    )
-    assert got == sorted(r["url_canon"] for r in fresh.collect())
-
-
-def test_insert_plan_touches_only_new_keys_and_counts(spark):
-    """Structural no-rescan proof: after the epoch build, inserting a
-    round's new urls never evaluates the seen set — here the original
-    seen frame is POISONED after the build; any scan of it would raise.
-    """
-    import pandas as pd
-
-    base = _urls(spark, 100)
-    st = C.CuckooState.build(base, n_items=100)
-    # force the build NOW so the poison below can't be reached by it
-    st = C.CuckooState(
-        [st.table.localCheckpoint()],
-        [st.stash.localCheckpoint()],
-        st.m,
-        st.capacity,
-        st.n_items,
-    )
-
-    def boom(_it):
-        raise AssertionError("seen set was re-scanned after epoch build")
-        yield pd.DataFrame()
-
-    poisoned_seen = base.mapInPandas(boom, "url_canon string")
-    del poisoned_seen  # insert cannot even receive it: no parameter
-    new = _urls(spark, 40, tag="z")
-    st2 = st.insert(new, 40)
-    # evaluating the grown state runs only: cached state + new keys
-    assert st2.table.count() + st2.stash.count() == 140
-    assert st2.maybe_seen(new).count() == 40
-
-
-def test_epoch_rebuild_doubles_m(spark):
-    st = C.CuckooState.build(_urls(spark, 100), n_items=100, capacity=4)
-    m0 = st.m
-    assert not st.needs_rebuild()  # built at ~0.35 load
-    st = st.insert(_urls(spark, 300, tag="x"), 300)
-    assert st.needs_rebuild()  # 400/(128*4) = 0.78 > 0.7
-    all_seen = _urls(spark, 100).unionByName(_urls(spark, 300, tag="x"))
-    st2 = C.CuckooState.build(all_seen, n_items=st.n_items, capacity=4)
-    assert st2.m >= 2 * m0
-    assert st2.maybe_seen(all_seen).count() == 400
-
-
-def test_insert_is_deterministic(spark):
-    base = _urls(spark, 100)
-    new = _urls(spark, 60, tag="d")
-    a = C.CuckooState.build(base, n_items=100).insert(new.repartition(7), 60)
-    b = C.CuckooState.build(base, n_items=100).insert(new.repartition(3), 60)
-    assert sorted(map(tuple, a.table.collect())) == sorted(
-        map(tuple, b.table.collect())
-    )
-    assert sorted(a.stash.collect()) == sorted(b.stash.collect())
-
-
-def test_materialize_commits_delta_only_then_compacts(spark):
-    """Per-round commit touches only the round's delta part; the union
-    is compacted into one frame every COMPACT_EVERY parts (bounded plan
-    depth without a per-round full-table copy)."""
-    st = C.CuckooState.build(_urls(spark, 50), n_items=50, m=2048)
-    names = []
-
-    def fn(df, nm):
-        names.append(nm)
-        return df.localCheckpoint()
-
-    n_ins = C.CuckooState.COMPACT_EVERY
-    for i in range(n_ins):
-        st = st.insert(_urls(spark, 5, tag=f"t{i}"), 5).materialized(fn)
-    # ONE combined commit per round (placed + stash share the insert
-    # lineage); a compaction commit appears at COMPACT_EVERY; every
-    # commit name carries a distinct generation so a durable (parquet)
-    # materializer never overwrites a path its own plan reads
-    deltas = [n for n in names if n.startswith("cuckoo_state_delta_g")]
-    compacts = [
-        n for n in names
-        if n.startswith("cuckoo_state_g") and "delta" not in n
-    ]
-    assert len(deltas) == n_ins - 1  # every round but the compacting one
-    assert len(compacts) == 1
-    assert len(set(names)) == len(names)  # no name ever reused
-    # compaction fired when parts hit COMPACT_EVERY (insert 15), leaving
-    # one compacted frame plus the single delta committed since
-    assert len(st.parts) == 2
-    assert st.n_items == 50 + 5 * n_ins
-    every = _urls(spark, 50)
-    for i in range(n_ins):
-        every = every.unionByName(_urls(spark, 5, tag=f"t{i}"))
-    assert st.maybe_seen(every).count() == 50 + 5 * n_ins

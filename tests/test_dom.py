@@ -201,6 +201,23 @@ def _assert_equiv(html):
     )
 
 
+def test_rawtext_end_matches_stdlib_cdata_mode():
+    """The fast parser's script/style end patterns are literals; they must
+    equal what this interpreter's html.parser builds in set_cdata_mode."""
+    from html.parser import HTMLParser
+
+    from reffy_spark.html.dom import _RAWTEXT_END
+
+    assert set(_RAWTEXT_END) == {"script", "style"}
+    for tag, pat in _RAWTEXT_END.items():
+        p = HTMLParser()
+        p.set_cdata_mode(tag)
+        assert (pat.pattern, pat.flags) == (
+            p.interesting.pattern,
+            p.interesting.flags,
+        ), tag
+
+
 def test_fast_parser_matches_stdlib_on_goldens():
     import json
     import os
