@@ -238,7 +238,7 @@ class CrawlEngine:
             # groupBy shuffle 2×rounds times per crawl. MEMORY_AND_DISK
             # is the sandbox stand-in for the production shape (an
             # Iceberg pages table MERGEd on url_canon, written once);
-            # released in close().
+            # released in release().
             from pyspark.storagelevel import StorageLevel
 
             self.pages = freshest_capture(pc).persist(
@@ -263,13 +263,6 @@ class CrawlEngine:
         # persisted within-round working sets awaiting release (ephemeral
         # multi-executor mode; see _materialize durable=False)
         self._working_sets: list[DataFrame] = []
-        # background executor for async ephemeral round-state commits
-        # (created lazily; 2 workers = frontier + seen commit in parallel)
-        self._commit_pool = None
-        # in-flight async round-state commits, resolved at the top of the
-        # next round — instance-held so the _run_rounds finally block can
-        # drain them if a round raises between submit and join
-        self._deferred: list[tuple[str, object]] = []
         # Conditional-recrawl reuse (specs-crawler.js:87-98,128-133 +
         # test/crawl.js "skips processing and reuse fallback data when
         # spec cache info indicates it has not changed"): a prior crawl's
@@ -369,6 +362,13 @@ class CrawlEngine:
     # ------------------------------------------------------------------
     def crawl(self, seeds: DataFrame, max_rounds: int = 10) -> CrawlResult:
         """Run the BSP loop from a seed list (url [, seed_idx])."""
+        if self.checkpoint_dir and self._checkpointed_rounds():
+            # a stale higher round would outlive this crawl and be
+            # continued by a later resume()
+            raise ValueError(
+                f"checkpoint_dir {self.checkpoint_dir!r} already holds "
+                "committed rounds; resume() them or crawl into a new directory"
+            )
         self._ensure_pages_cached()
         if "seed_idx" not in seeds.columns:
             seeds = self._seed_index(seeds)
@@ -406,9 +406,8 @@ class CrawlEngine:
         return self._run_rounds(frontier, seen, start_round=1, max_rounds=max_rounds)
 
     def _ensure_pages_cached(self) -> None:
-        """Re-persist the canonical pages table if a context-manager exit
-        dropped the cache — keeps the 'engine stays reusable after
-        close()' contract intact (r8 review)."""
+        """Re-persist the canonical pages table if ``release()`` dropped
+        the cache — keeps the engine reusable after ``release()``."""
         if (
             getattr(self, "_pages_persistable", False)
             and self._pages_cached is None
@@ -425,8 +424,12 @@ class CrawlEngine:
         results are re-read from their checkpoints."""
         if not self.checkpoint_dir:
             raise ValueError("resume requires a checkpoint_dir")
-        self._ensure_pages_cached()
         rounds = self._checkpointed_rounds()
+        if not rounds:
+            raise ValueError(
+                f"checkpoint_dir {self.checkpoint_dir!r} holds no committed round"
+            )
+        self._ensure_pages_cached()
         last = rounds[-1]
         frontier = self.spark.read.parquet(
             os.path.join(self.checkpoint_dir, f"round={last}", "frontier")
@@ -446,6 +449,8 @@ class CrawlEngine:
         )
 
     def _checkpointed_rounds(self) -> list[int]:
+        if not os.path.isdir(self.checkpoint_dir):
+            return []
         return sorted(
             int(d.split("=")[1])
             for d in os.listdir(self.checkpoint_dir)
@@ -454,42 +459,6 @@ class CrawlEngine:
         )
 
     # ------------------------------------------------------------------
-    def _run_rounds(
-        self,
-        frontier: DataFrame,
-        seen: DataFrame,
-        start_round: int,
-        max_rounds: int,
-        prior: list[DataFrame] | None = None,
-    ) -> CrawlResult:
-        try:
-            return self._run_rounds_impl(
-                frontier, seen, start_round, max_rounds, prior
-            )
-        finally:
-            self.close()
-
-    def close(self) -> None:
-        """Resolve any in-flight async round-state commits and retire the
-        background commit pool (two non-daemon threads — without this an
-        engine that raised between a commit submit and the next round's
-        join would abandon the futures with their exceptions unobserved,
-        and leak the pool threads). Idempotent; crawl()/resume() recreate
-        the pool lazily, so an engine stays reusable after close().
-        ``release()`` (and so the context-manager exit) calls this too."""
-        pool, self._commit_pool = self._commit_pool, None
-        for _name, fut in self._deferred:
-            try:
-                fut.result()
-            except Exception:
-                # the round's own error is already propagating; a failed
-                # background commit of ephemeral state adds nothing — the
-                # crawl has no resume contract without a checkpoint_dir
-                pass
-        self._deferred = []
-        if pool is not None:
-            pool.shutdown(wait=True)
-
     def __enter__(self) -> "CrawlEngine":
         return self
 
@@ -500,12 +469,9 @@ class CrawlEngine:
         """Free the engine's cached state and its temporary round-state
         directory. Call once the crawl's (lazy) results are consumed.
 
-        NOT in close(): close() runs inside _run_rounds' finally, and a
-        pure-replay caller consumes the (lazy) results after that —
-        unpersisting there would forfeit the cache for the final
-        action."""
-        self.close()
+        Separate from the crawl because lazy results read the caches."""
         self._release_working_sets()
+        FR.release_rank_cache()
         if getattr(self, "_pages_cached", None) is not None:
             try:
                 self._pages_cached.unpersist(blocking=False)
@@ -516,7 +482,7 @@ class CrawlEngine:
         if state_dir is not None:
             shutil.rmtree(state_dir, ignore_errors=True)
 
-    def _run_rounds_impl(
+    def _run_rounds(
         self,
         frontier: DataFrame,
         seen: DataFrame,
@@ -535,28 +501,11 @@ class CrawlEngine:
         # rebuilt from seen only at explicit epoch boundaries
         bloom = None
         bloom_retired = False
-        self._deferred = []
-        deferred = self._deferred  # alias — mutated in place, never rebound
 
         for rnd in range(start_round, max_rounds + 1):
             t0 = time.monotonic()
-            # join the PREVIOUS round's async state commits: the writes
-            # were submitted at the loop bottom on a background thread,
-            # so they overlapped the round's tail jobs (metrics collects,
-            # manifest write) and each other instead of running serially
-            # here. Rounds that cannot continue (rnd == max_rounds) never
-            # submit — the final round's frontier/seen have no consumer
-            # in ephemeral (no-checkpoint) crawls; on a single-round
-            # seed-list replay that skip is the whole frontier write
-            if deferred:
-                for var, fut in deferred:
-                    if var == "frontier":
-                        frontier = fut.result()
-                    else:
-                        seen = fut.result()
-                deferred.clear()
             # cached working sets from earlier rounds have no consumer
-            # left once the deferred commits above are durable AND every
+            # left once the previous round's commits are durable AND every
             # in-round action ran (metrics/discovery force the round's
             # results). Pure replay defers ALL result consumption to the
             # caller's final action, so there we keep the caches alive.
@@ -896,10 +845,11 @@ class CrawlEngine:
                 n_new = None
 
             # ---- commit round: update frontier + seen -------------------
-            # With a checkpoint_dir the commit happens NOW (durability and
-            # the resume contract: every round must leave frontier+seen on
-            # disk). Ephemeral crawls defer the commit to the top of the
-            # next round — if this was the last round, it never happens.
+            # A checkpointed crawl commits every round (durability and the
+            # resume contract: every round must leave frontier+seen on
+            # disk). An ephemeral crawl skips the final round's commit:
+            # its frontier/seen have no consumer, and on a single-round
+            # seed-list replay that skip is the whole frontier write.
             # batch keys are budget-bounded (the fetch-join broadcast
             # argument) — hint it so the frontier side never shuffles
             # even when cache statistics are unavailable
@@ -913,18 +863,10 @@ class CrawlEngine:
                 seen = seen.unionByName(
                     new_urls.select("url_canon", F.lit(rnd).alias("first_round"))
                 )
-                if self.checkpoint_dir:
-                    seen = self._materialize(seen, "seen", rnd)
-                elif rnd < max_rounds:
-                    deferred.append(("seen", self._commit_async(seen, "seen", rnd)))
-            elif self.checkpoint_dir:
+            if self.checkpoint_dir or (new_urls is not None and rnd < max_rounds):
                 seen = self._materialize(seen, "seen", rnd)
-            if self.checkpoint_dir:
+            if self.checkpoint_dir or rnd < max_rounds:
                 frontier = self._materialize(frontier, "frontier", rnd)
-            elif rnd < max_rounds:
-                deferred.append(
-                    ("frontier", self._commit_async(frontier, "frontier", rnd))
-                )
 
             # ---- lineage metrics ----------------------------------------
             # All counts come from already-materialized round state, each
@@ -1012,36 +954,6 @@ class CrawlEngine:
             self._working_sets.append(df)
             return df
         return df.localCheckpoint(eager=True)
-
-    def _commit_async(self, df: DataFrame, name: str, rnd: int):
-        """Submit an ephemeral round-state commit on a background thread
-        and return its Future (result = the committed, lineage-truncated
-        frame). The write then overlaps the round's tail jobs (metrics
-        collects, manifest write) and the sibling commit (frontier and
-        seen commit concurrently, pool of 2) instead of serializing at
-        the top of the next round. Spark local properties are per-thread
-        (pinned-thread mode), so the commit runs in its own job group and
-        scheduler pool — under FAIR scheduling it never starves the
-        foreground round, under default FIFO the jobs still interleave
-        whenever task slots are free."""
-        if self._commit_pool is None:
-            from concurrent.futures import ThreadPoolExecutor
-
-            self._commit_pool = ThreadPoolExecutor(
-                max_workers=2, thread_name_prefix="reffy-state-commit"
-            )
-
-        def work() -> DataFrame:
-            sc = self.spark.sparkContext
-            sc.setLocalProperty("spark.scheduler.pool", "reffy_state_commit")
-            sc.setJobGroup(
-                f"reffy-state-{name}-r{rnd}",
-                "async ephemeral round-state commit",
-                False,
-            )
-            return self._materialize(df, name, rnd)
-
-        return self._commit_pool.submit(work)
 
     def _release_working_sets(self) -> None:
         for df in self._working_sets:

@@ -390,6 +390,18 @@ def host_budgets(robots: DataFrame, round_ms: int, default_delay_ms: int = 100) 
     )
 
 
+def release_rank_cache() -> None:
+    """Unpersist the slice ``_exact_group_rank`` keeps cached for its
+    latest ranking. Lazy results that still read it recompute it."""
+    global _prev_rank_cache
+    if _prev_rank_cache is not None:
+        try:
+            _prev_rank_cache.unpersist(blocking=False)
+        except Exception:
+            pass
+    _prev_rank_cache = None
+
+
 def _exact_group_rank(
     df: DataFrame,
     order: list,
@@ -444,12 +456,8 @@ def _exact_group_rank(
     part = ranged.withColumn("_pid", F.spark_partition_id()).persist(
         StorageLevel.MEMORY_AND_DISK
     )
+    release_rank_cache()
     global _prev_rank_cache
-    if _prev_rank_cache is not None:
-        try:
-            _prev_rank_cache.unpersist(blocking=False)
-        except Exception:
-            pass
     _prev_rank_cache = part
     counts = part.groupBy("host_group", "_pid").agg(F.count(F.lit(1)).alias("_c"))
     # running count of earlier partitions' rows per group; the window

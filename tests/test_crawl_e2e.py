@@ -437,35 +437,10 @@ def test_redirect_preserves_fallback_reuse_for_canon_rewrites(spark):
     assert row["from_fallback"] and row["title"] == '"SENTINEL"'
 
 
-def test_commit_pool_retired_after_crawl(spark, corpus):
-    # ADVICE r5: the async-commit pool must not leak its two non-daemon
-    # threads once the round loop exits (normal path)
-    import threading
-
-    pages, seeds, robots = corpus
-    eng = CrawlEngine(
-        spark, pages, robots, modules=["links"], use_bloom=False,
-        collect_metrics=True,
-    )
-    res = eng.crawl(seeds, max_rounds=3)
-    res.results.count()  # consume
-    assert eng._commit_pool is None
-    assert eng._deferred == []
-    live = [
-        t.name for t in threading.enumerate()
-        if t.name.startswith("reffy-state-commit") and t.is_alive()
-    ]
-    assert live == []
-
-
-def test_async_commit_failure_surfaces_and_engine_recovers(spark, corpus):
-    # Crash between an async commit's submit and the next round's join:
-    # the error must surface (not be abandoned in an unobserved future),
-    # the pool must be shut down, and the engine must stay reusable —
-    # a rerun equals the uninterrupted crawl (ephemeral crawls have no
-    # checkpoint, so "resume" == rerun-from-seeds).
-    import threading
-
+def test_commit_failure_surfaces_and_engine_recovers(spark, corpus):
+    # Crash inside a round-state commit: the error must surface and the
+    # engine must stay reusable — a rerun equals the uninterrupted crawl
+    # (ephemeral crawls have no checkpoint, so "resume" == rerun-from-seeds).
     pages, seeds, robots = corpus
     baseline = CrawlEngine(
         spark, pages, robots, modules=["links"], use_bloom=False,
@@ -480,18 +455,101 @@ def test_async_commit_failure_surfaces_and_engine_recovers(spark, corpus):
     orig = eng._materialize
 
     def boom(df, name, rnd, durable=True):
-        if threading.current_thread().name.startswith("reffy-state-commit"):
+        if name == "frontier" and rnd == 1:
             raise RuntimeError("injected mid-commit crash")
         return orig(df, name, rnd, durable)
 
     eng._materialize = boom
     with pytest.raises(RuntimeError, match="injected mid-commit crash"):
         eng.crawl(seeds, max_rounds=3)
-    assert eng._commit_pool is None and eng._deferred == []
 
     eng._materialize = orig
     rerun = eng.crawl(seeds, max_rounds=3)
     assert _engine_fetches(rerun) == want
+
+
+def _commit_log(eng):
+    """Wrap ``eng._materialize``; return the list it appends (name, rnd)
+    to for every round-state commit of round 1 or later."""
+    log = []
+    orig = eng._materialize
+
+    def logged(df, name, rnd, durable=True):
+        if rnd >= 1:
+            log.append((name, rnd))
+        return orig(df, name, rnd, durable)
+
+    eng._materialize = logged
+    return log
+
+
+def test_final_round_skips_state_commit(spark, corpus):
+    # an ephemeral crawl commits frontier and seen after every round but
+    # the last: the final round's state has no consumer
+    pages, seeds, robots = corpus
+    eng = CrawlEngine(
+        spark, pages, robots, modules=["links"], use_bloom=False,
+        collect_metrics=False,
+    )
+    log = _commit_log(eng)
+    eng.crawl(seeds, max_rounds=3).results.count()
+    assert ("batch", 3) in log  # round 3 ran
+    for rnd in (1, 2):
+        assert ("frontier", rnd) in log and ("seen", rnd) in log
+    assert ("frontier", 3) not in log and ("seen", 3) not in log
+
+    # a one-round seed-list replay commits no round state at all
+    replay = CrawlEngine(
+        spark, pages, robots, modules=["links"], use_bloom=False,
+        collect_metrics=False, discover=False,
+    )
+    log = _commit_log(replay)
+    replay.crawl(seeds, max_rounds=1).results.count()
+    assert ("batch", 1) in log
+    assert ("frontier", 1) not in log and ("seen", 1) not in log
+
+
+def test_resume_rejects_empty_checkpoint(spark, corpus, tmp_path):
+    pages, _seeds, robots = corpus
+    missing = str(tmp_path / "missing")
+    empty = tmp_path / "empty"
+    (empty / "round=0").mkdir(parents=True)  # no seen table: not committed
+    for chk in (missing, str(empty)):
+        eng = CrawlEngine(spark, pages, robots, checkpoint_dir=chk)
+        with pytest.raises(ValueError, match="holds no committed round") as e:
+            eng.resume(max_rounds=2)
+        assert chk in str(e.value)
+
+
+def test_crawl_rejects_used_checkpoint(spark, corpus, tmp_path):
+    # a second crawl() would leave the first crawl's higher rounds for a
+    # later resume() to continue from
+    pages, seeds, robots = corpus
+    chk = str(tmp_path / "chk")
+    eng = CrawlEngine(spark, pages, robots, checkpoint_dir=chk, modules=["links"])
+    eng.crawl(seeds, max_rounds=2)
+    with pytest.raises(ValueError, match="already holds committed rounds"):
+        eng.crawl(seeds, max_rounds=2)
+
+
+def test_release_frees_rank_cache(spark, corpus):
+    # an unbounded politeness window takes the _exact_group_rank path,
+    # whose persisted range slice release() must free
+    from reffy_spark.operators import frontier as FR
+
+    pages, seeds, robots = corpus
+    eng = CrawlEngine(
+        spark, pages, robots, modules=["links"], use_bloom=False,
+        collect_metrics=False, discover=False, round_ms=1_000_000_000,
+    )
+    FR.release_rank_cache()
+    eng.crawl(seeds, max_rounds=1).results.count()
+    held = FR._prev_rank_cache
+    assert held is not None
+    eng.release()
+    level = held.storageLevel
+    assert not level.useMemory and not level.useDisk
+    assert FR._prev_rank_cache is None
 
 
 def test_release_removes_round_state_dir(spark, corpus):
