@@ -346,7 +346,7 @@ def domain_cap(
 
     Scale shape: a plain ``Window.partitionBy(domain)`` puts an entire
     hot domain in one task — the same skew failure the politeness rank
-    had (see ``frontier._exact_group_rank``). Stage 1 takes a local
+    had (see ``frontier.politeness_rank``). Stage 1 takes a local
     top-``cap`` per (domain, salt) — bounded input per task regardless
     of domain size; stage 2 ranks the ≤ salts·cap survivors per domain.
     Every global top-``cap`` row ranks ≤ cap within its own salt too, so
@@ -467,18 +467,14 @@ def pack_sequences(
 
     Scale shape (100 TB): the prefix sum over the global doc order is
     NOT a ``Window.orderBy(doc_id)`` without partitioning (Spark would
-    funnel the whole corpus into one task). Same two-phase trick as
-    ``frontier._exact_group_rank``: range-repartition on doc_id, local
-    cumulative sum inside each range slice (hash-partitioned by slice
-    id), plus a broadcast running-offset table with one row per range
+    funnel the whole corpus into one task) but
+    ``frontier.range_prefix_sum``'s two-phase sum: range slices on
+    doc_id plus a broadcast running-offset table with one row per range
     partition — the only unpartitioned window runs over that ≤
     ``num_parts``-row table, bounded by config, not by data.
     """
-    from pyspark.storagelevel import StorageLevel
+    from reffy_spark.operators.frontier import range_prefix_sum
 
-    spark = docs.sparkSession
-    if num_parts is None:
-        num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     counted = docs.select(
         F.col(id_col).alias("doc_id"),
         (
@@ -487,17 +483,17 @@ def pack_sequences(
             else token_count_col(F.col(text_col)).cast("long")
         ).alias("n_tokens"),
     )
-    ranged = counted.repartitionByRange(num_parts, F.col("doc_id"))
-    # bake the range-partition id into one materialization so the
-    # offsets branch and the cumsum branch read identical slices (see
-    # _exact_group_rank for why ReuseExchange is not relied upon).
+    summed, part = range_prefix_sum(
+        counted,
+        [F.col("doc_id")],
+        weight="n_tokens",
+        out="_end_offset",
+        num_parts=num_parts,
+    )
     # Lifecycle: exactly one pack cache is live at a time — repeated
     # calls in one session (test suites, notebook loops) must not
     # accumulate persisted frames until storage eviction thrashes (a
     # leak here wedged a 4-core test JVM in an eviction storm).
-    part = ranged.withColumn("_pid", F.spark_partition_id()).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
     global _prev_pack_cache
     if _prev_pack_cache is not None:
         try:
@@ -505,23 +501,13 @@ def pack_sequences(
         except Exception:
             pass
     _prev_pack_cache = part
-    totals = part.groupBy("_pid").agg(F.sum("n_tokens").alias("_t"))
-    w_off = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.select(
-        "_pid", F.coalesce(F.sum("_t").over(w_off), F.lit(0)).alias("_off")
-    )
-    w_local = (
-        Window.partitionBy("_pid")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    local = part.withColumn(
-        "_lsum", F.coalesce(F.sum("n_tokens").over(w_local), F.lit(0))
-    )
-    packed = local.join(F.broadcast(offsets), "_pid").select(
+    # a NULL count adds nothing to the stream
+    packed = summed.select(
         "doc_id",
         "n_tokens",
-        (F.col("_lsum") + F.col("_off")).alias("start_offset"),
+        (F.col("_end_offset") - F.coalesce("n_tokens", F.lit(0))).alias(
+            "start_offset"
+        ),
     )
     # integer `div`, not double `/`: at stream offsets past 2^53 a
     # double-division bin id would silently round

@@ -292,16 +292,12 @@ class CrawlEngine:
         arrives without one — WITHOUT a global unpartitioned window (a
         1M-URL webtext seed list must not funnel into one sorting task).
 
-        Same two-phase pattern as ``frontier._exact_group_rank`` /
-        ``corpus_quality.pack_sequences``, degenerate single-group case:
-        range-repartition on url (every partition holds a contiguous
-        url-order slice), rank locally per slice, add a broadcast
-        running-count offset per slice. The only unpartitioned window
-        runs over the ≤ num_parts-row offset table — bounded by config,
-        not by data. Assignment matches
-        ``row_number().over(Window.orderBy("url")) - 1`` (duplicate urls,
-        if any, get arbitrary-but-distinct indices in both forms; the
-        frontier dedups them immediately after).
+        The scale shape is ``frontier.range_prefix_sum``'s global row
+        number minus one; its only unpartitioned window runs over the
+        ≤ num_parts-row offset table — bounded by config, not by data.
+        Assignment matches ``row_number().over(Window.orderBy("url")) - 1``
+        (duplicate urls, if any, get arbitrary-but-distinct indices in
+        both forms; the frontier dedups them immediately after).
 
         Size routing (r8, same precedent as ``frontier.anti_join_scan``):
         a seed list Catalyst can ESTIMATE as small takes the direct
@@ -309,8 +305,6 @@ class CrawlEngine:
         two-phase machinery's four stages; unknown or large estimates
         keep the scale shape (an unknown seed list may be the 1M-URL
         case)."""
-        from pyspark.storagelevel import StorageLevel
-
         from reffy_spark.plan_stats import estimated_bytes
 
         est = estimated_bytes(seeds)
@@ -319,38 +313,14 @@ class CrawlEngine:
             return seeds.withColumn(
                 "seed_idx", (F.row_number().over(w) - 1).cast("long")
             )
-
-        num_parts = int(
-            self.spark.conf.get("spark.sql.shuffle.partitions", "200")
+        numbered, part = FR.range_prefix_sum(
+            seeds, [F.col("url")], out="seed_idx"
         )
-        ranged = seeds.repartitionByRange(num_parts, F.col("url"))
-        # bake the range-partition id into one materialization so the
-        # offsets branch and the rank branch read identical slices (see
-        # _exact_group_rank for why ReuseExchange is not relied upon);
-        # released with the round's working sets.
-        part = ranged.withColumn("_pid", F.spark_partition_id()).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+        # the range slice is released with the round's working sets
         self._working_sets.append(part)
-        counts = part.groupBy("_pid").agg(F.count("*").alias("_n"))
-        w_off = Window.orderBy("_pid").rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        offsets = counts.select(
-            "_pid", F.coalesce(F.sum("_n").over(w_off), F.lit(0)).alias("_off")
-        )
-        w_local = Window.partitionBy("_pid").orderBy("url")
-        return (
-            part.withColumn("_lrn", F.row_number().over(w_local))
-            .join(F.broadcast(offsets), "_pid")
-            .withColumn(
-                "seed_idx",
-                # long: webtext-scale seed lists pass 2^31-1 rows
-                # (matches sources.seeds.with_input_order_index)
-                (F.col("_off") + F.col("_lrn") - 1).cast("long"),
-            )
-            .drop("_pid", "_lrn", "_off")
-        )
+        # long: webtext-scale seed lists pass 2^31-1 rows (matches
+        # sources.seeds.with_input_order_index)
+        return numbered.withColumn("seed_idx", F.col("seed_idx") - 1)
 
     def _ensure_state_dir(self) -> str:
         if self._state_dir is None:

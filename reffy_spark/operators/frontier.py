@@ -34,7 +34,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType
 from pyspark.storagelevel import StorageLevel
 
-# previous _exact_group_rank cache, unpersisted on the next call (one
+# previous politeness_rank range slice, unpersisted on the next call (one
 # live slim cache per crawl loop instead of one per round)
 _prev_rank_cache: DataFrame | None = None
 
@@ -364,7 +364,7 @@ def apply_robots(frontier: DataFrame, robots: DataFrame) -> DataFrame:
     )
 
 
-def host_budgets(robots: DataFrame, round_ms: int, default_delay_ms: int = 100) -> DataFrame:
+def host_budgets(robots: DataFrame, round_ms: int) -> DataFrame:
     """Per-host fetch budget for one round: floor(round_ms / crawl_delay).
 
     Mirrors the reference's per-origin sleep intervals
@@ -391,7 +391,7 @@ def host_budgets(robots: DataFrame, round_ms: int, default_delay_ms: int = 100) 
 
 
 def release_rank_cache() -> None:
-    """Unpersist the slice ``_exact_group_rank`` keeps cached for its
+    """Unpersist the slice ``politeness_rank`` keeps cached for its
     latest ranking. Lazy results that still read it recompute it."""
     global _prev_rank_cache
     if _prev_rank_cache is not None:
@@ -402,92 +402,84 @@ def release_rank_cache() -> None:
     _prev_rank_cache = None
 
 
-def _exact_group_rank(
+def range_prefix_sum(
     df: DataFrame,
     order: list,
-    rank_col: str = "host_fetch_rank",
+    groups: tuple = (),
+    weight: str | None = None,
+    out: str = "prefix",
     num_parts: int | None = None,
-    carry: list[str] | None = None,
-) -> DataFrame:
-    """Exact per-``host_group`` ``row_number`` with NO single-task sort of
-    a whole group — the two-phase distributed ranking classic:
+) -> tuple[DataFrame, DataFrame]:
+    """Inclusive running sum of ``weight`` within each ``groups`` key in
+    ``order`` (``weight=None`` sums 1 per row: the row number) with NO
+    single-task sort of a whole group — the two-phase distributed
+    prefix-sum classic:
 
-    1. Range-repartition on (host_group, *order): every partition holds a
+    1. Range-repartition on (*groups, *order): every partition holds a
        contiguous slice of the global order, so one hot group spreads
-       over many partitions while slices stay rank-composable.
-    2. Rank locally inside each (partition, group) slice; the global rank
-       is the local rank plus the running count of the group's rows in
-       earlier partitions — a tiny (groups × partitions)-row offset
-       table, broadcast.
+       over many partitions while slices stay sum-composable.
+    2. Sum locally inside each (partition, group) slice; the global sum
+       is the local sum plus the group's total in earlier partitions —
+       a tiny (groups × partitions)-row offset table, broadcast.
 
-    The result is bit-identical to
-    ``row_number().over(Window.partitionBy("host_group").orderBy(*order))``
-    (ties are impossible: ``url_canon`` terminates the order key and the
-    frontier is unique per url_canon), but the largest sort any task does
-    is one range-partition's worth of rows, never a whole hot group.
+    The result equals ``sum(weight).over(Window.partitionBy(*groups)
+    .orderBy(*order).rowsBetween(unboundedPreceding, currentRow))``: the
+    ROWS frame gives rows with equal order keys distinct values, so
+    duplicate keys still get distinct row numbers. The largest sort any
+    task does is one range partition's rows, never a whole hot group.
+
+    Returns ``(result, part)``: ``result`` is ``df`` plus ``out``;
+    ``part`` is the persisted range slice both branches read, which the
+    caller releases once ``result`` is consumed.
     """
-    spark = df.sparkSession
     if num_parts is None:
-        num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    # Rank over ONLY the order-key columns: the double shuffle (range +
-    # window hash) carries slim columns, not the whole frontier payload.
-    #
-    # ``carry``: additional small payload columns (ints, a budget) pulled
-    # THROUGH the range shuffle so the caller can consume the ranked slim
-    # frame directly — the legacy join-back onto the full payload costs
-    # two more frontier-sized shuffles at replay scale. With carry set,
-    # the result contains ONLY key+carry+rank columns (strings like
-    # url/host are re-derivable from url_canon downstream).
-    key_cols = ["host_group", "priority", "depth", "url_canon"]
-    carry_cols = [c for c in (carry or []) if c not in key_cols]
-    slim = df.select(*key_cols, *carry_cols)
-    ranged = slim.repartitionByRange(num_parts, F.col("host_group"), *order)
+        num_parts = int(
+            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
+        )
+    # a NULL weight adds nothing, as in SUM
+    w = F.lit(1) if weight is None else F.coalesce(F.col(weight), F.lit(0))
+    keys = [*groups, "_pid"]
     # Bake the range-partition id INTO THE DATA under a single
-    # materialization (persist): the offsets branch and the rank branch
+    # materialization (persist): the offsets branch and the sum branch
     # below then read identical (row, _pid) pairs from the cache instead
     # of each re-running the range exchange. Without this the two logical
     # branches only agree on partition boundaries if Catalyst's
     # ReuseExchange fires (byte-identical subtrees after optimization) —
     # an optimizer internal that column-pruning drift across Spark
     # versions could silently break, desyncing boundaries into off-by-N
-    # ranks. persist (not localCheckpoint) keeps lineage, so executor
+    # sums. persist (not localCheckpoint) keeps lineage, so executor
     # loss recomputes from the already-written shuffle files with the
-    # same boundaries. The cache is slim (4 key columns + an int).
-    part = ranged.withColumn("_pid", F.spark_partition_id()).persist(
-        StorageLevel.MEMORY_AND_DISK
+    # same boundaries.
+    part = (
+        df.repartitionByRange(num_parts, *[F.col(g) for g in groups], *order)
+        .withColumn("_pid", F.spark_partition_id())
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    release_rank_cache()
-    global _prev_rank_cache
-    _prev_rank_cache = part
-    counts = part.groupBy("host_group", "_pid").agg(F.count(F.lit(1)).alias("_c"))
-    # running count of earlier partitions' rows per group; the window
-    # input is the tiny counts table (≤ num_parts rows per group), not
-    # the frontier.
+    totals = part.groupBy(*keys).agg(F.sum(w).alias("_t"))
+    # running total of earlier partitions per group; the window input is
+    # the tiny totals table (≤ num_parts rows per group), not the data
     w_off = (
-        Window.partitionBy("host_group")
+        Window.partitionBy(*groups)
         .orderBy("_pid")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    offsets = counts.select(
-        "host_group",
-        "_pid",
-        F.coalesce(F.sum("_c").over(w_off), F.lit(0)).alias("_off"),
+    offsets = totals.select(
+        *keys, F.coalesce(F.sum("_t").over(w_off), F.lit(0)).alias("_off")
     )
-    # local rank: the window hash-partitions on (_pid, host_group) — a
-    # hot group splits into num_parts independent sort tasks.
-    w_local = Window.partitionBy("_pid", "host_group").orderBy(*order)
-    ranked = (
-        part.withColumn("_lr", F.row_number().over(w_local))
-        .join(F.broadcast(offsets), on=["host_group", "_pid"], how="inner")
-        .withColumn(rank_col, (F.col("_off") + F.col("_lr")).cast("int"))
+    # local sum: the window hash-partitions on (_pid, *groups) — a hot
+    # group splits into num_parts independent sort tasks
+    w_local = (
+        Window.partitionBy("_pid", *groups)
+        .orderBy(*order)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    if carry is not None:
-        return ranked.select(*key_cols, *carry_cols, rank_col)
-    # join ranks back onto the full payload by the unique row key
-    # (frontier contract: one row per url_canon); the payload side is
-    # already hash-partitioned by url_canon from to_frontier's dedup, so
-    # only the slim rank table re-shuffles here.
-    return df.join(ranked.select("url_canon", rank_col), on="url_canon", how="inner")
+    result = (
+        part.withColumn("_ls", F.sum(w).over(w_local))
+        .join(F.broadcast(offsets), on=keys, how="inner")
+        .withColumn(out, F.col("_off") + F.col("_ls"))
+        .drop("_pid", "_ls", "_off")
+    )
+    return result, part
 
 
 def politeness_rank(
@@ -496,7 +488,8 @@ def politeness_rank(
     round_ms: int,
     default_delay_ms: int = 100,
     prune_salts: int = 32,
-    max_crawl_delay_ms: int | None = None,
+    *,
+    max_crawl_delay_ms: int | None,
 ) -> DataFrame:
     """Select ≤budget URLs per host_group for this round (W1 + §2.6 top-k).
 
@@ -514,18 +507,16 @@ def politeness_rank(
       top-budget is by definition in its salt slice's top-budget, so the
       result (and the CORRECTNESS hash) is identical to a direct window.
     * unbounded budgets (seed-list replay, round_ms ≫ crawl delays):
-      pruning keeps nothing, so the rank itself must scale —
-      ``_exact_group_rank`` two-phase ranking (range repartition +
-      salt-local row_number + broadcast offset table) replaces the raw
-      per-group window that round 2 fell through to (the flagged
+      pruning keeps nothing, so the rank itself must scale — the
+      ``range_prefix_sum`` two-phase row number per host_group replaces
+      the raw per-group window that round 2 fell through to (the flagged
       100×-scale-killer: one task sorting a hot group's whole slice).
 
-    ``max_crawl_delay_ms``: the robots table's ``max(crawl_delay_ms)``.
-    Pass it when the robots config is loaded (it is one tiny aggregate
-    over a config table) to keep this function action-free; when None it
-    is derived here (one extra Spark job per round).
+    ``max_crawl_delay_ms``: the robots table's ``max(crawl_delay_ms)``,
+    ``None`` when the table sets no delay. The caller derives it once
+    from the (small) robots config, so this function runs no action.
     """
-    budgets = host_budgets(robots, round_ms, default_delay_ms)
+    budgets = host_budgets(robots, round_ms)
     # budget of a host_group = budget of its slowest member host seen so far;
     # hosts without robots rows fall back to the default delay.
     default_budget = max(1, round_ms // default_delay_ms)
@@ -543,9 +534,6 @@ def politeness_rank(
     # The salted pre-prune only pays when budgets actually prune. The
     # cheapest possible budget is floor(round_ms / max_crawl_delay) —
     # a property of the (small) robots config, not of the frontier.
-    if max_crawl_delay_ms is None:
-        row = robots.agg(F.max("crawl_delay_ms")).first()
-        max_crawl_delay_ms = row[0] if row is not None else None
     min_budget = default_budget
     if max_crawl_delay_ms:
         min_budget = min(
@@ -564,19 +552,28 @@ def politeness_rank(
         w_final = Window.partitionBy("host_group").orderBy(*order)
         ranked = pruned.withColumn("host_fetch_rank", F.row_number().over(w_final))
     else:
-        # unbounded replay: consume the ranked slim frame directly — no
-        # join-back onto the full frontier (two saved frontier-sized
-        # shuffles). Numeric metadata is carried through the range
-        # shuffle; string columns (url, host) are dropped here and
-        # re-derived from url_canon downstream where needed.
+        # unbounded replay: rank over ONLY the order keys plus the small
+        # numeric metadata, so the range and window shuffles carry slim
+        # rows and the ranked frame is consumed directly (no join back
+        # onto the full frontier). String columns (url, host) are dropped
+        # here and re-derived from url_canon downstream where needed.
         wb = with_budget.join(group_budgets, on="host_group")
+        key_cols = ["host_group", "priority", "depth", "url_canon"]
         carry = [
-            c
-            for c in wb.columns
-            if c not in ("host_group", "priority", "depth", "url_canon",
-                         "url", "host", "budget")
+            c for c in wb.columns if c not in (*key_cols, "url", "host", "budget")
         ]
-        ranked = _exact_group_rank(wb, order, carry=carry)
+        ranked, part = range_prefix_sum(
+            wb.select(*key_cols, *carry),
+            order,
+            groups=("host_group",),
+            out="host_fetch_rank",
+        )
+        ranked = ranked.withColumn(
+            "host_fetch_rank", F.col("host_fetch_rank").cast("int")
+        )
+        release_rank_cache()
+        global _prev_rank_cache
+        _prev_rank_cache = part
     return (
         ranked.filter(F.col("host_fetch_rank") <= F.col("_gb"))
         .drop("_gb", "budget")

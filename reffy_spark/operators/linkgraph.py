@@ -227,14 +227,12 @@ def apportion_budget(
     wrapping (rank_fp is ≤ 10^8-scale fixed point, so any realistic
     budget is fine; the guard catches pathological inputs).
 
-    Scale shape: the remainder rank is the frontier's two-phase pattern
-    (range-repartition on (rem desc, host), partition-local row_number,
-    broadcast offset table) — no single-task sort of the whole host
-    table at 10^8 hosts. The two scalar aggregates (S, deficit) ride a
-    broadcast crossJoin, not a driver action.
+    Scale shape: the remainder rank is ``frontier.range_prefix_sum``'s
+    two-phase row number over (rem desc, host) — no single-task sort of
+    the whole host table at 10^8 hosts. The two scalar aggregates (S,
+    deficit) ride a broadcast crossJoin, not a driver action.
     """
-    from pyspark.sql import Window
-    from pyspark.storagelevel import StorageLevel
+    from reffy_spark.operators.frontier import range_prefix_sum
 
     B = int(total_budget)
     h = ranked.select(
@@ -274,43 +272,18 @@ def apportion_budget(
         .withColumn("_base", F.expr(f"({B} * _r_eff) DIV _S_eff"))
         .withColumn("_rem", F.expr(f"({B} * _r_eff) % _S_eff"))
     )
-    spark = ranked.sparkSession
-    nparts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    part = (
-        j.repartitionByRange(nparts, F.col("_rem").desc(), F.col("host"))
-        .withColumn("_pid", F.spark_partition_id())
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    numbered, part = range_prefix_sum(
+        j, [F.col("_rem").desc(), F.col("host")], out="_rn"
     )
-    global _pr_caches
     _pr_caches.append(part)
-    counts = part.groupBy("_pid").agg(F.count("*").alias("_n"))
-    # offset table: rows in earlier range partitions — P rows, broadcast;
-    # the single-partition window is over P≈shuffle.partitions rows only
-    woff = Window.orderBy("_pid").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow - 1
-    )
-    offs = counts.select(
-        "_pid", F.coalesce(F.sum("_n").over(woff), F.lit(0)).alias("_off")
-    )
-    deficit = part.agg((F.lit(B) - F.sum("_base")).alias("_d"))
-    wloc = Window.partitionBy("_pid").orderBy(
-        F.col("_rem").desc(), F.col("host")
-    )
-    out = (
-        part.withColumn("_lrn", F.row_number().over(wloc))
-        .join(F.broadcast(offs), "_pid")
-        .crossJoin(F.broadcast(deficit))
-        .select(
-            "host",
-            F.col("_r").alias("rank_fp"),
-            (
-                F.col("_base")
-                + F.when(
-                    F.col("_lrn") + F.col("_off") <= F.col("_d"), F.lit(1)
-                ).otherwise(F.lit(0))
-            )
-            .cast("long")
-            .alias("budget"),
+    deficit = j.agg((F.lit(B) - F.sum("_base")).alias("_d"))
+    return numbered.crossJoin(F.broadcast(deficit)).select(
+        "host",
+        F.col("_r").alias("rank_fp"),
+        (
+            F.col("_base")
+            + F.when(F.col("_rn") <= F.col("_d"), F.lit(1)).otherwise(F.lit(0))
         )
+        .cast("long")
+        .alias("budget"),
     )
-    return out

@@ -172,7 +172,7 @@ def asof_join_skewsafe(
     ``asof_join``'s single window ``partitionBy(by)`` puts EVERY row of
     a hot key (one user = 50% of events, one host = 50% of a crawl log)
     into one task. This variant is the frontier's two-phase pattern
-    (``frontier._exact_group_rank``) applied to a running ``last``:
+    (``frontier.range_prefix_sum``) applied to a running ``last``:
 
     1. range-repartition the tagged union on (by, ts, _tag) — a hot key
        spreads over many contiguous partitions, every partition sorts

@@ -55,8 +55,9 @@ def with_input_order_index(df: DataFrame, out: str = "seed_idx") -> DataFrame:
     nondeterministic upstreams should persist first. Matches
     ``row_number().over(Window.orderBy(monotonically_increasing_id())) - 1``
     exactly. The crawl engine's url-ordered twin is
-    ``CrawlEngine._seed_index`` (operators/crawler.py) — different
-    ordering contract (url vs input order), same two-phase shape.
+    ``CrawlEngine._seed_index`` (operators/crawler.py), a
+    ``frontier.range_prefix_sum`` row number — different ordering
+    contract (url vs input order), same two-phase shape.
     """
     from pyspark.sql import Window
 

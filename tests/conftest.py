@@ -29,10 +29,12 @@ def clear_session_caches() -> None:
     being retired (stale handles would poison the next session)."""
     from reffy_spark.operators import corpus_quality as CQ
     from reffy_spark.operators import frontier as FR
+    from reffy_spark.operators import linkgraph as LG
     from reffy_spark.plans import postprocess as PP
 
     FR._prev_rank_cache = None
     CQ._prev_pack_cache = None
+    LG._pr_caches = []
     PP._closure_caches = []
 
 

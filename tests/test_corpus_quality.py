@@ -159,7 +159,7 @@ def test_bpe_token_count(spark):
 def test_domain_cap_matches_direct_window(spark, sf_dir):
     """The salted two-phase top-k must equal a plain (scale-unsafe)
     Window.partitionBy(domain) ranking exactly — same politeness-rank
-    exactness contract as frontier._exact_group_rank."""
+    exactness contract as frontier.range_prefix_sum."""
     from pyspark.sql import Window
 
     from reffy_spark.functions.text import quality_score_col
@@ -243,10 +243,11 @@ def test_pack_sequences_stream_positions(spark):
     ]
 
 
-def test_pack_sequences_matches_naive_global_window(spark):
+@pytest.mark.parametrize("reuse", ["true", "false"])
+def test_pack_sequences_matches_naive_global_window(spark, reuse):
     """The two-phase prefix sum must equal the single-partition
     Window.orderBy cumsum bit-for-bit, at a partition count that forces
-    multiple range slices."""
+    multiple range slices, with or without Catalyst's exchange reuse."""
     from pyspark.sql import Window as W
 
     from reffy_spark.operators.corpus_quality import pack_sequences
@@ -254,10 +255,17 @@ def test_pack_sequences_matches_naive_global_window(spark):
     df = spark.range(0, 199).select(
         F.col("id").alias("doc_id"), (F.pmod("id", 17) + 1).alias("n")
     )
-    two_phase = {
-        r.doc_id: (r.start_offset, r.first_bin, r.last_bin)
-        for r in pack_sequences(df, window=32, count_col="n", num_parts=7).collect()
-    }
+    old = spark.conf.get("spark.sql.exchange.reuse", "true")
+    spark.conf.set("spark.sql.exchange.reuse", reuse)
+    try:
+        two_phase = {
+            r.doc_id: (r.start_offset, r.first_bin, r.last_bin)
+            for r in pack_sequences(
+                df, window=32, count_col="n", num_parts=7
+            ).collect()
+        }
+    finally:
+        spark.conf.set("spark.sql.exchange.reuse", old)
     w = W.orderBy("doc_id").rowsBetween(W.unboundedPreceding, -1)
     naive = {
         r.doc_id: (r.s, r.s // 32, (r.s + r.n - 1) // 32)

@@ -533,7 +533,7 @@ def test_crawl_rejects_used_checkpoint(spark, corpus, tmp_path):
 
 
 def test_release_frees_rank_cache(spark, corpus):
-    # an unbounded politeness window takes the _exact_group_rank path,
+    # an unbounded politeness window takes the range_prefix_sum path,
     # whose persisted range slice release() must free
     from reffy_spark.operators import frontier as FR
 
@@ -550,6 +550,82 @@ def test_release_frees_rank_cache(spark, corpus):
     level = held.storageLevel
     assert not level.useMemory and not level.useDisk
     assert FR._prev_rank_cache is None
+
+
+def test_empty_robots_runs_no_per_round_aggregate(spark, corpus):
+    # a robots table with no delays gives max_crawl_delay_ms = None once
+    # at engine init; the rounds must not aggregate the table again
+    pages, seeds, robots = corpus
+    empty = spark.createDataFrame([], robots.schema)
+    eng = CrawlEngine(
+        spark, pages, empty, modules=["links"], use_bloom=False,
+        collect_metrics=False,
+    )
+
+    def no_agg(*args, **kwargs):
+        raise AssertionError("robots table aggregated during the crawl")
+
+    empty.agg = no_agg
+    res = eng.crawl(seeds, max_rounds=2)
+    assert res.results.count() > 0
+    assert {r["round"] for r in res.results.select("round").collect()} == {1, 2}
+    eng.release()
+
+
+def test_seed_index_two_phase_on_unknown_size(spark, corpus):
+    # a seed list with no size estimate takes range_prefix_sum: dense
+    # distinct indices in url order, with exchange reuse off, and the
+    # range slice is released with the engine's working sets
+    from pyspark.sql import Window
+
+    from reffy_spark.plan_stats import estimated_bytes
+
+    pages, _seeds, robots = corpus
+    eng = CrawlEngine(
+        spark, pages, robots, modules=["links"], use_bloom=False,
+        collect_metrics=False,
+    )
+
+    def rdd_seeds(n, mod):
+        base = spark.range(0, n).select(
+            F.concat(
+                F.lit("https://s.test/"),
+                F.lpad(F.pmod("id", mod).cast("string"), 4, "0"),
+            ).alias("url")
+        )
+        # RDD round-trip: LogicalRDD reports the unknown-size sentinel
+        return spark.createDataFrame(base.rdd, base.schema)
+
+    dup = rdd_seeds(600, 400)  # 200 duplicate urls
+    uniq = rdd_seeds(400, 400)
+    assert estimated_bytes(dup) is None and estimated_bytes(uniq) is None
+    old = spark.conf.get("spark.sql.exchange.reuse", "true")
+    spark.conf.set("spark.sql.exchange.reuse", "false")
+    try:
+        got_dup = [(r["seed_idx"], r["url"]) for r in eng._seed_index(dup).collect()]
+        got_uniq = {r["url"]: r["seed_idx"] for r in eng._seed_index(uniq).collect()}
+    finally:
+        spark.conf.set("spark.sql.exchange.reuse", old)
+
+    got_dup.sort()
+    assert [i for i, _ in got_dup] == list(range(600))
+    urls = [u for _, u in got_dup]
+    assert urls == sorted(urls)
+    w = Window.orderBy("url")
+    want = {
+        r["url"]: r["i"]
+        for r in uniq.select("url", (F.row_number().over(w) - 1).alias("i")).collect()
+    }
+    assert got_uniq == want
+
+    slices = list(eng._working_sets)
+    assert len(slices) == 2
+    assert all(s.storageLevel.useMemory for s in slices)
+    eng.release()
+    assert eng._working_sets == []
+    for s in slices:
+        level = s.storageLevel
+        assert not level.useMemory and not level.useDisk
 
 
 def test_release_removes_round_state_dir(spark, corpus):

@@ -1,5 +1,6 @@
 """Link-graph PageRank (integer fixed-point) — crawl prioritization."""
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -133,17 +134,26 @@ def test_apportion_budget_remainder_tie_breaks_by_host(spark):
     assert sum(out.values()) == 5
 
 
-def test_apportion_budget_exact_sum_large(spark):
+@pytest.mark.parametrize("reuse", ["true", "false"])
+def test_apportion_budget_exact_sum_large(spark, reuse):
+    # the two-phase remainder rank must not depend on Catalyst's
+    # exchange reuse
     from reffy_spark.operators.linkgraph import apportion_budget
     from pyspark.sql import functions as F
 
     ranked = spark.range(0, 997).selectExpr(
         "concat('h', id) AS host", "(id * 37 + 11) AS rank_fp"
     )
-    out = apportion_budget(ranked, 123_457)
-    total = out.agg(F.sum("budget")).collect()[0][0]
+    old = spark.conf.get("spark.sql.exchange.reuse", "true")
+    spark.conf.set("spark.sql.exchange.reuse", reuse)
+    try:
+        out = apportion_budget(ranked, 123_457)
+        total = out.agg(F.sum("budget")).collect()[0][0]
+        n = out.count()
+    finally:
+        spark.conf.set("spark.sql.exchange.reuse", old)
     assert total == 123_457
-    assert out.count() == 997
+    assert n == 997
 
 
 def test_apportion_budget_all_zero_ranks_falls_back_to_equal(spark):
