@@ -253,19 +253,11 @@ spark = get_spark("scale", cores={cores}, shuffle_partitions={cores},
                       "spark.network.timeout": "600s",
                       "spark.worker.timeout": "600",
                   }})
-# Two fetch-join strategies, both exercised:
-#   default     — plain parquet pages + broadcast of the budget-bounded
-#                 batch (the right plan while the batch fits a broadcast;
-#                 pages side never shuffles).
-#   BUCKETED=1  — the beyond-broadcast production shape: pages table
-#                 bucketed+sorted on url_canon (one file per bucket), the
-#                 fetch join then shuffles ONLY the slim batch into the
-#                 bucketing with zero exchange/sort on the pages side.
-#                 In this sandbox the batch always fits a broadcast, and
-#                 32 coarse buckets cost extraction-scan granularity, so
-#                 the default stays broadcast (measured: bucketed path
-#                 ~15%% slower end-to-end at 4x8 here; it wins only when
-#                 the batch outgrows the driver).
+# Two pages layouts; the fetch join always broadcasts the budget-bounded
+# batch (pages side never shuffles):
+#   default     — plain parquet pages.
+#   BUCKETED=1  — pages table bucketed+sorted on url_canon (one file per
+#                 bucket).
 import os as _os
 if _os.environ.get("SPARK_GRAFT_SCALE_BUCKETED") == "1":
     spark.sql("DROP TABLE IF EXISTS reffy_pages_bucketed")
@@ -276,10 +268,8 @@ if _os.environ.get("SPARK_GRAFT_SCALE_BUCKETED") == "1":
         "INTO {buckets} BUCKETS LOCATION '{corpus}/pages_bucketed'"
     )
     pages = spark.table("reffy_pages_bucketed")
-    bcast = False
 else:
     pages = spark.read.parquet({corpus!r} + "/pages.parquet").drop("page_id")
-    bcast = True
 seeds = spark.read.parquet({corpus!r} + "/seeds.parquet")
 robots = spark.read.parquet({corpus!r} + "/robots.parquet")
 MODS = ["links", "headings", "ids", "dfns", "title"]
@@ -299,14 +289,14 @@ warm = CrawlEngine(spark, pages, robots,
                    round_ms=1_000_000_000, use_bloom=False,
                    collect_metrics=False, discover=False,
                    assume_canonical_unique=True,
-                   assume_seeds_unique=True, broadcast_batch=bcast)
+                   assume_seeds_unique=True)
 warm.crawl(seeds.limit(20000), max_rounds=1).results.filter(
     "status = 'ok'").count()
 eng = CrawlEngine(spark, pages, robots,
                   modules=MODS,
                   round_ms=1_000_000_000, use_bloom=False, collect_metrics=False,
                   discover=False, assume_canonical_unique=True,
-                  assume_seeds_unique=True, broadcast_batch=bcast)
+                  assume_seeds_unique=True)
 t0 = time.monotonic()
 res = eng.crawl(seeds, max_rounds=1)
 n = res.results.filter(res.results.status == "ok").count()

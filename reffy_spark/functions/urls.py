@@ -18,11 +18,9 @@ Semantics mirror the reference crawler (w3c/reffy):
   scheme/host, default-port drop, uppercase percent-escapes, decode
   unreserved escapes) composed with the reference canonicalization.
 
-Scale design: the canonicalization chain is pure Column expressions
-(whole-stage codegen, JVM-side). Percent-escape normalization needs a
-character-table rewrite, so ``canonicalize_urls`` routes only rows that
-actually contain ``%`` (rare in practice) through an Arrow-batched pandas
-UDF and unions the two branches — the hot path never leaves the JVM.
+Scale design: ``url_canon_col`` (``with_url_canon``) is one Column expression
+(whole-stage codegen, JVM-side), percent-escape normalization included;
+``url_canon_py`` is its Python oracle.
 """
 
 from __future__ import annotations
@@ -30,14 +28,11 @@ from __future__ import annotations
 import re
 from urllib.parse import urlsplit, urlunsplit
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
 
 # --------------------------------------------------------------------------
-# Python kernels (used inside pandas UDFs and by tests / the simulator)
+# Python kernels (oracles for the Column kernels; tests / the simulator)
 # --------------------------------------------------------------------------
 
 # JS encodeURIComponent leaves these unescaped: A-Z a-z 0-9 - _ . ! ~ * ' ( )
@@ -63,9 +58,7 @@ def encode_uri_component(s: str) -> str:
 
 _PCT_RE = re.compile(r"%([0-9a-fA-F]{2})")
 # RFC 3986 unreserved characters — safe to decode in normalization.
-_UNRESERVED = frozenset(
-    "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789-._~"
-)
+_UNRESERVED = "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789-._~"
 _DEFAULT_PORTS = {"http": ":80", "https": ":443"}
 
 
@@ -174,44 +167,51 @@ def canonicalize_url_col(url: Column) -> Column:
     return u
 
 
-def _lower_scheme_host(url: Column) -> Column:
-    """Lowercase the scheme://host[:port] prefix; drop the original
-    scheme's default port, rewrite http→https (reference canonicalizeUrl
-    rule), then drop :443 — both drops for one-pass idempotence, see
-    ``url_canon_py``."""
-    prefix = F.regexp_extract(url, r"^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*)", 1)
-    rest = F.substring(url, F.length(prefix) + F.lit(1), F.lit(2 ** 30))
+def _pct_normalize_col(rest: Column) -> Column:
+    """``_pct_normalize`` of the text after ``scheme://host[:port]``; drops
+    the fragment and an empty query (a lone first ``?`` at the end) as
+    ``urlunsplit`` does. Each ``%``-split piece after the first is an
+    escape iff it starts with two hex digits."""
+    head = F.regexp_replace(F.substring_index(rest, "#", 1), r"^([^?]*)\?$", "$1")
+
+    def piece(p: Column, i: Column) -> Column:
+        hx = F.substring(p, 1, 2)
+        ch = F.unhex(hx).cast("string")
+        esc = F.when(F.instr(F.lit(_UNRESERVED), ch) > 0, ch).otherwise(
+            F.concat(F.lit("%"), F.upper(hx))
+        )
+        return (
+            F.when(i == 0, p)
+            .when(p.rlike("^[0-9a-fA-F]{2}"), F.concat(esc, F.substring(p, 3, 2**30)))
+            .otherwise(F.concat(F.lit("%"), p))
+        )
+
+    return F.array_join(F.transform(F.split(head, "%"), piece), "")
+
+
+def url_canon_col(url: Column) -> Column:
+    """``url_canon_py`` as one Column expression (no Python boundary).
+
+    The ``scheme://host[:port]`` prefix is lowercased, the original
+    scheme's default port dropped, http rewritten to https and ``:443``
+    dropped (both drops for one-pass idempotence, see ``url_canon_py``).
+    Only rows with ``%`` or ``?`` run ``_pct_normalize_col``; it precedes
+    the reference canonicalization so ``index%2Ehtml`` drops like
+    ``index.html``. Output-trimmed like ``url_canon_py``."""
+    u = F.trim(url)
+    prefix = F.regexp_extract(u, r"^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*)", 1)
+    rest = F.substring(u, F.length(prefix) + F.lit(1), F.lit(2**30))
+    rest = F.when(u.contains("%") | u.contains("?"), _pct_normalize_col(rest)).otherwise(rest)
     prefix = F.lower(prefix)
     prefix = F.regexp_replace(prefix, r"^(http://[^/:]*):80$", "$1")
     prefix = F.regexp_replace(prefix, r"^http://", "https://")
     prefix = F.regexp_replace(prefix, r"^(https://[^/:]*):443$", "$1")
-    return F.when(prefix == "", url).otherwise(F.concat(prefix, rest))
-
-
-def url_canon_col(url: Column) -> Column:
-    """JVM-only url_canon: correct for URLs with no percent-escapes.
-    Output-trimmed like ``url_canon_py`` (idempotence — see there)."""
-    return F.trim(canonicalize_url_col(_lower_scheme_host(F.trim(url))))
-
-
-@pandas_udf(StringType())
-def url_canon_udf(urls: pd.Series) -> pd.Series:
-    """Arrow-batched full url_canon (handles percent normalization)."""
-    return urls.map(lambda u: url_canon_py(u) if u is not None else None)
+    return F.trim(canonicalize_url_col(F.concat(prefix, rest)))
 
 
 def with_url_canon(df: DataFrame, url_col: str = "url", out: str = "url_canon") -> DataFrame:
-    """Add the canonical-URL key, keeping the hot path JVM-side.
-
-    Rows without ``%`` (the overwhelming majority of crawl URLs) are
-    canonicalized by the codegen Column chain; only rows containing a
-    percent-escape cross the Arrow boundary. The union preserves schema.
-    """
-    c = F.col(url_col)
-    has_pct = c.contains("%")
-    fast = df.filter(~has_pct).withColumn(out, url_canon_col(c))
-    slow = df.filter(has_pct).withColumn(out, url_canon_udf(c))
-    return fast.unionByName(slow)
+    """Add the canonical-URL key column ``out`` (``url_canon_col``)."""
+    return df.withColumn(out, url_canon_col(F.col(url_col)))
 
 
 def host_col(url: Column) -> Column:

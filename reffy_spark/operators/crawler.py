@@ -85,7 +85,7 @@ def freshest_capture(pages_canon: DataFrame) -> DataFrame:
 
 
 def fetch_with_fallback(
-    pages: DataFrame, batch_slim: DataFrame, broadcast_batch: bool = True
+    pages: DataFrame, batch_slim: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
     """J2 fetch + fallback: inner-join the round's batch to the pages
     table, and a keys-only anti-join for the misses (the reference's
@@ -95,20 +95,16 @@ def fetch_with_fallback(
     Returns (fetched_ok, notfound): callers run extraction over
     ``fetched_ok`` and union ``notfound`` after.
 
-    Misses, fused into the fetch join's pass (no second pages-sized
-    shuffle): when the batch is broadcast, the matched key set is
-    ``pages ⨝ batch`` keys — AT MOST ``|batch|`` rows, so it is
-    broadcastable by the exact argument that made the batch
-    broadcastable — and the misses are ``batch ⟕̸ broadcast(matched)``.
-    The matched-keys probe broadcasts a keys-only pruning of the batch
-    (a strictly cheaper build than the fetch join's own broadcast) and
-    reads ONE pruned column of pages; the 10^10-row pages key set is
-    never shuffled. The pre-round-5 shape
-    (keys-only shuffle_hash anti-join against all of pages) is kept for
-    the beyond-broadcast bucketed path, where the bucketed layout makes
-    the pages-side exchange free anyway.
+    The round's batch is broadcast into the fetch join: it is bounded by
+    the sum of politeness budgets, so it is small relative to the pages
+    table. Misses, fused into the fetch join's pass (no second
+    pages-sized shuffle): the matched key set is ``pages ⨝ batch`` keys
+    — AT MOST ``|batch|`` rows, so it is broadcastable by the exact
+    argument that made the batch broadcastable — and the misses are
+    ``batch ⟕̸ broadcast(matched)``. The matched-keys probe reads ONE
+    pruned column of pages; the 10^10-row pages key set is never
+    shuffled.
     """
-    batch_b = F.broadcast(batch_slim) if broadcast_batch else batch_slim
     fetch_cols = ["url_canon", "html"] + [
         c for c in ("warc_ts", "final_url") if c in pages.columns
     ]
@@ -118,23 +114,14 @@ def fetch_with_fallback(
         # fetch join only when the crawl opted into final_url
         fetch_cols.append("page_url")
     fetched_ok = pages.select(*fetch_cols).join(
-        batch_b, on="url_canon", how="inner"
+        F.broadcast(batch_slim), on="url_canon", how="inner"
     )
-    if broadcast_batch:
-        # the matched key set IS the fetch join's own key output — at
-        # most |batch| rows by the broadcast argument; deriving it from
-        # fetched_ok (instead of a second pages⨝batch) keeps one plan for
-        # both branches and holds even when pages.url_canon is not unique
-        matched = fetched_ok.select("url_canon")
-        miss = batch_slim.join(
-            F.broadcast(matched), on="url_canon", how="left_anti"
-        )
-    else:
-        miss = batch_slim.join(
-            pages.select("url_canon").hint("shuffle_hash"),
-            on="url_canon",
-            how="left_anti",
-        )
+    # the matched key set IS the fetch join's own key output — at most
+    # |batch| rows by the broadcast argument; deriving it from fetched_ok
+    # (instead of a second pages⨝batch) keeps one plan for both outputs
+    # and holds even when pages.url_canon is not unique
+    matched = fetched_ok.select("url_canon")
+    miss = batch_slim.join(F.broadcast(matched), on="url_canon", how="left_anti")
     notfound = (
         miss.withColumn("host", host_col(F.col("url_canon")))
         .withColumn("host_group", host_group_col(F.col("url_canon")))
@@ -167,7 +154,6 @@ class CrawlEngine:
         discover: bool = True,
         assume_canonical_unique: bool = False,
         assume_seeds_unique: bool = False,
-        broadcast_batch: bool = True,
         fallback: DataFrame | None = None,
     ):
         if not isinstance(use_bloom, bool):
@@ -185,11 +171,6 @@ class CrawlEngine:
         # when the input pages table is already keyed by url_canon (the
         # production shape: an Iceberg table MERGEd on url_canon) — the
         # fetch join then needs no shuffle of the pages side at all.
-        #
-        # broadcast_batch=True broadcasts the round's batch into the fetch
-        # join (the batch is bounded by sum-of-politeness-budgets, so it is
-        # small relative to the pages table); set False on huge-budget
-        # crawls to let Catalyst/AQE pick the strategy.
         self.spark = spark
         self.robots = robots
         self.checkpoint_dir = checkpoint_dir
@@ -246,7 +227,6 @@ class CrawlEngine:
             )
             self._pages_cached = self.pages
             self._pages_persistable = True
-        self.broadcast_batch = broadcast_batch
         # Round-state durability: ``localCheckpoint`` blocks are NOT
         # fault-tolerant — on a multi-executor cluster one lost executor
         # destroys its blocks and the round state cannot be recomputed
@@ -519,9 +499,7 @@ class CrawlEngine:
                 if c in batch.columns
             ]
             batch_slim = batch.select("url_canon", *meta_cols)
-            fetched_ok, notfound = fetch_with_fallback(
-                self.pages, batch_slim, self.broadcast_batch
-            )
+            fetched_ok, notfound = fetch_with_fallback(self.pages, batch_slim)
 
             # ---- extract: one Arrow pass, all requested modules ---------
             # The fetch join's output partitioning already spreads pages

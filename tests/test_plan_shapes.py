@@ -74,6 +74,25 @@ def test_frontier_dedup_is_partial_agg(spark):
     assert "Aggregate" in plan
 
 
+def test_to_frontier_canonicalizes_in_one_scan(spark, tmp_path):
+    """One canonicalization path: the frontier build reads its input
+    once, with no filter/union split and no Python eval node, even when
+    the input holds percent-escaped URLs."""
+    from reffy_spark.operators.frontier import to_frontier
+
+    spark.createDataFrame(
+        [("https://a.test/x",), ("https://a.test/%7ex?",)], "url string"
+    ).write.parquet(f"{tmp_path}/urls")
+    frontier = to_frontier(spark.read.parquet(f"{tmp_path}/urls"))
+    plan = plan_of(frontier)
+    assert plan.count("FileScan parquet") == 1
+    assert "Union" not in plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert sorted(r["url_canon"] for r in frontier.collect()) == [
+        "https://a.test/x", "https://a.test/~x"
+    ]
+
+
 def test_robots_filter_has_no_window_or_extra_shuffle(spark):
     from reffy_spark.operators.frontier import apply_robots, to_frontier
 
@@ -319,10 +338,9 @@ def test_bigram_novelty_no_window_two_shuffles(spark):
 
 
 def test_fetch_misses_never_shuffle_pages(spark):
-    """Fused notfound (r5): with a broadcast batch, the misses must come
-    from an anti-join against the broadcast matched-key set — the pages
-    key set (10^10 rows at scale) must NOT be hash-shuffled. The bucketed
-    (non-broadcast) path keeps the keys-only shuffle_hash anti-join."""
+    """Fused notfound (r5): the batch is broadcast, and the misses must
+    come from an anti-join against the broadcast matched-key set — the
+    pages key set (10^10 rows at scale) must NOT be hash-shuffled."""
     import re
 
     from reffy_spark.operators.crawler import fetch_with_fallback
@@ -335,7 +353,7 @@ def test_fetch_misses_never_shuffle_pages(spark):
         [(f"https://h{i}.test/", i) for i in range(0, 60, 2)],
         "url_canon string, seed_idx int",
     )
-    _ok, notfound = fetch_with_fallback(pages, batch, broadcast_batch=True)
+    _ok, notfound = fetch_with_fallback(pages, batch)
     plan = plan_of(notfound)
     # the anti-join's build side is a broadcast, not a shuffled relation
     assert re.search(r"BroadcastHashJoin .*LeftAnti", plan)

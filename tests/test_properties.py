@@ -4,9 +4,12 @@ The reference has no property-based testing (SURVEY.md §5); these guard
 the invariants the distributed plans *assume* — canonicalization
 idempotence (the URL-seen set dedupes on canon(url): a non-idempotent
 canon would let the same page re-enter the frontier), bucket ranges,
-and text-kernel stability. No SparkSession: every function under test
-is the driver-side twin of a Column kernel, bit-compatibility with the
-Column versions is covered by the engine/oracle suites.
+and text-kernel stability. Most functions under test are the
+driver-side twins of Column kernels and run without Spark; one test,
+``test_url_canon_col_matches_py``, checks the canonicalization Column
+kernel against its twin on thousands of generated URLs in one Spark job.
+Bit-compatibility of the other Column kernels is left to the
+engine/oracle suites.
 """
 
 import string
@@ -32,16 +35,72 @@ _hostchars = st.text(string.ascii_letters + string.digits + ".-", min_size=1, ma
 _pathchars = st.text(
     string.ascii_letters + string.digits + "/%._~!$&'()*+,;=:@- é☃", max_size=30
 )
+_schemes = st.sampled_from(["http", "HTTP", "https", "HTTPS", "hTtPs"])
+_ports = st.sampled_from(["", ":80", ":443", ":8080"])
+
+
+def _url(scheme, host, port, path, frag):
+    return f"{scheme}://{host}{port}/{path}{frag}"
+
+
 _urls = st.builds(
-    lambda scheme, host, port, path, frag: (
-        f"{scheme}://{host}{port}/{path}{frag}"
-    ),
-    st.sampled_from(["http", "HTTP", "https", "HTTPS", "hTtPs"]),
-    _hostchars,
-    st.sampled_from(["", ":80", ":443", ":8080"]),
-    _pathchars,
-    st.sampled_from(["", "#frag", "#", "#a/b"]),
+    _url, _schemes, _hostchars, _ports, _pathchars, st.sampled_from(["", "#frag", "#", "#a/b"])
 )
+
+
+# _urls widened for Column/Python parity: "?" in the path, %XX escapes in
+# both hex cases over unreserved, reserved and non-ASCII bytes, malformed
+# escapes, an escaped "index.html", "%"/"?" in the fragment, and hosts the
+# reference canonicalization rewrites
+_escapes = st.builds(
+    lambda b, case: case(f"%{b:02x}"),
+    st.one_of(
+        st.sampled_from(b"AZaz09-._~"),
+        st.sampled_from(b":/?#[]@!$&'()*+,;=% "),
+        st.integers(0x80, 0xFF),
+    ),
+    st.sampled_from([str.upper, str.lower, str.title]),
+)
+_parity_urls = st.builds(
+    _url,
+    _schemes,
+    st.one_of(
+        _hostchars, st.sampled_from(["www.w3.org", "w3c.github.io", "html.spec.whatwg.org"])
+    ),
+    _ports,
+    st.lists(
+        st.one_of(
+            _pathchars,
+            _escapes,
+            st.sampled_from(["?", "%", "%4", "%zz", "index%2Ehtml", "index%2ehtml", "TR/"]),
+        ),
+        max_size=8,
+    ).map("".join),
+    st.sampled_from(["", "#frag", "#", "#a/b", "#%", "#%7e?x", "#?"]),
+)
+
+
+def test_url_canon_col_matches_py(spark):
+    """url_canon_col ≡ url_canon_py on every generated URL: one DataFrame,
+    one collect (the crawl's key and its oracle must never disagree)."""
+    from pyspark.sql import functions as F
+
+    from reffy_spark.functions.urls import url_canon_col
+
+    urls = []
+
+    @given(_parity_urls)
+    @settings(max_examples=2500, deadline=None, database=None)
+    def draw(url):
+        urls.append(url)
+
+    draw()
+    assert len(urls) >= 2000
+    df = spark.createDataFrame([(u,) for u in urls], "url string")
+    got = df.select("url", url_canon_col(F.col("url")).alias("c")).collect()
+    assert len(got) == len(urls)
+    bad = [(r["url"], r["c"]) for r in got if r["c"] != url_canon_py(r["url"])]
+    assert not bad, bad[:10]
 
 
 @given(_urls)

@@ -48,6 +48,37 @@ def test_incremental_extract_availablenow(spark, source_dir, tmp_path_factory):
     assert spark.read.parquet(out).count() == len(rows)
 
 
+def test_dedupe_stream_key_matches_batch_canon(spark, tmp_path_factory):
+    # the streaming URL-seen key is the crawl's key: a percent-escaped
+    # capture and its decoded twin are one canonical URL
+    import datetime
+
+    from reffy_spark.functions.urls import url_canon_py
+
+    src = str(tmp_path_factory.mktemp("canon_src"))
+    chk = str(tmp_path_factory.mktemp("canon_chk"))
+    ts = datetime.datetime(2024, 1, 1)
+    spark.createDataFrame(
+        [
+            ("https://a.org/%7Ex", ts, b"<html></html>", "", "en"),
+            ("https://a.org/~x", ts + datetime.timedelta(minutes=1), b"<html></html>", "", "en"),
+        ],
+        INC.PAGES_DDL,
+    ).coalesce(1).write.mode("overwrite").parquet(src)
+    q = (
+        INC.dedupe_stream(INC.stream_pages(spark, src))
+        .select("url_canon")
+        .writeStream.format("memory")
+        .queryName("canon_dedup")
+        .option("checkpointLocation", chk)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    rows = spark.sql("select url_canon from canon_dedup").collect()
+    assert [r["url_canon"] for r in rows] == [url_canon_py("https://a.org/%7Ex")]
+
+
 def test_crawl_rate_metrics_stream(spark, source_dir, tmp_path_factory):
     chk = str(tmp_path_factory.mktemp("metrics_chk"))
     stream = INC.stream_pages(spark, source_dir)

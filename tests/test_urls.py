@@ -64,11 +64,28 @@ def test_encode_uri_component_js_parity():
     assert encode_uri_component("x#y?z") == "x%23y%3Fz"
 
 
+# empty query (urlunsplit drops it) and percent-escape cases; the Column
+# kernel is checked against url_canon_py on each below
+CANON_KEY_CASES = [
+    ("https://a.org/p?", "https://a.org/p"),
+    ("https://a.org/p?#f", "https://a.org/p"),
+    ("https://a.org?", "https://a.org"),
+    ("https://a.org/p? ", "https://a.org/p"),
+    ("https://www.w3.org/TR/x?", "https://www.w3.org/TR/x/"),
+    ("https://a.org/p??", "https://a.org/p??"),
+    ("https://a.org/p?q?", "https://a.org/p?q?"),
+    ("https://a.org/p?q#?", "https://a.org/p?q"),
+    ("https://a.org/%7ex/%2f%zz%4%", "https://a.org/~x/%2F%zz%4%"),
+    ("https://a.org/d/index%2Ehtml?a=%3d%41", "https://a.org/d/?a=%3DA"),
+    ("https://a.org/%c3%A9#%41", "https://a.org/%C3%A9"),
+]
+
+
 def test_column_kernels_match_python(spark):
     urls = [u for u, _ in CANON_CASES] + [u for u, _ in HOST_GROUP_CASES] + [
-        "https://example.org/sp%2fec",  # percent path → UDF branch
+        "https://example.org/sp%2fec",  # percent-escape, uppercased in the JVM
         "HTTP://Mixed.Case.ORG/Path",
-    ]
+    ] + [u for u, _ in CANON_KEY_CASES]
     df = spark.createDataFrame([(u,) for u in urls], "url string")
     got = {
         r["url"]: (r["c"], r["g"])
@@ -82,9 +99,14 @@ def test_column_kernels_match_python(spark):
         assert got[u][1] == host_group_py(u), u
 
 
+@pytest.mark.parametrize("url,expected", CANON_KEY_CASES)
+def test_url_canon_py_empty_query_and_escapes(url, expected):
+    assert url_canon_py(url) == expected
+
+
 def test_url_canon_col_plan_is_jvm_only(spark):
-    """The fast-path canonicalization must not contain a Python eval node."""
-    df = spark.createDataFrame([("https://a.org/x",)], "url string")
+    """Canonicalization, percent-escapes included, has no Python eval node."""
+    df = spark.createDataFrame([("https://a.org/x",), ("https://a.org/%7ex",)], "url string")
     plan = (
         df.withColumn("c", url_canon_col(F.col("url")))
         ._jdf.queryExecution()

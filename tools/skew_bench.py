@@ -116,14 +116,14 @@ warm = CrawlEngine(spark, pages, robots, modules=MODS,
                    round_ms=1_000_000_000, use_bloom=False,
                    collect_metrics=False, discover=False,
                    assume_canonical_unique=False,
-                   assume_seeds_unique=True, broadcast_batch=True)
+                   assume_seeds_unique=True)
 warm.crawl(seeds.limit(20000), max_rounds=1).results.filter(
     "status = 'ok'").count()
 eng = CrawlEngine(spark, pages, robots, modules=MODS,
                   round_ms=1_000_000_000, use_bloom=False,
                   collect_metrics=False, discover=False,
                   assume_canonical_unique=False,
-                  assume_seeds_unique=True, broadcast_batch=True)
+                  assume_seeds_unique=True)
 t0 = time.monotonic()
 res = eng.crawl(seeds, max_rounds=1)
 n = res.results.filter(res.results.status == "ok").count()
