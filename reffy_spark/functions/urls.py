@@ -56,16 +56,23 @@ def encode_uri_component(s: str) -> str:
     return "".join(map(_JS_ENC.__getitem__, s.encode("utf-8")))
 
 
-_PCT_RE = re.compile(r"%([0-9a-fA-F]{2})")
+_PCT_RE = re.compile(r"%([0-9a-fA-F]{2})?")
 # RFC 3986 unreserved characters — safe to decode in normalization.
 _UNRESERVED = "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789-._~"
 _DEFAULT_PORTS = {"http": ":80", "https": ":443"}
+# a lone "?" ending the URL: an empty query, dropped as urlunsplit does
+_EMPTY_QUERY_RE = r"^([^?]*)\?$"
 
 
 def _pct_normalize(s: str) -> str:
-    """Uppercase %XX escapes; decode escapes of unreserved characters."""
+    """Uppercase %XX escapes; decode escapes of unreserved characters;
+    escape a ``%`` that starts no escape as ``%25``, so no later edit can
+    join it with the characters after it into a new escape
+    (``%4%41`` → ``%254A``, not ``%4A``)."""
 
     def repl(m: re.Match) -> str:
+        if m.group(1) is None:
+            return "%25"
         ch = chr(int(m.group(1), 16))
         return ch if ch in _UNRESERVED else "%" + m.group(1).upper()
 
@@ -114,7 +121,10 @@ def url_canon_py(url: str) -> str:
     path = _pct_normalize(parts.path)
     query = _pct_normalize(parts.query)
     u = urlunsplit((scheme, netloc, path, query, ""))  # fragment stripped
-    return canonicalize_url_py(u).strip()
+    # the index.html drop can empty the query ("/p?index.html" → "/p?"):
+    # drop it again so a second pass finds nothing to do
+    u = canonicalize_url_py(u).strip()
+    return re.sub(_EMPTY_QUERY_RE, r"\1", u).strip()
 
 
 def host_of_py(url: str) -> str:
@@ -171,8 +181,9 @@ def _pct_normalize_col(rest: Column) -> Column:
     """``_pct_normalize`` of the text after ``scheme://host[:port]``; drops
     the fragment and an empty query (a lone first ``?`` at the end) as
     ``urlunsplit`` does. Each ``%``-split piece after the first is an
-    escape iff it starts with two hex digits."""
-    head = F.regexp_replace(F.substring_index(rest, "#", 1), r"^([^?]*)\?$", "$1")
+    escape iff it starts with two hex digits; otherwise its ``%`` becomes
+    ``%25``."""
+    head = F.regexp_replace(F.substring_index(rest, "#", 1), _EMPTY_QUERY_RE, "$1")
 
     def piece(p: Column, i: Column) -> Column:
         hx = F.substring(p, 1, 2)
@@ -183,7 +194,7 @@ def _pct_normalize_col(rest: Column) -> Column:
         return (
             F.when(i == 0, p)
             .when(p.rlike("^[0-9a-fA-F]{2}"), F.concat(esc, F.substring(p, 3, 2**30)))
-            .otherwise(F.concat(F.lit("%"), p))
+            .otherwise(F.concat(F.lit("%25"), p))
         )
 
     return F.array_join(F.transform(F.split(head, "%"), piece), "")
@@ -206,12 +217,14 @@ def url_canon_col(url: Column) -> Column:
     prefix = F.regexp_replace(prefix, r"^(http://[^/:]*):80$", "$1")
     prefix = F.regexp_replace(prefix, r"^http://", "https://")
     prefix = F.regexp_replace(prefix, r"^(https://[^/:]*):443$", "$1")
-    return F.trim(canonicalize_url_col(F.concat(prefix, rest)))
+    u = F.trim(canonicalize_url_col(F.concat(prefix, rest)))
+    return F.trim(F.regexp_replace(u, _EMPTY_QUERY_RE, "$1"))
 
 
-def with_url_canon(df: DataFrame, url_col: str = "url", out: str = "url_canon") -> DataFrame:
-    """Add the canonical-URL key column ``out`` (``url_canon_col``)."""
-    return df.withColumn(out, url_canon_col(F.col(url_col)))
+def with_url_canon(df: DataFrame) -> DataFrame:
+    """Add the canonical-URL key column ``url_canon`` (``url_canon_col``
+    of ``url``)."""
+    return df.withColumn("url_canon", url_canon_col(F.col("url")))
 
 
 def host_col(url: Column) -> Column:

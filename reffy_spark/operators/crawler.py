@@ -30,6 +30,7 @@ import os
 import shutil
 import time
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -53,7 +54,12 @@ class RoundMetrics:
 
 @dataclass
 class CrawlResult:
-    results: DataFrame  # url_canon, seed_idx, depth, round, host_fetch_rank, host, host_group, status, + extract cols (original url stays on the frontier/batch checkpoints)
+    # one row per fetched URL, every round and input shape in one column
+    # order: url_canon, seed_idx, depth, priority, round_discovered,
+    # host_fetch_rank, etag, last_modified, <modules>, crawl_error, host,
+    # host_group, status, [crawled (pages with final_url)], from_fallback,
+    # round. The original url stays on the frontier/batch checkpoints.
+    results: DataFrame
     url_seen: DataFrame  # url_canon, first_round
     links: DataFrame | None  # url_canon, page_url, fragment, is_autolink
     metrics: list[RoundMetrics] = field(default_factory=list)
@@ -92,8 +98,12 @@ def fetch_with_fallback(
     fallback/--use-crawl path records an error result instead of
     dropping the spec, specs-crawler.js:54-65).
 
-    Returns (fetched_ok, notfound): callers run extraction over
-    ``fetched_ok`` and union ``notfound`` after.
+    Returns (fetched_ok, missed): ``fetched_ok`` is each matched batch
+    row with its page columns (``html``, plus ``warc_ts``/``final_url``
+    and, for redirect detection, ``page_url`` when pages carry them);
+    ``missed`` is keys only — the batch rows (``url_canon`` + batch
+    metadata) with no page. The caller gives misses their ``notfound``
+    status and any fallback data.
 
     The round's batch is broadcast into the fetch join: it is bounded by
     the sum of politeness budgets, so it is small relative to the pages
@@ -121,13 +131,8 @@ def fetch_with_fallback(
     # (instead of a second pages⨝batch) keeps one plan for both outputs
     # and holds even when pages.url_canon is not unique
     matched = fetched_ok.select("url_canon")
-    miss = batch_slim.join(F.broadcast(matched), on="url_canon", how="left_anti")
-    notfound = (
-        miss.withColumn("host", host_col(F.col("url_canon")))
-        .withColumn("host_group", host_group_col(F.col("url_canon")))
-        .withColumn("status", F.lit("notfound"))
-    )
-    return fetched_ok, notfound
+    missed = batch_slim.join(F.broadcast(matched), on="url_canon", how="left_anti")
+    return fetched_ok, missed
 
 
 class CrawlEngine:
@@ -311,7 +316,11 @@ class CrawlEngine:
 
     # ------------------------------------------------------------------
     def crawl(self, seeds: DataFrame, max_rounds: int = 10) -> CrawlResult:
-        """Run the BSP loop from a seed list (url [, seed_idx])."""
+        """Run the BSP loop from a seed list (url [, seed_idx]).
+        ``max_rounds=0`` commits only the round-0 checkpoint (the seed
+        frontier and seen set) and returns empty results."""
+        if max_rounds < 0:
+            raise ValueError(f"max_rounds must be at least 0, got {max_rounds!r}")
         if self.checkpoint_dir and self._checkpointed_rounds():
             # a stale higher round would outlive this crawl and be
             # continued by a later resume()
@@ -372,6 +381,8 @@ class CrawlEngine:
         """Resume from the latest checkpointed round (mirrors --fallback /
         --use-crawl, specs-crawler.js:54-65,100-102). Prior rounds'
         results are re-read from their checkpoints."""
+        if max_rounds < 1:
+            raise ValueError(f"max_rounds must be at least 1, got {max_rounds!r}")
         if not self.checkpoint_dir:
             raise ValueError("resume requires a checkpoint_dir")
         rounds = self._checkpointed_rounds()
@@ -488,8 +499,8 @@ class CrawlEngine:
             # the broadcast keys prunes file scans too). Only the key +
             # numeric metadata travel in the broadcast — string columns
             # (url, host, host_group) stay out and are re-derived from
-            # url_canon later. "Misses" are a separate keys-only anti-join
-            # so no html column rides along.
+            # url_canon once the round's rows are assembled. Misses are a
+            # separate keys-only anti-join so no html column rides along.
             meta_cols = [
                 c
                 for c in (
@@ -499,7 +510,7 @@ class CrawlEngine:
                 if c in batch.columns
             ]
             batch_slim = batch.select("url_canon", *meta_cols)
-            fetched_ok, notfound = fetch_with_fallback(self.pages, batch_slim)
+            fetched_ok, missed = fetch_with_fallback(self.pages, batch_slim)
 
             # ---- extract: one Arrow pass, all requested modules ---------
             # The fetch join's output partitioning already spreads pages
@@ -508,7 +519,7 @@ class CrawlEngine:
             # host_fetch_rank was assigned before, so budgets hold —
             # SURVEY.md §7.3 risk 4). NUMERIC row metadata rides through
             # the Arrow stage (passthrough) — no join-back shuffle of fat
-            # JSON; string metadata (host, host_group) is re-derived from
+            # JSON; string metadata (host, host_group) is derived from
             # url_canon JVM-side instead (string columns through Arrow
             # measured ~40% of the whole extraction stage).
             # crawlCacheInfo analog (specs-crawler.js:87-98,144-152):
@@ -566,152 +577,84 @@ class CrawlEngine:
                 if "page_url" in fetched_ok.columns:
                     fetched_ok = fetched_ok.drop("page_url")
                 redirected = F.col("_redirected")
-            # conditional-recrawl split: pages whose digest matches the
-            # fallback crawl's etag bypass extraction entirely (reuse),
-            # misses later pull fallback extracts — see __init__ notes
+            # Each source below adds only the result columns it knows; one
+            # unionByName fills the rest with NULLs and one select derives
+            # the shared columns and fixes the column order.
+            missed = missed.withColumn("status", F.lit("notfound"))
             reused = None
-            fb_slim = None
-            fb_mods: list[str] = []
             if self.fallback is not None:
+                # conditional-recrawl split: pages whose digest matches
+                # the fallback crawl's etag bypass extraction entirely
+                # (reuse), misses pull fallback extracts — see __init__
                 fb = self.fallback
-                fb_mods = [m for m in self.modules if m in fb.columns]
-                fb_lm = (
-                    F.col("last_modified")
-                    if "last_modified" in fb.columns
-                    else F.lit(None).cast("timestamp")
-                )
-                fb_slim = fb.select(
-                    "url_canon",
-                    F.col("etag").alias("_fb_etag"),
-                    fb_lm.alias("_fb_last_modified"),
-                    *[F.col(m).alias(f"_fb_{m}") for m in fb_mods],
-                )
-                fb_drop = ["_fb_etag", "_fb_last_modified"] + [
-                    f"_fb_{m}" for m in fb_mods
+                fb_cols = [
+                    c for c in ("last_modified", *self.modules) if c in fb.columns
                 ]
+                fb_slim = fb.select(
+                    "url_canon", F.col("etag").alias("_fb_etag"), *fb_cols
+                )
                 joined = fetched_ok.join(fb_slim, on="url_canon", how="left")
                 # etag NULL means "no trustworthy cache info" (redirected
                 # row) — always counts as changed, never as reuse
-                unchanged = joined.filter(
-                    F.col("etag").isNotNull()
-                    & (F.col("_fb_etag") == F.col("etag"))
+                unchanged = F.coalesce(
+                    F.col("_fb_etag") == F.col("etag"), F.lit(False)
                 )
-                fetched_ok = joined.filter(
-                    F.col("etag").isNull()
-                    | F.col("_fb_etag").isNull()
-                    | (F.col("_fb_etag") != F.col("etag"))
-                ).drop(*fb_drop)
-                reused = (
-                    unchanged.select(
-                        "url_canon",
-                        *meta_cols,
-                        "etag",
-                        F.col("_fb_last_modified").alias("last_modified"),
-                        *[
-                            (
-                                F.col(f"_fb_{m}")
-                                if m in fb_mods
-                                else F.lit(None).cast("string")
-                            ).alias(m)
-                            for m in self.modules
-                        ],
-                    )
-                    .withColumn("crawl_error", F.lit(None).cast("string"))
-                    .withColumn("host", host_col(F.col("url_canon")))
-                    .withColumn("host_group", host_group_col(F.col("url_canon")))
-                    .withColumn("status", F.lit("ok"))
-                    .withColumn("from_fallback", F.lit(True))
+                reused = joined.filter(unchanged).select(
+                    "url_canon", *meta_cols, "etag", *fb_cols,
+                    F.lit("ok").alias("status"),
+                    F.lit(True).alias("from_fallback"),
+                )
+                fetched_ok = joined.filter(~unchanged).drop("_fb_etag", *fb_cols)
+                # the notfound status is KEPT alongside the fallback data
+                # (test/crawl.js:146 "reports errors and returns fallback
+                # data when possible")
+                missed = missed.join(fb_slim, on="url_canon", how="left").select(
+                    *missed.columns, F.col("_fb_etag").alias("etag"), *fb_cols,
+                    F.col("_fb_etag").isNotNull().alias("from_fallback"),
                 )
             cache_cols = (
                 ["etag"]
                 + (["warc_ts"] if has_ts else [])
                 + (["final_url", "_redirected"] if has_redirects else [])
             )
-            extracts = (
-                extract_all(
-                    fetched_ok,
-                    self.modules,
-                    url_col="url_canon",
-                    html_col="html",
-                    passthrough=meta_cols + cache_cols,
-                    last_modified_col="warc_ts" if has_ts else None,
-                    error_col="crawl_error",
-                )
-                .withColumn("host", host_col(F.col("url_canon")))
-                .withColumn("host_group", host_group_col(F.col("url_canon")))
-                .withColumn(
-                    "status",
-                    F.when(F.col("crawl_error").isNotNull(), F.lit("error"))
-                    .otherwise(F.lit("ok")),
-                )
-            )
-            if has_ts:
-                extracts = extracts.withColumnRenamed("warc_ts", "last_modified")
-            else:
-                extracts = extracts.withColumn(
-                    "last_modified", F.lit(None).cast("timestamp")
-                )
-            if has_redirects:
-                # `crawled` = post-redirect URL (specs-crawler.js:141-143);
+            no_ts = F.lit(None).cast("timestamp")
+            extracted = extract_all(
+                fetched_ok,
+                self.modules,
+                url_col="url_canon",
+                html_col="html",
+                passthrough=meta_cols + cache_cols,
+                last_modified_col="warc_ts" if has_ts else None,
+                error_col="crawl_error",
+            ).withColumns({
                 # cache info dropped on redirect: etag was already NULLed
                 # pre-extraction, last_modified is NULLed here
-                extracts = (
-                    extracts.withColumn(
-                        "crawled",
-                        F.coalesce(F.col("final_url"), F.col("url_canon")),
-                    )
-                    .withColumn(
-                        "last_modified",
-                        F.when(
-                            redirected, F.lit(None).cast("timestamp")
-                        ).otherwise(F.col("last_modified")),
-                    )
-                    .drop("final_url", "_redirected")
-                )
-                if reused is not None:
-                    # reuse requires a non-NULL matching etag → never a
-                    # redirected row; crawled is the request URL
-                    reused = reused.withColumn(
-                        "crawled", F.col("url_canon")
-                    )
-                notfound = notfound.withColumn(
-                    "crawled", F.col("url_canon")
-                )
-            extracts = extracts.withColumn("from_fallback", F.lit(False))
-            if reused is not None:
-                extracts = extracts.unionByName(reused.select(*extracts.columns))
-            if fb_slim is not None:
-                # misses pull fallback extracts when available; the
-                # notfound status is KEPT alongside the reused data
-                # (test/crawl.js:146 "reports errors and returns
-                # fallback data when possible")
-                notfound = notfound.join(fb_slim, on="url_canon", how="left")
-                for m in self.modules:
-                    notfound = notfound.withColumn(
-                        m,
-                        F.col(f"_fb_{m}")
-                        if m in fb_mods
-                        else F.lit(None).cast("string"),
-                    )
-                notfound = (
-                    notfound.withColumn("etag", F.col("_fb_etag"))
-                    .withColumn("last_modified", F.col("_fb_last_modified"))
-                    .withColumn("crawl_error", F.lit(None).cast("string"))
-                    .withColumn("from_fallback", F.col("_fb_etag").isNotNull())
-                    .drop("_fb_etag", "_fb_last_modified", *[f"_fb_{m}" for m in fb_mods])
-                )
-            else:
-                for m in self.modules:
-                    notfound = notfound.withColumn(m, F.lit(None).cast("string"))
-                notfound = (
-                    notfound.withColumn("etag", F.lit(None).cast("string"))
-                    .withColumn("last_modified", F.lit(None).cast("timestamp"))
-                    .withColumn("crawl_error", F.lit(None).cast("string"))
-                    .withColumn("from_fallback", F.lit(False))
-                )
-            round_results = (
-                extracts.unionByName(notfound.select(*extracts.columns))
-                .withColumn("round", F.lit(rnd))
+                "last_modified": F.when(redirected, no_ts).otherwise(
+                    F.col("warc_ts") if has_ts else no_ts
+                ),
+                "status": F.when(F.col("crawl_error").isNotNull(), F.lit("error"))
+                .otherwise(F.lit("ok")),
+                "from_fallback": F.lit(False),
+            })
+            sources = [extracted] + ([reused] if reused is not None else []) + [missed]
+            rows = reduce(
+                lambda a, b: a.unionByName(b, allowMissingColumns=True), sources
+            )
+            round_results = rows.select(
+                "url_canon", *meta_cols, "etag", "last_modified", *self.modules,
+                "crawl_error",
+                host_col(F.col("url_canon")).alias("host"),
+                host_group_col(F.col("url_canon")).alias("host_group"),
+                "status",
+                # `crawled` = post-redirect URL (specs-crawler.js:141-143),
+                # the request URL for every row that did not land elsewhere
+                *(
+                    [F.coalesce("final_url", "url_canon").alias("crawled")]
+                    if has_redirects
+                    else []
+                ),
+                F.coalesce("from_fallback", F.lit(False)).alias("from_fallback"),
+                F.lit(rnd).alias("round"),
             )
             # Materialize only when the round's results have multiple
             # consumers (discovery, metrics) or must be durable; a pure
@@ -845,10 +788,10 @@ class CrawlEngine:
                 self._write_manifest(rnd, m)
 
         if all_results:
-            results = all_results[0]
-            for extra in all_results[1:]:
-                results = results.unionByName(extra, allowMissingColumns=True)
-        else:
+            results = reduce(
+                lambda a, b: a.unionByName(b, allowMissingColumns=True), all_results
+            )
+        else:  # crawl(max_rounds=0)
             results = self.spark.createDataFrame(
                 [], "url_canon string, url string, status string"
             )

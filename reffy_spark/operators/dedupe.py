@@ -112,16 +112,16 @@ def minhash_from_shingles(
     ]
 
 
-def spread_small_input(df: DataFrame, min_headroom: int = 2) -> DataFrame:
+def spread_small_input(df: DataFrame) -> DataFrame:
     """Round-robin-repartition a compute-heavy input whose scan produced
-    far fewer partitions than the cluster has slots (a single small
+    at most half as many partitions as the cluster has slots (a single small
     parquet file at bench scale = ONE task doing all the md5 work). A
     plan-time decision, no job: at 100 TB the scan already yields
     thousands of splits and this is a no-op; the shuffle it adds at
     small scale moves only the raw input rows once."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
-    if df.rdd.getNumPartitions() * min_headroom <= target:
+    if df.rdd.getNumPartitions() * 2 <= target:
         return df.repartition(target)
     return df
 

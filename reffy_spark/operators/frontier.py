@@ -482,12 +482,16 @@ def range_prefix_sum(
     return result, part
 
 
+# crawl delay of a host without robots rows (the simulator's default too)
+DEFAULT_DELAY_MS = 100
+# parallelism of politeness_rank's pre-prune within one host group
+PRUNE_SALTS = 32
+
+
 def politeness_rank(
     pending: DataFrame,
     robots: DataFrame,
     round_ms: int,
-    default_delay_ms: int = 100,
-    prune_salts: int = 32,
     *,
     max_crawl_delay_ms: int | None,
 ) -> DataFrame:
@@ -502,7 +506,7 @@ def politeness_rank(
 
     * budget-bounded rounds (the production politeness case): a salted
       pre-prune keeps only each (group, salt)'s local top-``budget`` —
-      ``prune_salts``-way parallel per group — so the final rank window
+      ``PRUNE_SALTS``-way parallel per group — so the final rank window
       sees at most salts×budget rows per group. Any row in the true group
       top-budget is by definition in its salt slice's top-budget, so the
       result (and the CORRECTNESS hash) is identical to a direct window.
@@ -519,7 +523,7 @@ def politeness_rank(
     budgets = host_budgets(robots, round_ms)
     # budget of a host_group = budget of its slowest member host seen so far;
     # hosts without robots rows fall back to the default delay.
-    default_budget = max(1, round_ms // default_delay_ms)
+    default_budget = max(1, round_ms // DEFAULT_DELAY_MS)
     with_budget = pending.join(F.broadcast(budgets), on="host", how="left").withColumn(
         "budget", F.coalesce(F.col("budget"), F.lit(default_budget))
     )
@@ -541,7 +545,7 @@ def politeness_rank(
         )
     if min_budget < 100_000:
         salted = with_budget.join(group_budgets, on="host_group").withColumn(
-            "_salt", F.pmod(F.xxhash64("url_canon"), F.lit(prune_salts))
+            "_salt", F.pmod(F.xxhash64("url_canon"), F.lit(PRUNE_SALTS))
         )
         w_local = Window.partitionBy("host_group", "_salt").orderBy(*order)
         pruned = (

@@ -1510,10 +1510,10 @@ def q_fetch_fallback(spark, sf_dir):
     batch = d.select(
         canon.alias("url_canon"), (F.col("doc_id") % 3).cast("int").alias("depth")
     )
-    ok, notfound = fetch_with_fallback(pages, batch)
+    ok, missed = fetch_with_fallback(pages, batch)
     return ok.select(
         "url_canon", "depth", F.lit("ok").alias("status")
-    ).unionByName(notfound.select("url_canon", "depth", "status"))
+    ).unionByName(missed.select("url_canon", "depth", F.lit("notfound").alias("status")))
 
 
 ORACLE_FETCH_FALLBACK = """

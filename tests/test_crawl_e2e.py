@@ -6,6 +6,9 @@ the same per-host fetch sequence, round-by-round frontier, and final
 URL-seen set (SURVEY.md §7.3 invariant 3; FIXTURES.md §7 tier 2/3).
 """
 
+import datetime
+import hashlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -530,6 +533,79 @@ def test_crawl_rejects_used_checkpoint(spark, corpus, tmp_path):
     eng.crawl(seeds, max_rounds=2)
     with pytest.raises(ValueError, match="already holds committed rounds"):
         eng.crawl(seeds, max_rounds=2)
+
+
+def test_crawl_rejects_negative_max_rounds(spark, corpus, tmp_path):
+    # max_rounds=0 stays legal: it commits only the round-0 checkpoint
+    pages, seeds, robots = corpus
+    chk = tmp_path / "chk"
+    eng = CrawlEngine(spark, pages, robots, checkpoint_dir=str(chk))
+    with pytest.raises(ValueError, match="max_rounds must be at least 0, got -1"):
+        eng.crawl(seeds, max_rounds=-1)
+    assert not chk.exists()  # raised before round 0 was committed
+
+
+def test_resume_rejects_max_rounds_below_one(spark, corpus, tmp_path):
+    pages, _seeds, robots = corpus
+    eng = CrawlEngine(spark, pages, robots, checkpoint_dir=str(tmp_path))
+    with pytest.raises(ValueError, match="max_rounds must be at least 1, got 0"):
+        eng.resume(max_rounds=0)
+
+
+@pytest.mark.parametrize("ts", [False, True], ids=["no_ts", "warc_ts"])
+@pytest.mark.parametrize("final", [False, True], ids=["no_final", "final_url"])
+@pytest.mark.parametrize("fb", [False, True], ids=["no_fb", "fallback"])
+def test_results_column_order_is_one_shape(spark, ts, final, fb):
+    # extracted, reused and missed rows are assembled by one union and one
+    # select: every pages/fallback shape yields the same column order
+    html = {i: f"<html><head><title>S{i}</title></head></html>".encode() for i in (0, 1)}
+    ddl = "url string, html binary"
+    rows = [[f"https://co.test/s{i}/", html[i]] for i in (0, 1)]
+    if ts:
+        ddl += ", warc_ts timestamp"
+        for r in rows:
+            r.append(datetime.datetime(2024, 1, 2))
+    if final:
+        ddl += ", final_url string"
+        for r in rows:
+            r.append(None)
+    pages = spark.createDataFrame([tuple(r) for r in rows], ddl)
+    robots = spark.createDataFrame(
+        [("co.test", "/", True, 10)],
+        "host string, path_prefix string, allow boolean, crawl_delay_ms int",
+    )
+    fallback = None
+    if fb:
+        # s1 is unchanged (reused), s2 is gone from pages (missed)
+        fallback = spark.createDataFrame(
+            [
+                ("https://co.test/s1/", hashlib.md5(html[1]).hexdigest(), '"S1"'),
+                ("https://co.test/s2/", "gone", '"S2"'),
+            ],
+            "url_canon string, etag string, title string",
+        )
+    seeds = spark.createDataFrame(
+        [(f"https://co.test/s{i}/",) for i in (0, 1, 2)], "url string"
+    )
+    res = CrawlEngine(
+        spark, pages, robots, modules=["title"], use_bloom=False,
+        collect_metrics=False, discover=False, fallback=fallback,
+    ).crawl(seeds, max_rounds=1)
+    assert res.results.columns == [
+        "url_canon", "seed_idx", "depth", "priority", "round_discovered",
+        "host_fetch_rank", "etag", "last_modified", "title", "crawl_error",
+        "host", "host_group", "status", *(["crawled"] if final else []),
+        "from_fallback", "round",
+    ]
+    got = {
+        r["url_canon"][-3:-1]: (r["status"], r["from_fallback"], r["host"])
+        for r in res.results.collect()
+    }
+    assert got == {
+        "s0": ("ok", False, "co.test"),
+        "s1": ("ok", fb, "co.test"),
+        "s2": ("notfound", fb, "co.test"),
+    }
 
 
 def test_release_frees_rank_cache(spark, corpus):

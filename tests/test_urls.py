@@ -75,7 +75,12 @@ CANON_KEY_CASES = [
     ("https://a.org/p??", "https://a.org/p??"),
     ("https://a.org/p?q?", "https://a.org/p?q?"),
     ("https://a.org/p?q#?", "https://a.org/p?q"),
-    ("https://a.org/%7ex/%2f%zz%4%", "https://a.org/~x/%2F%zz%4%"),
+    ("https://a.org/%7ex/%2f%zz%4%", "https://a.org/~x/%2F%25zz%254%25"),
+    # idempotence: neither a decoded escape nor the index.html drop may
+    # leave a new escape or an empty query for a second pass
+    ("https://a.org/%4%41", "https://a.org/%254A"),
+    ("https://a.org/%4index%2Ehtml1", "https://a.org/%2541"),
+    ("https://a.org/p?index.html", "https://a.org/p"),
     ("https://a.org/d/index%2Ehtml?a=%3d%41", "https://a.org/d/?a=%3DA"),
     ("https://a.org/%c3%A9#%41", "https://a.org/%C3%A9"),
 ]

@@ -86,7 +86,7 @@ def main() -> None:
         "seed_idx", "depth", "priority", "round_discovered", "host_fetch_rank"
     ) if c in batch.columns]
     batch_slim = batch.select("url_canon", *meta)
-    fetched_ok, notfound = fetch_with_fallback(pages, batch_slim, True)
+    fetched_ok, missed = fetch_with_fallback(pages, batch_slim)
 
     # ---- phase 3: batch broadcast + fetch join (keys only, no Arrow)
     clock("fetch_join", lambda: fetched_ok.select("url_canon").write
@@ -102,7 +102,7 @@ def main() -> None:
           .format("noop").mode("overwrite").save())
 
     # ---- phase 5: notfound (fused broadcast-matched anti-join)
-    clock("notfound", lambda: notfound.select("url_canon").write
+    clock("notfound", lambda: missed.select("url_canon").write
           .format("noop").mode("overwrite").save())
 
     times["extract_only_est"] = round(

@@ -142,7 +142,7 @@ from reffy_spark.operators.crawler import fetch_with_fallback, freshest_capture
 spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
 pc = freshest_capture(with_url_canon(pages).withColumnRenamed("url", "page_url"))
 batch = with_url_canon(seeds).select("url_canon")
-fo, _miss = fetch_with_fallback(pc, batch, True)
+fo, _miss = fetch_with_fallback(pc, batch)
 hist = (fo.select(F.spark_partition_id().alias("p"))
           .groupBy("p").count()
           .agg(F.max("count").alias("mx"), F.avg("count").alias("avg"),
