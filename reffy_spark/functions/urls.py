@@ -218,7 +218,10 @@ def url_canon_col(url: Column) -> Column:
     prefix = F.regexp_replace(prefix, r"^http://", "https://")
     prefix = F.regexp_replace(prefix, r"^(https://[^/:]*):443$", "$1")
     u = F.trim(canonicalize_url_col(F.concat(prefix, rest)))
-    return F.trim(F.regexp_replace(u, _EMPTY_QUERY_RE, "$1"))
+    # only a URL with a ``?`` can be left with an empty query
+    return F.when(
+        url.contains("?"), F.trim(F.regexp_replace(u, _EMPTY_QUERY_RE, "$1"))
+    ).otherwise(u)
 
 
 def with_url_canon(df: DataFrame) -> DataFrame:

@@ -8,7 +8,6 @@ fetch sequence (notfound rows included) and on the URL-seen set. A
 mismatch names the generator seed and the first differing fetch.
 """
 
-import os
 import shutil
 
 import pytest
@@ -17,7 +16,7 @@ from reffy_spark.operators.crawler import CrawlEngine
 from reffy_spark.testing.simulator import simulate_crawl
 from reffy_spark.testing.webgen import random_web
 
-SEED = int(os.environ.get("REFFY_RANDOM_WEB_SEED", "2"))
+SEED = 2
 MAX_ROUNDS = 2
 
 
