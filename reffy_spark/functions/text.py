@@ -32,10 +32,6 @@ def normalize_ws_py(s: str) -> str:
     return re.sub(r"\s+", " ", s).strip()
 
 
-def normalize_ws_col(c: Column) -> Column:
-    return F.trim(F.regexp_replace(c, r"\s+", " "))
-
-
 def trim_spaces_py(text: str) -> str:
     """De-indent code blocks (trim-spaces.mjs:14-36).
 

@@ -29,7 +29,7 @@ import json
 import os
 import shutil
 import time
-from dataclasses import dataclass, field
+from dataclasses import asdict, dataclass, field
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -342,7 +342,6 @@ class CrawlEngine:
             # dropping it slims every downstream cache/shuffle of frontier
             # state (host/host_group stay: politeness joins budgets on host)
             frontier = frontier.drop("url")
-        seen = frontier.select("url_canon", F.lit(0).alias("first_round"))
         # the seed frontier is re-derivable from the seed list — a
         # working set until the first durable round commit replaces it.
         # It IS worth materializing even in pure replay: politeness
@@ -353,15 +352,14 @@ class CrawlEngine:
             frontier, "frontier", 0, durable=bool(self.checkpoint_dir)
         )
         # the round-0 seen set IS a projection of the (just-materialized)
-        # frontier: without a checkpoint there is nothing to commit —
-        # every consumer (the discovery anti-join's seen scan) reads the
-        # frontier cache equally well, and the separate round-0
-        # materialization was a pure per-crawl constant (r8; ~0.4 s of
-        # the bench replay)
+        # frontier, so a checkpoint's seen write re-reads the frontier
+        # instead of re-running its canonicalization. Without a checkpoint
+        # there is nothing to commit: the discovery anti-join's seen scan
+        # reads the frontier cache equally well (r8; ~0.4 s of the bench
+        # replay)
+        seen = frontier.select("url_canon", F.lit(0).alias("first_round"))
         if self.checkpoint_dir:
             seen = self._materialize(seen, "seen", 0)
-        else:
-            seen = frontier.select("url_canon", F.lit(0).alias("first_round"))
         return self._run_rounds(frontier, seen, start_round=1, max_rounds=max_rounds)
 
     def _ensure_pages_cached(self) -> None:
@@ -453,15 +451,6 @@ class CrawlEngine:
     ) -> CrawlResult:
         all_results: list[DataFrame] = list(prior or [])
         metrics: list[RoundMetrics] = []
-        # exact seen-set cardinality, carried across rounds so bloom
-        # sizing never fires a per-round count() job: one count at loop
-        # start, then += the new_urls count already computed for metrics
-        seen_count: int | None = None
-        # the bloom bitmap is ROUND STATE (alongside frontier/seen), not
-        # a per-round rebuild: it absorbs only new_urls per round and is
-        # rebuilt from seen only at explicit epoch boundaries
-        bloom = None
-        bloom_retired = False
 
         for rnd in range(start_round, max_rounds + 1):
             t0 = time.monotonic()
@@ -685,29 +674,13 @@ class CrawlEngine:
                 # lineage (3× per round in the bench replay).
                 cand = self._materialize(cand, "candidates", rnd, durable=False)
 
-                if self.use_bloom and not bloom_retired:
-                    if seen_count is None:
-                        seen_count = seen.count()
-                    if seen_count > FR.BLOOM_MAX_ITEMS:
-                        # the ACTUAL seen set outgrew the largest bitmap
-                        # this driver holds: retire the bloom for good
-                        # (plain scan-shaped anti-join from here on; no
-                        # per-round rebuild retries)
-                        bloom = None
-                        bloom_retired = True
-                    elif bloom is None or seen_count > bloom.n_capacity:
-                        # epoch (re)build with 2x headroom so steady
-                        # growth is absorbed by incremental folds; the
-                        # headroom clamps to the bloom's own ceiling so a
-                        # seen_count*2 above BLOOM_MAX_ITEMS does not
-                        # disable the filter while the actual seen set
-                        # still fits a max-size bitmap
-                        bloom = FR.build_bloom(
-                            seen,
-                            n_items=min(seen_count * 2, FR.BLOOM_MAX_ITEMS),
-                        )
-                else:
-                    bloom = None
+                # the bloom lives for this round's filter only: built
+                # from this round's seen (build_bloom counts it, sizes the
+                # bitmap to it and returns None above BLOOM_MAX_ITEMS), so
+                # no bitmap or count crosses a round boundary. The exact
+                # anti-join below reads all of seen anyway; an incremental
+                # fold of new_urls cost more than this rebuild.
+                bloom = FR.build_bloom(seen) if self.use_bloom else None
                 # cand is unique per url_canon (to_frontier dedup) — the
                 # scan-shape broadcast key set skips its distinct
                 unseen = FR.filter_unseen(
@@ -718,18 +691,7 @@ class CrawlEngine:
                 new_urls = self._materialize(
                     unseen, "new_urls", rnd, durable=False
                 )
-                if self.use_bloom or self.collect_metrics:
-                    n_new = new_urls.count()
-                    if seen_count is not None:
-                        seen_count += n_new
-                else:
-                    n_new = None
-                # grow the bloom by THIS round's new urls only (the unseen
-                # filter guarantees disjointness) — it then covers the
-                # post-union seen set exactly, so next round's probe has
-                # no false negatives
-                if n_new and bloom is not None:
-                    FR.fold_bloom(bloom, new_urls, key="url_canon")
+                n_new = new_urls.count() if self.collect_metrics else None
             else:
                 cand = None
                 new_urls = None
@@ -860,21 +822,7 @@ class CrawlEngine:
         path = os.path.join(self.checkpoint_dir, f"round={rnd}", "manifest.json")
         os.makedirs(os.path.dirname(path), exist_ok=True)
         with open(path, "w") as f:
-            json.dump(
-                {
-                    "round": m.round,
-                    "selected": m.selected,
-                    "fetched": m.fetched,
-                    "errors": m.errors,
-                    "discovered": m.discovered,
-                    "new_urls": m.new_urls,
-                    "per_host_group": m.per_host_group,
-                    "wall_sec": m.wall_sec,
-                    "modules": self.modules,
-                },
-                f,
-                indent=1,
-            )
+            json.dump({**asdict(m), "modules": self.modules}, f, indent=1)
 
 
 def link_targets(results: DataFrame) -> DataFrame:

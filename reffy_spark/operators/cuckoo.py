@@ -78,31 +78,26 @@ def _b2(b1: Column, fp: Column, m: int) -> Column:
     return b1.bitwiseXOR(h)
 
 
-def _keyed(seen: DataFrame, m: int, url_col: str) -> DataFrame:
-    u = F.col(url_col)
-    k = seen.select(u.alias("url_canon")).distinct()
+def _keyed(seen: DataFrame, m: int) -> DataFrame:
+    k = seen.select("url_canon").distinct()
     k = k.withColumn("fp", _fp(F.col("url_canon")))
     k = k.withColumn("_b1", _b1(F.col("url_canon"), m))
     return k.withColumn("_b2", _b2(F.col("_b1"), F.col("fp"), m))
 
 
 def cuckoo_table(
-    seen: DataFrame,
-    m: int = 1024,
-    capacity: int = 4,
-    url_col: str = "url_canon",
+    seen: DataFrame, m: int = 1024, capacity: int = 4
 ) -> tuple[DataFrame, DataFrame]:
-    """Build the filter: returns ``(table, stash)`` where ``table`` is
-    (bucket int, fp int) rows (the compact index — write it bucketed by
-    ``bucket``) and ``stash`` is the exact overflow (url_canon strings).
+    """Build the filter over ``seen.url_canon``: returns ``(table,
+    stash)`` where ``table`` is (bucket int, fp int) rows (the compact
+    index — write it bucketed by ``bucket``) and ``stash`` is the exact
+    overflow (url_canon strings).
 
-    ``m`` must be a power of two; size it so m·capacity ≥ |seen| / 0.7
-    (the engine already tracks the seen-set cardinality across rounds
-    for bloom sizing — the same number drives m).
+    ``m`` must be a power of two; size it so m·capacity ≥ |seen| / 0.7.
     """
     if m & (m - 1):
         raise ValueError(f"m must be a power of two, got {m}")
-    k = _keyed(seen, m, url_col)
+    k = _keyed(seen, m)
     w1 = Window.partitionBy("_b1").orderBy("fp", "url_canon")
     r1 = k.withColumn("_r", F.row_number().over(w1))
     stay = r1.filter(F.col("_r") <= capacity).select(
@@ -128,17 +123,13 @@ def cuckoo_table(
 
 
 def cuckoo_maybe_seen(
-    candidates: DataFrame,
-    table: DataFrame,
-    stash: DataFrame,
-    m: int,
-    url_col: str = "url_canon",
+    candidates: DataFrame, table: DataFrame, stash: DataFrame, m: int
 ) -> DataFrame:
     """Candidate urls that MIGHT be in the seen set (fp present in
     either of the url's two buckets, or url in the exact stash).
     False positives possible (fp collisions); false negatives
     impossible — every seen url was placed in b1, b2, or the stash."""
-    pr = _keyed(candidates, m, url_col)
+    pr = _keyed(candidates, m)
     probes = pr.select(
         "url_canon",
         F.explode(F.array(F.col("_b1"), F.col("_b2"))).alias("bucket"),
@@ -157,18 +148,14 @@ def cuckoo_maybe_seen(
         .distinct()
     )
     return hits.unionByName(
-        candidates.select(F.col(url_col).alias("url_canon")).join(
+        candidates.select("url_canon").join(
             F.broadcast(stash), on="url_canon", how="left_semi"
         )
     ).distinct()
 
 
 def filter_unseen_cuckoo(
-    candidates: DataFrame,
-    seen: DataFrame,
-    m: int = 1024,
-    capacity: int = 4,
-    key: str = "url_canon",
+    candidates: DataFrame, seen: DataFrame, m: int = 1024
 ) -> DataFrame:
     """EXACT unseen-candidates filter with the cuckoo table as the
     pruning structure: definite-new candidates (no fingerprint hit)
@@ -180,14 +167,12 @@ def filter_unseen_cuckoo(
     probe side shrinks to the maybe-hit sliver (seen-hit rate +
     ~capacity·2/2^16 false positives) and the join against the fat
     seen table prunes to the buckets the sliver touches."""
-    table, stash = cuckoo_table(seen, m, capacity, url_col=key)
-    keys = candidates.select(F.col(key).alias("url_canon")).distinct()
-    maybe = cuckoo_maybe_seen(keys, table, stash, m).withColumnRenamed(
-        "url_canon", key
-    )
-    definite_new = candidates.join(maybe, on=key, how="left_anti")
-    needs_check = candidates.join(maybe, on=key, how="left_semi")
+    table, stash = cuckoo_table(seen, m)
+    keys = candidates.select("url_canon").distinct()
+    maybe = cuckoo_maybe_seen(keys, table, stash, m)
+    definite_new = candidates.join(maybe, on="url_canon", how="left_anti")
+    needs_check = candidates.join(maybe, on="url_canon", how="left_semi")
     from reffy_spark.operators.frontier import anti_join_scan
 
-    confirmed_new = anti_join_scan(needs_check, seen, key)
+    confirmed_new = anti_join_scan(needs_check, seen)
     return definite_new.unionByName(confirmed_new)

@@ -376,17 +376,6 @@ def simhash_from_hashes(hashes: Column, bits: int = SIMHASH_BITS) -> Column:
     return out
 
 
-def simhash_col(
-    text: Column, bits: int = SIMHASH_BITS, hash_mode: str = "portable"
-) -> Column:
-    """SimHash over whitespace tokens, pure expressions. Token hash is
-    the portable 60-bit md5 hash (DuckDB-reproducible) or xxhash64 in
-    ``fast`` mode. NOTE: as a single expression the ``bits`` votes each
-    re-evaluate the token-hash transform — prefer ``simhash_table``'s
-    two-level projection on hot paths (r8: 7× on the bench)."""
-    return simhash_from_hashes(token_hashes_col(text, hash_mode), bits)
-
-
 def simhash_table(
     docs: DataFrame,
     id_col: str = "doc_id",

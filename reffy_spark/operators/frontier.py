@@ -49,6 +49,8 @@ from reffy_spark.functions.urls import host_col, host_group_col, with_url_canon
 # 10^10 scale the bloom would be maintained per hash-partition alongside
 # the bucketed seen table — same lifecycle, bigger bitmap).
 BLOOM_MAX_ITEMS = 50_000_000
+# target false-positive rate of a bitmap sized for its item count
+BLOOM_FPP = 0.01
 
 
 class Bloom:
@@ -58,13 +60,12 @@ class Bloom:
     numpy-vectorized inside an Arrow UDF (no per-row Python).
     """
 
-    def __init__(self, n_items: int, fpp: float = 0.01):
+    def __init__(self, n_items: int):
         n_items = max(n_items, 16)
-        m = int(-n_items * math.log(fpp) / (math.log(2) ** 2))
+        m = int(-n_items * math.log(BLOOM_FPP) / (math.log(2) ** 2))
         self.m = max(64, m)
         self.k = max(1, round(self.m / n_items * math.log(2)))
         self.bits = np.zeros((self.m + 63) // 64, dtype=np.uint64)
-        self.n_capacity = n_items  # items this bitmap was sized for
 
     def _positions(self, h: np.ndarray) -> np.ndarray:
         # double hashing: g_i = h1 + i*h2 mod m  (h is int64 xxhash64)
@@ -87,46 +88,34 @@ class Bloom:
         return out
 
 
-def build_bloom(
-    seen: DataFrame,
-    key: str = "url_canon",
-    fpp: float = 0.01,
-    n_items: int | None = None,
-) -> Bloom | None:
-    """Build the URL-seen bloom DISTRIBUTED: every partition folds its
-    xxhash64 values into a local bitmap (Arrow-batched, numpy-vectorized),
-    bitmaps are OR-merged executor-side via treeReduce, and only the final
-    bitmap reaches the driver. No ``toPandas`` of raw hashes.
+def build_bloom(seen: DataFrame, n_items: int | None = None) -> Bloom | None:
+    """Bloom over ``seen.url_canon``, built DISTRIBUTED: every partition
+    folds its xxhash64 values into a local bitmap (Arrow-batched,
+    numpy-vectorized), bitmaps are OR-merged executor-side via
+    treeReduce, and only the final bitmap reaches the driver. No
+    ``toPandas`` of raw hashes.
 
-    ``n_items`` sizes the bitmap; pass it when the caller already knows
-    the seen-set cardinality (the crawl loop tracks it exactly:
-    prev_count + new_urls count, both computed for round metrics) so the
-    build never fires a ``count()`` job of its own.
+    The bitmap is sized for ``n_items`` keys; without it the build
+    counts ``seen`` (one job). The crawl loop calls this once per
+    discovery round on that round's seen set and drops the bitmap after
+    the round's filter, so no bloom state crosses a round boundary.
 
-    Above ``BLOOM_MAX_ITEMS`` the bitmap itself (not the build) is the
-    limit — a ~12 GB bitmap cannot be broadcast — so we fall back to the
-    plain anti-join; at true 10^10 scale the bloom would be maintained
-    per hash-partition alongside the bucketed seen table.
+    Returns ``None`` for an empty seen set and above ``BLOOM_MAX_ITEMS``:
+    there the bitmap itself (not the build) is the limit — a ~12 GB
+    bitmap cannot be broadcast — and the caller uses the plain exact
+    anti-join.
     """
     n = seen.count() if n_items is None else n_items
     if n > BLOOM_MAX_ITEMS or n == 0:
         return None
-    # Bloom.__init__ records n as n_capacity: fold incrementally up to
-    # it; past it the caller performs an explicit epoch rebuild
-    proto = Bloom(n, fpp)
-    return fold_bloom(proto, seen, key)
+    return fold_bloom(Bloom(n), seen)
 
 
-def fold_bloom(bloom: Bloom, df: DataFrame, key: str = "url_canon") -> Bloom:
-    """OR ``df``'s keys into an existing bloom IN PLACE, distributed:
+def fold_bloom(bloom: Bloom, df: DataFrame) -> Bloom:
+    """OR ``df.url_canon``'s keys into ``bloom`` IN PLACE, distributed:
     per-partition bitmaps (Arrow-batched, numpy-vectorized), executor-
-    side treeReduce OR-merge, one final OR on the driver.
-
-    This is the INCREMENTAL half of the bloom lifecycle: per crawl
-    round only the round's new_urls are folded; the full seen set is
-    scanned only at epoch (re)builds (``build_bloom``), so the filter's
-    per-round cost tracks the round's discoveries, not the accumulated
-    seen-set size."""
+    side treeReduce OR-merge, one final OR on the driver. ``build_bloom``
+    uses it to fill a fresh bitmap."""
     m, k = bloom.m, bloom.k
 
     def part_bloom(batches):
@@ -138,7 +127,7 @@ def fold_bloom(bloom: Bloom, df: DataFrame, key: str = "url_canon") -> Bloom:
                 b.add_hashes(pdf["h"].to_numpy())
         yield pd.DataFrame({"bits": [b.bits.tobytes()]})
 
-    bitmaps = df.select(F.xxhash64(key).alias("h")).mapInPandas(
+    bitmaps = df.select(F.xxhash64("url_canon").alias("h")).mapInPandas(
         part_bloom, "bits binary"
     )
     merged = bitmaps.rdd.map(lambda r: bytes(r.bits)).treeReduce(
@@ -171,12 +160,10 @@ from reffy_spark.plan_stats import estimated_bytes as _estimated_bytes
 
 
 def anti_join_scan(
-    left: DataFrame,
-    seen: DataFrame,
-    key: str = "url_canon",
-    left_unique: bool = False,
+    left: DataFrame, seen: DataFrame, left_unique: bool = False
 ) -> DataFrame:
-    """``left LEFT ANTI JOIN seen`` without ever shuffling ``seen``.
+    """``left LEFT ANTI JOIN seen`` on ``url_canon`` without ever
+    shuffling ``seen``.
 
     A plain left_anti cannot broadcast its big right side, so every
     crawl round re-shuffles the ENTIRE seen set even for a handful of
@@ -210,31 +197,33 @@ def anti_join_scan(
     ``distinct`` — one less exchange per call; purely a plan change
     (duplicate keys would only inflate the broadcast, never the answer).
     """
+    seen_keys = seen.select("url_canon")
     est = _estimated_bytes(seen)
     if est is not None and est < _SCAN_ANTI_MIN_BYTES:
-        return left.join(seen.select(key), on=key, how="left_anti")
+        return left.join(seen_keys, on="url_canon", how="left_anti")
     left_est = _estimated_bytes(left)
     if left_est is not None:
         if left_est > _SCAN_ANTI_MAX_LEFT_BYTES:
-            return left.join(seen.select(key), on=key, how="left_anti")
+            return left.join(seen_keys, on="url_canon", how="left_anti")
     elif (
-        left.select(key).limit(_SCAN_ANTI_MAX_LEFT_ROWS + 1).count()
+        left.select("url_canon").limit(_SCAN_ANTI_MAX_LEFT_ROWS + 1).count()
         > _SCAN_ANTI_MAX_LEFT_ROWS
     ):
-        return left.join(seen.select(key), on=key, how="left_anti")
-    keys = left.select(key) if left_unique else left.select(key).distinct()
-    hits = seen.select(key).join(F.broadcast(keys), on=key, how="left_semi")
-    return left.join(F.broadcast(hits), on=key, how="left_anti")
+        return left.join(seen_keys, on="url_canon", how="left_anti")
+    keys = left.select("url_canon")
+    if not left_unique:
+        keys = keys.distinct()
+    hits = seen_keys.join(F.broadcast(keys), on="url_canon", how="left_semi")
+    return left.join(F.broadcast(hits), on="url_canon", how="left_anti")
 
 
 def filter_unseen(
     candidates: DataFrame,
     seen: DataFrame,
-    key: str = "url_canon",
     bloom: Bloom | None = None,
     candidates_unique: bool = False,
 ) -> DataFrame:
-    """Rows of ``candidates`` whose key is not in ``seen``.
+    """Rows of ``candidates`` whose ``url_canon`` is not in ``seen``.
 
     With a bloom: definitely-new rows bypass the seen lookup entirely;
     only maybe-seen rows are confirmed exactly (false-positive-safe).
@@ -243,7 +232,7 @@ def filter_unseen(
     ``anti_join_scan`` (skips the broadcast key set's distinct).
     """
     if bloom is None:
-        return anti_join_scan(candidates, seen, key, left_unique=candidates_unique)
+        return anti_join_scan(candidates, seen, left_unique=candidates_unique)
 
     # ship the bitmap via an explicit TorrentBroadcast (one transfer per
     # executor, BitTorrent-style chunks) instead of a UDF closure, which
@@ -254,11 +243,13 @@ def filter_unseen(
     def maybe_seen(h: pd.Series) -> pd.Series:
         return pd.Series(bloom_bc.value.might_contain(h.to_numpy()))
 
-    with_flag = candidates.withColumn("_maybe_seen", maybe_seen(F.xxhash64(key)))
+    with_flag = candidates.withColumn(
+        "_maybe_seen", maybe_seen(F.xxhash64("url_canon"))
+    )
     definite_new = with_flag.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
     needs_check = with_flag.filter(F.col("_maybe_seen")).drop("_maybe_seen")
     confirmed_new = anti_join_scan(
-        needs_check, seen, key, left_unique=candidates_unique
+        needs_check, seen, left_unique=candidates_unique
     )
     return definite_new.unionByName(confirmed_new)
 

@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 
 from reffy_spark.functions.text import (
     fingerprint_col,
-    lang_id_col,
     quality_score_col,
     stopword_ratio_col,
     token_count_col,
@@ -95,12 +94,6 @@ def quality_filter(
     """Keep documents above the quality threshold (pushdown-friendly:
     the predicate is pure expressions over the text column)."""
     return docs.filter(quality_score_col(F.col(text_col)) >= min_quality)
-
-
-def language_partition(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Add the predicted language — the partition column a multilingual
-    corpus would be written by (``partitionBy("lang_pred")``)."""
-    return docs.withColumn("lang_pred", lang_id_col(F.col(text_col)))
 
 
 def token_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:

@@ -197,14 +197,3 @@ def gen_robots(spark: SparkSession) -> DataFrame:
         pd.DataFrame(robots_rows()),
         "host string, path_prefix string, allow boolean, crawl_delay_ms int",
     )
-
-
-def write_corpus(
-    spark: SparkSession, outdir: str, n_pages: int, n_seeds: int | None = None
-) -> None:
-    n_seeds = n_seeds or max(2, n_pages // 50)
-    gen_pages(spark, n_pages).write.mode("overwrite").parquet(f"{outdir}/pages.parquet")
-    gen_seeds(spark, n_pages, n_seeds).write.mode("overwrite").parquet(
-        f"{outdir}/seeds.parquet"
-    )
-    gen_robots(spark).write.mode("overwrite").parquet(f"{outdir}/robots.parquet")

@@ -8,6 +8,7 @@ URL-seen set (SURVEY.md §7.3 invariant 3; FIXTURES.md §7 tier 2/3).
 
 import datetime
 import hashlib
+import json
 
 import pytest
 from pyspark.sql import functions as F
@@ -760,43 +761,85 @@ def test_resume_after_torn_round_commit(
     assert got == want
 
 
-def test_seen_filter_built_once_not_per_round(spark, corpus, monkeypatch):
-    """Incremental URL-seen lifecycle: across a multi-round discovery
-    crawl whose seen set stays under the epoch-rebuild threshold, the
-    full-scan bloom build over seen runs exactly ONCE — round N+1 folds
-    only new_urls, never re-scanning the seen set."""
-    pages, _seeds, robots = corpus
-    # seed most of the graph so seen grows < 2x (no doubling epoch)
-    big_seeds = syn.gen_seeds(spark, N_PAGES, 40)
+@pytest.fixture(scope="module")
+def exact_three_rounds(spark, corpus):
+    pages, seeds, robots = corpus
+    res = CrawlEngine(
+        spark, pages, robots, modules=["links"], use_bloom=False,
+        collect_metrics=False,
+    ).crawl(seeds, max_rounds=3)
+    seen = {r["url_canon"]: r["first_round"] for r in res.url_seen.collect()}
+    return _engine_fetches(res), seen
 
+
+@pytest.mark.parametrize("max_items", [None, 1], ids=["default", "over_limit"])
+def test_bloom_rebuilt_per_round_from_seen(
+    spark, corpus, exact_three_rounds, monkeypatch, max_items
+):
+    """The bloom is round-local: every discovery round builds it from
+    that round's seen set (here growing more than 2x across the crawl),
+    and ``fold_bloom`` runs only inside ``build_bloom``. With
+    ``BLOOM_MAX_ITEMS`` below the seen size no bitmap is built and every
+    round takes the exact filter. Either way the crawl equals the exact
+    crawl."""
+    pages, seeds, robots = corpus
     from reffy_spark.operators import frontier as FR
 
-    calls = {"build_bloom": 0, "fold_bloom": 0}
+    if max_items is not None:
+        monkeypatch.setattr(FR, "BLOOM_MAX_ITEMS", max_items)
+    seen_sizes, blooms, stray_folds = [], [], []
     real_bb, real_fb = FR.build_bloom, FR.fold_bloom
+    building = False
 
-    def bb(*a, **k):
-        calls["build_bloom"] += 1
-        return real_bb(*a, **k)
+    def bb(seen, *a, **k):
+        nonlocal building
+        seen_sizes.append(seen.count())
+        building = True
+        try:
+            bloom = real_bb(seen, *a, **k)
+        finally:
+            building = False
+        blooms.append(bloom)
+        return bloom
 
     def fb(*a, **k):
-        calls["fold_bloom"] += 1
+        if not building:
+            stray_folds.append(a)
         return real_fb(*a, **k)
 
     monkeypatch.setattr(FR, "build_bloom", bb)
     monkeypatch.setattr(FR, "fold_bloom", fb)
 
-    res_b = CrawlEngine(
+    res = CrawlEngine(
         spark, pages, robots, modules=["links"], use_bloom=True,
         collect_metrics=False,
-    ).crawl(big_seeds, max_rounds=3)
-    # build_bloom itself calls fold_bloom once; every later fold is an
-    # incremental new_urls fold, never a rebuild
-    assert calls["build_bloom"] == 1, calls
-    assert calls["fold_bloom"] >= 1
+    ).crawl(seeds, max_rounds=3)
+    fetches, seen = exact_three_rounds
+    assert _engine_fetches(res) == fetches
+    assert {r["url_canon"]: r["first_round"] for r in res.url_seen.collect()} == seen
 
-    res_e = CrawlEngine(
-        spark, pages, robots, modules=["links"], use_bloom=False,
-        collect_metrics=False,
-    ).crawl(big_seeds, max_rounds=3)
-    assert res_b.url_seen.count() == res_e.url_seen.count()
-    assert _engine_fetches(res_b) == _engine_fetches(res_e)
+    assert len(seen_sizes) == 3, seen_sizes  # one build per discovery round
+    assert seen_sizes[-1] > 2 * seen_sizes[0], seen_sizes
+    assert not stray_folds
+    if max_items is None:
+        assert all(b is not None for b in blooms)
+    else:
+        assert blooms == [None, None, None]
+
+
+def test_round_manifest_keys(spark, corpus, tmp_path):
+    pages, seeds, robots = corpus
+    res = CrawlEngine(
+        spark, pages, robots, checkpoint_dir=str(tmp_path), modules=["links"]
+    ).crawl(seeds, max_rounds=1)
+    with open(tmp_path / "round=1" / "manifest.json") as f:
+        manifest = json.load(f)
+    assert list(manifest) == [
+        "round", "selected", "fetched", "errors", "discovered", "new_urls",
+        "per_host_group", "wall_sec", "modules",
+    ]
+    m = res.metrics[0]
+    assert manifest["round"] == 1
+    assert manifest["new_urls"] == m.new_urls
+    assert manifest["per_host_group"] == m.per_host_group
+    assert manifest["modules"] == ["links"]
