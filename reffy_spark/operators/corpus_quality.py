@@ -443,9 +443,6 @@ def line_dedup(
     )
 
 
-_prev_pack_cache = None
-
-
 def pack_sequences(
     docs: DataFrame,
     window: int = 2048,
@@ -483,24 +480,13 @@ def pack_sequences(
             else token_count_col(F.col(text_col)).cast("long")
         ).alias("n_tokens"),
     )
-    summed, part = range_prefix_sum(
+    summed = range_prefix_sum(
         counted,
         [F.col("doc_id")],
         weight="n_tokens",
         out="_end_offset",
         num_parts=num_parts,
     )
-    # Lifecycle: exactly one pack cache is live at a time — repeated
-    # calls in one session (test suites, notebook loops) must not
-    # accumulate persisted frames until storage eviction thrashes (a
-    # leak here wedged a 4-core test JVM in an eviction storm).
-    global _prev_pack_cache
-    if _prev_pack_cache is not None:
-        try:
-            _prev_pack_cache.unpersist(blocking=False)
-        except Exception:
-            pass
-    _prev_pack_cache = part
     # a NULL count adds nothing to the stream
     packed = summed.select(
         "doc_id",

@@ -285,11 +285,10 @@ class CrawlEngine:
         both forms; the frontier dedups them immediately after).
 
         Size routing (r8, same precedent as ``frontier.anti_join_scan``):
-        a seed list Catalyst can ESTIMATE as small takes the direct
-        global window — bit-identical, one exchange instead of the
-        two-phase machinery's four stages; unknown or large estimates
-        keep the scale shape (an unknown seed list may be the 1M-URL
-        case)."""
+        a seed list Catalyst can ESTIMATE as small takes the direct global
+        window — bit-identical, one exchange instead of the two-phase
+        machinery's four stages; unknown or large estimates keep the
+        scale shape (an unknown seed list may be the 1M-URL case)."""
         from reffy_spark.plan_stats import estimated_bytes
 
         est = estimated_bytes(seeds)
@@ -298,11 +297,7 @@ class CrawlEngine:
             return seeds.withColumn(
                 "seed_idx", (F.row_number().over(w) - 1).cast("long")
             )
-        numbered, part = FR.range_prefix_sum(
-            seeds, [F.col("url")], out="seed_idx"
-        )
-        # the range slice is released with the round's working sets
-        self._working_sets.append(part)
+        numbered = FR.range_prefix_sum(seeds, [F.col("url")], out="seed_idx")
         # long: webtext-scale seed lists pass 2^31-1 rows (matches
         # sources.seeds.with_input_order_index)
         return numbered.withColumn("seed_idx", F.col("seed_idx") - 1)
@@ -430,7 +425,6 @@ class CrawlEngine:
 
         Separate from the crawl because lazy results read the caches."""
         self._release_working_sets()
-        FR.release_rank_cache()
         if getattr(self, "_pages_cached", None) is not None:
             try:
                 self._pages_cached.unpersist(blocking=False)

@@ -32,11 +32,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType
-from pyspark.storagelevel import StorageLevel
-
-# previous politeness_rank range slice, unpersisted on the next call (one
-# live slim cache per crawl loop instead of one per round)
-_prev_rank_cache: DataFrame | None = None
 
 from reffy_spark.functions.urls import host_col, host_group_col, with_url_canon
 
@@ -381,16 +376,35 @@ def host_budgets(robots: DataFrame, round_ms: int) -> DataFrame:
     )
 
 
-def release_rank_cache() -> None:
-    """Unpersist the slice ``politeness_rank`` keeps cached for its
-    latest ranking. Lazy results that still read it recompute it."""
-    global _prev_rank_cache
-    if _prev_rank_cache is not None:
-        try:
-            _prev_rank_cache.unpersist(blocking=False)
-        except Exception:
-            pass
-    _prev_rank_cache = None
+def _sliced(df: DataFrame, num_parts: int, *cols) -> DataFrame:
+    """``df`` range-partitioned on ``cols`` into ``num_parts`` contiguous
+    slices, each row tagged with its slice id ``_pid`` — BEFORE
+    freezing. Plan tests assert its RangePartitioning here, since the
+    frozen frame hides the exchange behind an ExistingRDD scan."""
+    ranged = df.repartitionByRange(num_parts, *cols)
+    return ranged.withColumn("_pid", F.spark_partition_id())
+
+
+def frozen_slices(df: DataFrame, num_parts: int, *cols) -> DataFrame:
+    """``_sliced`` frozen by an eager ``localCheckpoint``: the slices are
+    computed once, at call time, and every later read sees the same
+    (row, ``_pid``) pairs.
+
+    A frame that references its slices more than once needs this.
+    ``repartitionByRange`` SAMPLES its boundaries and
+    ``spark_partition_id`` depends on the plan, so two recomputations
+    could slice the data differently and silently mis-join (off-by-N
+    sums, wrong carries). Catalyst's ReuseExchange hides that only while
+    it fires. The checkpointed blocks belong to the returned frame:
+    Spark's ContextCleaner frees them once no plan references it, so no
+    later call can evict a pending plan's slices.
+
+    Trade: localCheckpoint blocks are not recomputed when an executor is
+    lost — the job fails loudly instead. A long-lived pipeline on a
+    multi-executor cluster sets a reliable checkpoint dir and swaps
+    ``checkpoint()`` in here, the one site for every two-phase operator.
+    """
+    return _sliced(df, num_parts, *cols).localCheckpoint()
 
 
 def range_prefix_sum(
@@ -400,7 +414,7 @@ def range_prefix_sum(
     weight: str | None = None,
     out: str = "prefix",
     num_parts: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
+) -> DataFrame:
     """Inclusive running sum of ``weight`` within each ``groups`` key in
     ``order`` (``weight=None`` sums 1 per row: the row number) with NO
     single-task sort of a whole group — the two-phase distributed
@@ -419,9 +433,10 @@ def range_prefix_sum(
     duplicate keys still get distinct row numbers. The largest sort any
     task does is one range partition's rows, never a whole hot group.
 
-    Returns ``(result, part)``: ``result`` is ``df`` plus ``out``;
-    ``part`` is the persisted range slice both branches read, which the
-    caller releases once ``result`` is consumed.
+    Returns ``df`` plus ``out``. The range slices both branches read are
+    frozen at call time (``frozen_slices``), so this runs the sampling
+    and slicing jobs eagerly; on a multi-executor master a lost
+    executor's slice blocks are not recomputed, and a later read fails.
     """
     if num_parts is None:
         num_parts = int(
@@ -430,22 +445,10 @@ def range_prefix_sum(
     # a NULL weight adds nothing, as in SUM
     w = F.lit(1) if weight is None else F.coalesce(F.col(weight), F.lit(0))
     keys = [*groups, "_pid"]
-    # Bake the range-partition id INTO THE DATA under a single
-    # materialization (persist): the offsets branch and the sum branch
-    # below then read identical (row, _pid) pairs from the cache instead
-    # of each re-running the range exchange. Without this the two logical
-    # branches only agree on partition boundaries if Catalyst's
-    # ReuseExchange fires (byte-identical subtrees after optimization) —
-    # an optimizer internal that column-pruning drift across Spark
-    # versions could silently break, desyncing boundaries into off-by-N
-    # sums. persist (not localCheckpoint) keeps lineage, so executor
-    # loss recomputes from the already-written shuffle files with the
-    # same boundaries.
-    part = (
-        df.repartitionByRange(num_parts, *[F.col(g) for g in groups], *order)
-        .withColumn("_pid", F.spark_partition_id())
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    # the offsets branch and the sum branch below must read identical
+    # (row, _pid) pairs: two range exchanges could place the boundaries
+    # differently and desync the sums
+    part = frozen_slices(df, num_parts, *[F.col(g) for g in groups], *order)
     totals = part.groupBy(*keys).agg(F.sum(w).alias("_t"))
     # running total of earlier partitions per group; the window input is
     # the tiny totals table (≤ num_parts rows per group), not the data
@@ -470,7 +473,7 @@ def range_prefix_sum(
         .withColumn(out, F.col("_off") + F.col("_ls"))
         .drop("_pid", "_ls", "_off")
     )
-    return result, part
+    return result
 
 
 # crawl delay of a host without robots rows (the simulator's default too)
@@ -509,7 +512,10 @@ def politeness_rank(
 
     ``max_crawl_delay_ms``: the robots table's ``max(crawl_delay_ms)``,
     ``None`` when the table sets no delay. The caller derives it once
-    from the (small) robots config, so this function runs no action.
+    from the (small) robots config, so the gate needs no action. The
+    budget-bounded branch runs none; the unbounded branch freezes its
+    range slices at call time (``range_prefix_sum``), which runs the
+    pending frontier's sampling and slicing jobs before returning.
     """
     budgets = host_budgets(robots, round_ms)
     # budget of a host_group = budget of its slowest member host seen so far;
@@ -557,7 +563,7 @@ def politeness_rank(
         carry = [
             c for c in wb.columns if c not in (*key_cols, "url", "host", "budget")
         ]
-        ranked, part = range_prefix_sum(
+        ranked = range_prefix_sum(
             wb.select(*key_cols, *carry),
             order,
             groups=("host_group",),
@@ -566,9 +572,6 @@ def politeness_rank(
         ranked = ranked.withColumn(
             "host_fetch_rank", F.col("host_fetch_rank").cast("int")
         )
-        release_rank_cache()
-        global _prev_rank_cache
-        _prev_rank_cache = part
     return (
         ranked.filter(F.col("host_fetch_rank") <= F.col("_gb"))
         .drop("_gb", "budget")

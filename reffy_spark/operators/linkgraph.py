@@ -22,9 +22,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# swept on the next pagerank() call (the closure-cache pattern from
-# plans/postprocess.py — persist the loop invariant, release it lazily)
-_pr_caches: list[DataFrame] = []
+# Loop invariants and range slices are frozen with an eager
+# localCheckpoint, the idiom of ``frontier.frozen_slices``: the blocks
+# belong to the returned plan, and no later call can evict them.
 
 
 def edges_from_links(links: DataFrame) -> DataFrame:
@@ -73,28 +73,18 @@ def pagerank(
     longs, is the only moving side). Hot dst keys (a page every page
     links to) are absorbed by the partial aggregation, not a window.
     """
-    from pyspark.storagelevel import StorageLevel
-
-    global _pr_caches
-    for cached in _pr_caches:
-        try:
-            cached.unpersist(blocking=False)
-        except Exception:
-            pass
-    _pr_caches = []
     # the edge list is the loop invariant with an arbitrarily expensive
-    # lineage behind it (Arrow links extraction): without a persist,
+    # lineage behind it (Arrow links extraction): unfrozen,
     # deg/nodes/indeg and every iteration's join would each re-run that
     # lineage (measured ~7× recompute at sf0.1)
-    edges = edges.select("src", "dst").persist(StorageLevel.MEMORY_AND_DISK)
-    _pr_caches.append(edges)
+    edges = edges.select("src", "dst").localCheckpoint()
     # nodes + out-degree + in-degree in ONE partial-aggregable pass (r8):
     # the previous nodes-distinct / deg / indeg trio shuffled the edge
     # list four times (union both sides + two keyed aggs) and needed two
     # coalescing joins at the end. One tagged explode + sum gives the
     # identical values (a url's out_degree is its count of src
     # occurrences — absent ⇒ 0 via the sum, exactly the old
-    # coalesce(left-join)), and the cached degs table doubles as the
+    # coalesce(left-join)), and the frozen degs table doubles as the
     # nodes set for every iteration.
     degs = (
         edges.select(
@@ -116,9 +106,8 @@ def pagerank(
         .select("e.*")
         .groupBy("url")
         .agg(F.sum("o").alias("out_degree"), F.sum("i").alias("in_degree"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint()
     )
-    _pr_caches.append(degs)
     deg = degs.filter(F.col("out_degree") > 0).select(
         F.col("url").alias("src"), F.col("out_degree")
     )
@@ -126,16 +115,13 @@ def pagerank(
     base = (scale * (100 - damping_pct)) // 100
     ranks = nodes.withColumn("rank_fp", F.lit(scale).cast("long"))
     # out-degree rides the edge list so the per-iteration join is a
-    # single probe. ``ed`` is the loop invariant: persist it (r8) —
-    # without the cache every iteration re-ran the deg aggregation and
-    # the edges⋈deg join from the edges cache (3× recompute at n_iter=3),
-    # and the cached join output keeps its hash(src) partitioning, so
-    # each iteration's join exchanges ONLY the slim rank table
-    # (guide §2.4: two operations keyed the same way share one exchange;
-    # the documented 10^10-edge shape — edge table partitioned by src
-    # once, the rank table is the only moving side).
-    ed = edges.join(deg, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    _pr_caches.append(ed)
+    # single probe. ``ed`` is the loop invariant: freeze it (r8) —
+    # unfrozen, every iteration re-ran the deg aggregation and the
+    # edges⋈deg join from the frozen edges (3× recompute at n_iter=3).
+    # Under AQE the checkpoint does not report the join's hash(src)
+    # partitioning, so each iteration's join still exchanges ``ed``;
+    # the 10^10-edge shape buckets the edge table by src instead.
+    ed = edges.join(deg, "src").localCheckpoint()
     for _ in range(n_iter):
         contrib = (
             ed.join(ranks.withColumnRenamed("url", "src"), "src")
@@ -225,7 +211,8 @@ def apportion_budget(
     bound: ``B * rank_fp`` must stay below 2^63; the plan asserts
     ``max(rank) <= (2^63-1) DIV B`` and raises rather than silently
     wrapping (rank_fp is ≤ 10^8-scale fixed point, so any realistic
-    budget is fine; the guard catches pathological inputs).
+    budget is fine; the guard catches pathological inputs). It raises
+    during the call: the remainder rank freezes its slices eagerly.
 
     Scale shape: the remainder rank is ``frontier.range_prefix_sum``'s
     two-phase row number over (rem desc, host) — no single-task sort of
@@ -272,10 +259,9 @@ def apportion_budget(
         .withColumn("_base", F.expr(f"({B} * _r_eff) DIV _S_eff"))
         .withColumn("_rem", F.expr(f"({B} * _r_eff) % _S_eff"))
     )
-    numbered, part = range_prefix_sum(
+    numbered = range_prefix_sum(
         j, [F.col("_rem").desc(), F.col("host")], out="_rn"
     )
-    _pr_caches.append(part)
     deficit = j.agg((F.lit(B) - F.sum("_base")).alias("_d"))
     return numbered.crossJoin(F.broadcast(deficit)).select(
         "host",

@@ -16,20 +16,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# Working-set note (ADVICE r6): the skew-safe twins reference their
-# range-partitioned ``part`` frame three times (local/carries/pairs).
-# repartitionByRange SAMPLES its boundaries and spark_partition_id is
-# plan-dependent, so three independent recomputations could slice the
-# data differently and silently mis-join — the r5 fix persisted the
-# frame behind a per-operator cache slot whose unpersist-on-next-call
-# lifecycle still allowed a pending plan's working set to be evicted
-# before evaluation. The frames are now eagerly localCheckpoint-ed
-# instead: the slices are computed ONCE and the lineage truncated, so a
-# returned plan stays correct no matter how many later calls run, and
-# block loss surfaces as a job failure, never as divergent slices.
-# (localCheckpoint is not resilient to executor loss; on a real cluster
-# a long-lived pipeline should set a reliable checkpoint dir and swap
-# checkpoint() in — same single-line site, both operators.)
+from reffy_spark.operators.frontier import frozen_slices
+
+# Working sets: the skew-safe twins reference their range-sliced ``part``
+# frame three times (local/carries/pairs), so they freeze it with
+# ``frontier.frozen_slices`` — the same eager localCheckpoint as
+# ``range_prefix_sum``: a returned plan stays correct no matter how many
+# later calls run, and block loss surfaces as a job failure, never as
+# divergent slices.
 #
 # Costs of this contract, accepted deliberately: (a) every skewsafe call
 # runs one eager job for the working set even if the returned plan is
@@ -39,15 +33,6 @@ from pyspark.sql import functions as F
 # not eagerly — a tight loop over many inputs holds at most the blocks
 # of results still referenced (drop references, or call
 # spark.sparkContext._jvm.System.gc() in pathological loops).
-
-
-def _sliced(df: DataFrame, num_parts: int, *cols) -> DataFrame:
-    """The skew-safe working-set frame BEFORE checkpointing: range-
-    partitioned on ``cols`` with frozen slice ids. Factored out so plan
-    tests can assert the RangePartitioning shape that the eager
-    localCheckpoint otherwise hides behind an ExistingRDD scan."""
-    ranged = df.repartitionByRange(num_parts, *cols)
-    return ranged.withColumn("_pid", F.spark_partition_id())
 
 # skew_safe="auto" routes to the two-phase twins above this estimated
 # input size (Catalyst plan statistics, driver-side, no job). The twins
@@ -199,12 +184,9 @@ def asof_join_skewsafe(
     if num_parts is None:
         num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     u, lcols = _asof_union(left, right, by, ts, value_cols)
-    # eager localCheckpoint: slices computed once, lineage truncated —
-    # the three self-references below can never see divergent
+    # frozen: the three self-references below can never see divergent
     # repartitionByRange samples (see module note)
-    part = _sliced(
-        u, num_parts, F.col(by), F.col(ts), F.col("_tag")
-    ).localCheckpoint()
+    part = frozen_slices(u, num_parts, F.col(by), F.col(ts), F.col("_tag"))
 
     # slice-local running last (hot key split across many tasks)
     w_local = (
@@ -328,9 +310,8 @@ def sessionize_skewsafe(
         num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     gap_us = gap_minutes * 60 * 1_000_000
     t_us = F.unix_micros(F.col(ts).cast("timestamp"))
-    # eager localCheckpoint: slices computed once, lineage truncated
-    # (see module note)
-    part = _sliced(events, num_parts, F.col(by), F.col(ts)).localCheckpoint()
+    # frozen slices (see module note)
+    part = frozen_slices(events, num_parts, F.col(by), F.col(ts))
 
     w_loc = Window.partitionBy("_pid", by).orderBy(ts)
     flagged = part.withColumn("_tus", t_us).withColumn(

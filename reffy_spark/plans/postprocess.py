@@ -1027,9 +1027,6 @@ def _idl_extended(idlparsed_df: DataFrame, key: str) -> DataFrame:
     )
 
 
-_closure_caches: list = []
-
-
 def idlnames_fragments(
     idlparsed_df: DataFrame,
     titles: DataFrame | None = None,
@@ -1149,33 +1146,18 @@ def idlnames_fragments(
         .distinct()
     )
     # doubling transitive closure: after k rounds, paths up to 2^k hops.
-    # Each round PERSISTS: closure_k references closure_{k-1} three
-    # times (union + both join sides), so an unmaterialized loop builds
-    # a ~3^k-times-expanded plan tree that re-embeds the upstream
-    # idlparsed mapInPandas stage in every copy — optimizer blow-up plus
-    # dozens of duplicate broadcast builds, which is what pushed long
-    # shared sessions into storage-eviction stalls. The persisted edge
-    # table is (name, dep) pairs — tiny at any corpus scale. The cache
-    # slots are swept on the next idlnames_fragments call.
-    from pyspark.storagelevel import StorageLevel
-
-    global _closure_caches
-    for df_cached in _closure_caches:
-        try:
-            df_cached.unpersist(blocking=False)
-        except Exception:
-            pass
-    _closure_caches = []
-    closure = closure.persist(StorageLevel.MEMORY_AND_DISK)
-    _closure_caches.append(closure)
+    # Each round is FROZEN (eager localCheckpoint): closure_k references
+    # closure_{k-1} three times (union + both join sides), so an
+    # unmaterialized loop builds a ~3^k-times-expanded plan tree that
+    # re-embeds the upstream idlparsed mapInPandas stage in every copy.
+    # The checkpoint truncates that lineage, and its blocks — (name, dep)
+    # pairs, tiny at any corpus scale — belong to the returned plan.
+    closure = closure.localCheckpoint()
     for _ in range(closure_rounds):
         hop = closure.alias("a").join(
             closure.alias("b"), F.col("a.dep") == F.col("b.name")
         ).select(F.col("a.name").alias("name"), F.col("b.dep").alias("dep"))
-        closure = closure.unionByName(hop).distinct().persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        _closure_caches.append(closure)
+        closure = closure.unionByName(hop).distinct().localCheckpoint()
     closure = closure.filter(F.col("name") != F.col("dep"))  # cycle self-edges
     deps = closure.groupBy("name").agg(
         F.sort_array(F.collect_set("dep")).alias("deps")

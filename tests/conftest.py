@@ -24,22 +24,7 @@ _RECYCLE_EVERY = int(os.environ.get("SPARK_GRAFT_TEST_RECYCLE_MODULES", "6"))
 _state = {"spark": None, "modules_served": 0}
 
 
-def clear_session_caches() -> None:
-    """Drop driver-side cache globals that hold DataFrames of a session
-    being retired (stale handles would poison the next session)."""
-    from reffy_spark.operators import corpus_quality as CQ
-    from reffy_spark.operators import frontier as FR
-    from reffy_spark.operators import linkgraph as LG
-    from reffy_spark.plans import postprocess as PP
-
-    FR._prev_rank_cache = None
-    CQ._prev_pack_cache = None
-    LG._pr_caches = []
-    PP._closure_caches = []
-
-
 def recycle_spark():
-    clear_session_caches()
     if _state["spark"] is not None:
         try:
             _state["spark"].stop()

@@ -609,24 +609,110 @@ def test_results_column_order_is_one_shape(spark, ts, final, fb):
     }
 
 
-def test_release_frees_rank_cache(spark, corpus):
-    # an unbounded politeness window takes the range_prefix_sum path,
-    # whose persisted range slice release() must free
-    from reffy_spark.operators import frontier as FR
+def test_pending_operator_results_survive_later_calls(spark, corpus):
+    # Every operator that slices or loops over its input freezes that
+    # working set inside the call (eager localCheckpoint), so a returned,
+    # not yet evaluated result reads its own blocks: later calls of the
+    # same operators and a crawl cannot evict them. With exchange reuse
+    # off, a re-run range exchange would slice the rows afresh.
+    import re
 
-    pages, seeds, robots = corpus
-    eng = CrawlEngine(
-        spark, pages, robots, modules=["links"], use_bloom=False,
-        collect_metrics=False, discover=False, round_ms=1_000_000_000,
-    )
-    FR.release_rank_cache()
-    eng.crawl(seeds, max_rounds=1).results.count()
-    held = FR._prev_rank_cache
-    assert held is not None
-    eng.release()
-    level = held.storageLevel
-    assert not level.useMemory and not level.useDisk
-    assert FR._prev_rank_cache is None
+    from reffy_spark.operators import frontier as FR
+    from reffy_spark.operators.corpus_quality import pack_sequences
+    from reffy_spark.operators.linkgraph import apportion_budget, pagerank
+    from reffy_spark.plans import postprocess as PP
+
+    def rank_input(n):
+        pending = FR.to_frontier(
+            spark.range(0, n).selectExpr(
+                "concat('https://h', id % 3, '.test/p', id) AS url",
+                "cast(id % 5 as double) AS p",
+                "cast(id % 4 as int) AS d",
+            ),
+            depth_col=F.col("d"),
+            priority_col=F.col("p"),
+        )
+        robots = spark.createDataFrame(
+            [(f"h{k}.test", "/", True, 1) for k in range(3)],
+            "host string, path_prefix string, allow boolean, crawl_delay_ms int",
+        )
+        return pending, robots
+
+    def idl(names):
+        text = "\n".join(
+            f"interface {a} : {b} {{ }};" for a, b in zip(names, names[1:])
+        )
+        return PP.idlparsed(
+            spark.createDataFrame([("https://i.test/", text)], "url string, idl string")
+        )
+
+    def edges(n):
+        return spark.createDataFrame(
+            [(f"u{i}", f"u{(i * 7 + 1) % n}") for i in range(n)]
+            + [(f"u{i}", "u0") for i in range(1, n, 3)],
+            "src string, dst string",
+        )
+
+    calls = {
+        "politeness_rank": lambda n: FR.politeness_rank(
+            *rank_input(n), round_ms=1_000_000_000, max_crawl_delay_ms=1
+        ),
+        "pack_sequences": lambda n: pack_sequences(
+            spark.range(0, n).select(
+                F.col("id").alias("doc_id"), (F.pmod("id", 17) + 1).alias("n")
+            ),
+            window=32,
+            count_col="n",
+            num_parts=7,
+        ),
+        "apportion_budget": lambda n: apportion_budget(
+            spark.createDataFrame(
+                [(f"h{i:03d}", (i * 37) % 101) for i in range(n)],
+                "host string, rank_fp long",
+            ),
+            10 * n + 3,
+        ),
+        "pagerank": lambda n: pagerank(edges(n)),
+        "idlnames_fragments": lambda n: PP.idlnames_fragments(
+            idl([f"I{i}" for i in range(n // 100 + 3)])
+        ),
+    }
+    # a column only the operator's frozen working set carries
+    marker = {
+        "politeness_rank": "_pid",
+        "pack_sequences": "_pid",
+        "apportion_budget": "_pid",
+        "pagerank": "out_degree",
+        "idlnames_fragments": "dep",
+    }
+    solo = {name: sorted(map(tuple, call(300).collect())) for name, call in calls.items()}
+
+    old = spark.conf.get("spark.sql.exchange.reuse", "true")
+    spark.conf.set("spark.sql.exchange.reuse", "false")
+    try:
+        pending = {name: call(300) for name, call in calls.items()}
+        for call in calls.values():
+            call(500).collect()
+        pages, seeds, robots = corpus
+        eng = CrawlEngine(
+            spark, pages, robots, modules=["links"], use_bloom=False,
+            collect_metrics=False, discover=False, round_ms=1_000_000_000,
+        )
+        assert eng.crawl(seeds, max_rounds=1).results.count() > 0
+        eng.release()
+        unfrozen, differ = [], []
+        for name, df in pending.items():
+            # the frozen working set is a checkpoint scan that carries
+            # the operator's own column; no cached relation is left
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            frozen = rf"Scan ExistingRDD\[[^\]]*\b{marker[name]}#"
+            if not re.search(frozen, plan) or "InMemory" in plan:
+                unfrozen.append(name)
+            if sorted(map(tuple, df.collect())) != solo[name]:
+                differ.append(name)
+        assert (unfrozen, differ) == ([], [])
+    finally:
+        spark.conf.set("spark.sql.exchange.reuse", old)
 
 
 def test_empty_robots_runs_no_per_round_aggregate(spark, corpus):
@@ -651,8 +737,8 @@ def test_empty_robots_runs_no_per_round_aggregate(spark, corpus):
 
 def test_seed_index_two_phase_on_unknown_size(spark, corpus):
     # a seed list with no size estimate takes range_prefix_sum: dense
-    # distinct indices in url order, with exchange reuse off, and the
-    # range slice is released with the engine's working sets
+    # distinct indices in url order, with exchange reuse off; the range
+    # slice is frozen inside the call, not left in the working sets
     from pyspark.sql import Window
 
     from reffy_spark.plan_stats import estimated_bytes
@@ -694,15 +780,8 @@ def test_seed_index_two_phase_on_unknown_size(spark, corpus):
         for r in uniq.select("url", (F.row_number().over(w) - 1).alias("i")).collect()
     }
     assert got_uniq == want
-
-    slices = list(eng._working_sets)
-    assert len(slices) == 2
-    assert all(s.storageLevel.useMemory for s in slices)
-    eng.release()
     assert eng._working_sets == []
-    for s in slices:
-        level = s.storageLevel
-        assert not level.useMemory and not level.useDisk
+    eng.release()
 
 
 def test_release_removes_round_state_dir(spark, corpus):

@@ -54,13 +54,8 @@ def _assert_same_crawl(label, res, sim):
         pytest.fail(f"{label}, seed {SEED}: URL-seen differs, first: {diff[:3]}")
 
 
-def test_random_web_crawl_matches_simulator(spark, tmp_path):
-    web = random_web(SEED)
-    assert len(web.pages) >= 300
-    sim = simulate_crawl(
-        web.seed_urls, web.pages, web.robots,
-        round_ms=web.round_ms, max_rounds=MAX_ROUNDS,
-    )
+def _frames(spark, web):
+    """(pages, robots, seeds) DataFrames of a random web."""
     pages = spark.createDataFrame(
         [(p["url"], p["html"], p["warc_ts"]) for p in web.pages],
         "url string, html binary, warc_ts timestamp",
@@ -70,6 +65,17 @@ def test_random_web_crawl_matches_simulator(spark, tmp_path):
         "host string, path_prefix string, allow boolean, crawl_delay_ms int",
     )
     seeds = spark.createDataFrame([(u,) for u in web.seed_urls], "url string")
+    return pages, robots, seeds
+
+
+def test_random_web_crawl_matches_simulator(spark, tmp_path):
+    web = random_web(SEED)
+    assert len(web.pages) >= 300
+    sim = simulate_crawl(
+        web.seed_urls, web.pages, web.robots,
+        round_ms=web.round_ms, max_rounds=MAX_ROUNDS,
+    )
+    pages, robots, seeds = _frames(spark, web)
 
     def engine(checkpoint_dir=None, use_bloom=False):
         return CrawlEngine(
@@ -92,3 +98,44 @@ def test_random_web_crawl_matches_simulator(spark, tmp_path):
         _assert_same_crawl(
             f"resumed after round {k}", engine(str(part)).resume(MAX_ROUNDS), sim
         )
+
+
+def test_two_engines_interleaved_match_solo(spark):
+    # Two engines on different webs share one session: A crawls, B
+    # crawls, then A's lazy results are consumed. Pure replay keeps the
+    # working sets alive until that action, and the unbounded round_ms
+    # sends the rank through its range slices. The multi-executor commit
+    # path is forced so the batch stays a lazy persisted working set
+    # that reads those slices. Exchange reuse is off, so a slice that B
+    # evicted would be re-sliced, not reused.
+    def crawl(web):
+        pages, robots, seeds = _frames(spark, web)
+        eng = CrawlEngine(
+            spark, pages, robots, round_ms=1_000_000_000, use_bloom=False,
+            collect_metrics=False, discover=False,
+        )
+        eng.reliable_state = True
+        return eng, eng.crawl(seeds, max_rounds=1).results
+
+    def rows(results):
+        return sorted(map(tuple, results.collect()), key=repr)
+
+    webs = [random_web(SEED), random_web(SEED + 1)]
+    solo = []
+    for web in webs:
+        eng, results = crawl(web)
+        solo.append(rows(results))
+        eng.release()
+    assert solo[0] != solo[1]
+
+    old = spark.conf.get("spark.sql.exchange.reuse", "true")
+    spark.conf.set("spark.sql.exchange.reuse", "false")
+    crawls = []
+    try:
+        for web in webs:
+            crawls.append(crawl(web))
+        assert [rows(results) for _, results in crawls] == solo
+    finally:
+        spark.conf.set("spark.sql.exchange.reuse", old)
+        for eng, _ in crawls:
+            eng.release()

@@ -36,11 +36,8 @@ def _bounded_storage(spark):
     fixtures elsewhere hold DataFrames of the session they saw.)"""
     import gc
 
-    from tests.conftest import clear_session_caches
-
     _counter["n"] += 1
     if _counter["n"] % _PURGE_EVERY == 0:
-        clear_session_caches()
         spark.catalog.clearCache()
         gc.collect()
         try:

@@ -177,7 +177,14 @@ def test_politeness_rank_unbounded_is_two_phase(spark):
         pending, robots, round_ms=1_000_000_000, max_crawl_delay_ms=1
     )
     plan = plan_of(out)
-    assert "RangePartitioning" in plan or "rangepartitioning" in plan.lower()
+    # the range slices are frozen at call time, so the range exchange
+    # lives in the checkpoint job: assert it on the unfrozen slice
+    # fragment and the frozen scan in the result
+    pre = FR._sliced(
+        pending, 8, "host_group", F.col("priority").desc(), "depth", "url_canon"
+    )
+    assert "rangepartitioning" in plan_of(pre).lower()
+    assert re.search(r"Scan ExistingRDD\[[^\]]*_pid#", plan)
     # the only admissible host_group-led window spec is the offset window
     # over the tiny (group, pid) counts table — ordered by _pid; a spec
     # ordered by priority DESC would be the old whole-group sort
@@ -263,9 +270,9 @@ def test_idlnames_closure_no_nested_loop(spark):
 
 def test_politeness_rank_unbounded_survives_no_exchange_reuse(spark):
     # the two-phase rank must NOT depend on Catalyst's ReuseExchange
-    # firing: _pid is baked into a cached ranged frame, so the offsets
-    # branch and the rank branch read identical (row, _pid) pairs even
-    # when exchange reuse is disabled outright
+    # firing: _pid is baked into range slices frozen at call time, so
+    # the offsets branch and the rank branch read identical (row, _pid)
+    # pairs even when exchange reuse is disabled outright
     from pyspark.sql import Window
 
     from reffy_spark.operators import frontier as FR

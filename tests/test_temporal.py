@@ -110,6 +110,7 @@ def test_asof_skewsafe_plan_bounded_sorts(spark):
 
     from reffy_spark.operators.temporal import asof_join_skewsafe
 
+    from reffy_spark.operators import frontier as FR
     from reffy_spark.operators import temporal as T
 
     left, right = _skewed_asof_world(spark)
@@ -119,7 +120,7 @@ def test_asof_skewsafe_plan_bounded_sorts(spark):
     # exchange lives in the checkpoint job; assert it on the
     # pre-checkpoint fragment and the frozen scan in the result
     u, _ = T._asof_union(left, right, "user_id", "ts", ("value",))
-    pre = T._sliced(u, 8, "user_id", "ts", "_tag")
+    pre = FR._sliced(u, 8, "user_id", "ts", "_tag")
     pre_plan = pre._jdf.queryExecution().executedPlan().toString().lower()
     assert "rangepartitioning" in pre_plan
     assert "ExistingRDD" in plan
@@ -203,12 +204,12 @@ def test_sessionize_skewsafe_plan_bounded_sorts(spark):
         [(i, i % 3, _ts(i % 60)) for i in range(100)],
         "event_id long, user_id long, ts timestamp",
     )
-    from reffy_spark.operators import temporal as T
+    from reffy_spark.operators import frontier as FR
 
     out = sessionize_skewsafe(ev, num_parts=8)
     plan = out._jdf.queryExecution().executedPlan().toString()
     # range exchange lives in the eager checkpoint job (ADVICE r6)
-    pre = T._sliced(ev, 8, "user_id", "ts")
+    pre = FR._sliced(ev, 8, "user_id", "ts")
     assert (
         "rangepartitioning"
         in pre._jdf.queryExecution().executedPlan().toString().lower()
