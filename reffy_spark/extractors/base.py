@@ -207,16 +207,12 @@ def extract_all(
     cols = [url_col, html_col] + passthrough
     if last_modified_col and last_modified_col not in cols:
         cols.append(last_modified_col)
-    base = pages.select(*cols)
-    if not base.isStreaming:
-        # the DOM parse is the per-task cost of this stage: when the
-        # (pruned) input arrives in fewer splits than the cluster has
-        # slots (a one-file local scan, a broadcast fetch join over it),
-        # the whole Arrow stage serializes onto those tasks. Plan-time
-        # spread (no job; no-op at scale where scans are already split;
-        # round-robin moves only the pruned url+html rows once) —
-        # guide §1.2 / §2.5.
-        from reffy_spark.operators.dedupe import spread_small_input
+    # the DOM parse is the per-task cost of this stage: when the (pruned)
+    # input arrives in fewer splits than the cluster has slots (a one-file
+    # local scan, a broadcast fetch join over it), the whole Arrow stage
+    # serializes onto those tasks. Plan-time spread (no job; no-op at
+    # scale where scans are already split; round-robin moves only the
+    # pruned url+html rows once) — guide §1.2 / §2.5.
+    from reffy_spark.operators.dedupe import spread_small_input
 
-        base = spread_small_input(base)
-    return base.mapInPandas(run, schema)
+    return spread_small_input(pages.select(*cols)).mapInPandas(run, schema)

@@ -158,14 +158,6 @@ def fingerprint_from_tokens(toks: Column) -> Column:
     )
 
 
-def fingerprint_col(text: Column) -> Column:
-    """Order-sensitive rolling-hash document fingerprint.
-
-    acc = (acc * 131 + code(token)) mod 1e9+7, over whitespace tokens.
-    """
-    return fingerprint_from_tokens(tokens_col(text))
-
-
 # ---------------------------------------------------------------------------
 # Reference scalar kernels F17 / F18
 # ---------------------------------------------------------------------------

@@ -142,24 +142,6 @@ def has_shingles_filter(docs: DataFrame, text_col: str, n: int) -> DataFrame:
     return docs.filter(F.size(tokens_col(F.col(text_col))) >= n)
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 16,
-    n: int = 3,
-    hash_mode: str = "portable",
-) -> DataFrame:
-    """doc_id + mh0..mh{k-1}; docs with fewer than n tokens are dropped
-    (no shingles → no signature). Shingles are materialized once into a
-    column so the k permutations share the work (manual CSE — Catalyst
-    does not eliminate common subexpressions across lambda functions)."""
-    sh_df = spread_small_input(has_shingles_filter(docs, text_col, n)).select(
-        F.col(id_col).alias("doc_id"), shingles_col(F.col(text_col), n).alias("sh")
-    )
-    return sh_df.select("doc_id", *minhash_from_shingles(F.col("sh"), k, hash_mode))
-
-
 def lsh_candidate_pairs(
     sigs: DataFrame,
     bands: int = 4,

@@ -157,19 +157,6 @@ def pagerank(
     )
 
 
-def frontier_priority(
-    ranked: DataFrame, frontier: DataFrame, url_col: str = "url_canon"
-) -> DataFrame:
-    """Annotate a frontier with the link-graph rank; unknown URLs (never
-    seen as a link target) get rank 0 — fetched last within their host
-    budget. Pure left join + coalesce: composes with the politeness rank
-    (operators/frontier.py) as a secondary sort key."""
-    r = ranked.select(F.col("url").alias(url_col), "rank_fp")
-    return frontier.join(r, url_col, "left").withColumn(
-        "rank_fp", F.coalesce(F.col("rank_fp"), F.lit(0)).cast("long")
-    )
-
-
 def edges_to_host_graph(edges: DataFrame) -> DataFrame:
     """Collapse a page-level edge list to the distinct host graph —
     the crawl scheduler's domain-authority input (host-level PageRank

@@ -112,24 +112,18 @@ def pairwise_topk_join(
 # ---------------------------------------------------------------------------
 
 
-def _plane_component(p: int, i: int) -> Column:
+def _plane_component(p: int, i: int) -> float:
     """Deterministic pseudo-random plane component in [-1, 1): derived
     from md5 of (plane, index) — identical across engines and runs.
 
-    Emitted as a plain literal computed by the Python twin (bit-identical
+    Computed in Python and emitted as a plain literal (bit-identical
     doubles — same md5-derived integer, same IEEE divide/subtract, which
     is exactly what Catalyst's ConstantFolding produced from the old
-    expression form): building the folded-anyway md5 chain through py4j
-    cost ~6 driver round-trips per component — ~2,300 per 6-plane×64-dim
-    bucket expression, measured 3-4 s of pure DataFrame CONSTRUCTION
-    time per ANN query (r8; guide §1.1 — the time was driver-side, not
-    in any Spark job)."""
-    return F.lit(_plane_component_py(p, i))
-
-
-def _plane_component_py(p: int, i: int) -> float:
-    """Python twin of ``_plane_component`` — bit-identical doubles (same
-    md5-derived integer, same IEEE divide/subtract)."""
+    Column expression form): building the folded-anyway md5 chain
+    through py4j cost ~6 driver round-trips per component — ~2,300 per
+    6-plane×64-dim bucket expression, measured 3-4 s of pure DataFrame
+    CONSTRUCTION time per ANN query (r8; guide §1.1 — the time was
+    driver-side, not in any Spark job)."""
     import hashlib
 
     h = int(hashlib.md5(f"plane-{p}-{i}".encode()).hexdigest()[:15], 16)
@@ -145,7 +139,7 @@ def lsh_bucket_py(vec, n_planes: int = 8) -> int:
     for p in range(n_planes):
         d = 0.0
         for i, x in enumerate(vec):
-            d += float(x) * _plane_component_py(p, i)
+            d += float(x) * _plane_component(p, i)
         if d >= 0:
             bucket |= 1 << p
     return bucket
@@ -174,12 +168,12 @@ def probe_buckets(query_vec, n_planes: int = 8, hamming: int = 0) -> list[int]:
 def lsh_bucket_col(vec: Column, dim: int, n_planes: int = 8) -> Column:
     """Sign-concatenation bucket id over n deterministic hyperplanes.
 
-    Each plane is ONE array literal (components precomputed by the
-    bit-identical Python twin — see ``_plane_component``), not dim
-    py4j-built expressions: plan-construction cost, not plan semantics."""
+    Each plane is ONE array literal (components precomputed in Python —
+    see ``_plane_component``), not dim py4j-built expressions:
+    plan-construction cost, not plan semantics."""
     bucket = F.lit(0).cast("long")
     for p in range(n_planes):
-        plane = F.lit([_plane_component_py(p, i) for i in range(dim)])
+        plane = F.lit([_plane_component(p, i) for i in range(dim)])
         d = dot_col(vec, plane)
         bucket = bucket + F.when(d >= 0, F.lit(1 << p)).otherwise(F.lit(0))
     return bucket

@@ -11,7 +11,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from reffy_spark.functions.text import (
-    fingerprint_col,
     quality_score_col,
     stopword_ratio_col,
     token_count_col,

@@ -395,7 +395,7 @@ def cssmerge_crawl(spark, results: list[dict]) -> dict:
     # one pandas group per category via applyInPandas: scope merge,
     # descriptor attach and the featureId sort all run where the data
     # is; only the five finished category JSON strings cross to the
-    # driver (writers can skip even that — write_cssmerge_report).
+    # driver.
     report_df = _cssmerge_report_df(consolidated_df, merged_descs, has_desc_key)
     out = {c: [] for c in _REPORT_CATEGORIES}
     for r in report_df.collect():
@@ -455,12 +455,3 @@ def _cssmerge_report_df(
     return consolidated_df.groupBy("category").applyInPandas(
         assemble, "category string, report string"
     )
-
-
-def write_cssmerge_report(report_df, out_dir: str):
-    """Executor-side per-category JSON emission — the scale path writes
-    ``{out_dir}/{category}.json`` without any report bytes crossing the
-    driver. Returns (category, path); evaluate to write."""
-    from reffy_spark.plans.report_io import write_json_reports
-
-    return write_json_reports(report_df, out_dir, "category")

@@ -2,10 +2,7 @@
 src/lib/markdown-report.js:1-360 (tested by test/markdown-report.js).
 
 ``generate_spec_report`` is the per-spec kernel (pure Python over one
-crawl-result dict — the reference runs it driver-side per spec too);
-``spec_reports`` lifts it over a crawl results DataFrame as one
-Arrow-batched pass, so report generation for 10^7 specs is a map, not a
-driver loop.
+crawl-result dict — the reference runs it driver-side per spec too).
 """
 
 from __future__ import annotations
@@ -13,7 +10,6 @@ from __future__ import annotations
 import json
 from urllib.parse import quote
 
-from pyspark.sql import DataFrame
 
 # reffy.json module registry (label, property, metadata flag) — the
 # summary/details order contract (src/browserlib/reffy.json)
@@ -347,38 +343,3 @@ def generate_spec_report(spec_result: dict) -> str:
         report.append("")
         report.extend(details)
     return "\n".join(report)
-
-
-def spec_reports(
-    results: DataFrame, url_col: str = "url", crawled_col: str | None = None
-) -> DataFrame:
-    """Crawl-wide report table: (url, report) from a results DataFrame
-    whose module columns hold the extract JSON strings that
-    ``extract_all`` produces. One Arrow-batched map — no driver loop."""
-    import pandas as pd
-
-    module_props = {prop for _l, prop, _m in REFFY_MODULES}
-    cols = [c for c in results.columns if c in module_props]
-    sel = [url_col, *cols] + ([crawled_col] if crawled_col else [])
-
-    def run(batches):
-        for b in batches:
-            out = []
-            for _, row in b.iterrows():
-                spec: dict = {"url": row[url_col]}
-                if crawled_col:
-                    spec["crawled"] = row[crawled_col]
-                for c in cols:
-                    raw = row[c]
-                    if raw is None:
-                        continue
-                    try:
-                        spec[c] = json.loads(raw)
-                    except (TypeError, ValueError):
-                        spec[c] = raw
-                out.append(
-                    {"url": spec["url"], "report": generate_spec_report(spec)}
-                )
-            yield pd.DataFrame(out, columns=["url", "report"])
-
-    return results.select(*sel).mapInPandas(run, "url string, report string")

@@ -1499,8 +1499,7 @@ def backrefs_crawl(spark, results: list[dict]) -> dict[str, list[dict]]:
     report_df = _backrefs_report_df(matched)
     # dict API for goldens/conformance: only the FINISHED per-spec JSON
     # strings cross to the driver (ADVICE/VERDICT r6: the grouped term
-    # table no longer does; writers use write_backrefs_reports and
-    # never collect)
+    # table no longer does)
     return {
         r["def_shortname"]: json.loads(r["report"])
         for r in report_df.collect()
@@ -1567,15 +1566,6 @@ def _backrefs_report_df(matched: DataFrame) -> DataFrame:
             ).alias("report")
         )
     )
-
-
-def write_backrefs_reports(report_df: DataFrame, out_dir: str) -> DataFrame:
-    """Executor-side per-spec JSON emission over the relational report
-    — the scale path: no report bytes ever reach the driver. Returns
-    (def_shortname, path); evaluate to write."""
-    from reffy_spark.plans.report_io import write_json_reports
-
-    return write_json_reports(report_df, out_dir, "def_shortname")
 
 
 def idlparsed_run(spec: dict, ast: bool = False) -> dict:

@@ -108,11 +108,7 @@ def algorithms_table(extracts: DataFrame, key: str = "url") -> DataFrame:
 
 CSS_PROPERTY_SCHEMA = (
     "struct<properties:array<struct<name:string, href:string, value:string, "
-    "newValues:string, initial:string, inherited:string, for:string>>, "
-    "atrules:array<struct<name:string, href:string, "
-    "descriptors:array<struct<name:string, href:string, value:string, for:string>>>>, "
-    "selectors:array<struct<name:string, href:string>>, "
-    "values:array<struct<name:string, href:string, type:string>>>"
+    "newValues:string, initial:string, inherited:string, for:string>>>"
 )
 
 
@@ -122,16 +118,3 @@ def css_properties_table(extracts: DataFrame, key: str = "url") -> DataFrame:
     return parsed.select(
         key, F.explode("c.properties").alias("p")
     ).select(key, "p.name", "p.href", "p.value", "p.newValues", "p.initial", "p.inherited")
-
-
-def css_atrules_table(extracts: DataFrame, key: str = "url") -> DataFrame:
-    parsed = extracts.select(key, F.from_json("css", CSS_PROPERTY_SCHEMA).alias("c"))
-    return parsed.select(key, F.explode("c.atrules").alias("a")).select(
-        key, "a.name", "a.href", F.explode_outer("a.descriptors").alias("d")
-    ).select(
-        key,
-        F.col("name").alias("atrule"),
-        "href",
-        F.col("d.name").alias("descriptor"),
-        F.col("d.value").alias("descriptor_value"),
-    )

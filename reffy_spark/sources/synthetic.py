@@ -1,4 +1,4 @@
-"""Deterministic synthetic crawl corpus (pages / seeds / robots).
+"""Deterministic synthetic crawl corpus (pages and robots rules).
 
 Plays the role of reffy's mock server + fixture specs
 (/root/reference/src/lib/mock-server.js:33-202, test/crawl.js:17-21):
@@ -10,7 +10,9 @@ the BSP crawler can be replayed byte-for-byte.
 Everything is seeded arithmetic (NO wall-clock, NO randomness source
 beyond the page index), per the repo's seed=42 determinism discipline.
 Generation is distributed: ``spark.range(n)`` → ``mapInPandas`` so the
-bench can build multi-GB corpora without driver-side loops.
+bench can build multi-GB corpora without driver-side loops. The seed
+list and robots frames that tests crawl it with are in
+``reffy_spark.testing.fixtures``.
 """
 
 from __future__ import annotations
@@ -148,7 +150,6 @@ def robots_rows() -> list[dict]:
 PAGES_SCHEMA = (
     "page_id long, url string, warc_ts timestamp, html binary, text string, lang string"
 )
-SEEDS_SCHEMA = "seed_idx int, url string, shortname string, standing string"
 
 
 def _pages_batch(ids: pd.Series, n_pages: int) -> pd.DataFrame:
@@ -178,22 +179,4 @@ def gen_pages(spark: SparkSession, n_pages: int, partitions: int = 32) -> DataFr
     return (
         spark.range(0, n_pages, 1, partitions)
         .mapInPandas(gen, PAGES_SCHEMA)
-    )
-
-
-def gen_seeds(spark: SparkSession, n_pages: int, n_seeds: int) -> DataFrame:
-    """Seed list = every k-th page, in deterministic seed order."""
-    step = max(1, n_pages // max(n_seeds, 1))
-    rows = []
-    for idx, page in enumerate(range(0, n_pages, step)):
-        if idx >= n_seeds:
-            break
-        rows.append((idx, url_of_page(page), f"spec-{page}", "good"))
-    return spark.createDataFrame(rows, SEEDS_SCHEMA)
-
-
-def gen_robots(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        pd.DataFrame(robots_rows()),
-        "host string, path_prefix string, allow boolean, crawl_delay_ms int",
     )

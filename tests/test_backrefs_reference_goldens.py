@@ -217,69 +217,3 @@ def test_multipage_links_match_single_page_hrefs(spark):
     out = backrefs_crawl(spark, results)
     assert len(out["html"]) == 1
     assert out["html"][0]["referencedBy"][0]["shortname"] == "dom"
-
-
-def test_report_path_is_collect_free_and_writes_per_spec(spark, tmp_path, monkeypatch):
-    """VERDICT r6 #7: the report path (relational assembly + mapInPandas
-    writer) must never collect to the driver — files are emitted
-    executor-side, one JSON per defining spec."""
-    import json
-
-    from pyspark.sql import DataFrame
-
-    from reffy_spark.plans import postprocess as PP
-
-    results = [
-        make_spec(
-            "streams",
-            "Streams Standard",
-            "https://streams.spec.whatwg.org/",
-            dfns=[
-                make_dfn(
-                    "readablestream",
-                    "https://streams.spec.whatwg.org/#readablestream",
-                    "ReadableStream",
-                    type="interface",
-                )
-            ],
-        ),
-        make_spec(
-            "fetch",
-            "Fetch Standard",
-            "https://fetch.spec.whatwg.org/",
-            links=make_links(["https://streams.spec.whatwg.org/#readablestream"]),
-        ),
-    ]
-    want = backrefs_crawl(spark, results)  # dict API (collects, allowed)
-
-    def poisoned(self, *a, **k):
-        raise AssertionError("collect() in the report path")
-
-    monkeypatch.setattr(DataFrame, "collect", poisoned)
-    out_dir = str(tmp_path / "backrefs")
-    # capture the relational report frame that backrefs_crawl builds
-    # (its FINAL dict-API collect is poisoned and expected to trip),
-    # then write it executor-side with collect still poisoned
-    import reffy_spark.plans.postprocess as mod
-
-    captured = {}
-    orig_builder = mod._backrefs_report_df
-
-    def capture(matched):
-        df = orig_builder(matched)
-        captured["df"] = df
-        return df
-
-    monkeypatch.setattr(mod, "_backrefs_report_df", capture)
-    try:
-        backrefs_crawl(spark, results)
-    except AssertionError:
-        pass  # the dict API's final collect is poisoned — expected
-    report_df = captured["df"]
-
-    written = PP.write_backrefs_reports(report_df, out_dir)
-    n = written.count()  # executes the write executor-side, no collect
-    assert n == len(want)
-    for shortname, terms in want.items():
-        with open(f"{out_dir}/{shortname}.json", encoding="utf-8") as fh:
-            assert json.load(fh) == terms

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from reffy_spark.operators.crawler import CrawlEngine
 from reffy_spark.sources import synthetic as syn
+from reffy_spark.testing.fixtures import gen_robots, gen_seeds
 from reffy_spark.testing.simulator import simulate_crawl
 
 N_PAGES = 60
@@ -25,8 +26,8 @@ MAX_ROUNDS = 4
 @pytest.fixture(scope="module")
 def corpus(spark):
     pages = syn.gen_pages(spark, N_PAGES, partitions=8).cache()
-    seeds = syn.gen_seeds(spark, N_PAGES, N_SEEDS).cache()
-    robots = syn.gen_robots(spark).cache()
+    seeds = gen_seeds(spark, N_PAGES, N_SEEDS).cache()
+    robots = gen_robots(spark).cache()
     return pages, seeds, robots
 
 

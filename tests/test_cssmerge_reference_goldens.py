@@ -33,52 +33,3 @@ def test_reference_cssmerge_case(spark, case):
     if case.get("category"):
         got = got[case["category"]]
     assert got == case["expected"]
-
-
-def test_report_path_is_collect_free_and_writes_per_category(
-    spark, tmp_path, monkeypatch
-):
-    """VERDICT r6 #7: the cssmerge report path (applyInPandas per-category
-    assembly + mapInPandas writer) never collects to the driver — JSON
-    files are emitted executor-side, one per category."""
-    from pyspark.sql import DataFrame
-
-    import reffy_spark.plans.cssmerge as mod
-
-    case = next(
-        c
-        for c in CASES
-        if c["input"] and any(cssmerge_crawl(spark, c["input"]).values())
-    )
-    want = cssmerge_crawl(spark, case["input"])  # dict API (collects, allowed)
-
-    captured = {}
-    orig_builder = mod._cssmerge_report_df
-
-    def capture(consolidated_df, merged_descs, has_desc_key):
-        df = orig_builder(consolidated_df, merged_descs, has_desc_key)
-        captured["df"] = df
-        return df
-
-    monkeypatch.setattr(mod, "_cssmerge_report_df", capture)
-
-    def poisoned(self, *a, **k):
-        raise AssertionError("collect() in the report path")
-
-    monkeypatch.setattr(DataFrame, "collect", poisoned)
-    try:
-        cssmerge_crawl(spark, case["input"])
-    except AssertionError:
-        pass  # the dict API's final collect is poisoned — expected
-    report_df = captured["df"]
-
-    out_dir = str(tmp_path / "css")
-    written = mod.write_cssmerge_report(report_df, out_dir)
-    n = written.count()  # executes executor-side, no collect
-    assert n >= 1
-    import os as _os
-
-    for fname in _os.listdir(out_dir):
-        cat = fname[: -len(".json")]
-        with open(_os.path.join(out_dir, fname), encoding="utf-8") as fh:
-            assert json.load(fh) == want[cat]

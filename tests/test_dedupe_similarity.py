@@ -1,10 +1,9 @@
-"""Training-data ops: dedup, similarity, text analysis, multimodal."""
+"""Training-data ops: dedup, similarity, text analysis."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from reffy_spark.operators import dedupe as D
-from reffy_spark.operators import multimodal as MM
 from reffy_spark.operators import similarity as S
 from reffy_spark.operators import text_analysis as TA
 
@@ -101,32 +100,6 @@ def test_quality_filter_monotonic(docs):
     n_all = docs.count()
     n_q = TA.quality_filter(docs, 0.5).count()
     assert 0 < n_q <= n_all
-
-
-def test_multimodal_roundtrip(spark):
-    df = spark.range(0, 8).withColumnRenamed("id", "doc_id")
-    imgs = MM.attach_fake_images(df)
-    rows = imgs.collect()
-    assert all(bytes(r["image"])[:4] == b"FIMG" for r in rows)
-    feats = MM.image_features(imgs).collect()
-    assert len(feats) == 8
-    for r in feats:
-        assert 0 <= r["mean_r"] <= 255 and len(r["embedding"]) >= 3
-    resized = MM.resize_images(imgs, 4, 4).collect()
-    assert len(resized) == 8
-    import struct
-
-    for r in resized:
-        w, h, c = struct.unpack("<HHB", bytes(r["image"])[4:9])
-        assert (w, h, c) == (4, 4, 3)
-
-
-def test_multimodal_unknown_codec_rejected(spark):
-    # codec="real" now decodes PNG (tests/test_png_multimodal.py); an
-    # unknown codec name still fails fast at plan time
-    df = MM.attach_fake_images(spark.range(0, 1).withColumnRenamed("id", "doc_id"))
-    with pytest.raises(ValueError, match="unknown codec"):
-        MM.image_features(df, codec="webp")
 
 
 def test_ann_multiprobe_recovers_recall(spark, sf_dir):
@@ -437,7 +410,9 @@ def test_minhash_signature_values_match_md5_reference(spark):
 
     base = "the quick brown fox jumps over the lazy dog again and again today"
     df = spark.createDataFrame([(1, base)], "doc_id long, text string")
-    row = D.minhash_signatures(df).first()
+    row = df.select(
+        *D.minhash_from_shingles(D.shingles_col(F.col("text")), 16)
+    ).first()
 
     def h60(s: str) -> int:
         return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)

@@ -57,22 +57,6 @@ def test_edges_from_links_collapses_fragments(spark):
     assert [(r["src"], r["dst"]) for r in got] == [("u1", "t1")]
 
 
-def test_frontier_priority_left_join_zero_default(spark):
-    from reffy_spark.operators.linkgraph import frontier_priority, pagerank
-
-    edges = spark.createDataFrame([("A", "B")], ["src", "dst"])
-    ranked = pagerank(edges, n_iter=1)
-    frontier = spark.createDataFrame(
-        [("A", 0), ("unknown", 1)], ["url_canon", "depth"]
-    )
-    out = {
-        r["url_canon"]: r["rank_fp"]
-        for r in frontier_priority(ranked, frontier).collect()
-    }
-    assert out["A"] > 0
-    assert out["unknown"] == 0
-
-
 def test_pagerank_no_window(spark):
     """Contribution fold must be a partial-aggregable hash sum (hot dst
     keys — a page everyone links to — must not funnel into one task)."""

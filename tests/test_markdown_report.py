@@ -189,29 +189,3 @@ enum PresentationConnectionState { "connecting", "connected", "closed", "termina
 - dictionary `PresentationConnectionAvailableEventInit` ([xref search](https://respec.org/xref/?term=PresentationConnectionAvailableEventInit&types=_IDL_))
 - enum `PresentationConnectionState` ([xref search](https://respec.org/xref/?term=PresentationConnectionState&types=_IDL_))
 </details>"""
-
-
-def test_spec_reports_dataframe(spark):
-    import json
-
-    from reffy_spark.plans.markdown_report import spec_reports
-
-    rows = [
-        (
-            "https://a.test/",
-            json.dumps([{"id": "x", "href": "https://a.test/#x", "level": 2,
-                         "title": "T"}]),
-            json.dumps(["https://a.test/#x"]),
-        ),
-        ("https://b.test/", json.dumps([]), json.dumps([])),
-    ]
-    df = spark.createDataFrame(rows, "url string, headings string, ids string")
-    out = {r["url"]: r["report"] for r in spec_reports(df).collect()}
-    assert "  - Headings: 1 found" in out["https://a.test/"]
-    assert "  - IDs: 1 found" in out["https://a.test/"]
-    # every module with an empty/absent extract lands in the No-line
-    assert (
-        "- No Algorithms, CDDL, CSS, Events, Headings, IDs, Links, "
-        "References, Terms, Web IDL definitions found"
-        in out["https://b.test/"]
-    )

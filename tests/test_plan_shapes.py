@@ -45,10 +45,12 @@ def test_url_canon_is_jvm_only(spark, sf_dir):
 
 
 def test_minhash_signatures_jvm_only(spark, sf_dir):
-    from reffy_spark.operators.dedupe import minhash_signatures
+    from reffy_spark.operators.dedupe import minhash_from_shingles, shingles_col
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    plan = plan_of(minhash_signatures(docs))
+    plan = plan_of(
+        docs.select("doc_id", *minhash_from_shingles(shingles_col(F.col("text"))))
+    )
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 

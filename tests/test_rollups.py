@@ -5,7 +5,7 @@ from pyspark.sql import functions as F
 
 from reffy_spark.extractors.base import extract_all
 from reffy_spark.plans import postprocess as PP
-from reffy_spark.plans.views import css_atrules_table, css_properties_table
+from reffy_spark.plans.views import css_properties_table
 
 
 def test_idlnames_rollup(spark):
@@ -55,8 +55,6 @@ def test_css_views(css_extracts):
     by_url = {(r["url"], r["name"]): r for r in props}
     assert by_url[("https://a.test/", "margin")]["value"] == "auto"
     assert by_url[("https://b.test/", "margin")]["newValues"] == "clever"
-    atr = css_atrules_table(css_extracts).collect()
-    assert [(r["atrule"], r["descriptor"]) for r in atr] == [("@page", "size")]
 
 
 def test_cssmerge_properties(css_extracts):

@@ -229,9 +229,10 @@ def test_validate_extracts_composes_with_crawl_results(spark):
     # crawl result the same way (util.js:1065-1140 in test harnesses)
     from reffy_spark.operators.crawler import CrawlEngine
     from reffy_spark.sources import synthetic as syn
+    from reffy_spark.testing.fixtures import gen_robots
 
     pages = syn.gen_pages(spark, 30, partitions=2)
-    robots = syn.gen_robots(spark)
+    robots = gen_robots(spark)
     res = CrawlEngine(
         spark, pages, robots, modules=["headings", "links", "dfns"],
         use_bloom=False, collect_metrics=False, discover=False,
