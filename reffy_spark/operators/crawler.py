@@ -445,6 +445,7 @@ class CrawlEngine:
     ) -> CrawlResult:
         all_results: list[DataFrame] = list(prior or [])
         metrics: list[RoundMetrics] = []
+        n_new = None
 
         for rnd in range(start_round, max_rounds + 1):
             t0 = time.monotonic()
@@ -458,8 +459,9 @@ class CrawlEngine:
             # the emptiness check only matters once discovery may have
             # drained the frontier; for the first round an empty seed
             # list just yields one cheap empty round — skipping the check
-            # saves a job over the freshly-built frontier
-            if rnd > start_round and frontier.isEmpty():
+            # saves a job over the freshly-built frontier. A previous
+            # round that found new URLs left them on the frontier.
+            if rnd > start_round and not n_new and frontier.isEmpty():
                 break
 
             # materialize the round's batch once: it feeds the fetch join,
@@ -716,25 +718,27 @@ class CrawlEngine:
                 frontier = self._materialize(frontier, "frontier", rnd)
 
             # ---- lineage metrics ----------------------------------------
-            # All counts come from already-materialized round state, each
-            # in ONE aggregation job (the round-1 version fanned out 5+
-            # extra jobs re-triggering count scans per metric).
+            # One aggregation over the materialized results: every batch
+            # row yields exactly one results row (extracted, reused or
+            # missed) with the batch row's url_canon, hence its
+            # host_group, so the results' groups are the batch's.
             if self.collect_metrics:
-                per_hg = {
-                    r["host_group"]: r["n"]
-                    for r in batch.groupBy("host_group")
-                    .agg(F.count("*").alias("n"))
+                per_group = (
+                    round_results.groupBy("host_group")
+                    .agg(
+                        F.count("*").alias("n"),
+                        F.sum((F.col("status") == "ok").cast("long")).alias("ok"),
+                    )
                     .collect()
-                }
-                status_row = round_results.agg(
-                    F.sum((F.col("status") == "ok").cast("long")).alias("ok"),
-                    F.sum((F.col("status") != "ok").cast("long")).alias("err"),
-                ).first()
+                )
+                per_hg = {r["host_group"]: r["n"] for r in per_group}
+                selected = sum(per_hg.values())
+                fetched = sum(r["ok"] for r in per_group)
                 m = RoundMetrics(
                     round=rnd,
-                    selected=sum(per_hg.values()),
-                    fetched=int(status_row["ok"] or 0),
-                    errors=int(status_row["err"] or 0),
+                    selected=selected,
+                    fetched=fetched,
+                    errors=selected - fetched,
                     discovered=cand.count() if cand is not None else 0,
                     new_urls=n_new if n_new is not None else 0,
                     per_host_group=per_hg,
@@ -765,7 +769,9 @@ class CrawlEngine:
         """Commit a state table for this round (checkpoint = snapshot).
 
         Writing + re-reading truncates lineage (the BSP round boundary)
-        and is the resume point. Without a checkpoint dir: reliable
+        and is the resume point. The re-read carries the written frame's
+        schema, so it runs no schema-inference job (a 1-task job per
+        table per round otherwise). Without a checkpoint dir: reliable
         (parquet, ephemeral dir) commits when running multi-executor —
         executor loss must not destroy round state — else localCheckpoint
         (same truncation, no persistence, no I/O).
@@ -784,7 +790,7 @@ class CrawlEngine:
         if self.checkpoint_dir and durable:
             path = os.path.join(self.checkpoint_dir, f"round={rnd}", name)
             df.write.mode("overwrite").parquet(path)
-            return self.spark.read.parquet(path)
+            return self.spark.read.schema(df.schema).parquet(path)
         if self.reliable_state or self.checkpoint_dir:
             # within-round working sets are cached, never checkpoint
             # files: a checkpointed crawl's resume contract reads only
@@ -794,7 +800,7 @@ class CrawlEngine:
             if durable:
                 path = os.path.join(self._ensure_state_dir(), f"round={rnd}", name)
                 df.write.mode("overwrite").parquet(path)
-                return self.spark.read.parquet(path)
+                return self.spark.read.schema(df.schema).parquet(path)
             from pyspark.storagelevel import StorageLevel
 
             df = df.persist(StorageLevel.MEMORY_AND_DISK)

@@ -113,15 +113,23 @@ def minhash_from_shingles(
 
 
 def spread_small_input(df: DataFrame) -> DataFrame:
-    """Round-robin-repartition a compute-heavy input whose scan produced
+    """Round-robin-repartition a compute-heavy input whose scan produces
     at most half as many partitions as the cluster has slots (a single small
-    parquet file at bench scale = ONE task doing all the md5 work). A
-    plan-time decision, no job: at 100 TB the scan already yields
-    thousands of splits and this is a no-op; the shuffle it adds at
-    small scale moves only the raw input rows once."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    if df.rdd.getNumPartitions() * 2 <= target:
+    parquet file at bench scale = ONE task doing all the md5 work). At
+    100 TB the scan already yields thousands of splits and this is a
+    no-op; the shuffle it adds at small scale moves only the raw input
+    rows once.
+
+    The decision runs no job: ``planned_partitions`` reads the count off
+    the physical plan (leaf scan splits, a loaded cache's blocks, a
+    shuffle). ``df.rdd.getNumPartitions()`` would execute the input's
+    shuffle and broadcast stages under AQE, as jobs outside any SQL
+    execution, while the consumer's plan is still being built."""
+    from reffy_spark.plan_stats import planned_partitions
+
+    target = df.sparkSession.sparkContext.defaultParallelism
+    n = planned_partitions(df)
+    if n is not None and n * 2 <= target:
         return df.repartition(target)
     return df
 

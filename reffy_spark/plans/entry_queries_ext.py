@@ -1928,6 +1928,7 @@ def q_politeness_permits_stream(spark, sf_dir):
     AvailableNow pass over a deterministic file source; the keyed-state
     cursor makes fetch_seq a per-group sequence ordered by
     (warc_ts, url_canon)."""
+    import shutil
     import tempfile
 
     from reffy_spark.streaming.politeness import run_permits_batch
@@ -1944,12 +1945,21 @@ def q_politeness_permits_stream(spark, sf_dir):
         ).alias("warc_ts"),
     )
     work = tempfile.mkdtemp(prefix="permits_q_")
-    src, out, chk = f"{work}/src", f"{work}/out", f"{work}/chk"
-    rows.coalesce(1).write.mode("overwrite").parquet(src)
-    run_permits_batch(spark, src, out, chk, budgets={"h0.test": 7}, default_budget=25)
-    return spark.read.parquet(out).select(
-        "url_canon", "host_group", "fetch_seq", "permitted_round"
-    )
+    try:
+        src, out, chk = f"{work}/src", f"{work}/out", f"{work}/chk"
+        rows.coalesce(1).write.mode("overwrite").parquet(src)
+        run_permits_batch(
+            spark, src, out, chk, budgets={"h0.test": 7}, default_budget=25
+        )
+        # the work directory goes with this call: freeze the output into
+        # checkpoint blocks before removing the files it was read from
+        return (
+            spark.read.parquet(out)
+            .select("url_canon", "host_group", "fetch_seq", "permitted_round")
+            .localCheckpoint()
+        )
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
 
 
 ORACLE_POLITENESS_PERMITS = """

@@ -99,6 +99,11 @@ def get_spark(
         # references; the default periodic GC (30 min) never fires
         # within a suite. 2 min keeps the storage pool bounded.
         .config("spark.cleaner.periodicGC.interval", "2min")
+        # Python workers fork from this daemon instead of the stock one:
+        # it keeps every task from re-reading pyspark.zip's directory
+        # (0.1-0.2 s per task, see reffy_spark/pyworker.py). The module
+        # is found through the PYTHONPATH exported above.
+        .config("spark.python.daemon.module", "reffy_spark.pyworker")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -87,18 +87,14 @@ def run_permits_batch(
     checkpoint_dir: str,
     budgets: dict[str, int] | None = None,
     default_budget: int = 10,
-    max_files_per_trigger: int | None = None,
 ) -> None:
     """AvailableNow runner: process all unseen files, then stop — the
     scheduled-incremental shape. The keyed cursors live in the
     checkpoint's state store, so a later invocation (new files) keeps
     numbering where this one stopped."""
-    reader = spark.readStream.schema(
+    stream = spark.readStream.schema(
         "url_canon string, host_group string, warc_ts timestamp"
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    ).parquet(source_dir)
     q = (
         politeness_permits_stream(stream, budgets, default_budget)
         .writeStream.format("parquet")

@@ -59,3 +59,18 @@ def test_stateful_politeness_permits_continue_across_runs(spark, tmp_path_factor
     assert [r["permitted_round"] for r in a2] == [2, 3, 3]
     # exactly-once: first-day rows were not re-emitted
     assert after.count() == 7 + 3
+
+
+def test_permits_query_leaves_no_work_directory(spark, sf_dir, tmp_path, monkeypatch):
+    # the permits query streams through a temporary work directory; the
+    # directory goes with the call and the returned rows outlive it
+    import tempfile
+
+    from reffy_spark.plans.entry_queries_ext import q_politeness_permits_stream
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    df = q_politeness_permits_stream(spark, sf_dir)
+    assert list(tmp_path.glob("permits_q_*")) == []
+    rows = df.collect()
+    assert rows and {r["host_group"] for r in rows} == {f"h{i}.test" for i in range(4)}
+    assert min(r["fetch_seq"] for r in rows) == 0
