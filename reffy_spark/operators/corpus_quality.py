@@ -96,9 +96,7 @@ _BULLETS = ["-", "*", "•"]
 # ---------------------------------------------------------------------------
 
 
-def repetition_profile(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def repetition_profile(docs: DataFrame) -> DataFrame:
     """Per-document repetition/quality signals (Gopher §A1.1 + C4 rules).
 
     Output columns:
@@ -115,7 +113,7 @@ def repetition_profile(
     from reffy_spark.operators.dedupe import spread_small_input
 
     docs = spread_small_input(docs)
-    t = F.col(text_col)
+    t = F.col("text")
     # two-level projection (r8): tokenize and line-split ONCE per row per
     # consuming branch — the single-select form re-ran lines_col for
     # every line-derived flag and tokens_col for every n-gram column
@@ -123,7 +121,7 @@ def repetition_profile(
     # eliminated; guide §1.2). Values are identical arithmetic over the
     # same intermediates.
     base = docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         t.alias("_text"),
         tokens_col(t).alias("_toks"),
         lines_col(t).alias("_lines"),
@@ -236,8 +234,6 @@ def repetition_profile(
 def decontaminate(
     docs: DataFrame,
     benchmark: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 5,
     threshold: float = 0.2,
 ) -> DataFrame:
@@ -251,20 +247,19 @@ def decontaminate(
     The benchmark gram table is broadcast (eval sets are tiny relative
     to a training corpus); the corpus side is explode + per-doc count.
     """
-    grams = lambda df, idc: df.select(  # noqa: E731
-        *( [F.col(idc).alias("doc_id")] if idc else [] ),
-        F.explode(F.array_distinct(ngrams_col(tokens_col(F.col(text_col)), n))).alias("gram"),
-    )
-    bgrams = grams(benchmark, None).distinct()
-    dgrams = grams(docs, id_col)
+    grams = F.explode(
+        F.array_distinct(ngrams_col(tokens_col(F.col("text")), n))
+    ).alias("gram")
+    bgrams = benchmark.select(grams).distinct()
+    dgrams = docs.select("doc_id", grams)
     overlap = (
         dgrams.join(F.broadcast(bgrams), "gram")
         .groupBy("doc_id")
         .agg(F.count("*").alias("n_overlap"))
     )
     base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.size(F.array_distinct(ngrams_col(tokens_col(F.col(text_col)), n)))
+        "doc_id",
+        F.size(F.array_distinct(ngrams_col(tokens_col(F.col("text")), n)))
         .cast("long")
         .alias("n_grams"),
     )
@@ -300,8 +295,6 @@ def stratified_sample(
     docs: DataFrame,
     rates_per_mille: dict[str, int],
     default_rate: int = 500,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Keep each document with a per-language rate, deterministically.
 
@@ -310,14 +303,14 @@ def stratified_sample(
     the DuckDB oracle reproduce the exact sample). Rates keyed on the
     predicted language (``lang_id_col``), ``default_rate`` otherwise.
     """
-    lang = lang_id_col(F.col(text_col))
+    lang = lang_id_col(F.col("text"))
     rate = F.lit(default_rate)
     for k, v in sorted(rates_per_mille.items()):
         rate = F.when(lang == k, F.lit(v)).otherwise(rate)
-    bucket = h60(F.concat(F.lit("sample#"), F.col(id_col).cast("string"))) % F.lit(1000)
+    bucket = h60(F.concat(F.lit("sample#"), F.col("doc_id").cast("string"))) % F.lit(1000)
     return (
         docs.select(
-            F.col(id_col).alias("doc_id"),
+            "doc_id",
             lang.alias("lang_pred"),
             bucket.cast("long").alias("sample_bucket"),
             rate.cast("long").alias("rate_per_mille"),
@@ -330,15 +323,12 @@ def stratified_sample(
 # Per-domain document caps
 # ---------------------------------------------------------------------------
 
+# domain_cap's stage-1 fan-out: each domain's rows split over this many
+# salts before the local top-cap
+_SALTS = 8
 
-def domain_cap(
-    docs: DataFrame,
-    cap: int = 10,
-    salts: int = 8,
-    id_col: str = "doc_id",
-    domain_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
+
+def domain_cap(docs: DataFrame, cap: int = 10) -> DataFrame:
     """Keep at most ``cap`` documents per domain, best-quality first
     (ties to the lowest id). The URL-level curation step of C4/
     RefinedWeb-style pipelines: without it one mega-host dominates the
@@ -348,19 +338,20 @@ def domain_cap(
     hot domain in one task — the same skew failure the politeness rank
     had (see ``frontier.politeness_rank``). Stage 1 takes a local
     top-``cap`` per (domain, salt) — bounded input per task regardless
-    of domain size; stage 2 ranks the ≤ salts·cap survivors per domain.
+    of domain size; stage 2 ranks the ≤ ``_SALTS``·cap survivors per
+    domain.
     Every global top-``cap`` row ranks ≤ cap within its own salt too, so
     the composition is exact, not approximate.
     """
     scored = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(domain_col).alias("domain"),
-        quality_score_col(F.col(text_col)).alias("quality"),
+        "doc_id",
+        F.col("source").alias("domain"),
+        quality_score_col(F.col("text")).alias("quality"),
     )
     order = [F.col("quality").desc(), F.col("doc_id")]
     w1 = Window.partitionBy("domain", "salt").orderBy(*order)
     pruned = (
-        scored.withColumn("salt", F.pmod(F.xxhash64("doc_id"), F.lit(salts)))
+        scored.withColumn("salt", F.pmod(F.xxhash64("doc_id"), F.lit(_SALTS)))
         .withColumn("r1", F.row_number().over(w1))
         .filter(F.col("r1") <= cap)
         .drop("salt", "r1")
@@ -373,12 +364,7 @@ def domain_cap(
     )
 
 
-def line_dedup(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    delim: str = "\n",
-) -> DataFrame:
+def line_dedup(docs: DataFrame) -> DataFrame:
     """Cross-document exact line deduplication, first-occurrence-wins —
     the corpus-wide pass of C4 (Raffel et al., 2020, arXiv:1910.10683
     §2.2 deduplicates spans across the dataset) and CCNet-style
@@ -407,8 +393,8 @@ def line_dedup(
     """
     lines = (
         docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.posexplode(F.split(F.col(text_col), delim)).alias("idx", "line"),
+            "doc_id",
+            F.posexplode(F.split(F.col("text"), "\n")).alias("idx", "line"),
         )
         .withColumn("line", F.trim("line"))
         .filter(F.col("line") != "")
@@ -428,7 +414,7 @@ def line_dedup(
                 F.array_sort(F.collect_list(F.struct("idx", "line"))),
                 lambda s: s["line"],
             ),
-            delim,
+            "\n",
         ).alias("text"),
         F.count("*").alias("n_kept"),
     )
@@ -446,13 +432,9 @@ def line_dedup(
 def pack_sequences(
     docs: DataFrame,
     window: int = 2048,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    count_col: str | None = None,
-    num_parts: int | None = None,
 ) -> DataFrame:
     """Token-stream packing: concatenate every document's tokens in
-    ``id_col`` order and cut the stream every ``window`` tokens — the
+    ``doc_id`` order and cut the stream every ``window`` tokens — the
     standard GPT-style pretraining batch layout (documents straddle
     context-window boundaries). Each doc gets its stream position:
 
@@ -468,24 +450,17 @@ def pack_sequences(
     ``frontier.range_prefix_sum``'s two-phase sum: range slices on
     doc_id plus a broadcast running-offset table with one row per range
     partition — the only unpartitioned window runs over that ≤
-    ``num_parts``-row table, bounded by config, not by data.
+    ``spark.sql.shuffle.partitions``-row table, bounded by config, not
+    by data.
     """
     from reffy_spark.operators.frontier import range_prefix_sum
 
     counted = docs.select(
-        F.col(id_col).alias("doc_id"),
-        (
-            F.col(count_col).cast("long")
-            if count_col
-            else token_count_col(F.col(text_col)).cast("long")
-        ).alias("n_tokens"),
+        "doc_id",
+        token_count_col(F.col("text")).cast("long").alias("n_tokens"),
     )
     summed = range_prefix_sum(
-        counted,
-        [F.col("doc_id")],
-        weight="n_tokens",
-        out="_end_offset",
-        num_parts=num_parts,
+        counted, [F.col("doc_id")], weight="n_tokens", out="_end_offset"
     )
     # a NULL count adds nothing to the stream
     packed = summed.select(

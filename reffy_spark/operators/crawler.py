@@ -143,7 +143,15 @@ class CrawlEngine:
     temporary round-state directory. Crawl results are lazy and read
     that state, so it outlives ``crawl()`` / ``resume()``. Use the
     engine as a context manager, or call ``release()`` once the results
-    are consumed. The engine can crawl again after ``release()``.
+    are consumed. The engine can crawl again after ``release()``. A
+    checkpointed crawl keeps no working set past its round: its results
+    are the round commits.
+
+    The pages cache is Spark's, keyed by plan: engines built over the
+    same pages plan share one cache entry (Spark warns "Asked to cache
+    already cached data" for the second), and ``release()`` on any of
+    them drops that entry for all, so the others' next rounds recompute
+    the freshest-capture aggregation.
     """
 
     def __init__(
@@ -213,9 +221,9 @@ class CrawlEngine:
         page_cols = ["url_canon", "page_url", "html"] + [
             c for c in ("warc_ts", "final_url") if c in pc.columns
         ]
+        self.assume_canonical_unique = assume_canonical_unique
         if assume_canonical_unique:
             self.pages = pc.select(*page_cols)
-            self._pages_cached = None
         else:
             # Persist the canonicalized+deduped pages table ONCE per
             # engine (r8): every round's fetch evaluates it twice (the
@@ -230,8 +238,6 @@ class CrawlEngine:
             self.pages = freshest_capture(pc).persist(
                 StorageLevel.MEMORY_AND_DISK
             )
-            self._pages_cached = self.pages
-            self._pages_persistable = True
         # Round-state durability: ``localCheckpoint`` blocks are NOT
         # fault-tolerant — on a multi-executor cluster one lost executor
         # destroys its blocks and the round state cannot be recomputed
@@ -360,15 +366,10 @@ class CrawlEngine:
     def _ensure_pages_cached(self) -> None:
         """Re-persist the canonical pages table if ``release()`` dropped
         the cache — keeps the engine reusable after ``release()``."""
-        if (
-            getattr(self, "_pages_persistable", False)
-            and self._pages_cached is None
-        ):
+        if not (self.assume_canonical_unique or self.pages.is_cached):
             from pyspark.storagelevel import StorageLevel
 
-            self._pages_cached = self.pages.persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
+            self.pages.persist(StorageLevel.MEMORY_AND_DISK)
 
     def resume(self, max_rounds: int = 10) -> CrawlResult:
         """Resume from the latest checkpointed round (mirrors --fallback /
@@ -425,12 +426,11 @@ class CrawlEngine:
 
         Separate from the crawl because lazy results read the caches."""
         self._release_working_sets()
-        if getattr(self, "_pages_cached", None) is not None:
+        if self.pages.is_cached:
             try:
-                self._pages_cached.unpersist(blocking=False)
+                self.pages.unpersist(blocking=False)
             except Exception:
                 pass
-            self._pages_cached = None
         state_dir, self._state_dir = self._state_dir, None
         if state_dir is not None:
             shutil.rmtree(state_dir, ignore_errors=True)
@@ -454,7 +454,9 @@ class CrawlEngine:
             # in-round action ran (metrics/discovery force the round's
             # results). Pure replay defers ALL result consumption to the
             # caller's final action, so there we keep the caches alive.
-            if self.discover or self.collect_metrics or self.checkpoint_dir:
+            # A checkpointed crawl released its own at the end of the
+            # round (below).
+            if self.discover or self.collect_metrics:
                 self._release_working_sets()
             # the emptiness check only matters once discovery may have
             # drained the frontier; for the first round an empty seed
@@ -746,6 +748,12 @@ class CrawlEngine:
                 )
                 metrics.append(m)
                 self._write_manifest(rnd, m)
+
+            # a checkpointed round's results, frontier and seen are
+            # durable re-reads, and its metrics have run: nothing reads
+            # its working sets any more, not even the returned result
+            if self.checkpoint_dir:
+                self._release_working_sets()
 
         if all_results:
             results = reduce(

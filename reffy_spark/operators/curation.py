@@ -73,12 +73,7 @@ _PII_FAMILIES = (
 )
 
 
-def pii_scan(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    redact: bool = True,
-) -> DataFrame:
+def pii_scan(df: DataFrame) -> DataFrame:
     """Per-document PII counts + typed-placeholder redaction.
 
     Counts are taken on the ORIGINAL text per family (so an email is
@@ -91,16 +86,15 @@ def pii_scan(
     and a NULL ``redacted`` — coalescing to '' keeps counts at 0 and
     redaction total.
     """
-    text = F.coalesce(F.col(text_col), F.lit(""))
-    cols = [F.col(id_col)] + [
+    text = F.coalesce(F.col("text"), F.lit(""))
+    cols = [F.col("doc_id")] + [
         F.size(F.regexp_extract_all(text, F.lit(pat), 0)).alias(f"n_{name}")
         for name, pat, _ in _PII_FAMILIES
     ]
-    if redact:
-        red = text
-        for _, pat, placeholder in _PII_FAMILIES:
-            red = F.regexp_replace(red, pat, placeholder)
-        cols.append(red.alias("redacted"))
+    red = text
+    for _, pat, placeholder in _PII_FAMILIES:
+        red = F.regexp_replace(red, pat, placeholder)
+    cols.append(red.alias("redacted"))
     total = None
     for name, _, _ in _PII_FAMILIES:
         c = F.col(f"n_{name}")
@@ -115,10 +109,8 @@ def _host_col(url: Column) -> Column:
 
 def url_filter(
     df: DataFrame,
-    url_col: str = "url",
     blocked_domains: "list[str] | DataFrame | None" = None,
     blocked_host_patterns: "list[str] | None" = None,
-    flag_tracking_params: bool = True,
 ) -> DataFrame:
     """URL-level curation verdicts (C4/RefinedWeb-style).
 
@@ -142,7 +134,7 @@ def url_filter(
     input rows. The corpus side never shuffles; the only shuffle is the
     host-level distinct (~|hosts| rows, partial-aggregated).
     """
-    url = F.col(url_col)
+    url = F.col("url")
     host = _host_col(url)
     out = df.withColumn("host", host)
 
@@ -190,44 +182,37 @@ def url_filter(
         .when(F.col("_pat_blocked"), F.lit("host_pattern"))
         .otherwise(F.lit(None).cast("string")),
     )
-    if flag_tracking_params:
-        out = out.withColumn(
-            "has_tracking",
-            F.regexp_extract(url, r"[?&](utm_[a-z]+|session)=", 0) != "",
-        )
+    out = out.withColumn(
+        "has_tracking",
+        F.regexp_extract(url, r"[?&](utm_[a-z]+|session)=", 0) != "",
+    )
     return out.drop("_dom_blocked", "_pat_blocked")
 
 
-def _token_weight_int(tok: Column, salt: str) -> Column:
+def _token_weight_int(tok: Column) -> Column:
     """Deterministic per-token integer weight in [0, 2_000_000] from md5
     — the hashed feature trick (hashing directly on the token string; no
     vocabulary, no weights file). Centered/scaled to [-1, 1] only AFTER
     summation, so the accumulation is exact integer math and the DuckDB
     oracle reproduces the double bit-for-bit (one division, not n)."""
-    return h60(F.concat(F.lit(salt + "#"), tok)) % F.lit(2000001)
+    return h60(F.concat(F.lit("clf#"), tok)) % F.lit(2000001)
 
 
-def classifier_score(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    salt: str = "clf",
-    threshold: float = 0.0,
-) -> DataFrame:
+def classifier_score(df: DataFrame) -> DataFrame:
     """fastText-style hashed linear quality score per document.
 
     score = mean over whitespace tokens of w(token), with w a
-    deterministic md5-derived weight in [-1, 1]. ``keep`` = score >=
-    threshold. In production the md5 weight becomes a lookup into a
-    broadcast trained-weights map — same plan shape (narrow transform,
+    deterministic md5-derived weight in [-1, 1]. ``keep`` = score >= 0.
+    In production the md5 weight becomes a lookup into a broadcast
+    trained-weights map — same plan shape (narrow transform,
     zero shuffle); the deterministic weight keeps the oracle replayable.
     """
-    toks = tokens_col(F.col(text_col))
+    toks = tokens_col(F.col("text"))
     n = F.size(toks)
     total_int = F.aggregate(
         toks,
         F.lit(0).cast("long"),
-        lambda acc, t: acc + _token_weight_int(t, salt),
+        lambda acc, t: acc + _token_weight_int(t),
     )
     # score = mean of (k - 1e6)/1e6 = (sum_k - n*1e6) / (n*1e6); the
     # numerator/denominator are exact longs, so the single double
@@ -241,8 +226,8 @@ def classifier_score(
     # IEEE division is bit-identical in any engine — rounding would only
     # ADD portability risk (HALF_UP vs HALF_EVEN ties at the cut digit).
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n.cast("long").alias("n_tokens"),
         score.alias("clf_score"),
-        (score >= F.lit(threshold)).alias("keep"),
+        (score >= F.lit(0.0)).alias("keep"),
     )

@@ -46,11 +46,11 @@ def salted_hash(c: Column, salt: int, hash_mode: str = "portable") -> Column:
 # ---------------------------------------------------------------------------
 
 
-def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def exact_duplicates(docs: DataFrame) -> DataFrame:
     """Group identical texts; emit one row per doc with its group and a
     canonical flag (lowest id wins). Hash-groupBy: one shuffle on the
     digest, partial aggregation map-side."""
-    d = docs.select(F.col(id_col).alias("doc_id"), F.md5(F.col(text_col)).alias("digest"))
+    d = docs.select("doc_id", F.md5(F.col("text")).alias("digest"))
     w = Window.partitionBy("digest").orderBy("doc_id")
     return (
         d.withColumn("rank_in_group", F.row_number().over(w))
@@ -134,7 +134,7 @@ def spread_small_input(df: DataFrame) -> DataFrame:
     return df
 
 
-def has_shingles_filter(docs: DataFrame, text_col: str, n: int) -> DataFrame:
+def has_shingles_filter(docs: DataFrame, n: int) -> DataFrame:
     """Drop docs that cannot produce an n-gram shingle (< n tokens).
 
     Equivalent to ``filter(size(sh) > 0)`` AFTER computing shingles
@@ -147,7 +147,7 @@ def has_shingles_filter(docs: DataFrame, text_col: str, n: int) -> DataFrame:
     ``spread_small_input`` exchange, i.e. single-task on a one-split
     local file (guide §2.5 input-skew shape: 3.5 s of the bench's
     minhash cost was this one pushed predicate)."""
-    return docs.filter(F.size(tokens_col(F.col(text_col))) >= n)
+    return docs.filter(F.size(tokens_col(F.col("text"))) >= n)
 
 
 def lsh_candidate_pairs(
@@ -203,8 +203,6 @@ def lsh_candidate_pairs(
 
 def minhash_dedup_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 16,
     n: int = 3,
     bands: int = 4,
@@ -225,11 +223,8 @@ def minhash_dedup_pairs(
     pushed-down predicate cheap (see ``has_shingles_filter``)."""
     rows_per_band = k // bands
     sh = (
-        spread_small_input(has_shingles_filter(docs, text_col, n))
-        .select(
-            F.col(id_col).alias("doc_id"),
-            shingles_col(F.col(text_col), n).alias("sh"),
-        )
+        spread_small_input(has_shingles_filter(docs, n))
+        .select("doc_id", shingles_col(F.col("text"), n).alias("sh"))
         .localCheckpoint(eager=True)
     )
     sigs = sh.select("doc_id", *minhash_from_shingles(F.col("sh"), k, hash_mode))
@@ -258,18 +253,20 @@ def minhash_dedup_pairs(
 # ---------------------------------------------------------------------------
 
 
+# ngram_jaccard_pairs compares only docs whose shingle counts are within
+# a factor 1/_LENGTH_BAND_RATIO of each other
+_LENGTH_BAND_RATIO = 0.5
+
+
 def ngram_jaccard_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 3,
     threshold: float = 0.5,
-    length_band_ratio: float = 0.5,
 ) -> DataFrame:
     """All-pairs n-gram Jaccard above a threshold.
 
     Candidate generation is an EQUI-join on a log-length bucket: docs
-    whose shingle counts are within a factor ``1/length_band_ratio``
+    whose shingle counts are within a factor ``1/_LENGTH_BAND_RATIO``
     (necessary for J ≥ ratio) have bucket values differing by at most 1,
     so each doc is exploded to buckets {g, g+1} and pairs meet on a shared
     bucket — a shuffle-hash join, never a nested-loop/cartesian plan (the
@@ -277,16 +274,13 @@ def ngram_jaccard_pairs(
     (accept a pair only when at least one side sits in its own bucket g)
     emits each pair exactly once without a distinct over the payload.
     """
-    inv = 1.0 / length_band_ratio
+    inv = 1.0 / _LENGTH_BAND_RATIO
     # cheap pushable prefilter + one checkpointed shingle pass shared by
     # both sides of the self-join (same r8 rationale as
     # ``minhash_dedup_pairs``; ``n_sh > 0`` ⇔ ``size(tokens) >= n``)
     sh = (
-        spread_small_input(has_shingles_filter(docs, text_col, n))
-        .select(
-            F.col(id_col).alias("doc_id"),
-            shingles_col(F.col(text_col), n).alias("sh"),
-        )
+        spread_small_input(has_shingles_filter(docs, n))
+        .select("doc_id", shingles_col(F.col("text"), n).alias("sh"))
         .withColumn("n_sh", F.size("sh"))
         .localCheckpoint(eager=True)
     )
@@ -313,8 +307,8 @@ def ngram_jaccard_pairs(
     pairs = a.join(b, on="bucket").filter(
         (F.col("doc_a") < F.col("doc_b"))
         & (F.col("pa") | F.col("pb"))
-        & (F.col("na") >= F.col("nb") * F.lit(length_band_ratio))
-        & (F.col("nb") >= F.col("na") * F.lit(length_band_ratio))
+        & (F.col("na") >= F.col("nb") * F.lit(_LENGTH_BAND_RATIO))
+        & (F.col("nb") >= F.col("na") * F.lit(_LENGTH_BAND_RATIO))
     )
     return (
         pairs.withColumn(
@@ -335,17 +329,16 @@ def ngram_jaccard_pairs(
 # ---------------------------------------------------------------------------
 
 SIMHASH_BITS = 32
+# simhash_near_pairs' bit slices: recall is exact up to hamming 3
+SIMHASH_BANDS = 4
 
 
-def token_hashes_col(text: Column, hash_mode: str = "portable") -> Column:
+def token_hashes_col(text: Column) -> Column:
     """Per-token hash array feeding the SimHash bit votes."""
-    toks = tokens_col(text)
-    if hash_mode == "fast":
-        return F.transform(toks, lambda t: F.xxhash64(t))
-    return F.transform(toks, lambda t: h60(t))
+    return F.transform(tokens_col(text), lambda t: h60(t))
 
 
-def simhash_from_hashes(hashes: Column, bits: int = SIMHASH_BITS) -> Column:
+def simhash_from_hashes(hashes: Column) -> Column:
     """Fold a token-hash array into the SimHash fingerprint.
 
     For each bit j: majority vote of token-hash bit j (+1/-1); the
@@ -361,52 +354,41 @@ def simhash_from_hashes(hashes: Column, bits: int = SIMHASH_BITS) -> Column:
         )
 
     out = F.lit(0).cast("long")
-    for j in range(bits):
+    for j in range(SIMHASH_BITS):
         out = out + F.when(bit_vote(j) >= 0, F.lit(1 << j)).otherwise(F.lit(0))
     return out
 
 
-def simhash_table(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    hash_mode: str = "portable",
-) -> DataFrame:
+def simhash_table(docs: DataFrame) -> DataFrame:
     """Two-level projection: the token-hash array is materialized by the
     lower Project and the 32 bit votes read it as a column reference.
     CollapseProject keeps the split (the array expression is non-cheap
-    and referenced ``bits`` times), so the tokenize+hash pass runs ONCE
-    per row instead of once per bit — guide §1.2 "per-task work"; r8
+    and referenced ``SIMHASH_BITS`` times), so the tokenize+hash pass
+    runs ONCE per row instead of once per bit — guide §1.2 "per-task
+    work"; r8
     measured 1.64 s → 0.24 s on the bench query, bit-identical."""
     lower = spread_small_input(docs).select(
-        F.col(id_col).alias("doc_id"),
-        token_hashes_col(F.col(text_col), hash_mode).alias("_th"),
+        "doc_id", token_hashes_col(F.col("text")).alias("_th")
     )
     return lower.select(
         "doc_id", simhash_from_hashes(F.col("_th")).alias("simhash")
     )
 
 
-def simhash_near_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-    n_bands: int = 4,
-) -> DataFrame:
+def simhash_near_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs by SimHash hamming distance ≤ max_hamming.
 
-    Candidate generation bands the fingerprint into ``n_bands`` bit
+    Candidate generation bands the fingerprint into ``SIMHASH_BANDS`` bit
     slices and buckets on (band, slice): by pigeonhole, any pair with
-    hamming ≤ n_bands-1 shares at least one unchanged band, so recall is
-    EXACT for max_hamming ≤ n_bands-1 (set n_bands = max_hamming+1).
+    hamming ≤ SIMHASH_BANDS-1 shares at least one unchanged band, so
+    recall is EXACT for max_hamming ≤ SIMHASH_BANDS-1.
     Verification = bit_count(xor) inside buckets only.
     """
-    band_bits = SIMHASH_BITS // n_bands
+    band_bits = SIMHASH_BITS // SIMHASH_BANDS
     mask = (1 << band_bits) - 1
     # checkpoint: the banded self-join below consumes the fingerprint
     # table twice — without this both sides re-run the simhash pass
-    sh = simhash_table(docs, id_col, text_col).localCheckpoint(eager=True)
+    sh = simhash_table(docs).localCheckpoint(eager=True)
     stacked = sh.select(
         "doc_id",
         "simhash",
@@ -418,7 +400,7 @@ def simhash_near_pairs(
                     .bitwiseAND(F.lit(mask))
                     .alias("slice"),
                 )
-                for b in range(n_bands)
+                for b in range(SIMHASH_BANDS)
             ])
         ).alias("e"),
     ).select("doc_id", "simhash", "e.band", "e.slice")
@@ -444,14 +426,9 @@ def simhash_near_pairs(
 # ---------------------------------------------------------------------------
 
 
-def connected_components(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Connected components over a near-duplicate pair table →
-    (doc_id, component) where ``component`` is the smallest doc id
+def connected_components(pairs: DataFrame) -> DataFrame:
+    """Connected components over an (id_a, id_b) near-duplicate pair
+    table → (doc_id, component) where ``component`` is the smallest doc id
     reachable. Candidate PAIRS are only half of large-scale dedup: the
     keep-one-per-cluster decision needs the transitive closure (a~b,
     b~c ⇒ keep one of {a,b,c}), so this is the step between
@@ -462,8 +439,8 @@ def connected_components(
     neighbors' labels (one shuffle per iteration over the edge list,
     partial-aggregated map-side). Near-dup graphs from banded LSH are
     union-of-cliques-ish with tiny diameters, so this converges in a
-    handful of rounds; the per-iteration driver action is the
-    convergence check (an iterative algorithm's BSP barrier, same
+    handful of rounds (at most 25 run); the per-iteration driver action
+    is the convergence check (an iterative algorithm's BSP barrier, same
     pattern as the crawl loop). At 10^10 scale swap in the
     large-star/small-star variant to bound skew on giant components —
     the interface stays (pairs) → (doc_id, component).
@@ -471,8 +448,10 @@ def connected_components(
     spark = pairs.sparkSession
     # symmetrize once; self-loops are harmless and dropped by the min
     edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+        .unionByName(
+            pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
+        )
         .distinct()
         .localCheckpoint(eager=True)
     )
@@ -482,7 +461,7 @@ def connected_components(
         .withColumn("component", F.col("doc_id"))
         .localCheckpoint(eager=True)
     )
-    for _i in range(max_iter):
+    for _i in range(25):
         neighbor_min = (
             edges.join(labels, edges.dst == labels.doc_id, "inner")
             .groupBy("src")
@@ -506,23 +485,15 @@ def connected_components(
     return labels
 
 
-def dedup_near_canonical(
-    docs: DataFrame,
-    pairs: DataFrame,
-    doc_col: str = "doc_id",
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-) -> DataFrame:
+def dedup_near_canonical(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Keep one document per near-duplicate cluster (the smallest doc id
     — the deterministic "primary copy" rule used across the dedupe
     family); documents in no cluster pass through untouched."""
-    comp = connected_components(pairs, id_a, id_b).withColumnRenamed(
-        "doc_id", "_cc_id"
-    )
-    joined = docs.join(comp, docs[doc_col] == comp["_cc_id"], "left")
+    comp = connected_components(pairs).withColumnRenamed("doc_id", "_cc_id")
+    joined = docs.join(comp, docs["doc_id"] == comp["_cc_id"], "left")
     return (
         joined.filter(
-            F.col("component").isNull() | (F.col("component") == F.col(doc_col))
+            F.col("component").isNull() | (F.col("component") == F.col("doc_id"))
         )
         .drop("_cc_id", "component")
     )
@@ -536,8 +507,6 @@ def dedup_near_canonical(
 def span_fingerprints(
     docs: DataFrame,
     window: int = 50,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     hash_mode: str = "portable",
 ) -> DataFrame:
     """One row per length-``window`` token span: (doc_id, n_tokens, pos,
@@ -554,9 +523,9 @@ def span_fingerprints(
     only in the consumer's groupBy(whash), where uniform hash keys give
     skew-free partial aggregation.
     """
-    toks = tokens_col(F.col(text_col))
+    toks = tokens_col(F.col("text"))
     d = docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         toks.alias("_toks"),
         F.size(toks).cast("long").alias("n_tokens"),
     ).filter(F.col("n_tokens") >= window)
@@ -581,8 +550,6 @@ def span_fingerprints(
 def duplicate_spans(
     docs: DataFrame,
     window: int = 50,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     hash_mode: str = "portable",
 ) -> DataFrame:
     """Per-document duplicated-span profile (ExactSubstr dedup metric):
@@ -604,7 +571,7 @@ def duplicate_spans(
     window × n_dup_windows rows) followed by a doc_id-keyed distinct
     that co-partitions with the final join.
     """
-    fp = span_fingerprints(docs, window, id_col, text_col, hash_mode)
+    fp = span_fingerprints(docs, window, hash_mode)
     owners = fp.groupBy("whash").agg(
         F.min(F.struct("doc_id", "pos")).alias("_first"),
         F.count("*").alias("_occ"),
@@ -630,8 +597,8 @@ def duplicate_spans(
         .agg(F.count("*").alias("dup_tokens"))
     )
     base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        token_count_col(F.col(text_col)).cast("long").alias("n_tokens"),
+        "doc_id",
+        token_count_col(F.col("text")).cast("long").alias("n_tokens"),
     ).withColumn(
         "n_windows",
         F.greatest(F.col("n_tokens") - window + 1, F.lit(0)).cast("long"),

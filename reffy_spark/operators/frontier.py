@@ -267,7 +267,6 @@ FRONTIER_COLS = [
 def to_frontier(
     df: DataFrame,
     depth_col=None,
-    priority_col=None,
     round_no: int = 0,
     assume_canonical_unique: bool = False,
 ) -> DataFrame:
@@ -284,12 +283,7 @@ def to_frontier(
     out = out.withColumn(
         "depth", depth_col if depth_col is not None else F.lit(0)
     )
-    out = out.withColumn(
-        "priority",
-        priority_col
-        if priority_col is not None
-        else F.lit(1.0) / (F.col("depth") + F.lit(1.0)),
-    )
+    out = out.withColumn("priority", F.lit(1.0) / (F.col("depth") + F.lit(1.0)))
     out = out.withColumn("round_discovered", F.lit(round_no))
     if assume_canonical_unique:
         return out.select("url_canon", *[c for c in out.columns if c != "url_canon"])
@@ -413,7 +407,6 @@ def range_prefix_sum(
     groups: tuple = (),
     weight: str | None = None,
     out: str = "prefix",
-    num_parts: int | None = None,
 ) -> DataFrame:
     """Inclusive running sum of ``weight`` within each ``groups`` key in
     ``order`` (``weight=None`` sums 1 per row: the row number) with NO
@@ -438,10 +431,7 @@ def range_prefix_sum(
     and slicing jobs eagerly; on a multi-executor master a lost
     executor's slice blocks are not recomputed, and a later read fails.
     """
-    if num_parts is None:
-        num_parts = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
+    num_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
     # a NULL weight adds nothing, as in SUM
     w = F.lit(1) if weight is None else F.coalesce(F.col(weight), F.lit(0))
     keys = [*groups, "_pid"]

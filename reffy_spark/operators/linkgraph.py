@@ -40,21 +40,21 @@ def edges_from_links(links: DataFrame) -> DataFrame:
     )
 
 
-def pagerank(
-    edges: DataFrame,
-    n_iter: int = 3,
-    damping_pct: int = 85,
-    scale: int = 10**6,
-) -> DataFrame:
+# pagerank's fixed point: ranks are scaled by SCALE, damping is 85%
+SCALE = 10**6
+DAMPING_PCT = 85
+
+
+def pagerank(edges: DataFrame, n_iter: int = 3) -> DataFrame:
     """Integer fixed-point PageRank over a distinct (src, dst) edge list.
 
     Returns (url, out_degree, in_degree, rank_fp) where ``rank_fp`` is
     the rank after ``n_iter`` synchronous iterations, scaled by
-    ``scale``:
+    ``SCALE``:
 
-      rank_0(u)   = scale
-      contrib(u→v) = (rank(u) * damping_pct) DIV (100 * out_degree(u))
-      rank_i+1(v) = (scale * (100 - damping_pct)) DIV 100
+      rank_0(u)   = SCALE
+      contrib(u→v) = (rank(u) * DAMPING_PCT) DIV (100 * out_degree(u))
+      rank_i+1(v) = (SCALE * (100 - DAMPING_PCT)) DIV 100
                     + Σ_{u→v} contrib(u)
 
     Every operation is int64 (`DIV` is integral division in both Spark
@@ -112,8 +112,8 @@ def pagerank(
         F.col("url").alias("src"), F.col("out_degree")
     )
     nodes = degs.select("url")
-    base = (scale * (100 - damping_pct)) // 100
-    ranks = nodes.withColumn("rank_fp", F.lit(scale).cast("long"))
+    base = (SCALE * (100 - DAMPING_PCT)) // 100
+    ranks = nodes.withColumn("rank_fp", F.lit(SCALE).cast("long"))
     # out-degree rides the edge list so the per-iteration join is a
     # single probe. ``ed`` is the loop invariant: freeze it (r8) —
     # unfrozen, every iteration re-ran the deg aggregation and the
@@ -128,7 +128,7 @@ def pagerank(
             .select(
                 "dst",
                 F.expr(
-                    f"(rank_fp * {damping_pct}) DIV (100 * out_degree)"
+                    f"(rank_fp * {DAMPING_PCT}) DIV (100 * out_degree)"
                 ).alias("_c"),
             )
             .groupBy("dst")
@@ -172,12 +172,7 @@ def edges_to_host_graph(edges: DataFrame) -> DataFrame:
     ).distinct()
 
 
-def apportion_budget(
-    ranked: DataFrame,
-    total_budget: int,
-    host_col: str = "host",
-    rank_col: str = "rank_fp",
-) -> DataFrame:
+def apportion_budget(ranked: DataFrame, total_budget: int) -> DataFrame:
     """Split a global crawl budget across hosts proportionally to their
     authority rank — largest-remainder apportionment (Hamilton's
     method), the deterministic integer classic:
@@ -209,10 +204,7 @@ def apportion_budget(
     from reffy_spark.operators.frontier import range_prefix_sum
 
     B = int(total_budget)
-    h = ranked.select(
-        F.col(host_col).alias("host"),
-        F.col(rank_col).cast("long").alias("_r"),
-    )
+    h = ranked.select("host", F.col("rank_fp").cast("long").alias("_r"))
     tot = h.agg(
         F.sum("_r").alias("_S"),
         F.count("*").alias("_N"),

@@ -24,34 +24,29 @@ def _body_of(html_col):
     return F.when(body == "", html_col).otherwise(body)
 
 
-def merge_multipage(
-    pages: DataFrame,
-    spec_col: str = "spec_url",
-    page_col: str = "url",
-    order_col: str = "page_idx",
-    html_col: str = "html",
-) -> DataFrame:
+def merge_multipage(pages: DataFrame) -> DataFrame:
     """Merge subpages into one document per spec.
 
-    Input: one row per (spec, page) with the page's position. Output:
+    Input: one row per (spec, page) with the page's position, as
+    (spec_url, url, page_idx, html). Output:
     (spec_url, html) where html = page 0's document followed by each
     subpage's body wrapped in ``<section data-reffy-page>``.
     """
-    html_str = F.col(html_col).cast("string")
+    html_str = F.col("html").cast("string")
     wrapped = F.when(
-        F.col(order_col) == 0, html_str
+        F.col("page_idx") == 0, html_str
     ).otherwise(
         F.concat(
             F.lit('<section data-reffy-page="'),
-            F.col(page_col),
+            F.col("url"),
             F.lit('">'),
             _body_of(html_str),
             F.lit("</section>"),
         )
     )
     parts = pages.select(
-        F.col(spec_col).alias("spec_url"),
-        F.struct(F.col(order_col).alias("idx"), wrapped.alias("part")).alias("p"),
+        "spec_url",
+        F.struct(F.col("page_idx").alias("idx"), wrapped.alias("part")).alias("p"),
     )
     return (
         parts.groupBy("spec_url")

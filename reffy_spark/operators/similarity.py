@@ -43,8 +43,6 @@ def cosine_topk(
     emb: DataFrame,
     query_vec: list[float],
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Brute-force top-k by cosine similarity to a constant query vector.
 
@@ -54,8 +52,8 @@ def cosine_topk(
     q = F.lit([float(x) for x in query_vec])
     return (
         emb.select(
-            F.col(id_col).alias("vec_id"),
-            F.round(cosine_col(F.col(vec_col), q), 6).alias("cosine"),
+            "vec_id",
+            F.round(cosine_col(F.col("embedding"), q), 6).alias("cosine"),
         )
         .orderBy(F.col("cosine").desc(), F.col("vec_id"))
         .limit(k)
@@ -66,8 +64,6 @@ def pairwise_topk_join(
     emb_a: DataFrame,
     emb_b: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """kNN join: for each row of A, its k nearest rows of B by cosine.
 
@@ -84,14 +80,14 @@ def pairwise_topk_join(
     # does not serialize the O(|A|·|B|) pair work onto one task
     # (guide §1.2 / §2.5; no-op at scale where scans are already split).
     a = spread_small_input(emb_a).select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("va"),
-        norm_col(F.col(vec_col)).alias("_na"),
+        F.col("vec_id").alias("id_a"),
+        F.col("embedding").alias("va"),
+        norm_col(F.col("embedding")).alias("_na"),
     )
     b = emb_b.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("vb"),
-        norm_col(F.col(vec_col)).alias("_nb"),
+        F.col("vec_id").alias("id_b"),
+        F.col("embedding").alias("vb"),
+        norm_col(F.col("embedding")).alias("_nb"),
     )
     pairs = a.join(F.broadcast(b)).withColumn(
         "cosine",
@@ -184,7 +180,6 @@ def lsh_buckets(
     dim: int,
     n_planes: int = 8,
     id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     from reffy_spark.operators.dedupe import spread_small_input
 
@@ -193,8 +188,8 @@ def lsh_buckets(
     # (plan-time decision, no-op at scale — guide §1.2)
     return spread_small_input(emb).select(
         F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("embedding"),
-        lsh_bucket_col(F.col(vec_col), dim, n_planes).alias("bucket"),
+        "embedding",
+        lsh_bucket_col(F.col("embedding"), dim, n_planes).alias("bucket"),
     )
 
 
@@ -204,8 +199,6 @@ def ann_topk_lsh(
     dim: int,
     k: int = 10,
     n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     hamming: int = 0,
 ) -> DataFrame:
     """Approximate top-k: rank only vectors in the query's probe buckets.
@@ -224,7 +217,7 @@ def ann_topk_lsh(
     UNSTRUCTURED synthetic vectors recall ≈ share of table scanned
     (1 of 256 buckets / 9 of 256); real clustered embeddings do better.
     """
-    b = lsh_buckets(emb, dim, n_planes, id_col, vec_col)
+    b = lsh_buckets(emb, dim, n_planes)
     q = F.lit([float(x) for x in query_vec])
     probes = probe_buckets(query_vec, n_planes, hamming)
     return (
@@ -244,10 +237,7 @@ def ann_topk_batch(
     k: int = 10,
     n_planes: int = 8,
     hamming: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     q_id_col: str = "query_id",
-    q_vec_col: str = "embedding",
 ) -> DataFrame:
     """Batch ANN: top-k for a TABLE of query vectors in one plan — the
     production shape at scale, vs ``ann_topk_lsh``'s single driver-side
@@ -271,8 +261,8 @@ def ann_topk_batch(
     """
     from pyspark.sql import Window
 
-    b = lsh_buckets(emb, dim, n_planes, id_col, vec_col)
-    qb = lsh_buckets(queries, dim, n_planes, q_id_col, q_vec_col).select(
+    b = lsh_buckets(emb, dim, n_planes)
+    qb = lsh_buckets(queries, dim, n_planes, q_id_col).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_vec"),
         "bucket",
@@ -316,8 +306,6 @@ def embedding_neardup_pairs(
     dim: int,
     threshold: float = 0.95,
     n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Near-duplicate vectors (cosine ≥ threshold), LSH-bucketed candidate
     generation + exact verification inside buckets.
@@ -326,7 +314,7 @@ def embedding_neardup_pairs(
     and without the barrier both sides re-run the n_planes×dim bucket
     fold over the corpus (guide §2.4 — at scale this is the bucketed
     index table you would persist anyway)."""
-    b = lsh_buckets(emb, dim, n_planes, id_col, vec_col).localCheckpoint(
+    b = lsh_buckets(emb, dim, n_planes).localCheckpoint(
         eager=True
     )
     a = b.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"), "bucket")
@@ -365,8 +353,6 @@ def _cos_py(a, b) -> float:
 def ivf_centroids(
     emb: DataFrame,
     n_centroids: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> list[tuple[int, list[float]]]:
     """Deterministic coarse quantizer: the embeddings of the n lowest
     ids. Production IVF trains centroids with k-means; the *engine*
@@ -374,9 +360,9 @@ def ivf_centroids(
     nprobe-bounded search — are identical for any fixed quantizer, and a
     fixed one keeps the DuckDB oracle able to recompute it."""
     rows = (
-        emb.filter(F.col(id_col) < n_centroids)
-        .orderBy(id_col)
-        .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
+        emb.filter(F.col("vec_id") < n_centroids)
+        .orderBy("vec_id")
+        .select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec"))
         .collect()  # quantizer metadata: n_centroids rows, driver-sized
     )
     return [(int(r["cid"]), [float(x) for x in r["cvec"]]) for r in rows]
@@ -385,15 +371,13 @@ def ivf_centroids(
 def ivf_assignments(
     emb: DataFrame,
     centroids: list[tuple[int, list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Assign each vector to its nearest centroid (max cosine, ties to
     the lowest centroid id). Pure Column fold over centroid literals —
     no shuffle, no window: the argmax is array_max over an array of
     (cosine, -cid) structs. The vector's own norm is computed once and
     shared across centroids (manual CSE)."""
-    v = F.col(vec_col)
+    v = F.col("embedding")
     vnorm = norm_col(v)
     entries = F.array(
         *[
@@ -409,7 +393,7 @@ def ivf_assignments(
     )
     best = F.array_max(entries)
     return emb.select(
-        F.col(id_col).alias("vec_id"),
+        "vec_id",
         v.alias("embedding"),
         (-best["ncid"]).cast("long").alias("centroid_id"),
     )
@@ -428,8 +412,6 @@ def ivf_kmeans(
     emb: DataFrame,
     n_centroids: int = 8,
     n_iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> list[tuple[int, list[float]]]:
     """Train the IVF coarse quantizer with Lloyd's k-means, expressed as
     DataFrame ops — closes the "degenerate first-n quantizer" gap of
@@ -461,9 +443,9 @@ def ivf_kmeans(
     per-bucket stratified sample) — the operator is agnostic, it trains
     on whatever frame it is handed.
     """
-    cents = ivf_centroids(emb, n_centroids, id_col, vec_col)
+    cents = ivf_centroids(emb, n_centroids)
     for _ in range(max(0, n_iters)):
-        asg = ivf_assignments(emb, cents, id_col, vec_col)
+        asg = ivf_assignments(emb, cents)
         means = (
             asg.select(
                 "centroid_id", F.posexplode("embedding").alias("dim", "val")
@@ -495,21 +477,13 @@ def ivf_kmeans(
 def ivf_cells(
     emb: DataFrame,
     n_centroids: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids: "list[tuple[int, list[float]]] | None" = None,
 ) -> DataFrame:
     """Inverted-list sizes (centroid_id, n_vectors) — the partition-skew
     diagnostic for an IVF index, and full coverage of the assignment
-    math (every vector, not just probed cells). Pass ``centroids`` (e.g.
-    from ``ivf_kmeans``) to override the default first-n quantizer."""
-    cents = (
-        centroids
-        if centroids is not None
-        else ivf_centroids(emb, n_centroids, id_col, vec_col)
-    )
+    math (every vector, not just probed cells), over the first-n
+    quantizer."""
     return (
-        ivf_assignments(emb, cents, id_col, vec_col)
+        ivf_assignments(emb, ivf_centroids(emb, n_centroids))
         .groupBy("centroid_id")
         .agg(F.count("*").cast("long").alias("n_vectors"))
     )
@@ -521,8 +495,6 @@ def ann_topk_ivf(
     k: int = 10,
     n_centroids: int = 8,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     centroids: "list[tuple[int, list[float]]] | None" = None,
 ) -> DataFrame:
     """IVF-flat ANN: scan only the ``nprobe`` inverted lists whose
@@ -544,7 +516,7 @@ def ann_topk_ivf(
     cents = (
         centroids
         if centroids is not None
-        else ivf_centroids(emb, n_centroids, id_col, vec_col)
+        else ivf_centroids(emb, n_centroids)
     )
     ranked = sorted(
         ((cid, _cos_py(query_vec, cvec)) for cid, cvec in cents),
@@ -552,7 +524,7 @@ def ann_topk_ivf(
     )
     probes = [cid for cid, _ in ranked[:nprobe]]
     q = F.lit([float(x) for x in query_vec])
-    asg = ivf_assignments(emb, cents, id_col, vec_col)
+    asg = ivf_assignments(emb, cents)
     return (
         asg.filter(F.col("centroid_id").isin(probes))
         .select(
@@ -583,24 +555,22 @@ def pq_codebooks(
     emb: DataFrame,
     m: int = 4,
     k: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> list[list[list[float]]]:
     """Deterministic codebooks ``[m][k][d/m]``: subspace slices of the k
     lowest-id vectors (code id = rank by vec id). Oracle-recomputable;
     ``pq_train`` is the production refinement."""
     rows = (
-        emb.filter(F.col(id_col) < k)
-        .orderBy(id_col)
-        .select(id_col, vec_col)
+        emb.filter(F.col("vec_id") < k)
+        .orderBy("vec_id")
+        .select("vec_id", "embedding")
         .collect()  # quantizer metadata: k rows, driver-sized
     )
-    d = len(rows[0][vec_col])
+    d = len(rows[0]["embedding"])
     if d % m != 0:
         raise ValueError(f"dim {d} not divisible by m={m} subspaces")
     dsub = d // m
     return [
-        [[float(x) for x in r[vec_col][j * dsub : (j + 1) * dsub]] for r in rows]
+        [[float(x) for x in r["embedding"][j * dsub : (j + 1) * dsub]] for r in rows]
         for j in range(m)
     ]
 
@@ -672,15 +642,13 @@ def _adc_dist_col(
 def pq_encode(
     emb: DataFrame,
     books: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """(vec_id, codes array<int>) — the compressed index table. Pure
     Column expressions over codeword literals: no shuffle, no window;
     at 100 TB this is the single map pass that writes the PQ index."""
     return emb.select(
-        F.col(id_col).alias("vec_id"),
-        F.array(*_pq_code_cols(F.col(vec_col), books)).alias("codes"),
+        "vec_id",
+        F.array(*_pq_code_cols(F.col("embedding"), books)).alias("codes"),
     )
 
 
@@ -688,15 +656,11 @@ def pq_cells(
     emb: DataFrame,
     m: int = 4,
     k: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    books: "list[list[list[float]]] | None" = None,
 ) -> DataFrame:
     """Per-(subspace, code) population — the codebook-balance diagnostic
     (a starved codeword wastes index bits) and full coverage of the
     assignment math. All-integer output."""
-    bk = books if books is not None else pq_codebooks(emb, m, k, id_col, vec_col)
-    codes = pq_encode(emb, bk, id_col, vec_col)
+    codes = pq_encode(emb, pq_codebooks(emb, m, k))
     return (
         codes.select(F.posexplode("codes").alias("subspace", "code"))
         .groupBy("subspace", "code")
@@ -715,8 +679,6 @@ def ann_topk_pq(
     k: int = 10,
     m: int = 4,
     n_codes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     books: "list[list[list[float]]] | None" = None,
 ) -> DataFrame:
     """Asymmetric distance computation (ADC) top-k: the query-to-codeword
@@ -733,11 +695,11 @@ def ann_topk_pq(
     (cosine≈0.99 neighbors) trained-k=256 ADC recall matches exact
     in-cell scoring (BENCH r7 table) — the unstructured-vector numbers
     are the isotropic-noise floor, not the operator's ceiling."""
-    bk = books if books is not None else pq_codebooks(emb, m, n_codes, id_col, vec_col)
-    adist = _adc_dist_col(F.col(vec_col), bk, query_vec)
+    bk = books if books is not None else pq_codebooks(emb, m, n_codes)
+    adist = _adc_dist_col(F.col("embedding"), bk, query_vec)
     return (
         emb.select(
-            F.col(id_col).alias("vec_id"),
+            "vec_id",
             F.round(adist, 6).alias("pq_dist"),
         )
         .orderBy(F.col("pq_dist").asc(), F.col("vec_id"))
@@ -748,12 +710,11 @@ def ann_topk_pq(
 def pq_reconstruction_error(
     emb: DataFrame,
     books: list[list[list[float]]],
-    vec_col: str = "embedding",
 ) -> float:
     """Mean per-vector quantization error Σ_j l2(v_j, codeword(v_j)) —
     the quantity Lloyd's iterations minimize; used to verify training
     beats the first-k quantizer."""
-    v = F.col(vec_col)
+    v = F.col("embedding")
     dsub = len(books[0][0])
     code_cols = _pq_code_cols(v, books)
     err = None
@@ -780,8 +741,6 @@ def pq_train(
     m: int = 4,
     k: int = 8,
     n_iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> list[list[list[float]]]:
     """Lloyd's k-means per subspace, all subspaces refined in ONE
     DataFrame pass per iteration (the ``ivf_kmeans`` recipe, keyed
@@ -796,9 +755,9 @@ def pq_train(
     Measured training gain (tools/ann_quality.py, sf0.1, k=8): mean
     reconstruction error vs first-k codebooks −38%/−31%/−26%/−26% at
     m=2/4/8/16, and +28% ADC recall@10 at m=4."""
-    books = pq_codebooks(emb, m, k, id_col, vec_col)
+    books = pq_codebooks(emb, m, k)
     dsub = len(books[0][0])
-    v = F.col(vec_col)
+    v = F.col("embedding")
     for _ in range(max(0, n_iters)):
         code_cols = _pq_code_cols(v, books)
         structs = F.array(
@@ -849,8 +808,6 @@ def ann_topk_ivfadc(
     nprobe: int = 2,
     m: int = 4,
     n_codes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     centroids: "list[tuple[int, list[float]]] | None" = None,
     books: "list[list[list[float]]] | None" = None,
 ) -> DataFrame:
@@ -874,18 +831,18 @@ def ann_topk_ivfadc(
     cents = (
         centroids
         if centroids is not None
-        else ivf_centroids(emb, n_centroids, id_col, vec_col)
+        else ivf_centroids(emb, n_centroids)
     )
-    bk = books if books is not None else pq_codebooks(emb, m, n_codes, id_col, vec_col)
+    bk = books if books is not None else pq_codebooks(emb, m, n_codes)
     ranked = sorted(
         ((cid, _cos_py(query_vec, cvec)) for cid, cvec in cents),
         key=lambda t: (-t[1], t[0]),
     )
     probes = [cid for cid, _ in ranked[:nprobe]]
-    asg = ivf_assignments(emb, cents, id_col, vec_col).filter(
+    asg = ivf_assignments(emb, cents).filter(
         F.col("centroid_id").isin(probes)
     )
-    adist = _adc_dist_col(F.col(vec_col), bk, query_vec)
+    adist = _adc_dist_col(F.col("embedding"), bk, query_vec)
     return (
         asg.select("vec_id", F.round(adist, 6).alias("pq_dist"))
         .orderBy(F.col("pq_dist").asc(), F.col("vec_id"))

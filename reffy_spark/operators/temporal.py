@@ -34,7 +34,7 @@ from reffy_spark.operators.frontier import frozen_slices
 # of results still referenced (drop references, or call
 # spark.sparkContext._jvm.System.gc() in pathological loops).
 
-# skew_safe="auto" routes to the two-phase twins above this estimated
+# asof_join and sessionize route to the two-phase twins above this estimated
 # input size (Catalyst plan statistics, driver-side, no job). The twins
 # are bit-identical, so the routing is purely a plan choice: below the
 # threshold the direct single-window plan is cheaper (one exchange+sort,
@@ -47,39 +47,41 @@ _SKEW_SAFE_AUTO_BYTES = 256 * 1024 * 1024
 
 # Unknown estimates are treated as SMALL here: file-backed production
 # inputs carry real stats, and the direct plan is still CORRECT for the
-# rest, just not skew-proof (pass skew_safe=True to force).
+# rest, just not skew-proof (call the *_skewsafe twin to force).
 from reffy_spark.plan_stats import estimated_bytes as _estimated_bytes
 
+# the input format: events and right rows keyed by ``user_id``, ordered
+# by ``ts``; the as-of join carries ``value`` as ``asof_value``
+BY = "user_id"
+TS = "ts"
+VALUE_COLS = ("value",)
+PREFIX = "asof_"
+GAP_US = 30 * 60 * 1_000_000  # a 30-minute session gap
 
-def _route_skew_safe(skew_safe, *frames: DataFrame) -> bool:
-    if skew_safe == "auto":
-        total = 0
-        for f in frames:
-            b = _estimated_bytes(f)
-            if b is not None:
-                total += b
-        return total > _SKEW_SAFE_AUTO_BYTES
-    return bool(skew_safe)
+
+def _route_skew_safe(*frames: DataFrame) -> bool:
+    total = 0
+    for f in frames:
+        b = _estimated_bytes(f)
+        if b is not None:
+            total += b
+    return total > _SKEW_SAFE_AUTO_BYTES
 
 
 def _asof_union(
-    left: DataFrame,
-    right: DataFrame,
-    by: str,
-    ts: str,
-    value_cols: tuple[str, ...],
+    left: DataFrame, right: DataFrame
 ) -> tuple[DataFrame, list[str]]:
     """Shared tagged-union builder for the two as-of variants: right rows
     deduped to one per (by, ts) (greatest struct wins), carried as a
     non-null ``_r`` struct with ``_tag`` 0 (sorting before left rows at
     equal ts); left rows carry ``_r`` NULL with ``_tag`` 1."""
     rstruct = F.struct(
-        F.col(ts).alias("_ts"), *[F.col(c).alias(c) for c in value_cols]
+        F.col(TS).alias("_ts"), *[F.col(c).alias(c) for c in VALUE_COLS]
     )
     r = (
-        right.groupBy(by, ts)
+        right.groupBy(BY, TS)
         .agg(F.max(rstruct).alias("_r"))
-        .select(by, ts, "_r", F.lit(0).alias("_tag"))
+        .select(BY, TS, "_r", F.lit(0).alias("_tag"))
     )
     lcols = left.columns
     l = left.select(
@@ -88,20 +90,12 @@ def _asof_union(
     )
     # align schemas: right side carries nulls for the left payload
     for c in lcols:
-        if c not in (by, ts):
+        if c not in (BY, TS):
             r = r.withColumn(c, F.lit(None).cast(dict(left.dtypes)[c]))
     return l.unionByName(r.select(*lcols, "_r", "_tag")), lcols
 
 
-def asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    by: str = "user_id",
-    ts: str = "ts",
-    value_cols: tuple[str, ...] = ("value",),
-    prefix: str = "asof_",
-    skew_safe: "bool | str" = "auto",
-) -> DataFrame:
+def asof_join(left: DataFrame, right: DataFrame) -> DataFrame:
     """For each left row, attach the LATEST right row with
     ``right.ts <= left.ts`` in the same ``by`` group (DuckDB
     ``ASOF LEFT JOIN`` / kdb ``aj`` semantics; ties on ts match).
@@ -120,37 +114,30 @@ def asof_join(
     sort-merge as-of every distributed engine uses. The window is
     running (unbounded preceding → current), which Spark evaluates
     streamingly per key — no per-key buffering of the whole group. Hot
-    ``by`` keys are the skew caveat — so ``skew_safe`` (default
-    "auto") routes to the bit-identical two-phase
-    ``asof_join_skewsafe`` when the estimated input exceeds
-    ``_SKEW_SAFE_AUTO_BYTES``; pass False to force this direct plan,
-    True to force the two-phase one.
+    ``by`` keys are the skew caveat — so the join routes to the
+    bit-identical two-phase ``asof_join_skewsafe`` when the estimated
+    input exceeds ``_SKEW_SAFE_AUTO_BYTES``.
+
+    ``by`` is ``BY``, ``ts`` is ``TS``; the ``VALUE_COLS`` of the right
+    rows come out prefixed with ``PREFIX``.
     """
-    if _route_skew_safe(skew_safe, left, right):
-        return asof_join_skewsafe(left, right, by, ts, value_cols, prefix)
-    u, lcols = _asof_union(left, right, by, ts, value_cols)
+    if _route_skew_safe(left, right):
+        return asof_join_skewsafe(left, right)
+    u, lcols = _asof_union(left, right)
     w = (
-        Window.partitionBy(by)
-        .orderBy(ts, "_tag")
+        Window.partitionBy(BY)
+        .orderBy(TS, "_tag")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     out = u.withColumn("_last", F.last("_r", ignorenulls=True).over(w)).filter(
         F.col("_tag") == 1
     )
-    proj = [*lcols, F.col("_last._ts").alias(f"{prefix}ts")]
-    proj += [F.col(f"_last.{c}").alias(f"{prefix}{c}") for c in value_cols]
+    proj = [*lcols, F.col("_last._ts").alias(f"{PREFIX}ts")]
+    proj += [F.col(f"_last.{c}").alias(f"{PREFIX}{c}") for c in VALUE_COLS]
     return out.select(*proj)
 
 
-def asof_join_skewsafe(
-    left: DataFrame,
-    right: DataFrame,
-    by: str = "user_id",
-    ts: str = "ts",
-    value_cols: tuple[str, ...] = ("value",),
-    prefix: str = "asof_",
-    num_parts: int | None = None,
-) -> DataFrame:
+def asof_join_skewsafe(left: DataFrame, right: DataFrame) -> DataFrame:
     """``asof_join`` without the hot-key hazard: bit-identical output,
     but no task ever sorts a whole ``by`` group.
 
@@ -173,7 +160,8 @@ def asof_join_skewsafe(
     4. final as-of value = coalesce(local running last, carried last).
 
     The only unpartitioned-ish window runs over the carries table,
-    bounded by num_parts × keys-spanning-partition-boundaries — config-
+    bounded by num_parts (``spark.sql.shuffle.partitions``) ×
+    keys-spanning-partition-boundaries — config-
     sized, not data-sized (same argument as the rank offset table).
     Ties and duplicates behave exactly like ``asof_join``: the range
     partitioner respects the (by, ts, _tag) order, so an equal-ts right
@@ -181,17 +169,16 @@ def asof_join_skewsafe(
     row it must serve.
     """
     spark = left.sparkSession
-    if num_parts is None:
-        num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    u, lcols = _asof_union(left, right, by, ts, value_cols)
+    num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    u, lcols = _asof_union(left, right)
     # frozen: the three self-references below can never see divergent
     # repartitionByRange samples (see module note)
-    part = frozen_slices(u, num_parts, F.col(by), F.col(ts), F.col("_tag"))
+    part = frozen_slices(u, num_parts, F.col(BY), F.col(TS), F.col("_tag"))
 
     # slice-local running last (hot key split across many tasks)
     w_local = (
-        Window.partitionBy("_pid", by)
-        .orderBy(ts, "_tag")
+        Window.partitionBy("_pid", BY)
+        .orderBy(TS, "_tag")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     local = part.withColumn("_last_loc", F.last("_r", ignorenulls=True).over(w_local))
@@ -199,69 +186,61 @@ def asof_join_skewsafe(
     # per-slice carry: the last right row of each (partition, key)
     carries = (
         part.filter(F.col("_r").isNotNull())
-        .groupBy("_pid", by)
-        .agg(F.max_by("_r", F.struct(ts, "_tag")).alias("_carry"))
+        .groupBy("_pid", BY)
+        .agg(F.max_by("_r", F.struct(TS, "_tag")).alias("_carry"))
     )
     # running carry from EARLIER partitions, over every (pid, key) pair
     # present in the data (pairs without their own right rows inherit)
-    pairs = part.select("_pid", by).distinct()
+    pairs = part.select("_pid", BY).distinct()
     w_carry = (
-        Window.partitionBy(by)
+        Window.partitionBy(BY)
         .orderBy("_pid")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     prev = (
-        pairs.join(carries, on=["_pid", by], how="left")
+        pairs.join(carries, on=["_pid", BY], how="left")
         .withColumn("_prev", F.last("_carry", ignorenulls=True).over(w_carry))
         # only pairs that actually inherit a carry matter; under range
         # partitioning a non-null _prev means the key STARTED in an
         # earlier partition, i.e. it is the first key of this pid — so
         # ≤ 1 row per partition survives: broadcast is config-sized
         .filter(F.col("_prev").isNotNull())
-        .select("_pid", by, "_prev")
+        .select("_pid", BY, "_prev")
     )
 
     out = (
-        local.join(F.broadcast(prev), on=["_pid", by], how="left")
+        local.join(F.broadcast(prev), on=["_pid", BY], how="left")
         .withColumn("_last", F.coalesce(F.col("_last_loc"), F.col("_prev")))
         .filter(F.col("_tag") == 1)
     )
-    proj = [*lcols, F.col("_last._ts").alias(f"{prefix}ts")]
-    proj += [F.col(f"_last.{c}").alias(f"{prefix}{c}") for c in value_cols]
+    proj = [*lcols, F.col("_last._ts").alias(f"{PREFIX}ts")]
+    proj += [F.col(f"_last.{c}").alias(f"{PREFIX}{c}") for c in VALUE_COLS]
     return out.select(*proj)
 
 
-def sessionize(
-    events: DataFrame,
-    by: str = "user_id",
-    ts: str = "ts",
-    gap_minutes: int = 30,
-    skew_safe: "bool | str" = "auto",
-) -> DataFrame:
+def sessionize(events: DataFrame) -> DataFrame:
     """Gap-based sessions: a new session starts when the inter-event gap
-    within a ``by`` group exceeds ``gap_minutes``. Adds ``session_idx``
+    within a ``by`` (``BY``) group exceeds 30 minutes. Adds ``session_idx``
     (0-based per key, in time order).
 
     Gap arithmetic is integer microseconds (``unix_micros`` /
     ``epoch_us``) — exact cross-engine. The two windows (lag + running
     sum) share one (by, ts) sort; Spark plans a single exchange+sort.
-    ``skew_safe`` (default "auto") routes to the bit-identical
-    two-phase ``sessionize_skewsafe`` above ``_SKEW_SAFE_AUTO_BYTES``
-    (a hot key would otherwise sort in one task); False forces this
-    direct plan, True forces the two-phase one.
+    Above ``_SKEW_SAFE_AUTO_BYTES`` it routes to the bit-identical
+    two-phase ``sessionize_skewsafe`` (a hot key would otherwise sort in
+    one task).
     """
-    if _route_skew_safe(skew_safe, events):
-        return sessionize_skewsafe(events, by, ts, gap_minutes)
-    gap_us = gap_minutes * 60 * 1_000_000
-    w = Window.partitionBy(by).orderBy(ts)
+    if _route_skew_safe(events):
+        return sessionize_skewsafe(events)
+    w = Window.partitionBy(BY).orderBy(TS)
     # parquet yields TIMESTAMP_NTZ; the session runs UTC (session.py:77)
     # so the cast is the identity mapping and matches DuckDB epoch_us
-    t_us = F.unix_micros(F.col(ts).cast("timestamp"))
+    t_us = F.unix_micros(F.col(TS).cast("timestamp"))
     # two projections (Spark can't nest lag inside a windowed sum) but
     # ONE exchange+sort: both windows share the (by, ts) ordering
     flagged = events.withColumn(
         "_ns",
-        F.when(t_us - F.lag(t_us).over(w) > gap_us, F.lit(1)).otherwise(
+        F.when(t_us - F.lag(t_us).over(w) > GAP_US, F.lit(1)).otherwise(
             F.lit(0)
         ),
     )
@@ -273,13 +252,7 @@ def sessionize(
     ).drop("_ns")
 
 
-def sessionize_skewsafe(
-    events: DataFrame,
-    by: str = "user_id",
-    ts: str = "ts",
-    gap_minutes: int = 30,
-    num_parts: int | None = None,
-) -> DataFrame:
+def sessionize_skewsafe(events: DataFrame) -> DataFrame:
     """``sessionize`` without the hot-key hazard: bit-identical
     ``session_idx``, but no task ever sorts a whole ``by`` group.
 
@@ -295,7 +268,8 @@ def sessionize_skewsafe(
        first event against the PREVIOUS slice's last event, and the
        slice's session offset is the running sum of earlier slices'
        internal+boundary flags — windows over the (pid, key) summary
-       table only (≤ num_parts rows per key);
+       table only (≤ num_parts = ``spark.sql.shuffle.partitions`` rows
+       per key);
     4. adjustment = offset + own boundary flag, joined back on
        (_pid, by). Non-zero adjustments exist only for continuation
        slices — under range partitioning, at most the first key of each
@@ -306,17 +280,15 @@ def sessionize_skewsafe(
     every session index) is order-insensitive within a tie.
     """
     spark = events.sparkSession
-    if num_parts is None:
-        num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    gap_us = gap_minutes * 60 * 1_000_000
-    t_us = F.unix_micros(F.col(ts).cast("timestamp"))
+    num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    t_us = F.unix_micros(F.col(TS).cast("timestamp"))
     # frozen slices (see module note)
-    part = frozen_slices(events, num_parts, F.col(by), F.col(ts))
+    part = frozen_slices(events, num_parts, F.col(BY), F.col(TS))
 
-    w_loc = Window.partitionBy("_pid", by).orderBy(ts)
+    w_loc = Window.partitionBy("_pid", BY).orderBy(TS)
     flagged = part.withColumn("_tus", t_us).withColumn(
         "_ns",
-        F.when(F.col("_tus") - F.lag("_tus").over(w_loc) > gap_us, F.lit(1))
+        F.when(F.col("_tus") - F.lag("_tus").over(w_loc) > GAP_US, F.lit(1))
         .otherwise(F.lit(0)),
     )
     local = flagged.withColumn(
@@ -325,15 +297,15 @@ def sessionize_skewsafe(
             w_loc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
         ),
     )
-    sl = flagged.groupBy("_pid", by).agg(
+    sl = flagged.groupBy("_pid", BY).agg(
         F.min("_tus").alias("_first"),
         F.max("_tus").alias("_last"),
         F.sum("_ns").alias("_intflags"),
     )
-    w_key = Window.partitionBy(by).orderBy("_pid")
+    w_key = Window.partitionBy(BY).orderBy("_pid")
     sl = sl.withColumn("_prev_last", F.lag("_last").over(w_key)).withColumn(
         "_bflag",
-        F.when(F.col("_first") - F.col("_prev_last") > gap_us, F.lit(1))
+        F.when(F.col("_first") - F.col("_prev_last") > GAP_US, F.lit(1))
         .otherwise(F.lit(0)),
     )
     adj = (
@@ -346,11 +318,11 @@ def sessionize_skewsafe(
                 F.lit(0),
             ),
         )
-        .select("_pid", by, (F.col("_off") + F.col("_bflag")).alias("_adj"))
+        .select("_pid", BY, (F.col("_off") + F.col("_bflag")).alias("_adj"))
         .filter(F.col("_adj") != 0)
     )
     return (
-        local.join(F.broadcast(adj), on=["_pid", by], how="left")
+        local.join(F.broadcast(adj), on=["_pid", BY], how="left")
         .withColumn(
             "session_idx",
             (F.col("_lcum") + F.coalesce(F.col("_adj"), F.lit(0))).cast("long"),
@@ -359,20 +331,15 @@ def sessionize_skewsafe(
     )
 
 
-def session_stats(
-    events: DataFrame,
-    by: str = "user_id",
-    ts: str = "ts",
-    gap_minutes: int = 30,
-) -> DataFrame:
+def session_stats(events: DataFrame) -> DataFrame:
     """Per-session rollup: (by, session_idx, n_events, start_ts, end_ts,
     duration_us). Counts and min/max only — no cross-row float sums, so
     the profile is oracle-exact."""
-    s = sessionize(events, by, ts, gap_minutes)
-    t_us = F.unix_micros(F.col(ts).cast("timestamp"))
-    return s.groupBy(by, "session_idx").agg(
+    s = sessionize(events)
+    t_us = F.unix_micros(F.col(TS).cast("timestamp"))
+    return s.groupBy(BY, "session_idx").agg(
         F.count("*").alias("n_events"),
-        F.min(ts).alias("start_ts"),
-        F.max(ts).alias("end_ts"),
+        F.min(TS).alias("start_ts"),
+        F.max(TS).alias("end_ts"),
         (F.max(t_us) - F.min(t_us)).cast("long").alias("duration_us"),
     )

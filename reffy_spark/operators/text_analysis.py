@@ -19,9 +19,7 @@ from reffy_spark.functions.text import (
 )
 
 
-def profile_documents(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def profile_documents(docs: DataFrame) -> DataFrame:
     """Per-document analysis profile (single pass over the text column).
 
     r8 shape: three-level projection. The lower Project materializes the
@@ -41,9 +39,9 @@ def profile_documents(
         STOPWORDS_FR,
     )
 
-    t = F.col(text_col)
+    t = F.col("text")
     lower = docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.length(t).alias("_len"),
         tokens_col(t).alias("_t"),
     )
@@ -88,14 +86,14 @@ def profile_documents(
 
 
 def quality_filter(
-    docs: DataFrame, min_quality: float = 0.5, text_col: str = "text"
+    docs: DataFrame, min_quality: float = 0.5
 ) -> DataFrame:
     """Keep documents above the quality threshold (pushdown-friendly:
     the predicate is pure expressions over the text column)."""
-    return docs.filter(quality_score_col(F.col(text_col)) >= min_quality)
+    return docs.filter(quality_score_col(F.col("text")) >= min_quality)
 
 
-def token_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def token_stats(docs: DataFrame) -> DataFrame:
     """Whitespace vs BPE-ish token counts per document.
 
     The two counts bracket real LLM tokenizer behavior: whitespace
@@ -103,11 +101,11 @@ def token_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     agglutinative words. ``bpe_per_ws`` is the budget-planning ratio."""
     from reffy_spark.functions.text import bpe_token_count_col
 
-    t = F.col(text_col)
+    t = F.col("text")
     # two-level projection: each counting regex runs once per row (the
     # single-select form re-evaluated them per referencing column)
     lower = docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.length(t).alias("_len"),
         token_count_col(t).cast("long").alias("_ws"),
         bpe_token_count_col(t).alias("_bpe"),
@@ -132,11 +130,7 @@ def token_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     )
 
 
-def bigram_novelty(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def bigram_novelty(docs: DataFrame) -> DataFrame:
     """Per-document bigram-novelty profile — the integer-exact analog of
     the CCNet LM-perplexity filter (Wenzek et al. 2020, arXiv:1911.00359
     §3.3: rank documents by how surprising their phrasing is under a
@@ -161,9 +155,9 @@ def bigram_novelty(
     AQE skew-join splits them, and the join carries only (doc_id, count)
     past the probe. Docs with < 2 tokens keep a row with zero counts.
     """
-    toks = tokens_col(F.col(text_col))
+    toks = tokens_col(F.col("text"))
     d = docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         toks.alias("_toks"),
         F.size(toks).alias("_n"),
     )
@@ -217,14 +211,8 @@ def bigram_novelty(
     )
 
 
-def doc_keywords(
-    docs: DataFrame,
-    k: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    stopwords: list[str] | None = None,
-) -> DataFrame:
-    """Top-``k`` keywords per document by term frequency, with the
+def doc_keywords(docs: DataFrame) -> DataFrame:
+    """Top-5 keywords per document by term frequency, with the
     corpus document frequency attached — the integer-exact core of
     tf-idf keyword extraction (the idf *log* is monotone in df, so
     ranking and filtering by raw ``df`` is order-equivalent and avoids
@@ -233,20 +221,19 @@ def doc_keywords(
       (doc_id, token, tf, df, rank)
 
     Ties break by token text ascending — fully deterministic. Stopwords
-    (default STOPWORDS_EN) are excluded before ranking.
+    (STOPWORDS_EN) are excluded before ranking.
 
     Scale shape: tf is a partial-aggregable (doc, token) count; df a
-    partial-aggregable token count over the distinct pairs; the top-k
+    partial-aggregable token count over the distinct pairs; the top-5
     window partitions by doc_id — a group bounded by the document's own
     vocabulary, not by corpus size (the politeness-skew rule: windows
     only over per-row-bounded groups).
     """
-    sw = STOPWORDS_EN if stopwords is None else stopwords
-    sw_arr = F.array(*[F.lit(w) for w in sw])
+    sw_arr = F.array(*[F.lit(w) for w in STOPWORDS_EN])
     tok = (
         docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(tokens_col(F.col(text_col))).alias("token"),
+            "doc_id",
+            F.explode(tokens_col(F.col("text"))).alias("token"),
         )
         .filter(~F.array_contains(sw_arr, F.col("token")))
     )
@@ -259,7 +246,7 @@ def doc_keywords(
     )
     return (
         tf.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 5)
         .join(df_, "token")
         .select(
             "doc_id", "token",

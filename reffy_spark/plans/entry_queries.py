@@ -496,7 +496,9 @@ def q_minhash_pairs(spark, sf_dir):
     )
 
 
-def _oracle_minhash(k: int = 16, n: int = 3, bands: int = 4, threshold: float = 0.8) -> str:
+def _oracle_minhash() -> str:
+    # q_minhash_pairs' parameters
+    k, n, bands, threshold = 16, 3, 4, 0.8
     rows = k // bands
     mh_parts = []
     for p in range(k):
@@ -563,13 +565,13 @@ def q_simhash(spark, sf_dir):
     return D.simhash_table(load(spark, sf_dir, "documents"))
 
 
-def _oracle_simhash(bits: int = 32) -> str:
+def _oracle_simhash() -> str:
     th = _H60.format(x="t")
     bit_terms = " + ".join(
         f"(CASE WHEN list_sum(list_transform({_TOKS}, "
         f"t -> CASE WHEN ({th} >> {j}) & 1 = 1 THEN 1 ELSE -1 END)) >= 0 "
         f"THEN {1 << j} ELSE 0 END)"
-        for j in range(bits)
+        for j in range(32)
     )
     return f"SELECT doc_id, CAST({bit_terms} AS BIGINT) AS simhash FROM documents"
 
@@ -1276,7 +1278,7 @@ ORACLE_QUALITY_FILTER = f"""
 
 
 def q_simhash_pairs(spark, sf_dir):
-    # max_hamming = n_bands - 1 = 3: the pigeonhole banding guarantees
+    # max_hamming = SIMHASH_BANDS - 1 = 3: the pigeonhole banding guarantees
     # EXACT recall for this contract (dedupe.simhash_near_pairs docstring)
     return D.simhash_near_pairs(load(spark, sf_dir, "documents"), max_hamming=3)
 
@@ -1302,15 +1304,16 @@ BENCH_ONLY = {
 }
 
 
-def _oracle_simhash_pairs(max_hamming: int = 16, bits: int = 32, n_bands: int = 4) -> str:
-    band_bits = bits // n_bands
+def _oracle_simhash_pairs(max_hamming: int = 16) -> str:
+    n_bands = 4
+    band_bits = 32 // n_bands
     mask = (1 << band_bits) - 1
     bands_union = " UNION ALL ".join(
         f"SELECT doc_id, simhash, {b} AS band, (simhash >> {b * band_bits}) & {mask} AS slice FROM sh"
         for b in range(n_bands)
     )
     return f"""
-    WITH sh AS ({_oracle_simhash(bits)}),
+    WITH sh AS ({_oracle_simhash()}),
     stacked AS ({bands_union}),
     cand AS (
       SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b,

@@ -190,12 +190,12 @@ def consolidate_events(events: DataFrame, order_col: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def merge_crawls(reference: DataFrame, new: DataFrame, key: str = "url") -> DataFrame:
+def merge_crawls(reference: DataFrame, new: DataFrame) -> DataFrame:
     """Merge a new crawl into a reference crawl: keep reference rows that
     match no new row on the key, concat new (merge-crawl-results.js:41-62
     re-expressed as anti-join + union), sorted by the key (byURL)."""
-    kept = reference.join(new.select(key), on=key, how="left_anti")
-    return kept.unionByName(new, allowMissingColumns=True).orderBy(key)
+    kept = reference.join(new.select("url"), on="url", how="left_anti")
+    return kept.unionByName(new, allowMissingColumns=True).orderBy("url")
 
 
 # --------------------------------------------------------------------------
@@ -247,17 +247,12 @@ def is_latest_level_that_passes(spec: dict, specs: list[dict], predicate=None) -
     return False
 
 
-def series_latest(
-    specs: DataFrame,
-    series_col: str = "series_shortname",
-    level_col: str = "level",
-    composition_col: str = "seriesComposition",
-) -> DataFrame:
+def series_latest(specs: DataFrame) -> DataFrame:
     """Latest full level per series: window rank instead of the
     reference's linked-list traversal (util.js:731-775)."""
-    w = Window.partitionBy(series_col).orderBy(F.col(level_col).desc())
+    w = Window.partitionBy("series_shortname").orderBy(F.col("level").desc())
     return (
-        specs.filter(F.col(composition_col) == "full")
+        specs.filter(F.col("seriesComposition") == "full")
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
@@ -271,8 +266,6 @@ def series_latest(
 
 def idlparsed(
     extracts: DataFrame,
-    idl_col: str = "idl",
-    key: str = "url",
     ast: bool = False,
 ) -> DataFrame:
     """Parse each spec's IDL dump into the idlparsed report
@@ -293,20 +286,20 @@ def idlparsed(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
             out = []
-            for url, idl in zip(b[key], b[idl_col]):
+            for url, idl in zip(b["url"], b["idl"]):
                 try:
                     # the idl column may itself be a JSON-encoded string
                     text = json.loads(idl) if idl and idl.startswith('"') else idl
                 except ValueError:
                     text = idl
                 report = (build_report_ast if ast else parse_idl)(text or "")
-                out.append({key: url, "idlparsed": json.dumps(report, sort_keys=True)})
-            yield pd.DataFrame(out, columns=[key, "idlparsed"])
+                out.append({"url": url, "idlparsed": json.dumps(report, sort_keys=True)})
+            yield pd.DataFrame(out, columns=["url", "idlparsed"])
 
-    return extracts.select(key, idl_col).mapInPandas(run, f"{key} string, idlparsed string")
+    return extracts.select("url", "idl").mapInPandas(run, "url string, idlparsed string")
 
 
-def idl_members_table(idlparsed_df: DataFrame, key: str = "url") -> DataFrame:
+def idl_members_table(idlparsed_df: DataFrame) -> DataFrame:
     """Long table of IDL members: (url, construct, construct_type, member,
     member_type, idl_type, static) with W4 overload numbering
     (row_number per (url, construct, member) — parse-webidl's overload
@@ -318,20 +311,20 @@ def idl_members_table(idlparsed_df: DataFrame, key: str = "url") -> DataFrame:
     )
     exploded = (
         idlparsed_df.select(
-            key,
+            "url",
             F.explode(
                 F.from_json(F.get_json_object("idlparsed", "$.idlNames"), schema)
             ).alias("construct", "c"),
         )
         .select(
-            key,
+            "url",
             "construct",
             F.col("c.type").alias("construct_type"),
             F.col("c.inheritance").alias("inheritance"),
             F.posexplode_outer("c.members").alias("member_idx", "m"),
         )
         .select(
-            key,
+            "url",
             "construct",
             "construct_type",
             "inheritance",
@@ -342,38 +335,38 @@ def idl_members_table(idlparsed_df: DataFrame, key: str = "url") -> DataFrame:
             F.coalesce(F.col("m.static"), F.lit(False)).alias("static"),
         )
     )
-    w = Window.partitionBy(key, "construct", "member").orderBy("member_idx")
+    w = Window.partitionBy("url", "construct", "member").orderBy("member_idx")
     return exploded.withColumn(
         "overload_index", F.row_number().over(w) - 1
     )
 
 
-def event_handlers_table(idlparsed_df: DataFrame, key: str = "url") -> DataFrame:
+def event_handlers_table(idlparsed_df: DataFrame) -> DataFrame:
     """(url, interface, type) rows from on<event> EventHandler attributes."""
-    members = idl_members_table(idlparsed_df, key)
+    members = idl_members_table(idlparsed_df)
     return members.filter(
         (F.col("member_type") == "attribute")
         & F.col("member").startswith("on")
         & F.col("idl_type").contains("EventHandler")
     ).select(
-        key,
+        "url",
         F.col("construct").alias("interface"),
         F.expr("substring(member, 3)").alias("type"),
     )
 
 
-def events_with_handlers(events: DataFrame, handlers: DataFrame, key: str = "url") -> DataFrame:
+def events_with_handlers(events: DataFrame, handlers: DataFrame) -> DataFrame:
     """J6: fill a missing event interface from EventHandler attributes when
     exactly ONE interface defines on<type> (extract-events.mjs:373-406's
     count-based disambiguation)."""
     candidates = (
-        handlers.groupBy(key, "type")
+        handlers.groupBy("url", "type")
         .agg(
             F.countDistinct("interface").alias("n_candidates"),
             F.first("interface").alias("candidate"),
         )
     )
-    joined = events.join(candidates, on=[key, "type"], how="left")
+    joined = events.join(candidates, on=["url", "type"], how="left")
     return joined.withColumn(
         "interface",
         F.when(
@@ -383,19 +376,19 @@ def events_with_handlers(events: DataFrame, handlers: DataFrame, key: str = "url
     ).drop("n_candidates", "candidate")
 
 
-def includes_table(idlparsed_df: DataFrame, key: str = "url") -> DataFrame:
+def includes_table(idlparsed_df: DataFrame) -> DataFrame:
     """(url, target, mixin) rows from `A includes B` statements."""
     schema = "map<string, array<struct<type:string, target:string, includes:string>>>"
     return (
         idlparsed_df.select(
-            key,
+            "url",
             F.explode(
                 F.from_json(F.get_json_object("idlparsed", "$.idlExtendedNames"), schema)
             ).alias("name", "exts"),
         )
-        .select(key, F.explode("exts").alias("e"))
+        .select("url", F.explode("exts").alias("e"))
         .filter(F.col("e.type") == "includes")
-        .select(key, F.col("e.target").alias("target"), F.col("e.includes").alias("mixin"))
+        .select("url", F.col("e.target").alias("target"), F.col("e.includes").alias("mixin"))
     )
 
 
@@ -438,7 +431,7 @@ def expand_mixin_targets(events: DataFrame, includes: DataFrame) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def idlnames(idlparsed_df: DataFrame, key: str = "url") -> DataFrame:
+def idlnames(idlparsed_df: DataFrame) -> DataFrame:
     """Crawl-level IDL-name index: for every IDL name, the specs that
     define it and the specs that extend it (partials / includes) — the
     relational form of the reference's idlnames post-processor
@@ -448,8 +441,8 @@ def idlnames(idlparsed_df: DataFrame, key: str = "url") -> DataFrame:
         F.explode(
             F.from_json(F.get_json_object("idlparsed", "$.idlNames"), names_schema)
         ).alias("name", "c"),
-        F.col(key),
-    ).select("name", F.col("c.type").alias("idl_type"), F.col(key).alias("spec"))
+        F.col("url"),
+    ).select("name", F.col("c.type").alias("idl_type"), F.col("url").alias("spec"))
     ext_schema = "map<string, array<struct<type:string>>>"
     extended = idlparsed_df.select(
         F.explode(
@@ -457,8 +450,8 @@ def idlnames(idlparsed_df: DataFrame, key: str = "url") -> DataFrame:
                 F.get_json_object("idlparsed", "$.idlExtendedNames"), ext_schema
             )
         ).alias("name", "exts"),
-        F.col(key),
-    ).select("name", F.col(key).alias("spec"))
+        F.col("url"),
+    ).select("name", F.col("url").alias("spec"))
     agg_def = defined.groupBy("name").agg(
         # min_by over spec, not F.first: when the same IDL name is defined
         # in >1 spec with different parsed types, the chosen type must not
@@ -655,11 +648,11 @@ def csscomplete_properties(css_props: DataFrame, dfns: DataFrame) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def patch_dfns(dfns: DataFrame, url_col: str = "url") -> DataFrame:
+def patch_dfns(dfns: DataFrame) -> DataFrame:
     """patch-dfns post-processor (patch-dfns.js:14-51): drop the known
     duplicate definitions and demote the non-dfn-data-model /TR specs'
     dfns to private access."""
-    u = F.col(url_col)
+    u = F.col("url")
     is_orientation = u.contains("/deviceorientation/") | u.contains(
         "/TR/orientation-event/"
     )
@@ -715,15 +708,14 @@ def _tree_lookup_rows() -> list[tuple]:
 def attach_interface_tree(
     df: DataFrame,
     interfaces: DataFrame,
-    iface_col: str = "interface",
-    max_hops: int = 8,
 ) -> DataFrame:
     """J14 (util.js:1029-1046): resolve each row's interface to its tree
-    via the inheritance chain, attaching tree / tree_interface / depth /
-    bubblingPath (null when no tree matches).
+    via the inheritance chain of its ``interface`` column, attaching
+    tree / tree_interface / depth / bubblingPath (null when no tree
+    matches).
 
     Relational shape: the tree table is a tiny literal (broadcast); the
-    inheritance chain is unrolled into ``max_hops`` broadcast joins
+    inheritance chain is unrolled into 8 broadcast joins
     against the (name, inheritance) interface index — real chains are
     shallow, and unrolling keeps everything a pure Column plan.
     """
@@ -737,12 +729,12 @@ def attach_interface_tree(
         F.col("name").alias("_pn"), F.col("inheritance").alias("_pi")
     ).filter(F.col("_pi").isNotNull())
 
-    out = df.withColumn("_cur", F.col(iface_col))
+    out = df.withColumn("_cur", F.col("interface"))
     out = (
         out.join(F.broadcast(tree_df), out["_cur"] == tree_df["_ti"], "left")
         .drop("_ti")
     )
-    for _ in range(max_hops):
+    for _ in range(8):
         # step unresolved rows to their parent interface, then retry
         out = (
             out.join(F.broadcast(parents), out["_cur"] == parents["_pn"], "left")
@@ -781,7 +773,7 @@ _SKIP_SPECIALS = ("getter", "setter", "stringifier", "deleter")
 
 
 def idl_dfn_hrefs(
-    idlparsed_df: DataFrame, dfns: DataFrame, key: str = "url"
+    idlparsed_df: DataFrame, dfns: DataFrame
 ) -> DataFrame:
     """J5: attach definition hrefs to IDL constructs and members by the
     reference's candidate-name priority lookup
@@ -797,7 +789,7 @@ def idl_dfn_hrefs(
     """
     exploded = (
         idlparsed_df.select(
-            key,
+            "url",
             F.explode(
                 F.from_json(
                     F.get_json_object("idlparsed", "$.idlNames"), _MEMBER_ARGS_SCHEMA
@@ -805,13 +797,13 @@ def idl_dfn_hrefs(
             ).alias("construct", "c"),
         )
         .select(
-            key,
+            "url",
             "construct",
             F.col("c.type").alias("construct_type"),
             F.posexplode_outer("c.members").alias("member_idx", "m"),
         )
     )
-    w = Window.partitionBy(key, "construct", F.col("m.name")).orderBy("member_idx")
+    w = Window.partitionBy("url", "construct", F.col("m.name")).orderBy("member_idx")
     members = exploded.withColumn(
         "overload_index",
         F.when(
@@ -864,7 +856,7 @@ def idl_dfn_hrefs(
 
     # member-level lookup rows + construct-level lookup rows
     member_rows = members.filter(F.col("m").isNotNull() & ~skip).select(
-        key,
+        "url",
         "construct",
         F.col("m.type").alias("raw_member_type"),
         member_name.alias("member"),
@@ -875,7 +867,7 @@ def idl_dfn_hrefs(
     )
     construct_rows = (
         idlparsed_df.select(
-            key,
+            "url",
             F.explode(
                 F.from_json(
                     F.get_json_object("idlparsed", "$.idlNames"),
@@ -884,7 +876,7 @@ def idl_dfn_hrefs(
             ).alias("construct", "c"),
         )
         .select(
-            key,
+            "url",
             "construct",
             F.lit(None).cast("string").alias("raw_member_type"),
             F.lit(None).cast("string").alias("member"),
@@ -898,7 +890,7 @@ def idl_dfn_hrefs(
     lookups = member_rows.unionByName(construct_rows)
 
     d = dfns.select(
-        F.col(key).alias("_durl"),
+        F.col("url").alias("_durl"),
         F.col("type").alias("_dtype"),
         F.col("for").alias("_dfor"),
         F.col("linkingText").alias("_dlt"),
@@ -906,7 +898,7 @@ def idl_dfn_hrefs(
     )
     joined = lookups.join(
         d,
-        (F.col(key) == F.col("_durl"))
+        (F.col("url") == F.col("_durl"))
         & (F.col("dfn_type") == F.col("_dtype"))
         & F.array_contains(F.col("_dlt"), F.col("candidate"))
         & (
@@ -919,7 +911,7 @@ def idl_dfn_hrefs(
         "left",
     )
     per_rank = joined.groupBy(
-        key, "construct", "member", "raw_member_type", "overload_index", "rank"
+        "url", "construct", "member", "raw_member_type", "overload_index", "rank"
     ).agg(
         F.count("_dhref").alias("n_dfns"),
         F.min("_dhref").alias("href_if_any"),
@@ -927,18 +919,18 @@ def idl_dfn_hrefs(
     # first rank with matches wins; >1 match there → ambiguous → null
     best = (
         per_rank.filter(F.col("n_dfns") > 0)
-        .groupBy(key, "construct", "member", "raw_member_type", "overload_index")
+        .groupBy("url", "construct", "member", "raw_member_type", "overload_index")
         .agg(F.min_by(F.struct("n_dfns", "href_if_any"), F.col("rank")).alias("b"))
         .select(
-            key, "construct", "member", "raw_member_type", "overload_index",
+            "url", "construct", "member", "raw_member_type", "overload_index",
             F.when(F.col("b.n_dfns") == 1, F.col("b.href_if_any")).alias("href"),
         )
     )
     all_keys = lookups.select(
-        key, "construct", "member", "raw_member_type", "overload_index"
+        "url", "construct", "member", "raw_member_type", "overload_index"
     ).distinct()
     b = best.select(
-        F.col(key).alias("_bk"),
+        F.col("url").alias("_bk"),
         F.col("construct").alias("_bc"),
         F.col("member").alias("_bm"),
         F.col("raw_member_type").alias("_bt"),
@@ -949,7 +941,7 @@ def idl_dfn_hrefs(
     return (
         all_keys.join(
             b,
-            (F.col(key) == F.col("_bk"))
+            (F.col("url") == F.col("_bk"))
             & (F.col("construct") == F.col("_bc"))
             & F.col("member").eqNullSafe(F.col("_bm"))
             & F.col("raw_member_type").eqNullSafe(F.col("_bt"))
@@ -982,10 +974,10 @@ _IDLEXT_FRAG_SCHEMA = (
 )
 
 
-def _idl_defined(idlparsed_df: DataFrame, key: str) -> DataFrame:
+def _idl_defined(idlparsed_df: DataFrame) -> DataFrame:
     """One row per (spec, name) from idlNames: type, inheritance, fragment."""
     return idlparsed_df.select(
-        F.col(key).alias("spec"),
+        F.col("url").alias("spec"),
         F.explode(
             F.from_json(
                 F.get_json_object("idlparsed", "$.idlNames"), _IDLNAMES_FRAG_SCHEMA
@@ -1000,13 +992,13 @@ def _idl_defined(idlparsed_df: DataFrame, key: str) -> DataFrame:
     )
 
 
-def _idl_extended(idlparsed_df: DataFrame, key: str) -> DataFrame:
+def _idl_extended(idlparsed_df: DataFrame) -> DataFrame:
     """One row per (spec, name, ext_idx) from idlExtendedNames: fragment +
     optional includes mixin (ext order preserved — the reference appends
     extensions in report order, idlnames.js:232-246)."""
     return (
         idlparsed_df.select(
-            F.col(key).alias("spec"),
+            F.col("url").alias("spec"),
             F.explode(
                 F.from_json(
                     F.get_json_object("idlparsed", "$.idlExtendedNames"),
@@ -1027,11 +1019,13 @@ def _idl_extended(idlparsed_df: DataFrame, key: str) -> DataFrame:
     )
 
 
+# idlnames' dependency closure doubles its path length this many times:
+# chains up to 2^4 = 16 hops
+CLOSURE_ROUNDS = 4
+
+
 def idlnames_fragments(
-    idlparsed_df: DataFrame,
-    titles: DataFrame | None = None,
-    key: str = "url",
-    closure_rounds: int = 4,
+    idlparsed_df: DataFrame, titles: DataFrame | None = None
 ) -> DataFrame:
     """Per-IDL-name fragment assembly with dependency closure — the
     crawl-level idlnames post-processor (idlnames.js:176-260 builds the
@@ -1051,7 +1045,7 @@ def idlnames_fragments(
     * ``extended_specs`` — specs extending the name, in order
     * ``deps`` — sorted transitive inheritance+includes dependency names
       (the closure addDfns walks; cycles are cut by the bounded doubling
-      closure, 2^``closure_rounds`` hops, mirroring the reference's cycle
+      closure, 2^``CLOSURE_ROUNDS`` hops, mirroring the reference's cycle
       break at idlnames.js:262-276)
 
     ``titles``: optional (url, title) table; spec title falls back to the
@@ -1063,11 +1057,11 @@ def idlnames_fragments(
     (partial aggregation); the closure is log-many self-equi-joins on the
     (name, dep) edge table, which is tiny relative to the page corpus.
     """
-    defined = _idl_defined(idlparsed_df, key)
-    extended = _idl_extended(idlparsed_df, key)
+    defined = _idl_defined(idlparsed_df)
+    extended = _idl_extended(idlparsed_df)
     if titles is not None:
         t = titles.select(
-            F.col(key).alias("spec"), F.col("title").alias("_title")
+            F.col("url").alias("spec"), F.col("title").alias("_title")
         )
         defined = defined.join(t, on="spec", how="left")
         extended = extended.join(t, on="spec", how="left")
@@ -1153,7 +1147,7 @@ def idlnames_fragments(
     # The checkpoint truncates that lineage, and its blocks — (name, dep)
     # pairs, tiny at any corpus scale — belong to the returned plan.
     closure = closure.localCheckpoint()
-    for _ in range(closure_rounds):
+    for _ in range(CLOSURE_ROUNDS):
         hop = closure.alias("a").join(
             closure.alias("b"), F.col("a.dep") == F.col("b.name")
         ).select(F.col("a.name").alias("name"), F.col("b.dep").alias("dep"))
@@ -1167,7 +1161,7 @@ def idlnames_fragments(
     ).drop("inheritance")
 
 
-def expected_dfns_from_idl(idlparsed_df: DataFrame, key: str = "url") -> DataFrame:
+def expected_dfns_from_idl(idlparsed_df: DataFrame) -> DataFrame:
     """Expected-definition long table from parsed IDL — the
     getExpectedDfnsFromIdl / getExpectedDfnFromIdlDesc kernels
     (src/cli/check-missing-dfns.js:96-258): one row per IDL construct or
@@ -1181,7 +1175,7 @@ def expected_dfns_from_idl(idlparsed_df: DataFrame, key: str = "url") -> DataFra
     operations, HTML element constructors.
     """
     named = idlparsed_df.select(
-        F.col(key).alias("spec"),
+        F.col("url").alias("spec"),
         F.explode(
             F.from_json(
                 F.get_json_object("idlparsed", "$.idlNames"), _IDLNAMES_FRAG_SCHEMA
@@ -1190,7 +1184,7 @@ def expected_dfns_from_idl(idlparsed_df: DataFrame, key: str = "url") -> DataFra
     )
     ext = (
         idlparsed_df.select(
-            F.col(key).alias("spec"),
+            F.col("url").alias("spec"),
             F.explode(
                 F.from_json(
                     F.get_json_object("idlparsed", "$.idlExtendedNames"),
@@ -1343,7 +1337,7 @@ def expected_dfns_from_idl(idlparsed_df: DataFrame, key: str = "url") -> DataFra
 
 
 def match_idl_dfns(
-    expected: DataFrame, dfns: DataFrame, key: str = "url"
+    expected: DataFrame, dfns: DataFrame
 ) -> DataFrame:
     """matchIdlDfn as a relational join (check-missing-dfns.js:331-348):
     a dfn matches when its linking texts — after stripping ``!overload-N``
@@ -1359,7 +1353,7 @@ def match_idl_dfns(
     """
     has_idx = "dfn_idx" in dfns.columns
     d = dfns.select(
-        F.col(key).alias("_durl"),
+        F.col("url").alias("_durl"),
         F.col("type").alias("_dtype"),
         F.coalesce(F.col("for"), F.array().cast("array<string>")).alias("_dfor"),
         F.transform(
@@ -1700,12 +1694,7 @@ def idlparsed_run(spec: dict, ast: bool = False) -> dict:
     return spec
 
 
-def idlnames_dfns(
-    idlparsed_df: DataFrame,
-    dfns: DataFrame,
-    key: str = "url",
-    closure_rounds: int = 4,
-) -> DataFrame:
+def idlnames_dfns(idlparsed_df: DataFrame, dfns: DataFrame) -> DataFrame:
     """Per-IDL-name related-definition sets with dependency closure — the
     ``options.dfns`` path of the idlnames post-processor
     (idlnames.js getRelatedDfns:44-88 + addDfns:316-356): every IDL name
@@ -1719,11 +1708,9 @@ def idlnames_dfns(
     join, and the bounded-doubling dependency closure from
     ``idlnames_fragments``. Returns distinct (name, spec, href) rows.
     """
-    frag = idlnames_fragments(
-        idlparsed_df, None, key=key, closure_rounds=closure_rounds
-    ).select("name", "deps")
-    expected = expected_dfns_from_idl(idlparsed_df, key=key)
-    matched = match_idl_dfns(expected, dfns, key=key).filter(
+    frag = idlnames_fragments(idlparsed_df).select("name", "deps")
+    expected = expected_dfns_from_idl(idlparsed_df)
+    matched = match_idl_dfns(expected, dfns).filter(
         F.col("href").isNotNull()
     )
     own = matched.select(F.col("root").alias("dep"), "spec", "href")

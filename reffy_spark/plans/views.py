@@ -43,16 +43,16 @@ CDDL_SCHEMA = "array<struct<name:string, cddl:string>>"
 ELEMENT_SCHEMA = "array<struct<name:string, href:string, interface:string>>"
 
 
-def headings_table(extracts: DataFrame, key: str = "url") -> DataFrame:
+def headings_table(extracts: DataFrame) -> DataFrame:
     return extracts.select(
-        key, F.explode(F.from_json("headings", HEADING_SCHEMA)).alias("h")
-    ).select(key, "h.*")
+        "url", F.explode(F.from_json("headings", HEADING_SCHEMA)).alias("h")
+    ).select("url", "h.*")
 
 
-def dfns_table(extracts: DataFrame, key: str = "url") -> DataFrame:
+def dfns_table(extracts: DataFrame) -> DataFrame:
     return extracts.select(
-        key, F.explode(F.from_json("dfns", DFN_SCHEMA)).alias("d")
-    ).select(key, "d.*")
+        "url", F.explode(F.from_json("dfns", DFN_SCHEMA)).alias("d")
+    ).select("url", "d.*")
 
 
 def ids_table(extracts: DataFrame, key: str = "url") -> DataFrame:
@@ -74,22 +74,22 @@ def refs_table(extracts: DataFrame, key: str = "url") -> DataFrame:
     return out
 
 
-def events_table(extracts: DataFrame, key: str = "url") -> DataFrame:
+def events_table(extracts: DataFrame) -> DataFrame:
     return extracts.select(
-        key, F.explode(F.from_json("events", EVENT_SCHEMA)).alias("e")
-    ).select(key, "e.*")
+        "url", F.explode(F.from_json("events", EVENT_SCHEMA)).alias("e")
+    ).select("url", "e.*")
 
 
-def cddl_table(extracts: DataFrame, key: str = "url") -> DataFrame:
+def cddl_table(extracts: DataFrame) -> DataFrame:
     return extracts.select(
-        key, F.explode(F.from_json("cddl", CDDL_SCHEMA)).alias("c")
-    ).select(key, "c.*")
+        "url", F.explode(F.from_json("cddl", CDDL_SCHEMA)).alias("c")
+    ).select("url", "c.*")
 
 
-def elements_table(extracts: DataFrame, key: str = "url") -> DataFrame:
+def elements_table(extracts: DataFrame) -> DataFrame:
     return extracts.select(
-        key, F.explode(F.from_json("elements", ELEMENT_SCHEMA)).alias("e")
-    ).select(key, "e.*")
+        "url", F.explode(F.from_json("elements", ELEMENT_SCHEMA)).alias("e")
+    ).select("url", "e.*")
 
 
 ALGORITHM_SCHEMA = (
@@ -98,12 +98,12 @@ ALGORITHM_SCHEMA = (
 )
 
 
-def algorithms_table(extracts: DataFrame, key: str = "url") -> DataFrame:
+def algorithms_table(extracts: DataFrame) -> DataFrame:
     """Long table of algorithms with their document-order index (W6)."""
     return extracts.select(
-        key,
+        "url",
         F.posexplode(F.from_json("algorithms", ALGORITHM_SCHEMA)).alias("algo_idx", "a"),
-    ).select(key, "algo_idx", "a.rationale", "a.name", "a.href", "a.steps")
+    ).select("url", "algo_idx", "a.rationale", "a.name", "a.href", "a.steps")
 
 
 CSS_PROPERTY_SCHEMA = (
@@ -112,9 +112,9 @@ CSS_PROPERTY_SCHEMA = (
 )
 
 
-def css_properties_table(extracts: DataFrame, key: str = "url") -> DataFrame:
+def css_properties_table(extracts: DataFrame) -> DataFrame:
     """Long table of CSS property definitions from the css JSON column."""
-    parsed = extracts.select(key, F.from_json("css", CSS_PROPERTY_SCHEMA).alias("c"))
+    parsed = extracts.select("url", F.from_json("css", CSS_PROPERTY_SCHEMA).alias("c"))
     return parsed.select(
-        key, F.explode("c.properties").alias("p")
-    ).select(key, "p.name", "p.href", "p.value", "p.newValues", "p.initial", "p.inherited")
+        "url", F.explode("c.properties").alias("p")
+    ).select("url", "p.name", "p.href", "p.value", "p.newValues", "p.initial", "p.inherited")

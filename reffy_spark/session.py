@@ -15,14 +15,14 @@ from pyspark.sql import SparkSession
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def build_pyfiles_zip(out_path: str | None = None) -> str:
+def build_pyfiles_zip() -> str:
     """Package ``reffy_spark`` as a zip for ``spark-submit --py-files``.
 
     On a real cluster this is how executors receive the package; locally
     ``get_spark`` also exports PYTHONPATH so forked Python workers can
     unpickle UDFs regardless of driver cwd.
     """
-    out_path = out_path or os.path.join("/tmp", "reffy_spark_pyfiles.zip")
+    out_path = os.path.join("/tmp", "reffy_spark_pyfiles.zip")
     pkg_dir = os.path.join(_REPO_ROOT, "reffy_spark")
     with zipfile.ZipFile(out_path, "w", zipfile.ZIP_DEFLATED) as zf:
         for root, _dirs, files in os.walk(pkg_dir):

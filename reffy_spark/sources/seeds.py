@@ -35,8 +35,8 @@ def read_seed_list(spark: SparkSession, path: str) -> DataFrame:
     return with_input_order_index(df)
 
 
-def with_input_order_index(df: DataFrame, out: str = "seed_idx") -> DataFrame:
-    """Attach a 0-based INPUT-ORDER index without an unpartitioned
+def with_input_order_index(df: DataFrame) -> DataFrame:
+    """Attach a 0-based INPUT-ORDER index ``seed_idx`` without an unpartitioned
     data-sized window (the r5 ``row_number().over(Window.orderBy(...))``
     single-task sort — VERDICT r5 "What's wrong" #3).
 
@@ -76,7 +76,7 @@ def with_input_order_index(df: DataFrame, out: str = "seed_idx") -> DataFrame:
     in_part = F.col("_mid").bitwiseAND(F.lit((1 << 33) - 1))
     return (
         tagged.join(F.broadcast(offsets), "_pid")
-        .withColumn(out, (F.col("_off") + in_part).cast("long"))
+        .withColumn("seed_idx", (F.col("_off") + in_part).cast("long"))
         .drop("_mid", "_pid", "_off")
     )
 

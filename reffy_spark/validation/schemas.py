@@ -20,14 +20,12 @@ BOOL = {"type": "boolean"}
 INT = {"type": "integer"}
 
 
-def obj(required=(), props=None, addl=False, prop_names=None):
-    s: dict = {"type": "object", "additionalProperties": addl}
+def obj(required=(), props=None):
+    s: dict = {"type": "object", "additionalProperties": False}
     if required:
         s["required"] = list(required)
     if props:
         s["properties"] = props
-    if prop_names is not None:
-        s["propertyNames"] = prop_names
     return s
 
 

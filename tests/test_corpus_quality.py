@@ -168,7 +168,7 @@ def test_domain_cap_matches_direct_window(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     got = sorted(
         (r["domain"], r["rank"], r["doc_id"])
-        for r in domain_cap(docs, cap=5, salts=4).collect()
+        for r in domain_cap(docs, cap=5).collect()
     )
     w = Window.partitionBy("source").orderBy(
         F.col("quality").desc(), F.col("doc_id")
@@ -225,11 +225,12 @@ def test_pack_sequences_stream_positions(spark):
     from reffy_spark.operators.corpus_quality import pack_sequences
 
     df = spark.createDataFrame(
-        [(0, 5), (1, 3), (2, 0), (3, 9), (4, 2)], ["doc_id", "n"]
+        [(i, " ".join(["w"] * n)) for i, n in enumerate([5, 3, 0, 9, 2])],
+        ["doc_id", "text"],
     )
     out = [
         tuple(r)
-        for r in pack_sequences(df, window=4, count_col="n")
+        for r in pack_sequences(df, window=4)
         .orderBy("doc_id")
         .collect()
     ]
@@ -254,18 +255,19 @@ def test_pack_sequences_matches_naive_global_window(spark, reuse):
 
     df = spark.range(0, 199).select(
         F.col("id").alias("doc_id"), (F.pmod("id", 17) + 1).alias("n")
-    )
+    ).withColumn("text", F.repeat(F.lit("w "), F.col("n")))
     old = spark.conf.get("spark.sql.exchange.reuse", "true")
+    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.exchange.reuse", reuse)
+    spark.conf.set("spark.sql.shuffle.partitions", "7")
     try:
         two_phase = {
             r.doc_id: (r.start_offset, r.first_bin, r.last_bin)
-            for r in pack_sequences(
-                df, window=32, count_col="n", num_parts=7
-            ).collect()
+            for r in pack_sequences(df, window=32).collect()
         }
     finally:
         spark.conf.set("spark.sql.exchange.reuse", old)
+        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     w = W.orderBy("doc_id").rowsBetween(W.unboundedPreceding, -1)
     naive = {
         r.doc_id: (r.s, r.s // 32, (r.s + r.n - 1) // 32)
@@ -332,14 +334,13 @@ def test_doc_keywords_rank_and_ties(spark):
     from reffy_spark.operators.text_analysis import doc_keywords
 
     docs = spark.createDataFrame(
-        [(0, "zz zz yy yy aa bb the the the")], ["doc_id", "text"]
+        [(0, "zz zz yy yy aa bb cc dd ee the the the")], ["doc_id", "text"]
     )
-    rows = sorted(
-        doc_keywords(docs, k=3).collect(), key=lambda r: r["rank"]
-    )
-    # stopword "the" excluded despite highest tf; tf ties break by token
+    rows = sorted(doc_keywords(docs).collect(), key=lambda r: r["rank"])
+    # stopword "the" excluded despite highest tf; tf ties break by token;
+    # the top 5 of the 7 keywords are kept
     assert [(r["token"], r["tf"], r["rank"]) for r in rows] == [
-        ("yy", 2, 1), ("zz", 2, 2), ("aa", 1, 3)
+        ("yy", 2, 1), ("zz", 2, 2), ("aa", 1, 3), ("bb", 1, 4), ("cc", 1, 5)
     ]
 
 

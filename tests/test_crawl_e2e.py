@@ -631,8 +631,7 @@ def test_pending_operator_results_survive_later_calls(spark, corpus):
                 "cast(id % 4 as int) AS d",
             ),
             depth_col=F.col("d"),
-            priority_col=F.col("p"),
-        )
+        ).withColumn("priority", F.col("p"))
         robots = spark.createDataFrame(
             [(f"h{k}.test", "/", True, 1) for k in range(3)],
             "host string, path_prefix string, allow boolean, crawl_delay_ms int",
@@ -660,11 +659,10 @@ def test_pending_operator_results_survive_later_calls(spark, corpus):
         ),
         "pack_sequences": lambda n: pack_sequences(
             spark.range(0, n).select(
-                F.col("id").alias("doc_id"), (F.pmod("id", 17) + 1).alias("n")
+                F.col("id").alias("doc_id"),
+                F.repeat(F.lit("w "), F.pmod("id", 17) + 1).alias("text"),
             ),
             window=32,
-            count_col="n",
-            num_parts=7,
         ),
         "apportion_budget": lambda n: apportion_budget(
             spark.createDataFrame(
@@ -803,6 +801,35 @@ def test_release_removes_round_state_dir(spark, corpus):
     assert not os.path.exists(state_dir)
     assert eng._state_dir is None
     assert _engine_fetches(eng.crawl(seeds, max_rounds=2)) == first
+    eng.release()
+
+
+def test_checkpointed_crawl_leaves_no_working_set_cached(spark, corpus, tmp_path):
+    # every consumer of a checkpointed round's working sets (batch,
+    # candidates, new_urls) has run once the round's commits and metrics
+    # are done, so none of them is still cached when the crawl returns
+    from pyspark.storagelevel import StorageLevel
+
+    pages, seeds, robots = corpus
+    eng = CrawlEngine(
+        spark, pages, robots, checkpoint_dir=str(tmp_path / "chk"),
+        modules=["links"],
+    )
+    made = []
+    orig = eng._materialize
+
+    def spy(df, name, rnd, durable=True):
+        out = orig(df, name, rnd, durable)
+        if not durable:
+            made.append((name, rnd, out))
+        return out
+
+    eng._materialize = spy
+    eng.crawl(seeds, max_rounds=2)
+    assert {name for name, _, _ in made} == {"batch", "candidates", "new_urls"}
+    assert [
+        (name, rnd) for name, rnd, df in made if df.storageLevel != StorageLevel.NONE
+    ] == []
     eng.release()
 
 

@@ -147,14 +147,6 @@ def test_classifier_score_deterministic_and_bounded(docs):
     assert a[4]["n_tokens"] == 0 and a[4]["clf_score"] == 0.0 and a[4]["keep"]
 
 
-def test_classifier_threshold_moves_keep(docs):
-    strict = {
-        r["doc_id"]: r["keep"]
-        for r in classifier_score(docs, threshold=2.0).collect()
-    }
-    assert not any(strict.values())  # score is bounded by 1, nothing survives
-
-
 def test_classifier_is_zero_shuffle(docs):
     plan = (
         classifier_score(docs)._jdf.queryExecution().executedPlan().toString()

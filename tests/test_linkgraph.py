@@ -5,13 +5,15 @@ from pyspark.sql import functions as F
 
 
 def test_pagerank_hand_computed(spark):
-    """A→B, B→A, A→C at scale=100, damping 85%, 2 iterations.
+    """A→B, B→A, A→C at scale 10^6, damping 85%, 2 iterations.
 
-    base = 15; r0 = 100 everywhere.
-    iter1: contrib(A→·) = (100*85) DIV 200 = 42, contrib(B→A) = 85
-           → A=100, B=57, C=57
-    iter2: contrib(A→·) = 42, contrib(B→A) = (57*85) DIV 100 = 48
-           → A=63, B=57, C=57
+    base = 150000; r0 = 1000000 everywhere.
+    iter1: contrib(A→·) = (1000000*85) DIV 200 = 425000,
+           contrib(B→A) = 850000
+           → A=1000000, B=575000, C=575000
+    iter2: contrib(A→·) = 425000,
+           contrib(B→A) = (575000*85) DIV 100 = 488750
+           → A=638750, B=575000, C=575000
     """
     from reffy_spark.operators.linkgraph import pagerank
 
@@ -20,11 +22,11 @@ def test_pagerank_hand_computed(spark):
     )
     out = {
         r["url"]: r.asDict()
-        for r in pagerank(edges, n_iter=2, scale=100).collect()
+        for r in pagerank(edges, n_iter=2).collect()
     }
-    assert out["A"]["rank_fp"] == 63
-    assert out["B"]["rank_fp"] == 57
-    assert out["C"]["rank_fp"] == 57
+    assert out["A"]["rank_fp"] == 638750
+    assert out["B"]["rank_fp"] == 575000
+    assert out["C"]["rank_fp"] == 575000
     assert (out["A"]["out_degree"], out["A"]["in_degree"]) == (2, 1)
     assert (out["C"]["out_degree"], out["C"]["in_degree"]) == (0, 1)
 
@@ -185,8 +187,8 @@ def test_pagerank_priority_drives_politeness_selection(spark):
     with_rank = urls.join(
         ranked.withColumnRenamed("url", "u"), urls.url == F.col("u")
     )
-    pending = to_frontier(
-        with_rank, priority_col=F.col("rank_fp").cast("double")
+    pending = to_frontier(with_rank).withColumn(
+        "priority", F.col("rank_fp").cast("double")
     )
     robots = spark.createDataFrame(
         [("h0.test", "/", True, 100)],

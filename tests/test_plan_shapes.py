@@ -156,9 +156,11 @@ def _unbounded_politeness_world(spark):
         "cast(id % 5 as double) AS p",
         "cast(id % 4 as int) AS d",
     )
-    pending = to_frontier(
-        urls, depth_col=F.col("d"), priority_col=F.col("p")
-    ).repartition(17)
+    pending = (
+        to_frontier(urls, depth_col=F.col("d"))
+        .withColumn("priority", F.col("p"))
+        .repartition(17)
+    )
     robots = spark.createDataFrame(
         [(f"h{k}.test", "/", True, 1) for k in range(3)],
         "host string, path_prefix string, allow boolean, crawl_delay_ms int",

@@ -86,17 +86,15 @@ def _skewed_asof_world(spark):
 
 def test_asof_skewsafe_matches_direct_on_skewed_corpus(spark):
     """Bit-identical to the single-window asof_join when one key holds
-    50% of the rows and spans many range partitions (num_parts=8)."""
+    50% of the rows and spans many range partitions (the session's 8
+    shuffle partitions)."""
     from reffy_spark.operators.temporal import asof_join, asof_join_skewsafe
 
     left, right = _skewed_asof_world(spark)
     want = sorted(
         tuple(r) for r in asof_join(left, right).collect()
     )
-    got = sorted(
-        tuple(r)
-        for r in asof_join_skewsafe(left, right, num_parts=8).collect()
-    )
+    got = sorted(tuple(r) for r in asof_join_skewsafe(left, right).collect())
     assert got == want
     assert len(got) == 600
 
@@ -114,12 +112,12 @@ def test_asof_skewsafe_plan_bounded_sorts(spark):
     from reffy_spark.operators import temporal as T
 
     left, right = _skewed_asof_world(spark)
-    out = asof_join_skewsafe(left, right, num_parts=8)
+    out = asof_join_skewsafe(left, right)
     plan = out._jdf.queryExecution().executedPlan().toString()
     # the working set is eagerly checkpointed (ADVICE r6) — the range
     # exchange lives in the checkpoint job; assert it on the
     # pre-checkpoint fragment and the frozen scan in the result
-    u, _ = T._asof_union(left, right, "user_id", "ts", ("value",))
+    u, _ = T._asof_union(left, right)
     pre = FR._sliced(u, 8, "user_id", "ts", "_tag")
     pre_plan = pre._jdf.queryExecution().executedPlan().toString().lower()
     assert "rangepartitioning" in pre_plan
@@ -186,9 +184,7 @@ def test_sessionize_skewsafe_matches_direct_on_skewed_corpus(spark):
             rows.append((eid, k, t))
     ev = spark.createDataFrame(rows, "event_id long, user_id long, ts timestamp")
     want = sorted(tuple(r) for r in sessionize(ev).collect())
-    got = sorted(
-        tuple(r) for r in sessionize_skewsafe(ev, num_parts=8).collect()
-    )
+    got = sorted(tuple(r) for r in sessionize_skewsafe(ev).collect())
     assert got == want
     assert len(got) == 600
 
@@ -206,7 +202,7 @@ def test_sessionize_skewsafe_plan_bounded_sorts(spark):
     )
     from reffy_spark.operators import frontier as FR
 
-    out = sessionize_skewsafe(ev, num_parts=8)
+    out = sessionize_skewsafe(ev)
     plan = out._jdf.queryExecution().executedPlan().toString()
     # range exchange lives in the eager checkpoint job (ADVICE r6)
     pre = FR._sliced(ev, 8, "user_id", "ts")
@@ -242,16 +238,22 @@ def test_pending_skewsafe_plans_survive_any_later_calls(spark):
     from reffy_spark.operators import temporal as T
 
     left, right = _skewed_asof_world(spark)
-    pending = T.asof_join_skewsafe(left, right, num_parts=8)  # not evaluated
+    pending = T.asof_join_skewsafe(left, right)  # not evaluated
 
     events = spark.createDataFrame(
         [(1, dt.datetime(2024, 1, 1, 0, m)) for m in range(5)],
         "user_id long, ts timestamp",
     )
-    T.sessionize_skewsafe(events, num_parts=4).collect()
+    # a later call over a different slice count
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    try:
+        T.sessionize_skewsafe(events).collect()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
     # the r5 hazard case: a SECOND asof call before the pending plan is
     # evaluated — must not perturb it either
-    T.asof_join_skewsafe(left, right, num_parts=8).collect()
+    T.asof_join_skewsafe(left, right).collect()
 
     want = sorted(tuple(r) for r in T.asof_join(left, right).collect())
     assert sorted(tuple(r) for r in pending.collect()) == want
@@ -259,9 +261,9 @@ def test_pending_skewsafe_plans_survive_any_later_calls(spark):
 
 def test_skew_safe_auto_routing(spark):
     """r5 watch-list: the convenient API is skew-proof by default at
-    scale. skew_safe=False keeps the direct single-window plan,
-    True forces the two-phase twin, and "auto" (default) routes by
-    Catalyst's size estimate — all three return identical rows."""
+    scale. Small inputs keep the direct single-window plan, the
+    two-phase twin is its own public function, and ``asof_join`` routes
+    by Catalyst's size estimate — all three return identical rows."""
     from reffy_spark.operators import temporal as T
 
     left, right = _skewed_asof_world(spark)
@@ -274,12 +276,11 @@ def test_skew_safe_auto_routing(spark):
     def is_skewsafe(df):
         return "_pid" in plan_of(df)
 
-    direct = T.asof_join(left, right, skew_safe=False)
+    # tiny input: the routing stays on the direct plan
+    direct = T.asof_join(left, right)
     assert not is_skewsafe(direct)
-    forced = T.asof_join(left, right, skew_safe=True)
+    forced = T.asof_join_skewsafe(left, right)
     assert is_skewsafe(forced)
-    # tiny input: auto stays on the direct plan
-    assert not is_skewsafe(T.asof_join(left, right))
     want = sorted(tuple(r) for r in direct.collect())
     assert sorted(tuple(r) for r in forced.collect()) == want
 
@@ -321,7 +322,7 @@ def test_sessionize_auto_routing(spark):
     def plan_of(df):
         return df._jdf.queryExecution().executedPlan().toString().lower()
 
-    direct = T.sessionize(events, skew_safe=False)
+    direct = T.sessionize(events)
     assert "_pid" not in plan_of(direct)
     want = sorted(tuple(r) for r in direct.collect())
     import tempfile
