@@ -100,7 +100,8 @@ def fetch_with_fallback(
 
     Returns (fetched_ok, missed): ``fetched_ok`` is each matched batch
     row with its page columns (``html``, plus ``warc_ts``/``final_url``
-    and, for redirect detection, ``page_url`` when pages carry them);
+    when pages carry them, and ``page_url`` for redirect detection
+    whenever ``final_url`` is there);
     ``missed`` is keys only — the batch rows (``url_canon`` + batch
     metadata) with no page. The caller gives misses their ``notfound``
     status and any fallback data.
@@ -118,7 +119,7 @@ def fetch_with_fallback(
     fetch_cols = ["url_canon", "html"] + [
         c for c in ("warc_ts", "final_url") if c in pages.columns
     ]
-    if "final_url" in pages.columns and "page_url" in pages.columns:
+    if "final_url" in pages.columns:
         # redirect detection compares the landed URL against the RAW
         # request URL (specs-crawler.js:144-146) — page_url rides the
         # fetch join only when the crawl opted into final_url
@@ -535,16 +536,10 @@ class CrawlEngine:
             # request URL, NOT its canonicalization — a page whose URL only
             # changes under canonicalization, e.g. http→https rewrite or an
             # index.html strip, is NOT a redirect and keeps its cache info).
-            # page_url rides the fetch join only when final_url does; the
-            # url_canon fallback covers external pages tables without it.
-            redirect_base = (
-                F.col("page_url")
-                if "page_url" in fetched_ok.columns
-                else F.col("url_canon")
-            )
+            # page_url rides the fetch join whenever final_url does.
             redirected = (
                 F.col("final_url").isNotNull()
-                & (F.col("final_url") != redirect_base)
+                & (F.col("final_url") != F.col("page_url"))
                 if has_redirects
                 else F.lit(False)
             )
@@ -560,9 +555,7 @@ class CrawlEngine:
                 # it for the post-extraction cache-info NULLing
                 fetched_ok = fetched_ok.withColumn(
                     "_redirected", F.coalesce(redirected, F.lit(False))
-                )
-                if "page_url" in fetched_ok.columns:
-                    fetched_ok = fetched_ok.drop("page_url")
+                ).drop("page_url")
                 redirected = F.col("_redirected")
             # Each source below adds only the result columns it knows; one
             # unionByName fills the rest with NULLs and one select derives

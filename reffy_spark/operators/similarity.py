@@ -179,7 +179,6 @@ def lsh_buckets(
     emb: DataFrame,
     dim: int,
     n_planes: int = 8,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     from reffy_spark.operators.dedupe import spread_small_input
 
@@ -187,7 +186,7 @@ def lsh_buckets(
     # operator; a one-split local scan would run them all on one task
     # (plan-time decision, no-op at scale — guide §1.2)
     return spread_small_input(emb).select(
-        F.col(id_col).alias("vec_id"),
+        "vec_id",
         "embedding",
         lsh_bucket_col(F.col("embedding"), dim, n_planes).alias("bucket"),
     )
@@ -237,9 +236,9 @@ def ann_topk_batch(
     k: int = 10,
     n_planes: int = 8,
     hamming: int = 1,
-    q_id_col: str = "query_id",
 ) -> DataFrame:
-    """Batch ANN: top-k for a TABLE of query vectors in one plan — the
+    """Batch ANN: top-k for a TABLE of query vectors (``vec_id``,
+    ``embedding`` rows, like ``emb``) in one plan — the
     production shape at scale, vs ``ann_topk_lsh``'s single driver-side
     probe vector (VERDICT r6 "What's wrong" #3: no per-query
     ``.first()``, no per-query job).
@@ -262,7 +261,7 @@ def ann_topk_batch(
     from pyspark.sql import Window
 
     b = lsh_buckets(emb, dim, n_planes)
-    qb = lsh_buckets(queries, dim, n_planes, q_id_col).select(
+    qb = lsh_buckets(queries, dim, n_planes).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_vec"),
         "bucket",

@@ -768,8 +768,7 @@ def q_ann_topk_batch(spark, sf_dir):
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 97 == 0)
     return S.ann_topk_batch(
-        emb, queries, dim=64, k=10, n_planes=_MP_N_PLANES, hamming=1,
-        q_id_col="vec_id",
+        emb, queries, dim=64, k=10, n_planes=_MP_N_PLANES, hamming=1
     )
 
 
@@ -1277,10 +1276,15 @@ ORACLE_QUALITY_FILTER = f"""
 """
 
 
+# the pigeonhole banding guarantees EXACT recall up to this distance
+# (dedupe.simhash_near_pairs docstring)
+_SIMHASH_MAX_HAMMING = D.SIMHASH_BANDS - 1
+
+
 def q_simhash_pairs(spark, sf_dir):
-    # max_hamming = SIMHASH_BANDS - 1 = 3: the pigeonhole banding guarantees
-    # EXACT recall for this contract (dedupe.simhash_near_pairs docstring)
-    return D.simhash_near_pairs(load(spark, sf_dir, "documents"), max_hamming=3)
+    return D.simhash_near_pairs(
+        load(spark, sf_dir, "documents"), max_hamming=_SIMHASH_MAX_HAMMING
+    )
 
 
 def q_minhash_pairs_fast(spark, sf_dir):
@@ -1304,7 +1308,7 @@ BENCH_ONLY = {
 }
 
 
-def _oracle_simhash_pairs(max_hamming: int = 16) -> str:
+def _oracle_simhash_pairs() -> str:
     n_bands = 4
     band_bits = 32 // n_bands
     mask = (1 << band_bits) - 1
@@ -1322,7 +1326,7 @@ def _oracle_simhash_pairs(max_hamming: int = 16) -> str:
         ON l.band = r.band AND l.slice = r.slice AND l.doc_id < r.doc_id
     )
     SELECT doc_a, doc_b, CAST(bit_count(xor(ha, hb)) AS INT) AS hamming
-    FROM cand WHERE bit_count(xor(ha, hb)) <= {max_hamming}
+    FROM cand WHERE bit_count(xor(ha, hb)) <= {_SIMHASH_MAX_HAMMING}
     """
 
 
@@ -1344,7 +1348,7 @@ ORACLES.update(
         "merge_crawls": ORACLE_MERGE_CRAWLS,
         "idl_members": ORACLE_IDL_MEMBERS,
         "quality_filter": ORACLE_QUALITY_FILTER,
-        "simhash_pairs": _oracle_simhash_pairs(max_hamming=3),
+        "simhash_pairs": _oracle_simhash_pairs(),
     }
 )
 

@@ -22,7 +22,7 @@ from reffy_spark.plans import postprocess as PP
 from reffy_spark.plans import views as V
 
 
-def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
@@ -42,7 +42,7 @@ def _json_str(col) -> F.Column:
 
 
 def _docs(spark, sf_dir) -> DataFrame:
-    return load(spark, sf_dir, "documents").select("doc_id")
+    return _load(spark, sf_dir, "documents").select("doc_id")
 
 
 # ===========================================================================
@@ -2065,7 +2065,7 @@ def _q_grams(n: int) -> str:
 def q_repetition_profile(spark, sf_dir):
     from reffy_spark.operators.corpus_quality import repetition_profile
 
-    return repetition_profile(load(spark, sf_dir, "documents"))
+    return repetition_profile(_load(spark, sf_dir, "documents"))
 
 
 ORACLE_REPETITION_PROFILE = f"""
@@ -2151,7 +2151,7 @@ def q_decontaminate(spark, sf_dir):
     synthetic eval set); flag corpus docs by 5-gram overlap."""
     from reffy_spark.operators.corpus_quality import decontaminate
 
-    d = load(spark, sf_dir, "documents")
+    d = _load(spark, sf_dir, "documents")
     bench = d.filter(F.col("doc_id") % 20 == 7)
     return decontaminate(d, bench, n=5, threshold=0.2)
 
@@ -2186,7 +2186,7 @@ def q_stratified_sample(spark, sf_dir):
     from reffy_spark.operators.corpus_quality import stratified_sample
 
     return stratified_sample(
-        load(spark, sf_dir, "documents"),
+        _load(spark, sf_dir, "documents"),
         rates_per_mille={"en": 250, "fr": 500, "de": 750},
         default_rate=1000,
     )
@@ -2244,7 +2244,7 @@ EXT_ORACLES.update(
 def q_token_stats(spark, sf_dir):
     from reffy_spark.operators.text_analysis import token_stats
 
-    return token_stats(load(spark, sf_dir, "documents"))
+    return token_stats(_load(spark, sf_dir, "documents"))
 
 
 def _bpe_pat_sql() -> str:
@@ -2317,7 +2317,7 @@ _IVF_ASG_CTE = f"""
 def q_ivf_cells(spark, sf_dir):
     from reffy_spark.operators import similarity as S
 
-    return S.ivf_cells(load(spark, sf_dir, "embeddings"), n_centroids=_IVF_K)
+    return S.ivf_cells(_load(spark, sf_dir, "embeddings"), n_centroids=_IVF_K)
 
 
 ORACLE_IVF_CELLS = f"""
@@ -2330,7 +2330,7 @@ ORACLE_IVF_CELLS = f"""
 def q_ann_topk_ivf(spark, sf_dir):
     from reffy_spark.operators import similarity as S
 
-    emb = load(spark, sf_dir, "embeddings")
+    emb = _load(spark, sf_dir, "embeddings")
     q0 = emb.filter(F.col("vec_id") == 0).first()["embedding"]
     return S.ann_topk_ivf(
         emb, list(q0), k=10, n_centroids=_IVF_K, nprobe=_IVF_NPROBE
@@ -2419,7 +2419,7 @@ def q_ann_topk_ivf_trained(spark, sf_dir):
     through assignment, cell pruning, and ADC-free flat scoring."""
     from reffy_spark.operators import similarity as S
 
-    emb = load(spark, sf_dir, "embeddings")
+    emb = _load(spark, sf_dir, "embeddings")
     q0 = emb.filter(F.col("vec_id") == 0).first()["embedding"]
     return S.ann_topk_ivf(
         emb, list(q0), k=10, nprobe=_IVF_NPROBE,
@@ -2492,7 +2492,7 @@ def q_pq_cells(spark, sf_dir):
     + full coverage of the subspace argmin assignment math."""
     from reffy_spark.operators import similarity as S
 
-    return S.pq_cells(load(spark, sf_dir, "embeddings"), m=_PQ_M, k=_PQ_K)
+    return S.pq_cells(_load(spark, sf_dir, "embeddings"), m=_PQ_M, k=_PQ_K)
 
 
 ORACLE_PQ_CELLS = f"""
@@ -2508,7 +2508,7 @@ def q_ann_topk_pq(spark, sf_dir):
     = m element_at lookups summed in subspace order."""
     from reffy_spark.operators import similarity as S
 
-    emb = load(spark, sf_dir, "embeddings")
+    emb = _load(spark, sf_dir, "embeddings")
     q0 = emb.filter(F.col("vec_id") == 0).first()["embedding"]
     return S.ann_topk_pq(emb, list(q0), k=10, m=_PQ_M, n_codes=_PQ_K)
 
@@ -2537,7 +2537,7 @@ def q_ann_topk_ivfadc(spark, sf_dir):
     composition at 10^10+ vectors."""
     from reffy_spark.operators import similarity as S
 
-    emb = load(spark, sf_dir, "embeddings")
+    emb = _load(spark, sf_dir, "embeddings")
     q0 = emb.filter(F.col("vec_id") == 0).first()["embedding"]
     return S.ann_topk_ivfadc(
         emb, list(q0), k=10, n_centroids=_IVF_K, nprobe=_IVF_NPROBE,
@@ -2672,7 +2672,7 @@ def q_ann_topk_pq_trained(spark, sf_dir):
     table)."""
     from reffy_spark.operators import similarity as S
 
-    emb = load(spark, sf_dir, "embeddings")
+    emb = _load(spark, sf_dir, "embeddings")
     q0 = emb.filter(F.col("vec_id") == 0).first()["embedding"]
     return S.ann_topk_pq(emb, list(q0), k=10, books=_PQ_TRAINED_BOOKS)
 
@@ -2700,7 +2700,7 @@ def q_ann_topk_ivfadc_trained(spark, sf_dir):
     (tools/train_pq.py) score the survivors."""
     from reffy_spark.operators import similarity as S
 
-    emb = load(spark, sf_dir, "embeddings")
+    emb = _load(spark, sf_dir, "embeddings")
     q0 = emb.filter(F.col("vec_id") == 0).first()["embedding"]
     return S.ann_topk_ivfadc(
         emb, list(q0), k=10, nprobe=_IVF_NPROBE,
@@ -2788,7 +2788,7 @@ EXT_ORACLES.update(
 def q_domain_cap(spark, sf_dir):
     from reffy_spark.operators.corpus_quality import domain_cap
 
-    return domain_cap(load(spark, sf_dir, "documents"), cap=10)
+    return domain_cap(_load(spark, sf_dir, "documents"), cap=10)
 
 
 ORACLE_DOMAIN_CAP = f"""
@@ -2827,7 +2827,7 @@ EXT_ORACLES.update({"domain_cap": ORACLE_DOMAIN_CAP})
 # idlparsed full webidl2-shaped AST (closes the disclosed simplified-AST
 # divergence: structured idlType records, extended-attribute objects,
 # argument records — src/postprocessing/idlparsed.js stores the full
-# webidl2.js parse; see functions/webidl_ast.py)
+# webidl2.js parse; see functions/webidl.py)
 # ---------------------------------------------------------------------------
 
 
@@ -2837,7 +2837,7 @@ def q_idlparsed_ast(spark, sf_dir):
     url. The oracle is a hand-embedded webidl2.js-shape template — NOT
     generated from the parser — so it independently pins the AST
     contract."""
-    d = load(spark, sf_dir, "documents").select("doc_id")
+    d = _load(spark, sf_dir, "documents").select("doc_id")
     i = _s(F.col("doc_id"))
     overload = F.when(
         F.col("doc_id") % 4 == 0,
@@ -2931,7 +2931,7 @@ def q_line_dedup(spark, sf_dir):
     (dropped everywhere except its first carrier), other lines unique."""
     from reffy_spark.operators.corpus_quality import line_dedup
 
-    d = load(spark, sf_dir, "documents").select("doc_id")
+    d = _load(spark, sf_dir, "documents").select("doc_id")
     i = _s(F.col("doc_id"))
     lines = [
         F.when(
@@ -2978,7 +2978,7 @@ EXT_ORACLES["line_dedup"] = ORACLE_LINE_DEDUP
 def q_pack_sequences(spark, sf_dir):
     from reffy_spark.operators.corpus_quality import pack_sequences
 
-    return pack_sequences(load(spark, sf_dir, "documents"), window=256)
+    return pack_sequences(_load(spark, sf_dir, "documents"), window=256)
 
 
 ORACLE_PACK_SEQUENCES = f"""
@@ -3017,7 +3017,7 @@ def q_pii_scan(spark, sf_dir):
     from reffy_spark.operators.curation import pii_scan
     from reffy_spark.operators.dedupe import h60
 
-    d = load(spark, sf_dir, "documents")
+    d = _load(spark, sf_dir, "documents")
     i = F.col("doc_id")
     em = F.when(
         h60(F.concat(F.lit("pii-e#"), _s(i))) % 3 == 0,
@@ -3096,7 +3096,7 @@ def q_url_filter(spark, sf_dir):
     1-in-4 a tracking param)."""
     from reffy_spark.operators.curation import url_filter
 
-    d = load(spark, sf_dir, "documents")
+    d = _load(spark, sf_dir, "documents")
     i = F.col("doc_id")
     tld = F.element_at(
         F.array(F.lit("com"), F.lit("net"), F.lit("org")),
@@ -3164,7 +3164,7 @@ EXT_ORACLES["url_filter"] = ORACLE_URL_FILTER
 def q_classifier_score(spark, sf_dir):
     from reffy_spark.operators.curation import classifier_score
 
-    return classifier_score(load(spark, sf_dir, "documents"))
+    return classifier_score(_load(spark, sf_dir, "documents"))
 
 
 ORACLE_CLASSIFIER_SCORE = f"""
@@ -3205,7 +3205,7 @@ def q_duplicate_spans(spark, sf_dir):
     docs — real duplicated-span structure without synthetic planting)."""
     from reffy_spark.operators.dedupe import duplicate_spans
 
-    return duplicate_spans(load(spark, sf_dir, "documents"), window=8)
+    return duplicate_spans(_load(spark, sf_dir, "documents"), window=8)
 
 
 ORACLE_DUPLICATE_SPANS = f"""
@@ -3274,7 +3274,7 @@ def q_bigram_novelty(spark, sf_dir):
     vocabulary yields a dense bigram table with real singleton tail)."""
     from reffy_spark.operators.text_analysis import bigram_novelty
 
-    return bigram_novelty(load(spark, sf_dir, "documents"))
+    return bigram_novelty(_load(spark, sf_dir, "documents"))
 
 
 ORACLE_BIGRAM_NOVELTY = f"""
@@ -3463,7 +3463,7 @@ def q_asof_prior_signup(spark, sf_dir):
     kdb aj / DuckDB ASOF JOIN semantics via union + running last."""
     from reffy_spark.operators.temporal import asof_join
 
-    ev = load(spark, sf_dir, "events")
+    ev = _load(spark, sf_dir, "events")
     left = ev.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts", "value"
     )
@@ -3496,7 +3496,7 @@ def q_asof_skewsafe(spark, sf_dir):
     oracle. Proves the hot-key-safe path against DuckDB's native ASOF."""
     from reffy_spark.operators.temporal import asof_join_skewsafe
 
-    ev = load(spark, sf_dir, "events")
+    ev = _load(spark, sf_dir, "events")
     left = ev.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts", "value"
     )
@@ -3510,7 +3510,7 @@ def q_sessionize_events(spark, sf_dir):
     """Gap-based sessionization (30-min gap) of the event stream."""
     from reffy_spark.operators.temporal import sessionize
 
-    ev = load(spark, sf_dir, "events").select(
+    ev = _load(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "event_type"
     )
     return sessionize(ev)
@@ -3538,7 +3538,7 @@ def q_sessionize_skewsafe(spark, sf_dir):
     the hot-key-safe path against the direct-window DuckDB SQL."""
     from reffy_spark.operators.temporal import sessionize_skewsafe
 
-    ev = load(spark, sf_dir, "events").select(
+    ev = _load(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "event_type"
     )
     return sessionize_skewsafe(ev)
@@ -3549,7 +3549,7 @@ def q_session_stats(spark, sf_dir):
     sums) — bit-exact vs the oracle."""
     from reffy_spark.operators.temporal import session_stats
 
-    ev = load(spark, sf_dir, "events").select("event_id", "user_id", "ts")
+    ev = _load(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     return session_stats(ev)
 
 
@@ -3593,7 +3593,7 @@ def q_doc_keywords(spark, sf_dir):
     tf-idf keyword extraction (df is monotone in idf)."""
     from reffy_spark.operators.text_analysis import doc_keywords
 
-    return doc_keywords(load(spark, sf_dir, "documents"))
+    return doc_keywords(_load(spark, sf_dir, "documents"))
 
 
 ORACLE_DOC_KEYWORDS = f"""

@@ -272,16 +272,15 @@ def idlparsed(
     (parse-webidl.js:85-130) — an Arrow-batched stage over (url, idl).
     ``ast=True`` emits FULL webidl2.js-shaped constructs (the reference's
     exact payload — structured idlType/extAttrs/default records, see
-    ``functions/webidl_ast.py``) instead of the simplified normal form."""
+    ``functions/webidl.py``) instead of the simplified normal form. Either
+    way a dump with a construct that fails to parse records
+    ``_syntaxError`` on its row."""
     import json
     from collections.abc import Iterator
 
     import pandas as pd
 
-    from reffy_spark.functions.webidl import parse_idl
-
-    if ast:
-        from reffy_spark.functions.webidl_ast import build_report_ast
+    from reffy_spark.functions.webidl import build_report_ast, parse_idl
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
@@ -1576,27 +1575,20 @@ def idlparsed_run(spec: dict, ast: bool = False) -> dict:
     reference-parity tests. With ``ast=True`` the report carries FULL
     webidl2.js-shaped constructs (structured idlType records, extended-
     attribute objects, default/const value records — the reference's
-    exact payload shape, see ``functions/webidl_ast.py``); the default
+    exact payload shape, see ``functions/webidl.py``); the default
     is the simplified normal form the oracles assert against. Enum
     values are plain strings in the simplified shape, so enum-value
     linking happens at the relational layer only.
     """
-    from reffy_spark.functions.webidl import parse_idl
+    from reffy_spark.functions.webidl import build_report_ast, parse_idl
 
     if not spec.get("idl"):
         return spec
-    report = parse_idl(spec["idl"])
+    report = (build_report_ast if ast else parse_idl)(spec["idl"])
     err = report.pop("_syntaxError", None)
     if err is not None:
         spec["idlparsed"] = err
         return spec
-    if ast:
-        from reffy_spark.functions.webidl_ast import build_report_ast
-
-        # the lenient simplified parse above already vouched the IDL is
-        # well-formed, so the strict AST parse should not throw; if it
-        # does, surface it (a parser gap, not a spec error)
-        report = build_report_ast(spec["idl"])
     spec["idlparsed"] = report
 
     dfns = spec.get("dfns")

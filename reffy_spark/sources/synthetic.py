@@ -65,7 +65,7 @@ def url_of_page(i: int) -> str:
     return f"https://{host}/spec-{i}/"
 
 
-def link_targets(i: int, n_pages: int) -> list[int]:
+def page_link_targets(i: int, n_pages: int) -> list[int]:
     """Deterministic outgoing-link page ids (the crawl graph)."""
     return sorted({(i * m + m) % n_pages for m in _LINK_MULTS} - {i})
 
@@ -77,7 +77,7 @@ def _sha40(i: int) -> str:
 def page_html(i: int, n_pages: int) -> str:
     """Spec-shaped HTML embedding every extractor pattern family
     (FIXTURES.md §1); all content a pure function of ``i``."""
-    targets = link_targets(i, n_pages)
+    targets = page_link_targets(i, n_pages)
     gen = ["bikeshed", "respec", ""][i % 3]
     gen_meta = f'<meta name="generator" content="{gen} 1.0">' if gen else ""
     links_html = "".join(

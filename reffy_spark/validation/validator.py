@@ -1,10 +1,9 @@
 """Minimal JSON-Schema-subset validator for extract/postprocessing outputs.
 
 The reference compiles its schemas with Ajv and validates every extract
-in tests (/root/reference/src/lib/util.js:1065-1140, used by every
-test/extract-*.js). This sandbox has no jsonschema package, so this is a
-from-scratch validator covering exactly the keyword subset the reference
-schemas use: type (incl. type unions with "null"), required, properties,
+in tests (src/lib/util.js:1065-1140, used by every test/extract-*.js).
+This is a from-scratch validator covering exactly the keyword subset the
+reference schemas use: type (incl. type unions with "null"), required, properties,
 additionalProperties (false | schema), propertyNames, items, enum,
 const, oneOf, anyOf, pattern, minLength, minItems, and $ref into a
 named-definition registry ("#" = the root schema, for self-recursive

@@ -86,7 +86,7 @@ def test_crawl_order_is_seed_order(engine_result, corpus):
 
 
 def test_links_table_matches_generator(engine_result, spark):
-    # outgoing links of every fetched page == deterministic link_targets()
+    # outgoing links of every fetched page == deterministic page_link_targets()
     links = engine_result.links.select("url_canon", "page_url").distinct().collect()
     by_src = {}
     for r in links:
@@ -99,7 +99,7 @@ def test_links_table_matches_generator(engine_result, spark):
         if not m:
             continue  # collapsed canonical (whatwg root): content id ambiguous
         i = int(m.group(1))
-        expect = {syn.url_of_page(t) for t in syn.link_targets(i, N_PAGES)}
+        expect = {syn.url_of_page(t) for t in syn.page_link_targets(i, N_PAGES)}
         # the .head repo link must have been EXCLUDED by the extractor
         assert f"https://github.example/repo-{i}" not in targets
         assert targets == expect, src

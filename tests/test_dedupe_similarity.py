@@ -154,7 +154,7 @@ def test_ann_batch_matches_per_query_probes(spark, emb):
 
     queries = emb.filter(F.col("vec_id") % 100 == 0)
     batch = S.ann_topk_batch(
-        emb, queries, dim=64, k=5, n_planes=6, hamming=1, q_id_col="vec_id"
+        emb, queries, dim=64, k=5, n_planes=6, hamming=1
     )
     rows = batch.collect()
     by_q = {}
@@ -181,7 +181,7 @@ def test_ann_batch_hamming2_matches_per_query(spark, emb):
 
     queries = emb.filter(F.col("vec_id") % 200 == 0)
     batch = S.ann_topk_batch(
-        emb, queries, dim=64, k=5, n_planes=6, hamming=2, q_id_col="vec_id"
+        emb, queries, dim=64, k=5, n_planes=6, hamming=2
     )
     by_q = {}
     for r in batch.collect():
@@ -202,7 +202,7 @@ def test_ann_batch_single_plan_shape(spark, emb):
 
     queries = emb.filter(F.col("vec_id") % 100 == 0)
     out = S.ann_topk_batch(
-        emb, queries, dim=64, k=5, n_planes=6, hamming=1, q_id_col="vec_id"
+        emb, queries, dim=64, k=5, n_planes=6, hamming=1
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan

@@ -12,6 +12,10 @@ parameter of a public definition is passed by some caller outside the
 tests, and no such caller passes a keyword or an argument count that
 its callee no longer takes (the tests never run the tools or the
 legacy bench scripts, so nothing else would notice).
+
+Public names are unique across the package: callers are matched by
+name only, so a dead definition could hide behind a live one that
+shares its name.
 """
 
 import ast
@@ -128,6 +132,19 @@ def test_every_public_def_has_a_caller():
     assert unexplained == {}
     # an allowlisted name that gained a caller, or is gone, leaves the list
     assert sorted(set(ALLOWED) - set(uncalled)) == []
+
+
+def test_public_names_are_unique():
+    where = {}
+    for path in sorted(PKG.rglob("*.py")):
+        for stmt in ast.parse(path.read_text(), str(path)).body:
+            if isinstance(
+                stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ) and not stmt.name.startswith("_"):
+                where.setdefault(stmt.name, []).append(
+                    f"{path.relative_to(ROOT)}:{stmt.lineno}"
+                )
+    assert {n: at for n, at in where.items() if len(at) > 1} == {}
 
 
 def _public_functions():

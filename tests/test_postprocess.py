@@ -160,6 +160,20 @@ def test_idlparsed_stage(idlparsed_df):
     assert report["exposed"] == {"Window": ["Widget"]}
 
 
+@pytest.mark.parametrize("ast", [False, True])
+def test_idlparsed_malformed_dump_errors_its_row_only(spark, ast):
+    extracts = spark.createDataFrame(
+        [("https://ok.test/", "interface ok {};"), ("https://bad.test/", "intraface foo {};")],
+        "url string, idl string",
+    )
+    rows = {r["url"]: json.loads(r["idlparsed"]) for r in PP.idlparsed(extracts, ast=ast).collect()}
+    assert list(rows["https://ok.test/"]["idlNames"]) == ["ok"]
+    assert "_syntaxError" not in rows["https://ok.test/"]
+    assert rows["https://bad.test/"]["_syntaxError"] == (
+        "WebIDLParseError: Syntax error at line 1:\nintraface foo {};\n^ Unrecognised tokens"
+    )
+
+
 def test_members_table_overloads(idlparsed_df):
     members = PP.idl_members_table(idlparsed_df)
     shows = members.filter(F.col("member") == "show").orderBy("overload_index").collect()

@@ -1,4 +1,4 @@
-"""webidl2.js-shaped AST parity (functions/webidl_ast.py).
+"""webidl2.js-shaped AST parity (``build_report_ast`` in functions/webidl.py).
 
 The reference's idlparsed payload embeds the full webidl2.js AST
 (src/postprocessing/idlparsed.js; schema common.json $defs
@@ -9,16 +9,13 @@ generated from the parser under test.
 
 import pytest
 
-from reffy_spark.functions.webidl import parse_idl
-from reffy_spark.functions.webidl_ast import (
-    build_report_ast,
-    parse_webidl2,
-)
+from reffy_spark.functions.webidl import build_report_ast, parse_idl
 from reffy_spark.plans.postprocess import idlparsed_run
 
 
 def _one(idl: str) -> dict:
-    out = parse_webidl2(idl)
+    report = build_report_ast(idl)
+    out = [*report["idlNames"].values(), *sum(report["idlExtendedNames"].values(), [])]
     assert len(out) == 1
     return out[0]
 
@@ -193,10 +190,10 @@ def test_maplike_readonly():
 
 
 def test_includes_and_fragment():
-    out = parse_webidl2("A includes B;")
-    assert out[0]["type"] == "includes"
-    assert out[0]["target"] == "A" and out[0]["includes"] == "B"
-    assert out[0]["fragment"] == "A includes B;"
+    c = _one("A includes B;")
+    assert c["type"] == "includes"
+    assert c["target"] == "A" and c["includes"] == "B"
+    assert c["fragment"] == "A includes B;"
 
 
 def test_dictionary_required_field():
