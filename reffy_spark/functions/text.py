@@ -81,6 +81,20 @@ def tokens_col(text: Column) -> Column:
     return F.filter(F.split(F.trim(text), r"\s+"), lambda t: t != "")
 
 
+def ngrams_col(toks: Column, n: int) -> Column:
+    """Word n-grams of a token array, WITH multiplicity (repetition
+    stats need the counts; ``array_distinct`` of it is the shingle set).
+
+    Docs shorter than n tokens get an empty array: Spark's
+    ``sequence(1, 0)`` DESCENDS to [1, 0] (unlike DuckDB's empty
+    ``range``), which would feed slice() an invalid 0 start."""
+    idx = F.sequence(F.lit(1), F.size(toks) - F.lit(n - 1))
+    grams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
+    return F.when(F.size(toks) >= n, grams).otherwise(
+        F.array().cast("array<string>")
+    )
+
+
 def token_count_col(text: Column) -> Column:
     return F.size(tokens_col(text))
 

@@ -87,8 +87,12 @@ class _AstParser:
         j = self.i + k
         return self.toks[j] if j < len(self.toks) else None
 
-    def next(self):
+    def next(self) -> str:
+        """The next token; the end of the dump where the grammar needs a
+        token is a syntax error."""
         t = self.peek()
+        if t is None:
+            raise ValueError("unexpected end of input")
         self.i += 1
         return t
 
@@ -107,7 +111,7 @@ class _AstParser:
         return self.spans[self.i][0] if self.i < len(self.spans) else -1
 
     def prev_end(self) -> int:
-        return self.spans[min(self.i, len(self.spans)) - 1][1] if self.i else -1
+        return self.spans[self.i - 1][1] if self.i else -1
 
     # -- extended attributes ------------------------------------------------
     def parse_ext_attrs(self) -> list[dict]:
@@ -229,8 +233,6 @@ class _AstParser:
         if t == "{":
             self.expect("}")
             return {"type": "dictionary"}
-        if t is None:
-            return {"type": "null"}
         if t.startswith('"'):
             return {"type": "string", "value": t.strip('"')}
         if t == "null":
@@ -427,9 +429,10 @@ class _AstParser:
             except ValueError:
                 self.syntax_error = self.syntax_error or self._syntax_error_at(start)
                 # resume after the construct's `;`, unless the failure ate it
-                if self.i == i0 or self.toks[min(self.i, len(self.toks)) - 1] != ";":
-                    while self.next() not in (";", None):
-                        pass
+                if self.i == i0 or self.toks[self.i - 1] != ";":
+                    while self.peek() not in (";", None):
+                        self.i += 1
+                    self.eat(";")
                 continue
             if c is not None:
                 c["fragment"] = self.idl[start : self.prev_end()].strip()

@@ -40,11 +40,12 @@ from pyspark.sql import functions as F
 
 from reffy_spark.functions.text import (
     lang_id_col,
+    ngrams_col,
     quality_score_col,
     token_count_col,
     tokens_col,
 )
-from reffy_spark.operators.dedupe import h60
+from reffy_spark.operators.dedupe import h60, shingles_col
 
 __all__ = [
     "repetition_profile",
@@ -65,20 +66,6 @@ def lines_col(text: Column) -> Column:
     return F.filter(
         F.transform(F.split(text, "\n"), lambda l: F.trim(l)),
         lambda l: l != "",
-    )
-
-
-def ngrams_col(toks: Column, n: int) -> Column:
-    """Word n-grams WITH multiplicity (unlike ``dedupe.shingles_col``,
-    which is distinct — repetition stats need the counts).
-
-    Docs shorter than n tokens get an empty array: Spark's
-    ``sequence(1, 0)`` DESCENDS to [1, 0] (unlike DuckDB's empty
-    ``range``), which would feed slice() an invalid 0 start."""
-    idx = F.sequence(F.lit(1), F.size(toks) - F.lit(n - 1))
-    grams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
-    return F.when(F.size(toks) >= n, grams).otherwise(
-        F.array().cast("array<string>")
     )
 
 
@@ -247,9 +234,7 @@ def decontaminate(
     The benchmark gram table is broadcast (eval sets are tiny relative
     to a training corpus); the corpus side is explode + per-doc count.
     """
-    grams = F.explode(
-        F.array_distinct(ngrams_col(tokens_col(F.col("text")), n))
-    ).alias("gram")
+    grams = F.explode(shingles_col(F.col("text"), n)).alias("gram")
     bgrams = benchmark.select(grams).distinct()
     dgrams = docs.select("doc_id", grams)
     overlap = (
@@ -258,10 +243,7 @@ def decontaminate(
         .agg(F.count("*").alias("n_overlap"))
     )
     base = docs.select(
-        "doc_id",
-        F.size(F.array_distinct(ngrams_col(tokens_col(F.col("text")), n)))
-        .cast("long")
-        .alias("n_grams"),
+        "doc_id", F.size(shingles_col(F.col("text"), n)).cast("long").alias("n_grams")
     )
     return base.join(overlap, "doc_id", "left").select(
         "doc_id",

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from reffy_spark.functions.text import token_count_col, tokens_col
+from reffy_spark.functions.text import ngrams_col, token_count_col, tokens_col
 
 # portable 60-bit hash of a string expression
 def h60(c: Column) -> Column:
@@ -70,19 +70,9 @@ def exact_duplicates(docs: DataFrame) -> DataFrame:
 
 
 def shingles_col(text: Column, n: int = 3) -> Column:
-    """Word n-gram shingles (distinct), as an array<string> Column.
-
-    Docs shorter than n tokens get an empty array: Spark's
-    ``sequence(1, 0)`` DESCENDS to [1, 0] (unlike DuckDB's empty
-    ``range``), which would feed slice() an invalid 0 start."""
-    toks = tokens_col(text)
-    idx = F.sequence(F.lit(1), F.size(toks) - F.lit(n - 1))
-    grams = F.array_distinct(
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
-    )
-    return F.when(F.size(toks) >= n, grams).otherwise(
-        F.array().cast("array<string>")
-    )
+    """Word n-gram shingles (distinct), as an array<string> Column; empty
+    for docs shorter than n tokens."""
+    return F.array_distinct(ngrams_col(tokens_col(text), n))
 
 
 def minhash_from_shingles(
@@ -154,7 +144,6 @@ def lsh_candidate_pairs(
     sigs: DataFrame,
     bands: int = 4,
     rows_per_band: int = 4,
-    materialize: bool = False,
 ) -> DataFrame:
     """MinHash-LSH banding: hash each band of the signature, bucket-join.
 
@@ -162,22 +151,19 @@ def lsh_candidate_pairs(
     the per-band groupBy on (band, band_hash); pairs are generated inside
     buckets via a self-equi-join on the bucket key — never a cross join.
 
-    ``materialize=True`` checkpoints the slim banded table (doc_id + one
-    hash per band) before the self-join: without it BOTH join sides
-    re-evaluate the k-permutation MinHash lineage (guide §2.4 — a
+    The slim banded table (doc_id + one hash per band) is checkpointed
+    before the self-join: without it BOTH join sides re-evaluate the
+    k-permutation MinHash lineage (guide §2.4 — a
     self-join is two consumers of the same expensive subtree; at scale
     the banded table is the intermediate you would write out anyway).
     """
-    k = bands * rows_per_band
     band_cols = []
     for b in range(bands):
         parts = [F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)]
         band_cols.append(
             F.md5(F.concat_ws(",", *[p.cast("string") for p in parts])).alias(f"band{b}")
         )
-    banded = sigs.select("doc_id", *band_cols)
-    if materialize:
-        banded = banded.localCheckpoint(eager=True)
+    banded = sigs.select("doc_id", *band_cols).localCheckpoint(eager=True)
     stacked = banded.select(
         "doc_id",
         F.explode(
@@ -228,7 +214,7 @@ def minhash_dedup_pairs(
         .localCheckpoint(eager=True)
     )
     sigs = sh.select("doc_id", *minhash_from_shingles(F.col("sh"), k, hash_mode))
-    cand = lsh_candidate_pairs(sigs, bands, rows_per_band, materialize=True)
+    cand = lsh_candidate_pairs(sigs, bands, rows_per_band)
     a = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
     verified = (

@@ -142,13 +142,10 @@ def fold_bloom(bloom: Bloom, df: DataFrame) -> Bloom:
 # scan shape wins and keeps winning as seen grows
 _SCAN_ANTI_MIN_BYTES = 64 * 1024 * 1024
 
-# a left/candidate side estimated above this is not broadcastable — the
-# scan shape's premise fails and the plain shuffle anti-join is correct
+# a left/candidate side estimated above this (or with no estimate) is
+# not known to be broadcastable — the scan shape's premise fails and the
+# plain shuffle anti-join is correct
 _SCAN_ANTI_MAX_LEFT_BYTES = 256 * 1024 * 1024
-
-# row-count twin of the byte guard, used when Catalyst has no estimate
-# (crawl round state is lineage-truncated): ~100 B/url key → ~200 MB
-_SCAN_ANTI_MAX_LEFT_ROWS = 2_000_000
 
 
 from reffy_spark.plan_stats import estimated_bytes as _estimated_bytes
@@ -176,16 +173,13 @@ def anti_join_scan(
     ~1 s that a trivial shuffle doesn't (r7 bench: urlseen_antijoin
     1.6× at sf0.1 before this routing). A LEFT side that is itself
     large (not broadcastable) also keeps the plain shuffle: the scan
-    shape's premise is a round-bounded candidate set. When Catalyst has
-    an estimate the 256 MB byte guard decides (checkpointed/persisted
-    round state does report estimates); when it genuinely doesn't
-    (RDD-backed frames return the unknown sentinel), a BOUNDED
-    limit-probe counts at most ~_SCAN_ANTI_MAX_LEFT_ROWS+1 left rows
-    (limit early-exits, so the probe's cost does not grow with left)
-    before committing to a broadcast — an explosive-fan-out round
-    degrades to the plain anti-join instead of OOMing the driver. An
-    unknown SEEN estimate still routes to the scan shape: seen is the
-    side that grows.
+    shape's premise is a round-bounded candidate set. The 256 MB byte
+    guard decides on Catalyst's estimate (checkpointed, persisted and
+    file-backed frames report one); a left side with no estimate
+    (RDD-backed frames return the unknown sentinel) is treated as large
+    and keeps the plain anti-join, so no probe job runs and no unbounded
+    key set is broadcast. An unknown SEEN estimate still routes to the
+    scan shape: seen is the side that grows.
 
     ``left_unique=True``: the caller guarantees one row per key (e.g. a
     deduped frontier candidate set), so the broadcast key set skips its
@@ -197,13 +191,7 @@ def anti_join_scan(
     if est is not None and est < _SCAN_ANTI_MIN_BYTES:
         return left.join(seen_keys, on="url_canon", how="left_anti")
     left_est = _estimated_bytes(left)
-    if left_est is not None:
-        if left_est > _SCAN_ANTI_MAX_LEFT_BYTES:
-            return left.join(seen_keys, on="url_canon", how="left_anti")
-    elif (
-        left.select("url_canon").limit(_SCAN_ANTI_MAX_LEFT_ROWS + 1).count()
-        > _SCAN_ANTI_MAX_LEFT_ROWS
-    ):
+    if left_est is None or left_est > _SCAN_ANTI_MAX_LEFT_BYTES:
         return left.join(seen_keys, on="url_canon", how="left_anti")
     keys = left.select("url_canon")
     if not left_unique:

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from reffy_spark.plans.views import idl_extended_names_table, idl_names_table
+
 # --------------------------------------------------------------------------
 # backrefs (J7) — the flagship cross-spec join
 # --------------------------------------------------------------------------
@@ -303,24 +305,14 @@ def idl_members_table(idlparsed_df: DataFrame) -> DataFrame:
     member_type, idl_type, static) with W4 overload numbering
     (row_number per (url, construct, member) — parse-webidl's overload
     index, src/postprocessing/idlparsed.js:31-34)."""
-    schema = (
-        "map<string, struct<type:string, inheritance:string, "
-        "members:array<struct<type:string, name:string, idlType:string, "
-        "static:boolean>>>>"
-    )
     exploded = (
-        idlparsed_df.select(
-            "url",
-            F.explode(
-                F.from_json(F.get_json_object("idlparsed", "$.idlNames"), schema)
-            ).alias("construct", "c"),
-        )
+        idl_names_table(idlparsed_df)
         .select(
             "url",
-            "construct",
-            F.col("c.type").alias("construct_type"),
-            F.col("c.inheritance").alias("inheritance"),
-            F.posexplode_outer("c.members").alias("member_idx", "m"),
+            F.col("name").alias("construct"),
+            F.col("construct.type").alias("construct_type"),
+            F.col("construct.inheritance").alias("inheritance"),
+            F.posexplode_outer("construct.members").alias("member_idx", "m"),
         )
         .select(
             "url",
@@ -377,17 +369,10 @@ def events_with_handlers(events: DataFrame, handlers: DataFrame) -> DataFrame:
 
 def includes_table(idlparsed_df: DataFrame) -> DataFrame:
     """(url, target, mixin) rows from `A includes B` statements."""
-    schema = "map<string, array<struct<type:string, target:string, includes:string>>>"
     return (
-        idlparsed_df.select(
-            "url",
-            F.explode(
-                F.from_json(F.get_json_object("idlparsed", "$.idlExtendedNames"), schema)
-            ).alias("name", "exts"),
-        )
-        .select("url", F.explode("exts").alias("e"))
-        .filter(F.col("e.type") == "includes")
-        .select("url", F.col("e.target").alias("target"), F.col("e.includes").alias("mixin"))
+        idl_extended_names_table(idlparsed_df)
+        .filter(F.col("ext.type") == "includes")
+        .select("url", F.col("ext.target").alias("target"), F.col("ext.includes").alias("mixin"))
     )
 
 
@@ -435,22 +420,12 @@ def idlnames(idlparsed_df: DataFrame) -> DataFrame:
     define it and the specs that extend it (partials / includes) — the
     relational form of the reference's idlnames post-processor
     (src/postprocessing/idlnames.js)."""
-    names_schema = "map<string, struct<type:string>>"
-    defined = idlparsed_df.select(
-        F.explode(
-            F.from_json(F.get_json_object("idlparsed", "$.idlNames"), names_schema)
-        ).alias("name", "c"),
-        F.col("url"),
-    ).select("name", F.col("c.type").alias("idl_type"), F.col("url").alias("spec"))
-    ext_schema = "map<string, array<struct<type:string>>>"
-    extended = idlparsed_df.select(
-        F.explode(
-            F.from_json(
-                F.get_json_object("idlparsed", "$.idlExtendedNames"), ext_schema
-            )
-        ).alias("name", "exts"),
-        F.col("url"),
-    ).select("name", F.col("url").alias("spec"))
+    defined = idl_names_table(idlparsed_df).select(
+        "name", F.col("construct.type").alias("idl_type"), F.col("url").alias("spec")
+    )
+    extended = idl_extended_names_table(idlparsed_df).select(
+        "name", F.col("url").alias("spec")
+    )
     agg_def = defined.groupBy("name").agg(
         # min_by over spec, not F.first: when the same IDL name is defined
         # in >1 spec with different parsed types, the chosen type must not
@@ -760,13 +735,6 @@ def attach_interface_tree(
 # J5: idlparsed → dfn href attachment (candidate-name priority join)
 # --------------------------------------------------------------------------
 
-_MEMBER_ARGS_SCHEMA = (
-    "map<string, struct<type:string, inheritance:string, "
-    "members:array<struct<type:string, name:string, value:string, idlType:string, "
-    "special:array<string>, static:boolean, "
-    "arguments:array<struct<name:string, variadic:boolean>>>>>>"
-)
-
 _SKIP_MEMBER_TYPES = ("async_iterable", "iterable", "maplike", "setlike")
 _SKIP_SPECIALS = ("getter", "setter", "stringifier", "deleter")
 
@@ -786,21 +754,11 @@ def idl_dfn_hrefs(
     for array<string>, linkingText array<string>, href).
     Returns (url, construct, member, member_type, overload_index, href).
     """
-    exploded = (
-        idlparsed_df.select(
-            "url",
-            F.explode(
-                F.from_json(
-                    F.get_json_object("idlparsed", "$.idlNames"), _MEMBER_ARGS_SCHEMA
-                )
-            ).alias("construct", "c"),
-        )
-        .select(
-            "url",
-            "construct",
-            F.col("c.type").alias("construct_type"),
-            F.posexplode_outer("c.members").alias("member_idx", "m"),
-        )
+    names = idl_names_table(idlparsed_df)
+    exploded = names.select(
+        "url",
+        F.col("name").alias("construct"),
+        F.posexplode_outer("construct.members").alias("member_idx", "m"),
     )
     w = Window.partitionBy("url", "construct", F.col("m.name")).orderBy("member_idx")
     members = exploded.withColumn(
@@ -864,27 +822,16 @@ def idl_dfn_hrefs(
         "overload_index",
         F.posexplode(candidates).alias("rank", "candidate"),
     )
-    construct_rows = (
-        idlparsed_df.select(
-            "url",
-            F.explode(
-                F.from_json(
-                    F.get_json_object("idlparsed", "$.idlNames"),
-                    "map<string, struct<type:string>>",
-                )
-            ).alias("construct", "c"),
-        )
-        .select(
-            "url",
-            "construct",
-            F.lit(None).cast("string").alias("raw_member_type"),
-            F.lit(None).cast("string").alias("member"),
-            F.split(F.col("c.type"), " ")[0].alias("dfn_type"),
-            F.lit(None).cast("string").alias("dfn_for"),
-            F.lit(0).alias("overload_index"),
-            F.lit(0).alias("rank"),
-            F.col("construct").alias("candidate"),
-        )
+    construct_rows = names.select(
+        "url",
+        F.col("name").alias("construct"),
+        F.lit(None).cast("string").alias("raw_member_type"),
+        F.lit(None).cast("string").alias("member"),
+        F.split(F.col("construct.type"), " ")[0].alias("dfn_type"),
+        F.lit(None).cast("string").alias("dfn_for"),
+        F.lit(0).alias("overload_index"),
+        F.lit(0).alias("rank"),
+        F.col("name").alias("candidate"),
     )
     lookups = member_rows.unionByName(construct_rows)
 
@@ -957,67 +904,6 @@ def idl_dfn_hrefs(
 # (src/postprocessing/idlnames.js:40-391, src/cli/check-missing-dfns.js)
 # --------------------------------------------------------------------------
 
-_IDLNAMES_FRAG_SCHEMA = (
-    "map<string, struct<type:string, name:string, inheritance:string, "
-    "fragment:string, partial:boolean, values:array<string>, "
-    "members:array<struct<type:string, name:string, value:string, "
-    "special:array<string>, extAttrs:array<string>, "
-    "arguments:array<struct<name:string, variadic:boolean>>>>>>"
-)
-_IDLEXT_FRAG_SCHEMA = (
-    "array<struct<type:string, name:string, target:string, includes:string, "
-    "fragment:string, "
-    "members:array<struct<type:string, name:string, value:string, "
-    "special:array<string>, extAttrs:array<string>, "
-    "arguments:array<struct<name:string, variadic:boolean>>>>>>"
-)
-
-
-def _idl_defined(idlparsed_df: DataFrame) -> DataFrame:
-    """One row per (spec, name) from idlNames: type, inheritance, fragment."""
-    return idlparsed_df.select(
-        F.col("url").alias("spec"),
-        F.explode(
-            F.from_json(
-                F.get_json_object("idlparsed", "$.idlNames"), _IDLNAMES_FRAG_SCHEMA
-            )
-        ).alias("name", "c"),
-    ).select(
-        "spec",
-        "name",
-        F.col("c.type").alias("idl_type"),
-        F.col("c.inheritance").alias("inheritance"),
-        F.coalesce(F.col("c.fragment"), F.lit("")).alias("fragment"),
-    )
-
-
-def _idl_extended(idlparsed_df: DataFrame) -> DataFrame:
-    """One row per (spec, name, ext_idx) from idlExtendedNames: fragment +
-    optional includes mixin (ext order preserved — the reference appends
-    extensions in report order, idlnames.js:232-246)."""
-    return (
-        idlparsed_df.select(
-            F.col("url").alias("spec"),
-            F.explode(
-                F.from_json(
-                    F.get_json_object("idlparsed", "$.idlExtendedNames"),
-                    f"map<string, {_IDLEXT_FRAG_SCHEMA}>",
-                )
-            ).alias("name", "exts"),
-        )
-        .select("spec", "name", F.posexplode("exts").alias("ext_idx", "e"))
-        .select(
-            "spec",
-            "name",
-            "ext_idx",
-            F.coalesce(F.col("e.fragment"), F.lit("")).alias("fragment"),
-            F.when(F.col("e.type") == "includes", F.col("e.includes")).alias(
-                "includes"
-            ),
-        )
-    )
-
-
 # idlnames' dependency closure doubles its path length this many times:
 # chains up to 2^4 = 16 hops
 CLOSURE_ROUNDS = 4
@@ -1056,8 +942,23 @@ def idlnames_fragments(
     (partial aggregation); the closure is log-many self-equi-joins on the
     (name, dep) edge table, which is tiny relative to the page corpus.
     """
-    defined = _idl_defined(idlparsed_df)
-    extended = _idl_extended(idlparsed_df)
+    defined = idl_names_table(idlparsed_df).select(
+        F.col("url").alias("spec"),
+        "name",
+        F.col("construct.type").alias("idl_type"),
+        F.col("construct.inheritance").alias("inheritance"),
+        F.coalesce(F.col("construct.fragment"), F.lit("")).alias("fragment"),
+    )
+    # ext_idx keeps the report order the reference appends extensions in
+    extended = idl_extended_names_table(idlparsed_df).select(
+        F.col("url").alias("spec"),
+        "name",
+        "ext_idx",
+        F.coalesce(F.col("ext.fragment"), F.lit("")).alias("fragment"),
+        F.when(F.col("ext.type") == "includes", F.col("ext.includes")).alias(
+            "includes"
+        ),
+    )
     if titles is not None:
         t = titles.select(
             F.col("url").alias("spec"), F.col("title").alias("_title")
@@ -1173,25 +1074,12 @@ def expected_dfns_from_idl(idlparsed_df: DataFrame) -> DataFrame:
     maplike / setlike, unnamed getter/setter/deleter, default toJSON
     operations, HTML element constructors.
     """
-    named = idlparsed_df.select(
-        F.col("url").alias("spec"),
-        F.explode(
-            F.from_json(
-                F.get_json_object("idlparsed", "$.idlNames"), _IDLNAMES_FRAG_SCHEMA
-            )
-        ).alias("name", "c"),
+    named = idl_names_table(idlparsed_df).select(
+        F.col("url").alias("spec"), "name", F.col("construct").alias("c")
     )
     ext = (
-        idlparsed_df.select(
-            F.col("url").alias("spec"),
-            F.explode(
-                F.from_json(
-                    F.get_json_object("idlparsed", "$.idlExtendedNames"),
-                    f"map<string, {_IDLEXT_FRAG_SCHEMA}>",
-                )
-            ).alias("name", "exts"),
-        )
-        .select("spec", "name", F.explode("exts").alias("c"))
+        idl_extended_names_table(idlparsed_df)
+        .select(F.col("url").alias("spec"), "name", F.col("ext").alias("c"))
         .filter(F.col("c.type") != "includes")
     )
 
@@ -1325,13 +1213,11 @@ def expected_dfns_from_idl(idlparsed_df: DataFrame) -> DataFrame:
         )
 
     # roots + enum values come only from idlNames (extensions use
-    # excludeRoot); member rows come from both. The two sources carry
-    # different construct struct shapes, so union the flat RESULTS.
+    # excludeRoot); member rows come from both
     return (
         root_rows(named)
         .unionByName(enum_value_rows(named))
-        .unionByName(member_rows(named))
-        .unionByName(member_rows(ext))
+        .unionByName(member_rows(named.unionByName(ext)))
     )
 
 

@@ -1,10 +1,17 @@
-"""Typed relational views over the extraction output.
+"""Typed relational views over the extraction output and the idlparsed
+report.
 
 ``extract_all`` emits one JSON-string column per module (recursive or
 irregular shapes stay JSON — SURVEY.md §7.3 risk 5); these helpers parse
 the regular ones into long/typed tables with ``from_json`` (JVM-side,
 no Python). Schemas are lifted from the reference's JSON Schemas
 (/root/reference/schemas/browserlib/extract-*.json).
+
+The same holds for one post-processing report: ``idlparsed``
+(``postprocess.idlparsed``, parse-webidl.js:85-130) is declared here
+once, as the construct shape every IDL post-processor reads, and
+``idl_names_table`` / ``idl_extended_names_table`` are the only parses
+of its JSON.
 """
 
 from __future__ import annotations
@@ -118,3 +125,45 @@ def css_properties_table(extracts: DataFrame) -> DataFrame:
     return parsed.select(
         "url", F.explode("c.properties").alias("p")
     ).select("url", "p.name", "p.href", "p.value", "p.newValues", "p.initial", "p.inherited")
+
+
+# One construct of the idlparsed report in its simplified normal form
+# (``functions.webidl.parse_idl``): the union of the fields the IDL
+# post-processors read. idlNames values and idlExtendedNames entries
+# (partials and ``includes`` statements) share it.
+IDL_CONSTRUCT_SCHEMA = (
+    "struct<type:string, name:string, inheritance:string, target:string, "
+    "includes:string, fragment:string, partial:boolean, values:array<string>, "
+    "members:array<struct<type:string, name:string, value:string, "
+    "idlType:string, special:array<string>, static:boolean, "
+    "extAttrs:array<string>, arguments:array<struct<name:string, "
+    "variadic:boolean>>>>>"
+)
+
+
+def idl_names_table(idlparsed_df: DataFrame) -> DataFrame:
+    """(url, name, construct): one row per idlNames entry."""
+    return idlparsed_df.select(
+        "url",
+        F.explode(
+            F.from_json(
+                F.get_json_object("idlparsed", "$.idlNames"),
+                f"map<string, {IDL_CONSTRUCT_SCHEMA}>",
+            )
+        ).alias("name", "construct"),
+    )
+
+
+def idl_extended_names_table(idlparsed_df: DataFrame) -> DataFrame:
+    """(url, name, ext_idx, ext): one row per idlExtendedNames entry,
+    ``ext_idx`` its position in the report (extensions stay in report
+    order, idlnames.js:232-246)."""
+    return idlparsed_df.select(
+        "url",
+        F.explode(
+            F.from_json(
+                F.get_json_object("idlparsed", "$.idlExtendedNames"),
+                f"map<string, array<{IDL_CONSTRUCT_SCHEMA}>>",
+            )
+        ).alias("name", "exts"),
+    ).select("url", "name", F.posexplode("exts").alias("ext_idx", "ext"))

@@ -16,6 +16,10 @@ legacy bench scripts, so nothing else would notice).
 Public names are unique across the package: callers are matched by
 name only, so a dead definition could hide behind a live one that
 shares its name.
+
+The idlparsed report's JSON shape is declared once: only
+``plans/views.py`` parses the ``idlparsed`` column, and every IDL
+post-processor reads its views.
 """
 
 import ast
@@ -315,3 +319,17 @@ def test_no_caller_passes_a_parameter_its_callee_lacks():
             if why:
                 stale[f"{path.relative_to(ROOT)}:{node.lineno}"] = f"{name}: {why}"
     assert stale == {}
+
+
+def test_idlparsed_json_is_parsed_in_one_module():
+    sites = {}  # module -> lines of get_json_object/from_json on idlparsed
+    for path in _caller_files():
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            f = getattr(node, "func", None)
+            name = getattr(f, "attr", getattr(f, "id", None))
+            if name in ("get_json_object", "from_json") and any(
+                isinstance(n, ast.Constant) and n.value == "idlparsed"
+                for n in ast.walk(node.args[0])
+            ):
+                sites.setdefault(str(path.relative_to(ROOT)), []).append(node.lineno)
+    assert list(sites) == ["reffy_spark/plans/views.py"], sites

@@ -374,10 +374,9 @@ def test_fetch_misses_never_shuffle_pages(spark):
 
 
 def test_anti_join_scan_left_guard_on_unknown_stats(spark, monkeypatch):
-    """The scan shape's candidate broadcast must be bounded even when
-    Catalyst has NO estimate for the left side (RDD-backed frames
-    report the unknown-size sentinel): above the row guard the plain
-    anti-join is kept instead of broadcasting an unbounded key set."""
+    """A left side with NO Catalyst estimate (RDD-backed frames report
+    the unknown-size sentinel) is treated as large: the plain anti-join
+    is kept, no candidate key set is broadcast, and no probe job runs."""
     from reffy_spark.operators import frontier as FR
 
     seen = spark.range(0, 200_000).select(
@@ -395,20 +394,16 @@ def test_anti_join_scan_left_guard_on_unknown_stats(spark, monkeypatch):
     # force the scan branch regardless of seen's estimate
     monkeypatch.setattr(FR, "_SCAN_ANTI_MIN_BYTES", 0)
 
-    # below the row guard: scan shape (hit set broadcast, no seen shuffle)
-    monkeypatch.setattr(FR, "_SCAN_ANTI_MAX_LEFT_ROWS", 1_000)
-    small = FR.anti_join_scan(left, seen)
-    assert "BroadcastHashJoin" in plan_of(small)
-    assert small.count() == 0  # every left key is in seen
-
-    # above the row guard: plain left_anti, no broadcast of candidates
-    monkeypatch.setattr(FR, "_SCAN_ANTI_MAX_LEFT_ROWS", 100)
-    big = FR.anti_join_scan(left, seen)
-    import re
-
-    assert re.search(r"Join .*LeftAnti", plan_of(big)) or "LeftAnti" in plan_of(big)
-    # the scan shape's second join broadcasts HITS into a LeftAnti;
-    # the guarded plain path must not broadcast the candidate keys as a
-    # semi-join build side
-    assert "LeftSemi" not in plan_of(big)
-    assert big.count() == 0
+    sc = spark.sparkContext
+    sc.setJobGroup("anti_join_scan_unsized", "plan routing runs no job")
+    try:
+        out = FR.anti_join_scan(left, seen)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("anti_join_scan_unsized")) == []
+    plan = plan_of(out)
+    assert "LeftAnti" in plan
+    # the scan shape's semi-join against the broadcast candidate keys
+    # must not be chosen for an unsized left side
+    assert "LeftSemi" not in plan
+    assert out.count() == 0  # every left key is in seen

@@ -163,7 +163,11 @@ def test_idlparsed_stage(idlparsed_df):
 @pytest.mark.parametrize("ast", [False, True])
 def test_idlparsed_malformed_dump_errors_its_row_only(spark, ast):
     extracts = spark.createDataFrame(
-        [("https://ok.test/", "interface ok {};"), ("https://bad.test/", "intraface foo {};")],
+        [
+            ("https://ok.test/", "interface ok {};"),
+            ("https://bad.test/", "intraface foo {};"),
+            ("https://cut.test/", "interface A { attribute"),  # truncated dump
+        ],
         "url string, idl string",
     )
     rows = {r["url"]: json.loads(r["idlparsed"]) for r in PP.idlparsed(extracts, ast=ast).collect()}
@@ -171,6 +175,9 @@ def test_idlparsed_malformed_dump_errors_its_row_only(spark, ast):
     assert "_syntaxError" not in rows["https://ok.test/"]
     assert rows["https://bad.test/"]["_syntaxError"] == (
         "WebIDLParseError: Syntax error at line 1:\nintraface foo {};\n^ Unrecognised tokens"
+    )
+    assert rows["https://cut.test/"]["_syntaxError"] == (
+        "WebIDLParseError: Syntax error at line 1:\ninterface A { attribute\n^ Unrecognised tokens"
     )
 
 

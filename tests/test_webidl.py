@@ -5,7 +5,12 @@ import pathlib
 
 import pytest
 
-from reffy_spark.functions.webidl import build_report_ast, event_handlers_of, parse_idl
+from reffy_spark.functions.webidl import (
+    build_report_ast,
+    event_handlers_of,
+    parse_idl,
+    tokenize_spans,
+)
 
 IDL = """
 [Exposed=(Window,Worker)]
@@ -106,7 +111,17 @@ def test_empty_and_garbage():
     assert isinstance(r["idlNames"], dict)
 
 @pytest.mark.parametrize(
-    "idl", ["enum E;", "callback C;", "[Exposed=Window interface A {};"]
+    "idl",
+    [
+        "enum E;",
+        "callback C;",
+        "[Exposed=Window interface A {};",
+        # dumps that end inside a construct
+        "interface A { attribute",
+        "dictionary D { required",
+        "interface A {",
+        "interface A { attribute long",
+    ],
 )
 def test_malformed_construct_records_syntax_error(idl):
     # webidl2.js throws on these; the report keeps its message instead
@@ -152,3 +167,13 @@ def test_reports_match_frozen_output(entry):
     assert canon(parse_idl(entry["idl"])) == canon(entry["parse_idl"])
     if "build_report_ast" in entry:
         assert canon(build_report_ast(entry["idl"])) == canon(entry["build_report_ast"])
+
+
+@pytest.mark.parametrize("entry", _FROZEN, ids=range(len(_FROZEN)))
+def test_every_prefix_of_a_dump_parses(entry):
+    """A dump cut at any token boundary (a truncated extract) parses in
+    both shapes."""
+    idl = entry["idl"]
+    for _, end in tokenize_spans(idl)[1]:
+        for report in (parse_idl(idl[:end]), build_report_ast(idl[:end])):
+            assert isinstance(report["idlNames"], dict)
