@@ -47,6 +47,17 @@ MODULES: dict[str, tuple[bool, Callable]] = {
 CORE_MODULES = list(MODULES)
 
 
+def check_modules(modules: list[str]) -> None:
+    """Raise ValueError, before any Spark job runs, when a module name is
+    not one of ``MODULES``."""
+    unknown = [m for m in modules if m not in MODULES]
+    if unknown:
+        raise ValueError(
+            f"unknown extraction module(s) {unknown}; known modules: "
+            + ", ".join(MODULES)
+        )
+
+
 class ExtractContext:
     """Per-page extraction context (one DOM parse, shared sub-stages)."""
 
@@ -117,21 +128,29 @@ def extract_page(
 ) -> dict:
     """Run the requested modules over one page; returns {module: value}.
 
-    ``with_error=True`` runs the page-level failure sniffs first; on a
-    detected failure the result is ``{"_crawl_error": message}`` and no
-    module runs (the reference throws before extraction)."""
-    modules = modules or CORE_MODULES
-    ctx = ExtractContext(
-        parse_html(html), url, spec=spec, last_modified=last_modified
-    )
-    if with_error:
-        err = detect_crawl_error(ctx)
-        if err is not None:
-            return {"_crawl_error": err}
-    out = {}
-    for name in modules:
-        _needs, fn = MODULES[name]
-        out[name] = fn(ctx)
+    ``with_error=True`` runs the page-level failure sniffs first, and
+    turns an exception in the parse or in a module into a failure; on a
+    failure the result is ``{"_crawl_error": message}``, so one page
+    cannot fail the batch it is in (the reference records an error
+    result for a spec whose crawl throws)."""
+    fns = [(name, MODULES[name][1]) for name in modules or CORE_MODULES]
+    stage = "parse"
+    try:
+        ctx = ExtractContext(
+            parse_html(html), url, spec=spec, last_modified=last_modified
+        )
+        if with_error:
+            err = detect_crawl_error(ctx)
+            if err is not None:
+                return {"_crawl_error": err}
+        out = {}
+        for name, fn in fns:
+            stage = f"module {name}"
+            out[name] = fn(ctx)
+    except Exception as e:
+        if not with_error:
+            raise
+        return {"_crawl_error": f"{stage} raised {type(e).__name__}: {e}"}
     return out
 
 
@@ -156,12 +175,16 @@ def extract_all(
     (F11) — only read when given, so plans without it stay unchanged.
 
     ``error_col`` enables the page-level failure sniffs
-    (``detect_crawl_error``): the output gains a string column holding
+    (``detect_crawl_error``) and turns a page whose parse or module
+    raises into a failed page: the output gains a string column holding
     the error message (null when the page is fine); module columns are
-    null on failed pages (no module runs — the reference throws before
-    extraction, util.js:597-602).
+    null on failed pages (the reference throws before extraction,
+    util.js:597-602).
+
+    An unknown module name raises ValueError here, before any job.
     """
     modules = modules or CORE_MODULES
+    check_modules(modules)
     passthrough = [c for c in (passthrough or []) if c not in (url_col, html_col)]
     pt_ddl = "".join(
         f", {f.name} {f.dataType.simpleString()}"

@@ -356,11 +356,16 @@ def extract_headings(ctx) -> list[dict]:
             "title": n.text.strip(),
         }
         rec = {
-            "id": heading["id"],
+            "id": heading.get("id"),
             "href": heading["href"],
             "level": int(heading_el.tag[1]),
             "title": heading["title"],
         }
+        if rec["id"] is None:
+            # the enclosing section's heading has no id (a heading nested
+            # in a heading): the reference's heading.id is undefined, so
+            # JSON.stringify drops the key
+            del rec["id"]
         if heading.get("alternateIds"):
             rec["alternateIds"] = heading["alternateIds"]
         if heading.get("number"):
@@ -488,9 +493,10 @@ def _html_prose_definition(prose_el: Element, ctx) -> str:
     return "".join(out).strip()
 
 
-def _definition_mapper(el: Element, ctx, uses_dfn_data_model: bool) -> dict:
+def _definition_mapper(el: Element, ctx, uses_dfn_data_model: bool, dfn_type: str) -> dict:
     """extract-dfns.mjs:178-299 (definitionMapper), including the
-    [data-defines] htmlProse join (mjs:290-295)."""
+    [data-defines] htmlProse join (mjs:290-295). ``dfn_type`` is the
+    element's type after extract_dfns' fix-ups."""
     defined_in = "prose"
     enclosing = el.closest("dt,pre,table,h1,h2,h3,h4,h5,h6,.note,.example") or el
     if enclosing.tag in ("dt", "pre", "table"):
@@ -510,7 +516,6 @@ def _definition_mapper(el: Element, ctx, uses_dfn_data_model: bool) -> dict:
         linking_text = [normalize(el.text)]
 
     href = get_absolute_url(el, ctx)
-    dfn_type = el.get("data-dfn-type") or "dfn"
     access = (
         "public"
         if (
@@ -592,20 +597,21 @@ def extract_dfns(ctx) -> list[dict]:
             prose_map[target] = pel
 
     definitions: list[dict] = []
+    # (type, sorted linkingText, sorted for) of the public definitions
+    # kept so far, for the first-wins dedupe
+    public_keys: set[tuple] = set()
     for el in candidates:
+        dfn_type = el.get("data-dfn-type") or "dfn"
         # autofix ReSpec's invalid "idl" dfn type for internal slots
         # (extract-dfns.mjs:344-354): method when the first linking text
         # ends with ')', attribute otherwise
-        if el.get("data-dfn-type") == "idl":
+        if dfn_type == "idl":
             if el.get("data-lt"):
                 first_lt = normalize(el.get("data-lt").split("|")[0])
             else:
                 first_lt = normalize(el.text)
-            el.attrs["data-dfn-type"] = (
-                "method" if first_lt.endswith(")") else "attribute"
-            )
+            dfn_type = "method" if first_lt.endswith(")") else "attribute"
         # invalid-type filter (P3)
-        dfn_type = el.get("data-dfn-type") or "dfn"
         if dfn_type not in VALID_DFN_TYPES:
             continue
         # excluded/deleted filter (P4)
@@ -618,7 +624,7 @@ def extract_dfns(ctx) -> list[dict]:
                 "https://www.w3.org/TR/CSS2/syndata.html#vendor-keywords"
             ):
                 continue
-        dfn = _definition_mapper(el, ctx, uses_dfn_data_model)
+        dfn = _definition_mapper(el, ctx, uses_dfn_data_model, dfn_type)
         # textual-definition join (extract-dfns.mjs:290-295); key order
         # matches the reference (set after construction, so after links)
         prose_el = prose_map.get(f"#{dfn['id']}")
@@ -626,25 +632,29 @@ def extract_dfns(ctx) -> list[dict]:
             html_prose = _html_prose_definition(prose_el, ctx)
             if html_prose:
                 dfn["htmlProse"] = html_prose
-        # first-wins dedupe (A6, extract-dfns.mjs:122-134)
-        dup = any(
-            d["access"] == "public"
-            and dfn["access"] == "public"
-            and d["type"] == dfn["type"]
-            and sorted(d["linkingText"]) == sorted(dfn["linkingText"])
-            and sorted(d["for"]) == sorted(dfn["for"])
-            for d in definitions
-        )
-        if not dup:
-            definitions.append(dfn)
+        # first-wins dedupe (A6, extract-dfns.mjs:122-134): a public
+        # definition is dropped when a kept public one has its key
+        if dfn["access"] == "public":
+            key = (
+                dfn["type"],
+                tuple(sorted(dfn["linkingText"])),
+                tuple(sorted(dfn["for"])),
+            )
+            if key in public_keys:
+                continue
+            public_keys.add(key)
+        definitions.append(dfn)
 
-    # dev-anchor join (J4, extract-dfns.mjs:387-414)
+    # dev-anchor join (J4, extract-dfns.mjs:387-414): the first
+    # definition with the anchor's href
+    by_href: dict[str, dict] = {}
+    for d in definitions:
+        by_href.setdefault(d["href"], d)
     for node in ctx.root.query_all(".domintro dt a[id]"):
         dt = node.closest("dt")
         if dt is None or dt.query("dfn") is not None:
             continue
-        dfn_href = get_absolute_url(node, ctx, attribute="href")
-        target = next((d for d in definitions if d["href"] == dfn_href), None)
+        target = by_href.get(get_absolute_url(node, ctx, attribute="href"))
         if target is not None:
             href = get_absolute_url(node, ctx)
             target["links"].append(
@@ -1626,6 +1636,14 @@ _STEP_OPERATIONS = (
     "try undisplay unset up-mix update upgrade use validate verify visit "
     "wait for if while"
 ).split()
+# one alternation, tried in _STEP_OPERATIONS order like the reference's
+# loop over the verbs; group i+1 captures verb i
+_STEP_OPERATION_RE = re.compile(
+    "^(?:"
+    + "|".join(f"({re.escape(op)})" for op in _STEP_OPERATIONS)
+    + r")(?:\.|:| )",
+    re.I,
+)
 
 # (value, serialized) pairs: the reference stores the matched item itself
 # as the rationale and later calls toString(), so regex entries serialize
@@ -1674,16 +1692,14 @@ def _algo_abs_url(value: str, base: str) -> str:
         return value
 
 
-def _serialize_html(el: Element, ctx, drop_ol: bool = False) -> str:
-    """innerHTML of ``el`` after cloneAndClean (informative subtrees and
-    comments dropped; comments never enter our tree), optionally dropping
-    <ol> descendants, with relative href/src made absolute
-    (extract-algorithms.mjs getHTMLContent:311-335).
+def _serialize_html(nodes: list[Element | str], base: str) -> str:
+    """HTML of ``nodes`` after cloneAndClean (informative subtrees and
+    comments dropped; comments never enter our tree) with <ol>
+    descendants dropped and relative href/src made absolute against
+    ``base`` (extract-algorithms.mjs getHTMLContent:311-335).
 
     NOTE: sibling walker of ``_html_prose_definition`` — see the note
     there; fixes to the shared mechanics must be applied to BOTH."""
-    page_el = el.closest("[data-reffy-page]")
-    base = page_el.get("data-reffy-page") if page_el is not None else ctx.url
     out: list[str] = []
 
     def ser(node):
@@ -1692,7 +1708,7 @@ def _serialize_html(el: Element, ctx, drop_ol: bool = False) -> str:
             return
         if node.matches(INFORMATIVE_SELECTOR):
             return
-        if drop_ol and node.tag == "ol":
+        if node.tag == "ol":
             return
         parts = [f"<{node.tag}"]
         for k, v in node.attrs.items():
@@ -1706,7 +1722,7 @@ def _serialize_html(el: Element, ctx, drop_ol: bool = False) -> str:
                 ser(c)
             out.append(f"</{node.tag}>")
 
-    for c in el.children:
+    for c in nodes:
         ser(c)
     return "".join(out).strip()
 
@@ -1714,29 +1730,33 @@ def _serialize_html(el: Element, ctx, drop_ol: bool = False) -> str:
 from reffy_spark.html.dom import VOID_ELEMENTS as _VOID_ELEMENTS  # noqa: E402
 
 
-def _dom_contains(a: Element, b: Element | None) -> bool:
-    """a.contains(b): b is a or a descendant of a."""
-    while b is not None:
-        if b is a:
-            return True
-        b = b.parent
-    return False
-
-
 def _algo_text(el: Element) -> str:
     return normalize(clean_text(el, INFORMATIVE_SELECTOR))
 
 
 def _algo_html(el: Element, ctx) -> str:
-    return _serialize_html(el, ctx, drop_ol=True)
+    """innerHTML of ``el``, serialized by ``_serialize_html`` against
+    its page's URL."""
+    page_el = el.closest("[data-reffy-page]")
+    base = page_el.get("data-reffy-page") if page_el is not None else ctx.url
+    return _serialize_html(el.children, base)
 
 
-def _algo_defined_name_in(el: Element, ctx) -> dict:
-    """getDefinedNameIn (extract-algorithms.mjs:345-388)."""
+def _algo_defined_name_in(el: Element, ctx, before: Element | None = None) -> dict:
+    """getDefinedNameIn (extract-algorithms.mjs:345-388). With
+    ``before``, a child of ``el``, it searches only the nodes of ``el``
+    that precede that child."""
+
+    def first(selector: str) -> Element | None:
+        found = el.query_all(selector)
+        if before is not None:
+            found = [m for m in found if m.pos < before.pos]
+        return found[0] if found else None
+
     dfn = (
         el
         if el.tag == "dfn"
-        else el.query(
+        else first(
             "dfn,h2[data-dfn-type],h3[data-dfn-type],h4[data-dfn-type],"
             "h5[data-dfn-type],h6[data-dfn-type]"
         )
@@ -1757,7 +1777,7 @@ def _algo_defined_name_in(el: Element, ctx) -> dict:
         # dfn without an id: report the name alone (the JSON schema
         # forbids null hrefs — extract-algorithms.mjs:364-380)
         return {"name": name}
-    heading = el.query("h2[id],h3[id],h4[id],h5[id],h6[id]")
+    heading = first("h2[id],h3[id],h4[id],h5[id],h6[id]")
     if heading is not None:
         return {"name": _algo_text(heading), "href": get_absolute_url(heading, ctx)}
     return {}
@@ -1770,7 +1790,7 @@ def _algo_find_intro(algo: dict) -> Element | None:
     container = root.closest("li,.algorithm")
     while container is not None:
         dfn = container.query("dfn")
-        if dfn is not None and not _dom_contains(root, dfn):
+        if dfn is not None and not root.contains(dfn):
             paragraph = dfn.closest("p,div,li")
             break
         if container.tag == "li":
@@ -1827,15 +1847,14 @@ def _algo_info(algo: dict, ctx, nested: bool) -> dict:
         info["html"] = _algo_html(paragraph, ctx)
     elif root.parent is not None and root.parent.tag in ("li", "dd", "div"):
         # no intro paragraph: the prose before the algorithm inside the
-        # list/definition item is the introduction
-        text_el = Element("div", {}, None, root.pos)
-        for node in root.parent.children:
-            if node is root:
-                break
-            text_el.children.append(node)
+        # list/definition item is the introduction. Its relative URLs
+        # resolve against the page URL, not a multipage section's
+        # data-reffy-page.
+        item = root.parent
         if not nested and not (info.get("name") and info.get("href")):
-            info = {**_algo_defined_name_in(text_el, ctx), **info}
-        info["html"] = _algo_html(text_el, ctx)
+            info = {**_algo_defined_name_in(item, ctx, before=root), **info}
+        intro = item.children[: item.children.index(root)]
+        info["html"] = _serialize_html(intro, ctx.url)
 
     if (
         not nested
@@ -1857,9 +1876,9 @@ def _algo_rationale(ol: Element) -> str | None:
         return ".algorithm"
     for li in ol.query_all("li"):
         text = _algo_text(li).lower()
-        for op in _STEP_OPERATIONS:
-            if re.match(rf"^{op}(\.|:| )", text, re.I):
-                return op
+        m = _STEP_OPERATION_RE.match(text)
+        if m is not None:
+            return _STEP_OPERATIONS[m.lastindex - 1]
         for op, ser in _STEP_INLINE_OPERATIONS:
             if isinstance(op, str):
                 if op in text:
@@ -1879,7 +1898,7 @@ def _algo_find_algorithms(section: Element, ctx, include_ignored: bool = False) 
     """findAlgorithms (extract-algorithms.mjs:584-667)."""
     actual = []
     for el in section.query_all(".algorithm,.switch"):
-        if el.closest(INFORMATIVE_SELECTOR) is not None:
+        if is_informative(el):
             continue
         algo = {
             "rationale": ".algorithm" if el.matches(".algorithm") else ".switch",
@@ -1892,11 +1911,9 @@ def _algo_find_algorithms(section: Element, ctx, include_ignored: bool = False) 
 
     probable = []
     for ol in section.query_all("ol"):
-        if ol.closest(INFORMATIVE_SELECTOR) is not None:
+        if is_informative(ol) or ol.within("nav,.toc,#toc"):
             continue
-        if ol.closest("nav,.toc,#toc") is not None:
-            continue
-        if any(_dom_contains(a["root"], ol) for a in actual):
+        if any(a["root"].contains(ol) for a in actual):
             continue
         rationale = _algo_rationale(ol)
         if include_ignored or rationale:
@@ -1914,7 +1931,7 @@ def _algo_find_algorithms(section: Element, ctx, include_ignored: bool = False) 
         a1
         for a1 in deduped
         if not any(
-            a2 is not a1 and _dom_contains(a2["root"], a1["root"])
+            a2 is not a1 and a2["root"].contains(a1["root"])
             for a2 in deduped
         )
     ]
@@ -1949,7 +1966,7 @@ def _algo_serialize_step(li: Element, ctx) -> dict:
     if algos:
         res = _algo_serialize(algos[0], ctx, nested=True)
     if not res.get("html"):
-        res["html"] = _serialize_html(li, ctx, drop_ol=True)
+        res["html"] = _algo_html(li, ctx)
     if len(algos) > 1:
         res["additional"] = [
             _algo_serialize(a, ctx, nested=True) for a in algos[1:]
@@ -2336,7 +2353,7 @@ def _typed_dfn_extractor(el: Element, ctx) -> list[dict]:
                 ),
                 None,
             )
-            if el.closest("pre") is not None:
+            if el.within("pre"):
                 # pre blocks are parsed separately as production rules; a
                 # function dfn on the right-hand side still yields its
                 # parameters (extract-cssdfn.mjs:769-784)

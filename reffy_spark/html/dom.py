@@ -8,6 +8,19 @@ comma lists, ``closest``, ``textContent``, and document-order positions.
 
 This module runs *inside* Arrow-batched pandas UDFs — one parse per page,
 never shipped between stages (SURVEY.md §1.1 "Page DOM").
+
+CONTRACT: a parsed document is
+- indexed at parse: ``parse_html`` (and its oracle ``parse_html_stdlib``)
+  builds the document's query index before returning, and every element
+  holds it (``Element._doc``), so queries never climb to the root;
+- immutable: nothing outside the parsers writes an element's ``attrs``,
+  ``children`` or ``parent``, so the index, the cached class sets and the
+  ``within()`` intervals stay true for the document's lifetime;
+- attached: every element belongs to a parsed document (no element is
+  built outside the parsers), so there is one query path, the index.
+tests/test_module_state.py checks, on the package source, that no code
+outside this module builds an ``Element`` or writes an element's
+``attrs`` or ``children``.
 """
 
 from __future__ import annotations
@@ -26,8 +39,8 @@ _AUTOCLOSE_SIBLING = frozenset("li dt dd tr td th option p".split())
 
 class Element:
     __slots__ = (
-        "tag", "attrs", "children", "parent", "pos", "_text_parts",
-        "_end", "_doc", "_classes",
+        "tag", "attrs", "children", "parent", "pos", "_end", "_doc",
+        "_classes",
     )
 
     def __init__(self, tag: str, attrs: dict[str, str], parent: "Element | None", pos: int):
@@ -36,31 +49,35 @@ class Element:
         self.children: list[Element | str] = []
         self.parent = parent
         self.pos = pos  # document order (open-tag index)
-        self._text_parts = None
-        # subtree-max pos (set by the doc index; pre-order contiguity:
+        # subtree-max pos (set by _Doc; pre-order contiguity:
         # descendants of X are exactly pos in (X.pos, X._end])
         self._end = pos
-        # on #root only: lazily-built document index (see _doc_index)
-        self._doc = None
+        self._doc: _Doc | None = None  # the document's index (set by _Doc)
         self._classes = None  # cached frozenset of class names
 
     # -- tree --------------------------------------------------------------
     def iter(self):
-        """Depth-first pre-order over descendant elements (self excluded)."""
+        """Depth-first pre-order over descendant elements (self excluded),
+        walking the tree; ``descendants()`` is the same list from the
+        index."""
         stack = [c for c in reversed(self.children) if isinstance(c, Element)]
         while stack:
             el = stack.pop()
             yield el
             stack.extend(c for c in reversed(el.children) if isinstance(c, Element))
 
+    def descendants(self) -> list["Element"]:
+        """Pre-order descendant elements (self excluded): the document's
+        flat element list holds element ``i`` at index ``i``, so a subtree
+        is one slice of it."""
+        return self._doc.flat[self.pos + 1 : self._end + 1]
+
+    def contains(self, other: "Element") -> bool:
+        """Node.contains: ``other`` is this element or a descendant."""
+        return other._doc is self._doc and self.pos <= other.pos <= self._end
+
     def child_elements(self) -> list["Element"]:
         return [c for c in self.children if isinstance(c, Element)]
-
-    def ancestors(self):
-        p = self.parent
-        while p is not None:
-            yield p
-            p = p.parent
 
     @property
     def next_element_sibling(self) -> "Element | None":
@@ -98,9 +115,8 @@ class Element:
 
     @property
     def class_set(self) -> frozenset[str]:
-        """Cached class-name set (the class attribute is never mutated
-        post-parse — the one attrs mutation in the extractor suite is
-        data-dfn-type)."""
+        """Cached class-name set (attributes are never mutated after
+        parse)."""
         cs = self._classes
         if cs is None:
             cs = self._classes = frozenset(self.attrs.get("class", "").split())
@@ -134,27 +150,15 @@ class Element:
 
     def within(self, selector: str) -> bool:
         """True iff ``closest(selector)`` would hit — ancestor-or-self
-        matches. Attached documents answer from per-selector merged
-        subtree intervals cached on the #root index (one query_all per
-        document per selector, O(log n) bisect per call); detached
-        fragments fall back to the ancestor walk.
-
-        CONTRACT: the selector's outcome must be stable over the
-        document's lifetime — fine for tag/class/id structure (never
-        mutated post-parse); do NOT use with selectors over mutable
-        attributes (the extractor suite mutates exactly one attribute,
-        data-dfn-type — route those through closest())."""
-        root: Element = self
-        while root.parent is not None:
-            root = root.parent
-        if root.tag != "#root":
-            return self.closest(selector) is not None
-        cache = _doc_index(root)[4]
+        matches. Answered from the selector's merged subtree intervals,
+        cached on the document index (one query_all per document per
+        selector, O(log n) bisect per call)."""
+        cache = self._doc.within
         iv = cache.get(selector)
         if iv is None:
             starts: list[int] = []
             ends: list[int] = []
-            for m in root.query_all(selector):  # document order
+            for m in self._doc.root.query_all(selector):  # document order
                 if starts and m.pos <= ends[-1]:  # nested/adjacent: merge
                     if m._end > ends[-1]:
                         ends[-1] = m._end
@@ -177,17 +181,8 @@ class Element:
 
     def query_all(self, selector: str) -> list["Element"]:
         compounds = _parse_selector(selector)
-        root: Element = self
-        while root.parent is not None:
-            root = root.parent
-        if root.tag != "#root":
-            # detached fragment (e.g. the synthetic intro container in
-            # extract-algorithms): no index home, walk it
-            return self._query_all_walk(compounds)
-        flat, by_tag, pos_by_tag, all_pos, _, by_class, pos_by_class, *_rest = (
-            _doc_index(root)
-        )
-        is_root = self is root
+        doc = self._doc
+        is_root = self is doc.root
         multi = len(compounds) > 1
         out: list[Element] = []
         seen: set[int] | None = set() if multi else None
@@ -195,22 +190,23 @@ class Element:
             simple = chain[-1][1]
             tag = simple[0]
             if tag is not None:
-                cands = by_tag.get(tag)
+                cands = doc.by_tag.get(tag)
                 if cands is None:
                     continue
-                poss = pos_by_tag[tag]
+                poss = doc.pos_by_tag[tag]
             else:
                 cls = next(
                     (k for kind, k, _ in simple[1] if kind == "class"), None
                 )
                 if cls is not None:
-                    cands = by_class.get(cls)
+                    cands = doc.by_class.get(cls)
                     if cands is None:
                         continue
-                    poss = pos_by_class[cls]
+                    poss = doc.pos_by_class[cls]
                 else:
-                    cands, poss = flat, all_pos
-            if not is_root:
+                    cands = doc.flat if is_root else self.descendants()
+                    poss = None
+            if poss is not None and not is_root:
                 lo = bisect_right(poss, self.pos)
                 hi = bisect_right(poss, self._end)
                 cands = cands[lo:hi]
@@ -240,6 +236,8 @@ class Element:
         return out
 
     def _query_all_walk(self, compounds) -> list["Element"]:
+        """The tree-walk answer to ``query_all``: the oracle the indexed
+        path is tested against (tests/test_dom.py)."""
         out = []
         for el in self.iter():
             for compound in compounds:
@@ -260,63 +258,63 @@ def _pos_key(el: Element) -> int:
     return el.pos
 
 
-def _doc_index(root: Element):
-    """Lazily build (and cache on #root) the per-document query index:
-    flat pre-order element list, per-tag buckets, bisectable position
-    arrays, and subtree-max positions (``_end``).
+class _Doc:
+    """A document's query index: built once, when a parser returns, and
+    held by every element of the document (``Element._doc``).
 
-    SAFE because the tree is never structurally mutated after
-    ``parse_html`` returns (the one synthetic-container site in
-    extract-algorithms builds a DETACHED div, which routes to the
-    fallback walk). Positions are open-tag order == pre-order, so a
-    subtree is the contiguous pos range (X.pos, X._end]."""
-    doc = root._doc
-    if doc is None:
-        flat = list(root.iter())
+    ``flat`` is the pre-order element list, and element ``i`` sits at
+    ``flat[i]`` (positions are open-tag order, which is pre-order), so a
+    subtree is the contiguous pos range (X.pos, X._end]. The buckets list
+    their elements in document order, each beside its bisectable
+    position array."""
+
+    __slots__ = (
+        "root", "flat", "by_tag", "pos_by_tag", "by_class", "pos_by_class",
+        "id_name", "id_name_pos", "within",
+    )
+
+    def __init__(self, root: Element, flat: list[Element]):
+        """Index the tree a parser built (``flat``: its elements in
+        creation order) and attach the index to all of them."""
         # subtree-max pos: children follow parents in pre-order, so a
         # reverse sweep finishes every child before its parent reads it
-        for el in flat:
-            el._end = el.pos
         for el in reversed(flat):
             p = el.parent
-            if p is not None and el._end > p._end:
+            if el._end > p._end:
                 p._end = el._end
         by_tag: dict[str, list[Element]] = {}
         by_class: dict[str, list[Element]] = {}
-        id_name: list[Element] = []
+        id_name: list[Element] = []  # elements with an id or name
+        root._doc = self
         for el in flat:
+            el._doc = self
             b = by_tag.get(el.tag)
             if b is None:
                 by_tag[el.tag] = [el]
             else:
                 b.append(el)
-            if "class" in el.attrs:
+            attrs = el.attrs
+            if "class" in attrs:
                 for c in el.class_set:
                     cb = by_class.get(c)
                     if cb is None:
                         by_class[c] = [el]
                     else:
                         cb.append(el)
-            if "id" in el.attrs or "name" in el.attrs:
+            if "id" in attrs or "name" in attrs:
                 id_name.append(el)
-        pos_by_tag = {t: [e.pos for e in els] for t, els in by_tag.items()}
-        pos_by_class = {
+        self.root = root
+        self.flat = flat
+        self.by_tag = by_tag
+        self.pos_by_tag = {t: [e.pos for e in els] for t, els in by_tag.items()}
+        self.by_class = by_class
+        self.pos_by_class = {
             c: [e.pos for e in els] for c, els in by_class.items()
         }
-        # [4]: per-selector merged subtree intervals for within()
-        doc = (
-            flat,
-            by_tag,
-            pos_by_tag,
-            [e.pos for e in flat],
-            {},
-            by_class,
-            pos_by_class,
-            id_name,
-            [e.pos for e in id_name],
-        )
-        root._doc = doc
-    return doc
+        self.id_name = id_name
+        self.id_name_pos = [e.pos for e in id_name]
+        # selector -> merged subtree intervals (starts, ends), for within()
+        self.within: dict[str, tuple[list[int], list[int]]] = {}
 
 
 def iter_id_name(el: Element) -> list[Element]:
@@ -325,20 +323,13 @@ def iter_id_name(el: Element) -> list[Element]:
     from the doc index bucket — the shared scan under getElementById-
     style indexes, extract-ids.mjs and map-ids-to-headings.mjs, which
     otherwise each walk every element of the page."""
-    root = el
-    while root.parent is not None:
-        root = root.parent
-    if root.tag != "#root":  # detached fragment: no index home
-        return [
-            n for n in el.iter() if "id" in n.attrs or "name" in n.attrs
-        ]
-    doc = _doc_index(root)
-    bucket, poss = doc[7], doc[8]
-    if el is root:
-        return bucket
+    doc = el._doc
+    if el is doc.root:
+        return doc.id_name
+    poss = doc.id_name_pos
     lo = bisect_right(poss, el.pos)
     hi = bisect_right(poss, el._end)
-    return bucket[lo:hi]
+    return doc.id_name[lo:hi]
 
 
 # ---------------------------------------------------------------------------
@@ -476,7 +467,7 @@ class _TreeBuilder(HTMLParser):
         super().__init__(convert_charrefs=True)
         self.root = Element("#root", {}, None, -1)
         self.stack = [self.root]
-        self.counter = 0
+        self.flat: list[Element] = []  # elements in creation order
 
     def handle_starttag(self, tag, attrs):
         tag = tag.lower()
@@ -490,8 +481,8 @@ class _TreeBuilder(HTMLParser):
             if self.stack[-1].tag == "tr":
                 self.stack.pop()
         el = Element(tag, {k.lower(): (v if v is not None else "") for k, v in attrs},
-                     self.stack[-1], self.counter)
-        self.counter += 1
+                     self.stack[-1], len(self.flat))
+        self.flat.append(el)
         self.stack[-1].children.append(el)
         if tag not in VOID_ELEMENTS:
             self.stack.append(el)
@@ -499,8 +490,8 @@ class _TreeBuilder(HTMLParser):
     def handle_startendtag(self, tag, attrs):
         tag = tag.lower()
         el = Element(tag, {k.lower(): (v if v is not None else "") for k, v in attrs},
-                     self.stack[-1], self.counter)
-        self.counter += 1
+                     self.stack[-1], len(self.flat))
+        self.flat.append(el)
         self.stack[-1].children.append(el)
 
     def handle_endtag(self, tag):
@@ -562,10 +553,11 @@ _CDATA_ELEMS = frozenset(_RAWTEXT_END)
 from html import unescape as _unescape
 
 
-def _fast_parse(html: str) -> Element:
+def _fast_parse(html: str) -> tuple[Element, list[Element]]:
+    """(#root, the elements in creation order)."""
     root = Element("#root", {}, None, -1)
     stack = [root]
-    counter = 0
+    flat: list[Element] = []
     pos = 0
     n = len(html)
     find = html.find
@@ -633,8 +625,8 @@ def _fast_parse(html: str) -> Element:
                 stack.pop()
                 if stack[-1].tag == "tr":
                     stack.pop()
-            el = Element(tag, attrs, stack[-1], counter)
-            counter += 1
+            el = Element(tag, attrs, stack[-1], len(flat))
+            flat.append(el)
             stack[-1].children.append(el)
             if not m.group(3) and tag not in VOID_ELEMENTS:
                 stack.append(el)
@@ -683,14 +675,17 @@ def _fast_parse(html: str) -> Element:
         else:
             stack[-1].children.append("<")
             pos = lt + 1
-    return root
+    return root, flat
 
 
 def parse_html(html: str | bytes) -> Element:
-    """Parse HTML into an element tree; returns the #root pseudo-element."""
+    """Parse HTML into an indexed element tree; returns the #root
+    pseudo-element."""
     if isinstance(html, (bytes, bytearray)):
         html = html.decode("utf-8", errors="replace")
-    return _fast_parse(html)
+    root, flat = _fast_parse(html)
+    _Doc(root, flat)
+    return root
 
 
 def parse_html_stdlib(html: str | bytes) -> Element:
@@ -701,4 +696,5 @@ def parse_html_stdlib(html: str | bytes) -> Element:
     builder = _TreeBuilder()
     builder.feed(html)
     builder.close()
+    _Doc(builder.root, builder.flat)
     return builder.root

@@ -222,13 +222,11 @@ def create_outline(root: Element, dense: bool = False):
     # event order from the doc index's pre-order positions + subtree-max
     # ranges (descendant test: el.pos <= top._end). hgroup subtrees are
     # excluded wholesale — the dense walk never descends into them.
-    from reffy_spark.html.dom import _doc_index
-
+    #
     # a root that is ITSELF an hgroup has no visitable content in the
     # dense walk (kids=[]) — mirror that here so the equivalence
     # contract is total (ADVICE r7)
-    flat = [] if root.tag == "hgroup" else _doc_index(root)[0]
-    # pre-order list; fresh ._end subtree ranges
+    flat = [] if root.tag == "hgroup" else root.descendants()
     enter(root)
     skip_until = -1
     open_stack: list[Element] = []

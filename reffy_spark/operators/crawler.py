@@ -35,7 +35,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from reffy_spark.extractors.base import extract_all
+from reffy_spark.extractors.base import check_modules, extract_all
 from reffy_spark.functions.urls import host_col, host_group_col, with_url_canon
 from reffy_spark.operators import frontier as FR
 
@@ -190,6 +190,7 @@ class CrawlEngine:
         self.checkpoint_dir = checkpoint_dir
         self.round_ms = round_ms
         self.modules = list(modules or ["links"])
+        check_modules(self.modules)
         if discover and "links" not in self.modules:
             # discovery is driven by extracted links; without the module
             # the round loop would have no outgoing edges to enqueue

@@ -194,6 +194,52 @@ def test_css_hiccup_page_yields_error_result(spark):
     assert res.metrics[0].errors == 1 and res.metrics[0].fetched == 1
 
 
+def test_page_that_raises_yields_one_error_row(spark, corpus):
+    """A page whose parse raises (a NULL ``html`` cell) gets status
+    ``error`` and NULL module columns; the crawl completes and every
+    other row equals the same crawl over the intact pages."""
+    pages, _seeds, robots = corpus
+    seeds = pages.select("url").orderBy("url").limit(12)
+    bad_url = seeds.orderBy("url").first()["url"]
+    broken = pages.withColumn(
+        "html",
+        F.when(F.col("url") == bad_url, F.lit(None).cast("binary")).otherwise(
+            F.col("html")
+        ),
+    )
+    modules = ["links", "title"]
+
+    def crawl(pages_df, seed_df):
+        eng = CrawlEngine(
+            spark, pages_df, robots, modules=modules, use_bloom=False,
+            discover=False,
+        )
+        res = eng.crawl(seed_df, max_rounds=1)
+        cols = ["url_canon", "status", "crawl_error", *modules]
+        return {r["url_canon"]: r for r in res.results.select(*cols).collect()}
+
+    rows = crawl(broken, seeds)
+    errors = [r for r in rows.values() if r["status"] == "error"]
+    assert len(errors) == 1
+    bad = errors[0]
+    assert bad["crawl_error"].startswith("parse raised TypeError: ")
+    assert bad["links"] is None and bad["title"] is None
+    clean = crawl(pages, seeds)
+    assert clean[bad["url_canon"]]["status"] == "ok"
+    del clean[bad["url_canon"]]
+    assert {u: r for u, r in rows.items() if r is not bad} == clean
+
+
+def test_unknown_module_fails_before_any_job(spark, corpus):
+    from reffy_spark.extractors.base import extract_all
+
+    pages, _seeds, robots = corpus
+    with pytest.raises(ValueError, match=r"nope.*known modules: title"):
+        CrawlEngine(spark, pages, robots, modules=["links", "nope"])
+    with pytest.raises(ValueError, match=r"nope.*known modules: title"):
+        extract_all(pages, ["nope"])
+
+
 def test_results_carry_crawl_cache_info(engine_result, corpus):
     # crawlCacheInfo analog (specs-crawler.js:87-98): every ok result
     # carries etag (content digest) + last_modified (capture timestamp)

@@ -1,6 +1,6 @@
 """Mini-DOM unit tests (the query surface the extractors rely on)."""
 
-from reffy_spark.html.dom import parse_html
+from reffy_spark.html.dom import parse_html, parse_html_stdlib
 
 
 HTML = """
@@ -140,11 +140,26 @@ def test_iter_id_name_matches_walk():
                 if "id" in e.attrs or "name" in e.attrs
             ]
             assert fast == slow, f"trial {trial} node {node!r}"
-    # detached fragment falls back to the walk (self excluded, like iter())
-    frag = parse_html("<div id=a><span name=b>x</span></div>").query("div")
-    frag.parent.children.remove(frag)
-    frag.parent = None
-    assert [e.get("id") or e.get("name") for e in iter_id_name(frag)] == ["b"]
+
+
+def test_descendants_and_contains_match_walk():
+    """The index's pre-order slice and pos/_end interval answer what the
+    tree walk and the parent chain answer."""
+    rng = random.Random(29)
+    for trial in range(20):
+        for parse in (parse_html, parse_html_stdlib):
+            root = parse(_random_html(rng, rng.randint(5, 120)))
+            nodes = [root] + list(root.iter())
+            for node in nodes:
+                assert [e.pos for e in node.descendants()] == [
+                    e.pos for e in node.iter()
+                ], f"trial {trial} node {node!r}"
+            for a in nodes[:: max(1, len(nodes) // 9)]:
+                for b in nodes:
+                    up = b
+                    while up is not None and up is not a:
+                        up = up.parent
+                    assert a.contains(b) == (up is a), (trial, a, b)
 
 
 def test_within_matches_closest():
@@ -156,15 +171,18 @@ def test_within_matches_closest():
                 assert el.within(sel) == (el.closest(sel) is not None)
 
 
-def test_detached_fragment_falls_back():
-    from reffy_spark.html.dom import Element
-
-    root = parse_html("<div><p class=note>x</p><span>y</span></div>")
-    frag = Element("div", {}, None, 0)
-    for c in root.query("div").children:
-        frag.children.append(c)
-    assert [e.tag for e in frag.query_all("p, span")] == ["p", "span"]
-    assert frag.query_all(".note")[0].tag == "p"
+def test_every_element_holds_its_document_index():
+    """Both parsers index the document before returning: every element
+    answers queries from the one index its root holds."""
+    html = "<div><p class=note>x</p><span>y<b id=z>z</b></span></div>"
+    for parse in (parse_html, parse_html_stdlib):
+        root = parse(html)
+        assert root._doc is not None
+        assert all(el._doc is root._doc for el in root.iter())
+        span = root.query("span")
+        assert [e.tag for e in span.query_all("b, p")] == ["b"]
+        assert root.query("#z").within("span")
+        assert not root.query("p").within("span")
 
 
 # ---------------------------------------------------------------------------
@@ -172,8 +190,6 @@ def test_detached_fragment_falls_back():
 # parse_html_stdlib) — tree equivalence over goldens, synthetic pages,
 # and randomized messy HTML
 # ---------------------------------------------------------------------------
-
-from reffy_spark.html.dom import parse_html_stdlib
 
 
 def _tree_sig(el):

@@ -47,6 +47,23 @@ def test_heading_appendix_number():
     assert res[0]["title"] == "Normative references"
 
 
+def test_heading_nested_in_heading_has_no_id():
+    """A heading nested in a heading maps the outer id to the inner
+    heading's section, whose heading carries only a name: the record has
+    no ``id`` (extract-headings.mjs reads ``heading.id``, undefined
+    there), so it fails the schema's ``required`` instead of raising."""
+    from reffy_spark.validation import validate_module
+
+    for html, level, title in [
+        ('<h2 id="a"><span><h1 name="b">x</h1></span></h2>', 2, "x"),
+        ('<h2 id="a"><h1 name="b">x</h1></h2>', 2, "x"),
+        ('<h3 id="a">A<h1 name="b">B', 3, "B"),
+    ]:
+        res = one(html, "headings")
+        assert res == [{"href": f"{URL}#a", "level": level, "title": title}]
+        assert validate_module("headings", res) != []
+
+
 # --- ids --------------------------------------------------------------------
 
 
@@ -316,6 +333,47 @@ def test_algorithms_nested_list_without_operations_is_ignored():
     # reference semantics: a nested <ol> whose items carry no recognized
     # step operation is reported in `ignored`, not as sub-steps
     assert res[0]["steps"][1] == {"html": "Second step.", "ignored": ["Nested."]}
+
+
+def test_algorithms_prose_before_steps_is_the_intro():
+    # no intro paragraph: the item's nodes before the <ol> introduce it,
+    # they name it (the heading after the steps is not read), and their
+    # relative URLs resolve against the page URL, not the section's page
+    html = (
+        "<section data-reffy-page='https://example.org/other/p2.html'><ul>"
+        "<li>To do <a href='rel.html#x'>x</a> per <h3 id='h1'>Name</h3>,"
+        "<span class='note'>n</span><ol><li>set x<li>return y</ol>"
+        "<h4 id='after'>after</h4></li></ul></section>"
+    )
+    res = one(html, "algorithms")
+    assert res == [
+        {
+            "name": "Name",
+            "href": "https://example.org/other/p2.html#h1",
+            "html": f'To do <a href="{URL}rel.html#x">x</a> per '
+            '<h3 id="h1">Name</h3>,',
+            "rationale": "set",
+            "steps": [{"html": "set x"}, {"html": "return y"}],
+        }
+    ]
+
+
+def test_dfns_idl_type_fixup_leaves_the_page_unchanged():
+    # ReSpec's "idl" dfn type becomes method/attribute in the dfns
+    # output only: modules that run after dfns on the same page still
+    # read the attribute as written
+    html = (
+        "<dfn id='s' data-dfn-type='idl' data-lt='[[slot]]'>x</dfn>"
+        "<dfn id='m' data-dfn-type='idl'>run()</dfn>"
+        "<div class='algorithm' data-algorithm='a' id='alg'>"
+        "<p><dfn data-dfn-type='idl' id='n'>n</dfn></p><ol><li>set</ol></div>"
+    )
+    res = extract_page(html, URL, ["dfns", "algorithms"])
+    assert [(d["id"], d["type"]) for d in res["dfns"]] == [
+        ("s", "attribute"), ("m", "method"), ("n", "attribute"),
+    ]
+    assert res["algorithms"] == one(html, "algorithms")
+    assert 'data-dfn-type="idl"' in res["algorithms"][0]["html"]
 
 
 def test_events_fire_prose():

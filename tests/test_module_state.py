@@ -333,3 +333,46 @@ def test_idlparsed_json_is_parsed_in_one_module():
             ):
                 sites.setdefault(str(path.relative_to(ROOT)), []).append(node.lineno)
     assert list(sites) == ["reffy_spark/plans/views.py"], sites
+
+
+# list/dict methods that change the container they are called on
+_IN_PLACE = frozenset(
+    "append extend insert remove pop clear update setdefault popitem sort "
+    "reverse __setitem__ __delitem__".split()
+)
+
+
+def _dom_field(node):
+    """``X.attrs`` or ``X.children``, or a subscript of one."""
+    if isinstance(node, ast.Subscript):
+        node = node.value
+    return isinstance(node, ast.Attribute) and node.attr in ("attrs", "children")
+
+
+def test_only_the_parsers_build_or_change_the_dom():
+    """A parsed page is indexed once, at parse, and its index holds for
+    the page's lifetime only if no element is built outside the parsers
+    (a detached element has no index) and no code changes an element's
+    ``attrs`` or ``children`` after parse."""
+    dom = PKG / "html" / "dom.py"
+    sites = {}
+    for path in _caller_files():
+        if path == dom:
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Call):
+                f = node.func
+                writes = getattr(f, "id", getattr(f, "attr", None)) == "Element" or (
+                    isinstance(f, ast.Attribute)
+                    and f.attr in _IN_PLACE
+                    and _dom_field(f.value)
+                )
+            elif isinstance(node, (ast.Assign, ast.Delete)):
+                writes = any(_dom_field(t) for t in node.targets)
+            elif isinstance(node, (ast.AugAssign, ast.AnnAssign)):
+                writes = _dom_field(node.target)
+            else:
+                writes = False
+            if writes:
+                sites.setdefault(str(path.relative_to(ROOT)), []).append(node.lineno)
+    assert sites == {}
